@@ -66,6 +66,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
+
 DELIM = "\x1f"
 _DD = DELIM + DELIM
 
@@ -287,8 +291,8 @@ def train_bpe(
         merges, final_rows = _train_driver(head, n_merges, stats)
         if stats is not None:
             stats.update(path="driver", pair_scan_jobs=1)
-        final = spark.createDataFrame(
-            final_rows, "word string, cnt long, w string"
+        final = local_relation(
+            spark, final_rows, "word string, cnt long, w string"
         ).select("word", "cnt", "w")
         return merges, final
 

@@ -52,6 +52,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.operators.merge import (
     _hadoop_fs,
     recover_table,
@@ -116,12 +119,13 @@ def coarsen_partitions(
     table = spark.read.parquet(table_dir)
     n_before = table.count()  # independent anchor for the verification
     counts = table.groupBy(part_col).agg(F.count(F.lit(1)).alias("n_rows"))
-    plan_rows = plan_partition_coarsen(
-        counts, part_col, target_rows
-    ).collect()  # bounded: one row per partition value
+    plan_df = plan_partition_coarsen(counts, part_col, target_rows)
+    plan_rows = plan_df.collect()  # bounded: one row per partition value
     n_groups = len({r["grp"] for r in plan_rows})
-    plan = spark.createDataFrame(
-        [(r[part_col], r["grp"]) for r in plan_rows], [part_col, "grp"]
+    plan = local_relation(
+        spark,
+        [(r[part_col], r["grp"]) for r in plan_rows],
+        plan_df.select(part_col, "grp").schema,
     )
 
     obs = Observation("coarsen_rows")

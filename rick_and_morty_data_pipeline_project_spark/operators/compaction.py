@@ -26,6 +26,10 @@ from bisect import bisect_left, insort
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
+
 
 def plan_compaction(
     spark: SparkSession,
@@ -70,8 +74,8 @@ def plan_compaction(
             n_bins += 1
             insort(open_bins, (max(target_rows - n, 0), bin_id))
         assignment.append((f, n, bin_id))
-    return spark.createDataFrame(
-        assignment, "file string, n_rows long, bin_id int"
+    return local_relation(
+        spark, assignment, "file string, n_rows long, bin_id int"
     )
 
 

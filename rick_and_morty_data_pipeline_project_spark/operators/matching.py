@@ -8,21 +8,26 @@ WHERE strain_id=…`, ipynb:185).  The greedy order-dependence is part of
 the semantics, so it is inherently a sequential driver-side loop around
 otherwise-declarative distributed Top-K queries.  Unlike the reference we
 never mutate the base table: claims accumulate in a driver-side exclusion
-set.  The distributed work is ONE bounded-memory pass computing every
-needed per-emotion top-k prefix at once (operators/topk.
-per_emotion_topk_prefixes, depth k1 + n_left − 1 — enough that the
+set.  The distributed work is ONE corpus pass computing every needed
+per-emotion top-k prefix at once (operators/topk.
+per_emotion_topk_prefixes: a JVM rank window whose map-side partial
+limit keeps the shuffle bounded at any depth, the collect running under
+operators/topk.partial_group_limit; depth k1 + n_left − 1 — enough that the
 greedy exclusions can never push a needed candidate out of the prefix);
 the sequential replay is then driver-side bookkeeping over those small
-prefixes.  The left side (episodes) is assumed driver-small, the same
-assumption the reference hard-codes (41 episodes).
+prefixes, and its rows come back as an Arrow-built local relation
+(operators/localrel).  The left side (episodes) is assumed driver-small,
+the same assumption the reference hard-codes (41 episodes).
 
 EP-3 (cell-15): per-strain best episode **with** replacement — fully
 set-oriented: with replacement the per-pair stage-1 top-k1 equals the
 global per-emotion top-k1, so the plan takes all 6 per-emotion top-k1
-prefixes in one corpus pass (zero corpus shuffle), joins the ≤ 6·k1-row
-prefix union to the broadcast distinct (top, second) pairs (≤ 30), and
+prefixes in one corpus pass, joins the ≤ 6·k1-row prefix union to the
+broadcast (top, second) pair literal (30 rows, a local relation), and
 ranks only those bounded rows for stage 2.  No window ever partitions
 the full candidate relation on the pair key.
+
+Neither flagship starts a Python worker: every stage is a JVM operator.
 """
 
 from __future__ import annotations
@@ -34,7 +39,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rick_and_morty_data_pipeline_project_spark.functions.emotions import EMOTIONS
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.operators.topk import (
+    partial_group_limit,
     per_emotion_topk_prefixes,
 )
 
@@ -102,9 +111,15 @@ def greedy_match_without_replacement(
     depth = k1 + len(left_rows) - 1
     cand_cols = [right_id] + ([right_name] if right_name else []) + emotions
     needed = sorted({t for t, _ in top2_by_left.values()})
-    prefix_rows = per_emotion_topk_prefixes(
-        right.select(*cand_cols), needed, right_id, depth
-    ).collect()
+    # depth passes Spark's default partial-limit threshold from ~900
+    # left rows on; scoping the conf to this collect keeps the prefix
+    # shuffle bounded at any depth
+    prefix_rows = []
+    if needed:
+        with partial_group_limit(spark, depth):
+            prefix_rows = per_emotion_topk_prefixes(
+                right.select(*cand_cols), needed, right_id, depth
+            ).collect()
     # Row → dict ONCE: pyspark Row string-key access walks the field
     # list per lookup, and the replay below touches candidate fields
     # ~n·k1 times — the O(total rows) conversion here keeps the hot
@@ -168,7 +183,7 @@ def greedy_match_without_replacement(
         + ([f"matched_{right_name} string"] if right_name else [])
         + ["right_top_emotion string", "right_second_emotion string"]
     )
-    return spark.createDataFrame(out_rows, ", ".join(schema_cols))
+    return local_relation(spark, out_rows, ", ".join(schema_cols))
 
 
 def best_match_with_replacement(
@@ -197,7 +212,8 @@ def best_match_with_replacement(
     # simply never matched by the final LEFT join (parity proven
     # row-exact at sf0.1 and by the driver oracle at 3 SFs), and the
     # stage-2 window grows only to the fixed 30·k1 bound.
-    pairs = left.sparkSession.createDataFrame(
+    pairs = local_relation(
+        left.sparkSession,
         [(a, b) for a in emotions for b in emotions if a != b],
         "top_emotion string, second_emotion string",
     )

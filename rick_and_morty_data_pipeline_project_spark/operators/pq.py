@@ -45,6 +45,9 @@ from pyspark.sql import types as T
 from rick_and_morty_data_pipeline_project_spark.functions.litjson import (
     array2d_lit,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 
 
 def _subspaces(dim: int, m: int) -> List[tuple]:
@@ -410,10 +413,6 @@ def ivf_pq_topk(
     return out
 
 
-def _luts_df(spark, rows, schema):
-    return spark.createDataFrame(rows, schema)
-
-
 def pq_topk_batched(
     queries: Sequence[tuple],
     codes_df: DataFrame,
@@ -442,7 +441,7 @@ def pq_topk_batched(
     dim = sum(len(b[0]) for b in codebooks) // m * m
     spans = _subspaces(dim, m)
     qtype = "string" if isinstance(queries[0][0], str) else "long"
-    luts = _luts_df(
+    luts = local_relation(
         codes_df.sparkSession,
         [
             (qid, adc_lut(codebooks, spans, np.asarray(qv, dtype=np.float64)))
@@ -499,7 +498,7 @@ def ivf_pq_topk_batched(
         q = np.asarray(qvec, dtype=np.float64)
         for cell in probe_cells(C, q, n_probe):
             rows.append((qid, cell, adc_lut(codebooks, spans, q - C[cell])))
-    luts = _luts_df(
+    luts = local_relation(
         index_df.sparkSession,
         rows,
         f"query_id {qtype}, cell_id int, lut array<array<double>>",

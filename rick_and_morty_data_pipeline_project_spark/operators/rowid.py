@@ -42,6 +42,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
+
 
 def dense_row_ids(
     df: DataFrame,
@@ -93,7 +97,8 @@ def dense_row_ids(
         acc += r["_n"]
     # explicit schema: an empty input yields an empty offsets list,
     # which schema inference would reject
-    off = df.sparkSession.createDataFrame(
+    off = local_relation(
+        df.sparkSession,
         offsets,
         T.StructType(
             [

@@ -33,6 +33,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
+
 
 def _list_parquet_files(spark: SparkSession, table_dir: str) -> list[str]:
     """Recursive listing of *.parquet under ``table_dir`` (or the file
@@ -86,7 +90,7 @@ def parquet_footer_stats(
     paths = [(p,) for p in _list_parquet_files(spark, table_dir)]
     if not paths:
         raise ValueError(f"no parquet files under {table_dir}")
-    fdf = spark.createDataFrame(paths, "path string").repartition(
+    fdf = local_relation(spark, paths, "path string").repartition(
         min(len(paths), 64)
     )
 

@@ -17,18 +17,25 @@ AGG-4 — horizontal top-2 across the 6 emotion score columns
 (Project_Overview.ipynb:151-156), done with ``sort_array`` over an array
 of (‑score, name) structs: ascending sort of the negated score gives
 score-descending with name-ascending tiebreak, all JVM-side.
+
+The flagship matchers' per-emotion prefixes (``per_emotion_topk_prefixes``)
+are JVM-side too: one corpus pass, then a rank window whose map-side
+partial limit bounds the shuffle.  No operator here but the
+``applyInPandas`` pattern demo starts a Python worker.
 """
 
 from __future__ import annotations
 
-from itertools import chain
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from rick_and_morty_data_pipeline_project_spark.functions.emotions import EMOTIONS
+
+_GROUP_LIMIT_CONF = "spark.sql.optimizer.windowGroupLimitThreshold"
 
 
 def two_stage_topk(
@@ -81,62 +88,65 @@ def per_emotion_topk_prefixes(
     The alternative — one ``orderBy().limit(k)`` subtree per emotion —
     is bounded-memory but rescans (and re-computes every upstream
     expression, e.g. the emotion scorer, over) the full corpus once per
-    emotion.  This operator is the single-scan form:
+    emotion.  This operator is the single-scan form, all in the JVM:
 
-    * Stage 1, narrow: ``mapInPandas`` keeps each partition's local
-      top-k per emotion in bounded memory across Arrow batches and
-      emits ≤ |emotions|·k tagged rows per partition, whatever the
-      partition size.  Every score arrives pre-computed from the JVM —
-      Python only SELECTS rows, never computes values, so SQL-oracle
-      hash parity is untouched.  (The grouped-top-k built-ins can't
-      express a map-side-bounded partial aggregate: ``collect_list``
-      buffers whole groups, and a window over the emotion key would
-      shuffle the full corpus onto ≤ |emotions| partitions.)
-    * Stage 2: rank the n_partitions·|emotions|·k survivors per tag —
-      window input bounded by construction, not by corpus size.
+    * ``inline`` of an array of (emotion, score) structs tags every row
+      once per emotion, after the upstream scorer ran once per row.
+    * ``row_number() <= k`` over ``_prefix_emotion`` plans as a
+      WindowGroupLimit: a ``Partial`` copy runs in every map task below
+      the exchange and ships at most k rows per emotion, so the shuffle
+      and the final rank see ≤ n_partitions·|emotions|·k rows whatever
+      the corpus size (pinned in tests/test_plans.py).
 
-    A partition's local top-k per emotion is a superset of its
-    contribution to the global top-k, so the result is exactly the
-    union of the per-emotion global top-k prefixes.
+    Catalyst inserts that partial limit only while k is at most
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000) when
+    the plan is optimized; above it the result is the same but the
+    window shuffles the |emotions|× exploded corpus onto ≤ |emotions|
+    partitions.  A caller with a larger k runs its action inside
+    :func:`partial_group_limit`.
     """
-    emos = list(emotions)
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("_prefix_emotion", StringType(), False)]
-    )
-
-    def fn(batches):
-        import pandas as pd
-
-        best: dict[str, "pd.DataFrame"] = {}
-        for pdf in batches:
-            for e in emos:
-                cand = pdf.sort_values(
-                    [e, id_col], ascending=[False, True]
-                ).head(k)
-                if e in best:
-                    cand = (
-                        pd.concat([best[e], cand])
-                        .sort_values([e, id_col], ascending=[False, True])
-                        .head(k)
+    tagged = df.select(
+        "*",
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(e).alias("_prefix_emotion"),
+                        F.col(e).alias("_prefix_score"),
                     )
-                best[e] = cand
-        out = [b.assign(_prefix_emotion=e) for e, b in best.items()]
-        if out:
-            yield pd.concat(out, ignore_index=True)
-
-    tagged = df.mapInPandas(fn, schema=out_schema)
-    score = F.create_map(
-        *chain.from_iterable((F.lit(e), F.col(e)) for e in emos)
-    )[F.col("_prefix_emotion")]
+                    for e in emotions
+                ]
+            )
+        ),
+    )
     w = Window.partitionBy("_prefix_emotion").orderBy(
-        F.desc(score), F.asc(id_col)
+        F.desc("_prefix_score"), F.asc(id_col)
     )
     return (
         tagged.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
-        .drop("_rn")
+        .drop("_rn", "_prefix_score")
     )
+
+
+@contextmanager
+def partial_group_limit(spark: SparkSession, k: int) -> Iterator[None]:
+    """Keep the map-side partial limit for ``row_number() <= k`` plans
+    optimized inside this block: raises the session's
+    ``windowGroupLimitThreshold`` to at least ``k`` and restores it on
+    exit.  A ``row_number`` partial limit counts rows per group and
+    buffers none, so a large k costs no memory.  The DataFrame must be
+    built and its action run inside the block — a plan optimized before
+    it keeps the threshold it saw."""
+    old = spark.conf.get(_GROUP_LIMIT_CONF)
+    if k <= int(old):
+        yield
+        return
+    spark.conf.set(_GROUP_LIMIT_CONF, str(k))
+    try:
+        yield
+    finally:
+        spark.conf.set(_GROUP_LIMIT_CONF, old)
 
 
 def top2_emotions_cols(

@@ -40,3 +40,23 @@ def has_take_ordered(df: DataFrame) -> bool:
 
 def codegen_stage_count(df: DataFrame) -> int:
     return formatted_plan(df).count("WholeStageCodegen")
+
+
+def partial_group_limits_below_exchange(df: DataFrame) -> list[str]:
+    """Arguments of every ``WindowGroupLimit … Partial`` node that sits
+    directly below an ``Exchange``: the map-side rank limit that bounds
+    what a ``row_number() <= k`` window shuffles to at most k rows per
+    group and map task.  Reads the initial plan, which an executed
+    adaptive plan lists after its final one."""
+    plan = formatted_plan(df)
+    tree = plan.split("\n\n")[0].split("== Initial Plan ==")[-1]
+    out = []
+    for node in re.findall(
+        r"Exchange \(\d+\)\n[ :|]*\+- WindowGroupLimit \((\d+)\)", tree
+    ):
+        args = re.search(
+            rf"\({node}\) WindowGroupLimit\n(?:.*\n)*?Arguments: (.*)", plan
+        ).group(1)
+        if args.endswith(", Partial"):
+            out.append(args)
+    return out

@@ -18,6 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.operators.bpe import (
     symbols_col,
     train_bpe,
@@ -88,7 +91,8 @@ def bpe_train_merges(spark, sf_dir):
     and a 1-row collect (operators/bpe.py).
     """
     merges, _ = train_bpe(_word_counts(spark, sf_dir), N_MERGES)
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [(m.rank, m.left, m.right, m.left + m.right, m.pair_weight) for m in merges],
         "merge_rank int, left_sym string, right_sym string, "
         "merged string, pair_weight long",

@@ -42,6 +42,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.operators.opq import (
     opq_encode,
     opq_fit,
@@ -90,7 +93,8 @@ def _jvm_rotated(normed_df, R):
     Bounded-verify only — the real operator rotates via GEMM inside
     ``opq_encode``."""
     d = len(R)
-    rdf = normed_df.sparkSession.createDataFrame(
+    rdf = local_relation(
+        normed_df.sparkSession,
         [(i, [float(R[j][i]) for j in range(d)]) for i in range(d)],
         "i int, col array<double>",
     )

@@ -78,6 +78,9 @@ from rick_and_morty_data_pipeline_project_spark.operators.pq import (
     train_ivf_pq,
     train_pq_codebooks,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
     fan_out,
 )
@@ -193,7 +196,8 @@ def _sq_fold_col(a, b):
 def _books_df(spark, books):
     """(j, code_id, bk array<double>) — the codebook as a (tiny,
     broadcastable) relation, mirroring the oracle's ``books`` VALUES."""
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [
             (j, kk, [float(x) for x in books[j][kk]])
             for j in range(len(books))
@@ -247,7 +251,8 @@ def _jvm_ivfpq_index(normed_df, cents, books, dim):
     books — ((x − cent) − book)², the numpy path's arithmetic order."""
     w = dim // _M
     sess = normed_df.sparkSession
-    cdf = sess.createDataFrame(
+    cdf = local_relation(
+        sess,
         [(c, [float(x) for x in cents[c]]) for c in range(_NCELLS)],
         "cell_id int, cent array<double>",
     )

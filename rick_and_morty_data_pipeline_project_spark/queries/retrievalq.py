@@ -30,6 +30,9 @@ from pyspark.sql.window import Window
 
 from rick_and_morty_data_pipeline_project_spark.functions.textfns import tokens_col
 from rick_and_morty_data_pipeline_project_spark.functions.vectors import dot_sql
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q, t
 
 # Okapi BM25 constants (the standard Robertson defaults), written as the
@@ -222,7 +225,8 @@ def text_bm25_multiquery(spark, sf_dir):
     top-k before the final per-query merge."""
     d = t(spark, sf_dir, "documents")
     tf = _term_postings(d, "doc_id", "text", _ALL_QUERY_TERMS)
-    qterms = spark.createDataFrame(
+    qterms = local_relation(
+        spark,
         [(qid, term) for qid, terms in BM25_QUERIES for term in terms],
         "query_id int, term string",
     )

@@ -42,6 +42,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q
 
 # Operating targets (module constants so the oracle SQL and the Spark
@@ -229,7 +232,8 @@ def curation_run_card_whatif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The standing-target rows reproduce the card's selection exactly
     (pinned in tests/test_runcard.py)."""
-    pts = spark.createDataFrame(
+    pts = local_relation(
+        spark,
         [(s, t) for s, ts in sorted(WHATIF_TARGETS.items()) for t in ts],
         "stage string, target_min double",
     )

@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import (
     Q,
     dec,
@@ -705,7 +708,7 @@ def customer_gini_revenue(spark, sf_dir):
     for bkt in sorted(hist):
         offsets.append((bkt, acc))
         acc += hist[bkt]
-    off_df = spark.createDataFrame(offsets, "bucket int, off long")
+    off_df = local_relation(spark, offsets, "bucket int, off long")
     win = Window.partitionBy("bucket").orderBy("cents", "o_custkey")
     ranked = (
         bucketed.withColumn("_rn", F.row_number().over(win).cast("long"))

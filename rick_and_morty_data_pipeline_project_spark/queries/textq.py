@@ -37,6 +37,9 @@ from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
     simhash64,
     NIBBLE_BIT_CHARS,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.operators.topk import (
     top2_emotions_cols,
     two_stage_topk,
@@ -850,8 +853,8 @@ def dedup_lsh_banding_frontier(spark, sf_dir, dup_path=None, _shared=None):
         # posting join once (the multi-consumer pattern)
         .localCheckpoint()
     )
-    cfgs = spark.createDataFrame(
-        [(s,) for s in _BANDING_SIZES], "band_size int"
+    cfgs = local_relation(
+        spark, [(s,) for s in _BANDING_SIZES], "band_size int"
     )
     truth4 = truth.crossJoin(F.broadcast(cfgs)).select(
         "band_size", "id_a", "id_b", "_t"
@@ -1127,8 +1130,8 @@ def dedup_threshold_frontier(spark, sf_dir, dup_path=None, _shared=None):
         F.sum(F.col("_ga") * F.col("_gb")).cast("long").alias("_xpairs"),
         F.countDistinct("id_b").cast("long").alias("_gremoved"),
     )
-    trange = spark.createDataFrame(
-        [(p,) for p in _DEDUP_SWEEP_PCTS], "threshold_pct int"
+    trange = local_relation(
+        spark, [(p,) for p in _DEDUP_SWEEP_PCTS], "threshold_pct int"
     )
     # group-level constants: docs, groups, within-group (J=1) pairs and
     # non-minimum members — all exact integers from ONE tiny aggregate

@@ -175,28 +175,117 @@ def test_greedy_match_guards_driver_collect(spark):
 def test_per_emotion_topk_prefixes_equals_per_emotion_heap_topk(spark):
     """The single-pass partial top-k must return EXACTLY the union of
     per-emotion global orderBy().limit(k) prefixes (same tie-break),
-    independent of input partitioning."""
+    independent of input partitioning — with heavily tied scores, with
+    k above every partition's row count, and at the greedy matcher's
+    largest default depth and beyond, where ``partial_group_limit``
+    must keep the map-side partial limit planned.  Outside that block a
+    k above the session threshold still returns the same rows."""
+    import inspect
+
     from pyspark.sql import functions as F
 
     from rick_and_morty_data_pipeline_project_spark.operators.topk import (
+        partial_group_limit,
         per_emotion_topk_prefixes,
     )
+    from rick_and_morty_data_pipeline_project_spark.plans.explain_utils import (
+        partial_group_limits_below_exchange,
+    )
+
+    conf = "spark.sql.optimizer.windowGroupLimitThreshold"
+    threshold = spark.conf.get(conf)
+    greedy = inspect.signature(greedy_match_without_replacement).parameters
+    max_depth = greedy["k1"].default + greedy["max_left_rows"].default - 1
+    assert max_depth > int(threshold)
+
+    def prefix_pairs(df, k):
+        prefixes = per_emotion_topk_prefixes(df, EMOTIONS, "strain_id", k)
+        got = sorted(
+            (r["_prefix_emotion"], r["strain_id"]) for r in prefixes.collect()
+        )
+        return got, partial_group_limits_below_exchange(prefixes)
+
+    def heap_pairs(df, k):
+        return sorted(
+            (e, r["strain_id"])
+            for e in EMOTIONS
+            for r in df.orderBy(F.desc(e), F.asc("strain_id")).limit(k).collect()
+        )
 
     strains = strain_review(spark).repartition(7)
-    k = 13
-    got = {
-        (r["_prefix_emotion"], r["strain_id"])
-        for r in per_emotion_topk_prefixes(
-            strains, EMOTIONS, "strain_id", k
-        ).collect()
-    }
-    want = set()
-    for e in EMOTIONS:
-        for r in (
-            strains.orderBy(F.desc(e), F.asc("strain_id")).limit(k).collect()
-        ):
-            want.add((e, r["strain_id"]))
-    assert got == want
+    # 200 rows over 7 partitions (≤ 29 rows each), 3 distinct scores
+    # per emotion: nearly every rank is decided by the id tie-break
+    tied = spark.range(200).select(
+        F.col("id").alias("strain_id"),
+        *[((F.col("id") * (i + 3)) % 3).cast("double").alias(e)
+          for i, e in enumerate(EMOTIONS)],
+    ).repartition(7)
+    cases = [
+        (strains, 13), (tied, 17), (tied, 50), (tied, max_depth),
+        (tied, 20_000),
+    ]
+    for df, k in cases:
+        with partial_group_limit(spark, k):
+            got, partial = prefix_pairs(df, k)
+        assert got == heap_pairs(df, k), k
+        assert len(partial) == 1, partial
+        assert partial[0].endswith(f"row_number(), {k}, Partial"), partial
+        assert spark.conf.get(conf) == threshold
+
+    got, partial = prefix_pairs(tied, max_depth)
+    assert got == heap_pairs(tied, max_depth)
+    assert partial == []
+
+
+def test_greedy_match_prefix_depth_above_partial_limit_threshold(
+    spark, monkeypatch
+):
+    """A greedy prefix depth past any fixed partial-limit threshold
+    (k1 + n_left − 1 > 10,099 here) must still run, keep the map-side
+    partial limit in its prefix plan, match the Python oracle, and
+    leave the session's threshold as it found it."""
+    from rick_and_morty_data_pipeline_project_spark.operators import matching
+    from rick_and_morty_data_pipeline_project_spark.plans.explain_utils import (
+        partial_group_limits_below_exchange,
+    )
+
+    conf = "spark.sql.optimizer.windowGroupLimitThreshold"
+    threshold = spark.conf.get(conf)
+    k1 = 10_500
+    partials = []
+    prefixes = matching.per_emotion_topk_prefixes
+
+    def spy(df, emotions, id_col, k):
+        out = prefixes(df, emotions, id_col, k)
+        # explaining here pins the plan the greedy's collect then runs
+        partials.append((k, partial_group_limits_below_exchange(out)))
+        return out
+
+    monkeypatch.setattr(matching, "per_emotion_topk_prefixes", spy)
+    got = greedy_match_without_replacement(
+        spark,
+        episode_emotion(spark),
+        strain_review(spark),
+        left_id="episode_id",
+        right_id="strain_id",
+        k1=k1,
+    ).collect()
+    assert spark.conf.get(conf) == threshold
+    [(depth, partial)] = partials
+    assert depth == k1 + len(got) - 1
+    assert len(partial) == 1, partial
+    assert partial[0].endswith(f"row_number(), {depth}, Partial"), partial
+
+    pool = _strain_dicts()
+    want = []
+    for ep in _episode_dicts():
+        top, second = _py_top2({e: ep[e] for e in EMOTIONS})
+        b = _py_two_stage(pool, top, second, k1, 1, "strain_id")[0]
+        pool = [s for s in pool if s["strain_id"] != b["strain_id"]]
+        want.append((ep["episode_id"], b["strain_id"]))
+    assert sorted((r["episode_id"], r["matched_strain_id"]) for r in got) == (
+        sorted(want)
+    )
 
 
 def test_two_stage_topk_property_vs_python(spark):

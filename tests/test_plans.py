@@ -15,6 +15,7 @@ from rick_and_morty_data_pipeline_project_spark.plans.explain_utils import (
     formatted_plan,
     has_broadcast_join,
     has_take_ordered,
+    partial_group_limits_below_exchange,
     pushed_filters,
     read_schemas,
 )
@@ -55,13 +56,21 @@ def test_two_stage_topk_is_heap_topk(spark):
 def test_best_match_ranks_only_bounded_prefixes(spark):
     """EP-3 (best match WITH replacement) must never window-partition the
     full candidate relation on the ≤30-key (top, second) pair: all 6
-    per-emotion prefixes come from ONE bounded-memory corpus pass
-    (per_emotion_topk_prefixes — a MapInPandas partial top-k, not 6
-    rescans, not a pairs-crossJoin-corpus) and every window/join
-    downstream sees only the ≤6·k1-row prefix union."""
+    per-emotion prefixes come from ONE corpus pass whose rank window
+    gets a map-side partial limit below its exchange
+    (per_emotion_topk_prefixes — not 6 rescans, not a
+    pairs-crossJoin-corpus), every window/join downstream sees only the
+    ≤6·k1-row prefix union, and no stage runs in a Python worker (the
+    pair literal is a LocalRelation, not a Python-RDD LogicalRDD)."""
     df = QUERIES["flagship_best_match_with_replacement"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
-    assert "MapInPandas" in plan, plan
+    partial = partial_group_limits_below_exchange(df)
+    assert len(partial) == 1, plan
+    assert partial[0].startswith("[_prefix_emotion#"), partial
+    assert partial[0].endswith("row_number(), 100, Partial"), partial
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, (node, plan)
+    assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
     # single corpus pass for the prefix side: the candidate relation is
     # scanned once there, plus the two left-side (episodes) subtrees —
     # the 6-rescans-of-the-scorer shape would show ≥8 document scans
@@ -1476,12 +1485,13 @@ def test_pq_adc_query_plan(spark):
 
     df = _ALL["knn_cosine_pq"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
-    # exactly two ExistingRDD scans in the tree: the materialized
-    # codes relation (once — not per query) and the broadcast LUT
-    # relation (the details section repeats node names — count the
-    # tree only)
+    # exactly one ExistingRDD scan in the tree — the materialized
+    # codes relation (once — not per query) — plus the broadcast LUT
+    # relation as a LocalTableScan (the details section repeats node
+    # names — count the tree only)
     tree = plan.split("\n\n")[0]
-    assert tree.count("Scan ExistingRDD") == 2, tree
+    assert tree.count("Scan ExistingRDD") == 1, tree
+    assert tree.count("LocalTableScan") == 1, tree
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs and any("_salt" in sp for sp in specs), specs
@@ -1497,9 +1507,10 @@ def test_ivfpq_probed_scan_plan(spark):
     df = _ALL["knn_cosine_ivfpq"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     # index relation scanned once + the broadcast (query, cell, LUT)
-    # relation; the equi-join key is the int cell_id
+    # local relation; the equi-join key is the int cell_id
     tree = plan.split("\n\n")[0]
-    assert tree.count("Scan ExistingRDD") == 2, tree
+    assert tree.count("Scan ExistingRDD") == 1, tree
+    assert tree.count("LocalTableScan") == 1, tree
     assert "BroadcastHashJoin" in plan, plan
     assert re.search(r"cell_id#\d+", plan), plan
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
