@@ -3717,12 +3717,12 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
     # Bounded shape probes (limit caps the result set; one pass each
     # over the already-checkpointed weight relation, nothing touches
     # the raw corpus again).
-    # the three probe jobs are independent reads of the checkpointed
+    # the two gate probes are independent reads of the checkpointed
     # weight relation — submit them concurrently (guide §2.6) instead
-    # of serializing three driver actions
+    # of serializing two driver actions
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         f_terms = pool.submit(
             lambda: [
                 r["term"]
@@ -3739,10 +3739,8 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
             .limit(_TFIDF_DENSE_DOC_CAP + 1)
             .count()
         )
-        f_maxw = pool.submit(lambda: w.agg(F.max("w")).first()[0])
         terms = f_terms.result()
         n_docs_capped = f_ndocs.result()
-        maxw = f_maxw.result()
     dense_ok = (
         len(terms) <= _TFIDF_DENSE_VOCAB_CAP
         and n_docs_capped <= _TFIDF_DENSE_DOC_CAP
@@ -3751,6 +3749,8 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
         # r15: on the dense path the exact verify runs as an unrolled
         # int64-micros dot over the dense vectors (no posting join, no
         # shuffle); an overflow guard falls back to the posting verify.
+        # Only this path reads max(w), so only it runs the probe.
+        maxw = w.agg(F.max("w")).first()[0]
         out = _tfidf_dense_exact_verify(w, na, nb, terms, maxw)
         if out is not None:
             return out

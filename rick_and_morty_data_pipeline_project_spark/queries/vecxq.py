@@ -515,54 +515,53 @@ def knn_recall_matrix(spark, sf_dir):
     # max_workers invariant: the 7 prerequisite tasks (exact + 6
     # variant builds) are all submitted BEFORE any dependent arm task,
     # so with 8 workers no dependent can starve its prerequisite.
-    pool = ThreadPoolExecutor(max_workers=8)
-    f_exact = pool.submit(
-        lambda: knn_bruteforce(queries, e, k=_K)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-    )
-    variant_builders = {
-        "lsh": lambda: knn_lsh(queries, e, k=_K, dim=_DIM, n_planes=6),
-        "lsh_multiprobe": lambda: knn_lsh_multiprobe(
-            queries, e, _MP_TABLE, k=_K
-        ),
-        "ivf": lambda: knn_ivf(queries, e, k=_K, n_cells=8, n_probe=2),
-        "binary": lambda: knn_binary(
-            queries, e, dim=_DIM, k=_K, shortlist=_SHORTLIST
-        ),
-        "ivf_binary": lambda: knn_ivf_binary(
-            queries, e, dim=_DIM, k=_K, n_cells=8, n_probe=2,
-            shortlist=_IVFB_SHORTLIST,
-        ),
-        "sq8": lambda: knn_sq8(
-            queries, e, dim=_DIM, k=_K, shortlist=_SQ_SHORTLIST
-        ),
-    }
-    variant_futs = {
-        name: pool.submit(b) for name, b in variant_builders.items()
-    }
-
-    def build_arm(name):
-        v = variant_futs[name].result().select(
-            "query_id", "neighbor_id", F.lit(1).alias("_hit")
-        )
-        return (
-            f_exact.result()
-            .join(v, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"))
-            .select(
-                F.lit(name).alias("variant"),
-                "query_id",
-                F.col("n_hits").cast("long").alias("n_hits"),
-                (F.col("n_hits") / F.lit(float(_K))).alias("recall"),
-            )
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        f_exact = pool.submit(
+            lambda: knn_bruteforce(queries, e, k=_K)
+            .select("query_id", "neighbor_id")
             .localCheckpoint()
         )
+        variant_builders = {
+            "lsh": lambda: knn_lsh(queries, e, k=_K, dim=_DIM, n_planes=6),
+            "lsh_multiprobe": lambda: knn_lsh_multiprobe(
+                queries, e, _MP_TABLE, k=_K
+            ),
+            "ivf": lambda: knn_ivf(queries, e, k=_K, n_cells=8, n_probe=2),
+            "binary": lambda: knn_binary(
+                queries, e, dim=_DIM, k=_K, shortlist=_SHORTLIST
+            ),
+            "ivf_binary": lambda: knn_ivf_binary(
+                queries, e, dim=_DIM, k=_K, n_cells=8, n_probe=2,
+                shortlist=_IVFB_SHORTLIST,
+            ),
+            "sq8": lambda: knn_sq8(
+                queries, e, dim=_DIM, k=_K, shortlist=_SQ_SHORTLIST
+            ),
+        }
+        variant_futs = {
+            name: pool.submit(b) for name, b in variant_builders.items()
+        }
 
-    arm_futs = [pool.submit(build_arm, name) for name in variant_builders]
-    arms = [f.result() for f in arm_futs]
-    pool.shutdown(wait=True)
+        def build_arm(name):
+            v = variant_futs[name].result().select(
+                "query_id", "neighbor_id", F.lit(1).alias("_hit")
+            )
+            return (
+                f_exact.result()
+                .join(v, ["query_id", "neighbor_id"], "left")
+                .groupBy("query_id")
+                .agg(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"))
+                .select(
+                    F.lit(name).alias("variant"),
+                    "query_id",
+                    F.col("n_hits").cast("long").alias("n_hits"),
+                    (F.col("n_hits") / F.lit(float(_K))).alias("recall"),
+                )
+                .localCheckpoint()
+            )
+
+        arm_futs = [pool.submit(build_arm, name) for name in variant_builders]
+        arms = [f.result() for f in arm_futs]
     out = arms[0]
     for arm in arms[1:]:
         out = out.unionByName(arm)
@@ -1243,174 +1242,173 @@ def knn_frontier_recall_cost(spark, sf_dir, _shared=None):
     # variant builds) are all submitted BEFORE any dependent hit-arm
     # task, so with 8 workers every prerequisite is running before a
     # dependent can block on it — no thread-starvation deadlock.
-    pool = ThreadPoolExecutor(max_workers=8)
+    with ThreadPoolExecutor(max_workers=8) as pool:
 
-    # ---- recall arms (the matrix's variants, means only) ----
-    if _shared is not None:
-        f_exact = pool.submit(lambda: _shared[0])
-    else:
-        f_exact = pool.submit(
-            lambda: knn_bruteforce(queries, e, k=_K)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint()
-        )
-    variant_builders = {
-        "lsh": lambda: knn_lsh(queries, e, k=_K, dim=_DIM, n_planes=6),
-        "lsh_multiprobe": lambda: knn_lsh_multiprobe(
-            queries, e, _MP_TABLE, k=_K
-        ),
-        "ivf": lambda: knn_ivf(queries, e, k=_K, n_cells=8, n_probe=2),
-        "binary": lambda: knn_binary(
-            queries, e, dim=_DIM, k=_K, shortlist=_SHORTLIST
-        ),
-        "ivf_binary": lambda: knn_ivf_binary(
-            queries, e, dim=_DIM, k=_K, n_cells=8, n_probe=2,
-            shortlist=_IVFB_SHORTLIST,
-        ),
-        "sq8": lambda: knn_sq8(
-            queries, e, dim=_DIM, k=_K, shortlist=_SQ_SHORTLIST
-        ),
-    }
-    variant_futs = {
-        name: pool.submit(b) for name, b in variant_builders.items()
-    }
-
-    def hit_arm(name):
-        df = variant_futs[name].result()
-        return (
-            f_exact.result()
-            .join(
-                df.select("query_id", "neighbor_id"),
-                ["query_id", "neighbor_id"],
+        # ---- recall arms (the matrix's variants, means only) ----
+        if _shared is not None:
+            f_exact = pool.submit(lambda: _shared[0])
+        else:
+            f_exact = pool.submit(
+                lambda: knn_bruteforce(queries, e, k=_K)
+                .select("query_id", "neighbor_id")
+                .localCheckpoint()
             )
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-            .select(F.lit(name).alias("variant"), "n_hits")
-            .localCheckpoint()
-        )
-
-    hit_futs = [pool.submit(hit_arm, name) for name in variant_builders]
-
-    # ---- candidate-stage counts ----
-    # corpus size (full-scan tiers touch every non-self vector)
-    ncorp = e.agg(F.count(F.lit(1)).cast("long").alias("_n"))
-
-    # lsh: distinct bucket collisions across the 3 OR-amplified tables
-    # (same seeds/planes as knn_lsh's defaults: seed 42 + 1000·table)
-    tables = [_hyperplanes(_DIM, 6, 42 + 1000 * ti) for ti in range(3)]
-
-    def with_buckets(df, out_id):
-        keys = F.array(
-            *[
-                F.concat_ws(
-                    "#",
-                    F.lit(str(ti)),
-                    lsh_bucket_col(F.col("embedding"), planes),
-                )
-                for ti, planes in enumerate(tables)
-            ]
-        )
-        return df.select(
-            F.col("vec_id").alias(out_id), F.explode(keys).alias("bucket")
-        )
-
-    # fan_out (r15, guide §2.6): the corpus-side bucket/assignment
-    # expressions below are interpreted higher-order vector folds; on
-    # the unsplittable single-file local scan they ran on ONE task
-    # while 31 cores idled.  Count semantics are aggregates over
-    # unordered pairs, so the balancing exchange cannot change a row.
-    lsh_tot = (
-        with_buckets(queries, "query_id")
-        .join(with_buckets(fan_out(e), "neighbor_id"), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates()
-        .agg(F.count(F.lit(1)).cast("long").alias("_cand"))
-    )
-
-    # multiprobe: probe-string hits against the one-bucket corpus
-    # (structurally unique pairs — no distinct needed, mirroring the
-    # operator's no-dedup plan)
-    # explode(array(bucket)) = the same one bucket per row, but the
-    # Generate blocks the join-constraint isnotnull(bucket) from being
-    # substituted (6 interpreted plane dots) and pushed below the
-    # fan_out exchange onto the 1-task scan — see the cells comment in
-    # knn_ivf_probe_frontier.
-    cb = fan_out(e).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.explode(
-            F.array(lsh_bucket_col(F.col("embedding"), _MP_TABLE))
-        ).alias("bucket"),
-    )
-    qp = queries.select(
-        F.col("vec_id").alias("query_id"),
-        lsh_bucket_col(F.col("embedding"), _MP_TABLE).alias("_b"),
-    ).select(
-        "query_id",
-        F.explode(
-            F.array(*probe_bucket_cols(F.col("_b"), _MP_PLANES))
-        ).alias("bucket"),
-    )
-    mp_tot = (
-        F.broadcast(qp)
-        .join(cb, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("_cand"))
-    )
-
-    # ivf / ivf_binary: probed-cell memberships under the shared
-    # head-id coarse quantizer (identical pair count for both tiers);
-    # per-query counts also bound ivf_binary's exact rerank
-    if _shared is not None:
-        cents_lit = _shared[1]
-    else:
-        cent_pairs = head_centroid_pairs(e, "vec_id", "embedding", 8)
-        cents_lit = centroids_literal(
-            cent_pairs, e.schema["vec_id"].dataType.simpleString()
-        )
-    nc = _normalized(fan_out(e), "vec_id", "embedding", "_id", "_nv")
-    nq = _normalized(queries, "vec_id", "embedding", "_id", "_nv")
-
-    def cellof(df, out_id, nprobe):
-        sims = F.transform(
-            cents_lit,
-            lambda c: F.struct(
-                dot_col(F.col("_nv"), c["cent"]).alias("sim"),
-                c["cell_id"].alias("cell_id"),
+        variant_builders = {
+            "lsh": lambda: knn_lsh(queries, e, k=_K, dim=_DIM, n_planes=6),
+            "lsh_multiprobe": lambda: knn_lsh_multiprobe(
+                queries, e, _MP_TABLE, k=_K
             ),
+            "ivf": lambda: knn_ivf(queries, e, k=_K, n_cells=8, n_probe=2),
+            "binary": lambda: knn_binary(
+                queries, e, dim=_DIM, k=_K, shortlist=_SHORTLIST
+            ),
+            "ivf_binary": lambda: knn_ivf_binary(
+                queries, e, dim=_DIM, k=_K, n_cells=8, n_probe=2,
+                shortlist=_IVFB_SHORTLIST,
+            ),
+            "sq8": lambda: knn_sq8(
+                queries, e, dim=_DIM, k=_K, shortlist=_SQ_SHORTLIST
+            ),
+        }
+        variant_futs = {
+            name: pool.submit(b) for name, b in variant_builders.items()
+        }
+
+        def hit_arm(name):
+            df = variant_futs[name].result()
+            return (
+                f_exact.result()
+                .join(
+                    df.select("query_id", "neighbor_id"),
+                    ["query_id", "neighbor_id"],
+                )
+                .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
+                .select(F.lit(name).alias("variant"), "n_hits")
+                .localCheckpoint()
+            )
+
+        hit_futs = [pool.submit(hit_arm, name) for name in variant_builders]
+
+        # ---- candidate-stage counts ----
+        # corpus size (full-scan tiers touch every non-self vector)
+        ncorp = e.agg(F.count(F.lit(1)).cast("long").alias("_n"))
+
+        # lsh: distinct bucket collisions across the 3 OR-amplified tables
+        # (same seeds/planes as knn_lsh's defaults: seed 42 + 1000·table)
+        tables = [_hyperplanes(_DIM, 6, 42 + 1000 * ti) for ti in range(3)]
+
+        def with_buckets(df, out_id):
+            keys = F.array(
+                *[
+                    F.concat_ws(
+                        "#",
+                        F.lit(str(ti)),
+                        lsh_bucket_col(F.col("embedding"), planes),
+                    )
+                    for ti, planes in enumerate(tables)
+                ]
+            )
+            return df.select(
+                F.col("vec_id").alias(out_id), F.explode(keys).alias("bucket")
+            )
+
+        # fan_out (r15, guide §2.6): the corpus-side bucket/assignment
+        # expressions below are interpreted higher-order vector folds; on
+        # the unsplittable single-file local scan they ran on ONE task
+        # while 31 cores idled.  Count semantics are aggregates over
+        # unordered pairs, so the balancing exchange cannot change a row.
+        lsh_tot = (
+            with_buckets(queries, "query_id")
+            .join(with_buckets(fan_out(e), "neighbor_id"), "bucket")
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .select("query_id", "neighbor_id")
+            .dropDuplicates()
+            .agg(F.count(F.lit(1)).cast("long").alias("_cand"))
         )
-        top = F.slice(F.array_sort(sims, cell_sim_cmp), 1, nprobe)
-        return df.select(
-            F.col("_id").alias(out_id), F.explode(top).alias("_c")
-        ).select(out_id, F.col("_c.cell_id").alias("cell_id"))
 
-    ivf_per_q = (
-        F.broadcast(cellof(nq, "query_id", 2))
-        .join(cellof(nc, "neighbor_id", 1), "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("_cnt"))
-    )
-    ivf_tot = ivf_per_q.agg(
-        F.sum("_cnt").cast("long").alias("_cand"),
-        F.sum(F.least(F.lit(_FRONT_IVFB_SHORT).cast("long"), F.col("_cnt")))
-        .cast("long")
-        .alias("_rer"),
-    )
+        # multiprobe: probe-string hits against the one-bucket corpus
+        # (structurally unique pairs — no distinct needed, mirroring the
+        # operator's no-dedup plan)
+        # explode(array(bucket)) = the same one bucket per row, but the
+        # Generate blocks the join-constraint isnotnull(bucket) from being
+        # substituted (6 interpreted plane dots) and pushed below the
+        # fan_out exchange onto the 1-task scan — see the cells comment in
+        # knn_ivf_probe_frontier.
+        cb = fan_out(e).select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.explode(
+                F.array(lsh_bucket_col(F.col("embedding"), _MP_TABLE))
+            ).alias("bucket"),
+        )
+        qp = queries.select(
+            F.col("vec_id").alias("query_id"),
+            lsh_bucket_col(F.col("embedding"), _MP_TABLE).alias("_b"),
+        ).select(
+            "query_id",
+            F.explode(
+                F.array(*probe_bucket_cols(F.col("_b"), _MP_PLANES))
+            ).alias("bucket"),
+        )
+        mp_tot = (
+            F.broadcast(qp)
+            .join(cb, "bucket")
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .agg(F.count(F.lit(1)).cast("long").alias("_cand"))
+        )
 
-    # materialize the one-row count relations concurrently with the
-    # hit arms (each is an independent job; contents order-free)
-    f_lsh_tot = pool.submit(lsh_tot.localCheckpoint)
-    f_mp_tot = pool.submit(mp_tot.localCheckpoint)
-    f_ivf_tot = pool.submit(ivf_tot.localCheckpoint)
-    f_ncorp = pool.submit(ncorp.localCheckpoint)
+        # ivf / ivf_binary: probed-cell memberships under the shared
+        # head-id coarse quantizer (identical pair count for both tiers);
+        # per-query counts also bound ivf_binary's exact rerank
+        if _shared is not None:
+            cents_lit = _shared[1]
+        else:
+            cent_pairs = head_centroid_pairs(e, "vec_id", "embedding", 8)
+            cents_lit = centroids_literal(
+                cent_pairs, e.schema["vec_id"].dataType.simpleString()
+            )
+        nc = _normalized(fan_out(e), "vec_id", "embedding", "_id", "_nv")
+        nq = _normalized(queries, "vec_id", "embedding", "_id", "_nv")
 
-    hit_arms = [f.result() for f in hit_futs]
-    hits = hit_arms[0]
-    for arm in hit_arms[1:]:
-        hits = hits.unionByName(arm)
-    lsh_tot, mp_tot = f_lsh_tot.result(), f_mp_tot.result()
-    ivf_tot, ncorp = f_ivf_tot.result(), f_ncorp.result()
-    pool.shutdown(wait=True)
+        def cellof(df, out_id, nprobe):
+            sims = F.transform(
+                cents_lit,
+                lambda c: F.struct(
+                    dot_col(F.col("_nv"), c["cent"]).alias("sim"),
+                    c["cell_id"].alias("cell_id"),
+                ),
+            )
+            top = F.slice(F.array_sort(sims, cell_sim_cmp), 1, nprobe)
+            return df.select(
+                F.col("_id").alias(out_id), F.explode(top).alias("_c")
+            ).select(out_id, F.col("_c.cell_id").alias("cell_id"))
+
+        ivf_per_q = (
+            F.broadcast(cellof(nq, "query_id", 2))
+            .join(cellof(nc, "neighbor_id", 1), "cell_id")
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .groupBy("query_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("_cnt"))
+        )
+        ivf_tot = ivf_per_q.agg(
+            F.sum("_cnt").cast("long").alias("_cand"),
+            F.sum(F.least(F.lit(_FRONT_IVFB_SHORT).cast("long"), F.col("_cnt")))
+            .cast("long")
+            .alias("_rer"),
+        )
+
+        # materialize the one-row count relations concurrently with the
+        # hit arms (each is an independent job; contents order-free)
+        f_lsh_tot = pool.submit(lsh_tot.localCheckpoint)
+        f_mp_tot = pool.submit(mp_tot.localCheckpoint)
+        f_ivf_tot = pool.submit(ivf_tot.localCheckpoint)
+        f_ncorp = pool.submit(ncorp.localCheckpoint)
+
+        hit_arms = [f.result() for f in hit_futs]
+        hits = hit_arms[0]
+        for arm in hit_arms[1:]:
+            hits = hits.unionByName(arm)
+        lsh_tot, mp_tot = f_lsh_tot.result(), f_mp_tot.result()
+        ivf_tot, ncorp = f_ivf_tot.result(), f_ncorp.result()
 
     # ---- per-variant cost rows ----
     def _lits(b, r):

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.sources.corpus import load_table
+
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table with ts normalized to
@@ -116,7 +118,7 @@ def stream_enriched_hourly(
     changes re-read per batch, stream never buffered for the join.
     """
     events = events_stream(spark, sf_dir)
-    customers = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    customers = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     return (

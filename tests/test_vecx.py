@@ -4,6 +4,7 @@ operators/randproj.py; driver queries in queries/vecxq.py)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rick_and_morty_data_pipeline_project_spark.operators.binquant import (
@@ -25,7 +26,7 @@ from rick_and_morty_data_pipeline_project_spark.plans.explain_utils import (
     formatted_plan,
 )
 from rick_and_morty_data_pipeline_project_spark.queries._util import t
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 def _pairs(df):
@@ -195,8 +196,6 @@ def test_gemm_graph_rounding_margin():
 
 
 def test_gemm_graph_cap_guard(spark):
-    import pytest
-
     from rick_and_morty_data_pipeline_project_spark.operators.gemmknn import (
         knn_graph_gemm,
     )
@@ -635,3 +634,32 @@ def test_ivf_probe_frontier_structure(spark):
         for r in knn_frontier_recall_cost(spark, SF_ORACLE).collect()
     }
     assert cands[1] == tier["ivf"]
+
+
+class _ArmFailed(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("builder", ["knn_recall_matrix", "knn_frontier_recall_cost"])
+def test_failing_arm_surfaces_and_shuts_pool_down(spark, monkeypatch, builder):
+    # one variant builder raises inside the concurrent arm pool: the
+    # caller must see that exception, and every pool worker thread
+    # must be gone once it does
+    import threading
+
+    from rick_and_morty_data_pipeline_project_spark.operators import sq
+    from rick_and_morty_data_pipeline_project_spark.queries import vecxq
+
+    def boom(*args, **kwargs):
+        raise _ArmFailed("sq8 arm")
+
+    monkeypatch.setattr(sq, "knn_sq8", boom)
+    before = set(threading.enumerate())
+    with pytest.raises(_ArmFailed, match="sq8 arm"):
+        getattr(vecxq, builder)(spark, SF_SMALL)
+    left = [
+        th.name
+        for th in threading.enumerate()
+        if th not in before and th.name.startswith("ThreadPoolExecutor")
+    ]
+    assert left == []
