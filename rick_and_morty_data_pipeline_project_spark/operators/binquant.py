@@ -350,13 +350,15 @@ def knn_lsh_multiprobe(
 
     n_planes = len(planes)
     # explode(array(bucket)) emits the same single bucket per corpus
-    # row, but the Generate is a predicate-pushdown barrier: without
-    # it, the bucket equi-join makes InferFiltersFromConstraints infer
-    # isnotnull(bucket), substitute the n_planes interpreted plane-dot
-    # CASEs into it, and push that below the fan_out exchange onto the
-    # 1-task local scan — a serialized double evaluation of the whole
-    # bucket pipeline (r15; the same disease InferFiltersFromGenerate
-    # caused in r14, this time from join constraints).
+    # row, but the Generate is a predicate-pushdown barrier: the bucket
+    # equi-join lets InferFiltersFromConstraints infer isnotnull(bucket),
+    # and pushed below the fan_out exchange that filter would evaluate
+    # the n_planes interpreted plane-dot CASEs a second time on the
+    # 1-task local scan (the disease InferFiltersFromGenerate caused in
+    # r14).  The bucket string is non-nullable, so today the inferred
+    # filter folds away with or without the barrier (the IVF cell_id
+    # in queries/vecxq.py is nullable, and there it is load-bearing);
+    # tests/test_plans.py pins that the bucket stays above fan_out.
     c = fan_out(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv_raw"),

@@ -55,14 +55,14 @@ def exact_dedup_keep_first(df: DataFrame, id_col: str, text_col: str) -> DataFra
     )
 
 
-def minhash_signatures(
+def with_minhash_signature(
     df: DataFrame,
-    id_col: str,
     text_col: str,
     num_hashes: int = 8,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """(id, sig array<string>) MinHash signatures over token shingles.
+    """Every column of ``df`` plus the MinHash ``sig`` (array<string>)
+    of its token shingles.
 
     Shape: entirely per-row (narrow) — one array pass computes the
     md5 hash material for ALL components (``shingle_hashes_col``),
@@ -80,35 +80,42 @@ def minhash_signatures(
         tokens_col,
     )
 
+    cols = [F.col(c) for c in df.columns]
     # Staged projections: each alias is multi-referenced downstream so
     # CollapseProject keeps the boundary and each stage runs once.
     toked = fan_out(df).select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_tk")
+        *cols, tokens_col(F.col(text_col)).alias("_tk")
     )
     shingled = toked.select(
-        F.col(id_col), shingles_from_tokens(F.col("_tk"), shingle_k).alias("_sh")
+        *cols, shingles_from_tokens(F.col("_tk"), shingle_k).alias("_sh")
     )
     hashed = shingled.select(
-        F.col(id_col), shingle_hashes_col(F.col("_sh"), num_hashes).alias("_h")
+        *cols, shingle_hashes_col(F.col("_sh"), num_hashes).alias("_h")
     )
     return hashed.select(
-        F.col(id_col),
+        *cols,
         F.array(*minhash_components(F.col("_h"), num_hashes)).alias("sig"),
     )
 
 
-def _banded_signatures(
+def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int,
-    band_size: int,
-    shingle_k: int,
+    num_hashes: int = 8,
+    shingle_k: int = 3,
 ) -> DataFrame:
-    """(id, sig, band) — one row per (document, band), band key =
-    ``"{band_idx}|{component...}"``.  The LSH bucketing relation both
-    the self-join and the cross-set (incremental) join build on."""
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
+    """(id, sig) MinHash signatures; see :func:`with_minhash_signature`."""
+    return with_minhash_signature(
+        df.select(id_col, text_col), text_col, num_hashes, shingle_k
+    ).select(id_col, "sig")
+
+
+def lsh_bands(sigs: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
+    """``sigs`` plus ``band``: one row per (row, band) of its ``sig``
+    column, band key = ``"{band_idx}|{component...}"``.  The one
+    band-key formula: the self-join, the cross-set join and the
+    streaming near-dup sink all bucket through it."""
     n_bands = num_hashes // band_size
     band_cols = [
         F.concat_ws(
@@ -118,9 +125,16 @@ def _banded_signatures(
         ).alias(f"band_{b}")
         for b in range(n_bands)
     ]
-    return sigs.select(
-        id_col, "sig", F.explode(F.array(*band_cols)).alias("band")
+    return sigs.select("*", F.explode(F.array(*band_cols)).alias("band"))
+
+
+def signature_jaccard(a_sig: Column, b_sig: Column, num_hashes: int) -> Column:
+    """Estimated Jaccard similarity of two MinHash signatures: the
+    fraction of agreeing components."""
+    agree = F.size(
+        F.filter(F.zip_with(a_sig, b_sig, lambda x, y: x == y), lambda m: m)
     )
+    return agree / F.lit(num_hashes)
 
 
 def minhash_lsh_pairs(
@@ -139,17 +153,13 @@ def minhash_lsh_pairs(
     components.  The join key is the band hash, so only colliding
     documents meet — the LSH trick that replaces the O(n²) cross join.
     """
-    banded = _banded_signatures(
-        df, id_col, text_col, num_hashes, band_size, shingle_k
+    banded = lsh_bands(
+        minhash_signatures(df, id_col, text_col, num_hashes, shingle_k),
+        num_hashes,
+        band_size,
     )
     a = banded.alias("a")
     b = banded.alias("b")
-    agree = F.size(
-        F.filter(
-            F.zip_with("a.sig", "b.sig", lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
     # jaccard_est is a function of the pair, so distinct over the three
     # small output columns — never shuffle the signature arrays.
     # shuffle_hash: see ngram_jaccard_pairs — the banded relation is
@@ -161,7 +171,9 @@ def minhash_lsh_pairs(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            (agree / F.lit(num_hashes)).alias("jaccard_est"),
+            signature_jaccard(
+                F.col("a.sig"), F.col("b.sig"), num_hashes
+            ).alias("jaccard_est"),
         )
         .distinct()
     )
@@ -180,30 +192,32 @@ def minhash_lsh_pairs_between(
     batch (``left``) and an existing corpus (``right``) — the
     incremental form of near-dedup.  Only (batch, corpus) pairs whose
     band buckets collide materialize; batch-batch and corpus-corpus
-    pairs are never formed, so steady-state ingest cost scales with
-    |batch| × collision rate, not the corpus.  Join stays shuffle_hash:
-    at scale the corpus banding relation is never broadcastable, and
-    the batch side re-shuffles only its own bands.
+    pairs are never formed.  Both sides are MinHashed here, so a call
+    still hashes all of ``right`` and scans its band rows: the join
+    output scales with |batch| × collision rate, the hashing and the
+    band scan with |left| + |right|.  Join stays shuffle_hash: at scale
+    the corpus banding relation is never broadcastable, and the batch
+    side re-shuffles only its own bands.
 
     Output: (id_left, id_right, jaccard_est)."""
-    a = _banded_signatures(
-        left, id_col, text_col, num_hashes, band_size, shingle_k
+    a = lsh_bands(
+        minhash_signatures(left, id_col, text_col, num_hashes, shingle_k),
+        num_hashes,
+        band_size,
     ).alias("a")
-    b = _banded_signatures(
-        right, id_col, text_col, num_hashes, band_size, shingle_k
+    b = lsh_bands(
+        minhash_signatures(right, id_col, text_col, num_hashes, shingle_k),
+        num_hashes,
+        band_size,
     ).alias("b")
-    agree = F.size(
-        F.filter(
-            F.zip_with("a.sig", "b.sig", lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
     return (
         a.join(b.hint("shuffle_hash"), on="band")
         .select(
             F.col(f"a.{id_col}").alias("id_left"),
             F.col(f"b.{id_col}").alias("id_right"),
-            (agree / F.lit(num_hashes)).alias("jaccard_est"),
+            signature_jaccard(
+                F.col("a.sig"), F.col("b.sig"), num_hashes
+            ).alias("jaccard_est"),
         )
         .distinct()
     )
@@ -465,48 +479,62 @@ def connected_components(
 
     Min-label propagation: every node starts labeled with itself; each
     round a node adopts the min of its own and its neighbors' labels;
-    stable labels = components.  Each round is one shuffle join
-    (labels ⋈ edges on the source node) plus one map-combinable min
-    aggregation — the standard large-graph CC loop, converging in
-    O(graph diameter) rounds (near-dup clusters are shallow: a handful
-    of rounds).  ``localCheckpoint`` truncates the growing lineage each
-    round so round N's plan does not replay rounds 1..N−1; the
-    convergence check is a count of changed labels, one tiny action per
-    round.  Iterative by nature — not expressible as one SQL statement
-    in Spark, but reproducible by a recursive-CTE oracle.
+    stable labels = components.  Round 1 needs no label relation (a
+    node's neighbors are labeled with themselves), so it is one
+    aggregation over the edges: ``least(node, min(dst))``.  Every later
+    round is one shuffle join (edges ⋈ labels on the source node) plus
+    one map-combinable min aggregation, into which a self row carries
+    each node's old label — the standard large-graph CC loop,
+    converging in O(graph diameter) rounds (near-dup clusters are
+    shallow: a handful of rounds).  ``localCheckpoint`` truncates the
+    growing lineage each round so round N's plan does not replay rounds
+    1..N−1; the same checkpoint job counts the changed labels through
+    an ``observe`` metric, so convergence costs no extra action.
+    Iterative by nature — not expressible as one SQL statement in
+    Spark, but reproducible by a recursive-CTE oracle.
     """
+    from pyspark.sql import Observation
+
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionByName(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
     edges = edges.distinct().localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-                (F.col("nbr_label") < F.col("label")).alias("_changed"),
+
+    def checkpoint(rnd: DataFrame) -> tuple[DataFrame, int]:
+        """(node, label) of a round plus its count of changed labels,
+        from ``rnd``'s (node, label, _old) rows in one job."""
+        obs = Observation()
+        labels = (
+            rnd.observe(
+                obs, F.count_if(F.col("label") < F.col("_old")).alias("n")
             )
-        ).localCheckpoint()
-        n_changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
+            .select("node", "label")
+            .localCheckpoint()
+        )
+        return labels, obs.get["n"]
+
+    labels, n_changed = checkpoint(
+        edges.groupBy(F.col("src").alias("node")).agg(
+            F.least(F.col("src"), F.min("dst")).alias("label"),
+            F.col("src").alias("_old"),
+        )
+    )
+    for _ in range(max_iter - 1):
         if n_changed == 0:
             break
+        nbr = edges.join(labels, edges["src"] == labels["node"]).select(
+            F.col("dst").alias("node"),
+            "label",
+            F.lit(None).cast(labels.schema["label"].dataType).alias("_old"),
+        )
+        own = labels.select("node", "label", F.col("label").alias("_old"))
+        labels, n_changed = checkpoint(
+            nbr.unionByName(own)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"), F.min("_old").alias("_old"))
+        )
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
 

@@ -60,3 +60,25 @@ def partial_group_limits_below_exchange(df: DataFrame) -> list[str]:
         if args.endswith(", Partial"):
             out.append(args)
     return out
+
+
+def subtrees_below(df: DataFrame, node: str) -> list[str]:
+    """The physical subtree under every plan node whose line contains
+    ``node`` (e.g. ``"Exchange RoundRobinPartitioning"``), one string
+    each: the lines after the node that are indented deeper than it.
+    Reads the plan before execution, expressions inline."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :|+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if node in line:
+            below = []
+            for child in lines[i + 1:]:
+                if depth(child) <= depth(line):
+                    break
+                below.append(child)
+            out.append("\n".join(below))
+    return out

@@ -144,7 +144,7 @@ BROADCAST_DIMS = {"region", "nation"}
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-def _footer(path: str):
+def parquet_footer(path: str):
     """Arrow schema from the parquet footer of ``path`` (a file, or the
     first data file of a directory), read on the driver with pyarrow:
     no Spark job.  INT96 timestamps surface as millis, so they can pass
@@ -204,12 +204,12 @@ def declared_schema(sf_dir: str, name: str) -> StructType | None:
     reader rejects nanos as a timestamp).  None for files of any other
     shape, such as hand-built test tables; Spark then infers their
     schema, which launches a job."""
-    return _declared(name, _footer(f"{sf_dir}/{name}.parquet"))
+    return _declared(name, parquet_footer(f"{sf_dir}/{name}.parquet"))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    footer = _footer(path)
+    footer = parquet_footer(path)
     schema = _declared(name, footer)
     reader = spark.read if schema is None else spark.read.schema(schema)
     if name != "events":

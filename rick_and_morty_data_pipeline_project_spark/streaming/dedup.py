@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
     fingerprint_col,
@@ -89,8 +90,6 @@ def stream_ingest_dedup(
     Returns the started StreamingQuery (availableNow trigger); caller
     awaits termination.
     """
-    from pyspark.sql.window import Window
-
     corpus_fp = corpus.select(
         fingerprint_col(F.col(text_col)).alias("fp")
     )
@@ -111,7 +110,7 @@ def stream_ingest_dedup(
         seen = corpus_fp
         if _output_exists(sess, out_dir):
             seen = seen.unionByName(
-                sess.read.parquet(out_dir).select("fp")
+                sess.read.schema("fp STRING").parquet(out_dir)
             )
         if bloom_m_log2 is not None:
             new_rows = incremental_dedup_bloom(
@@ -127,6 +126,43 @@ def stream_ingest_dedup(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _kept_state(sess, out_dir: str, id_field) -> DataFrame:
+    """The near-dup sink's state, ``(id, sig, ingest_batch)`` of every
+    kept row, read with a declared schema (no inference job).  A kept
+    table without those columns raises instead: read with the declared
+    schema it would yield null signatures, which match nothing, and
+    silently let duplicates in.  The check reads the parquet footer on
+    the driver (no Spark job); where pyarrow cannot open the path it
+    falls back to Spark's schema inference."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    from rick_and_morty_data_pipeline_project_spark.sources.corpus import (
+        parquet_footer,
+    )
+
+    footer = parquet_footer(out_dir)
+    names = (
+        footer.names if footer is not None
+        else sess.read.parquet(out_dir).columns
+    )
+    for col in ("sig", "ingest_batch"):
+        if col not in names:
+            raise ValueError(
+                f"kept table {out_dir} has no '{col}' column: it was not "
+                "written by this near-dup sink (tables written before the "
+                "sink stored its state lack it); re-ingest it into a new "
+                "output directory"
+            )
+    schema = StructType(
+        [
+            id_field,
+            StructField("sig", ArrayType(StringType())),
+            StructField("ingest_batch", StringType()),
+        ]
+    )
+    return sess.read.schema(schema).parquet(out_dir)
 
 
 def stream_ingest_neardup(
@@ -148,11 +184,15 @@ def stream_ingest_neardup(
 
     Per micro-batch:
 
-    1. cross-set banded LSH (``minhash_lsh_pairs_between``) against the
-       curated corpus PLUS everything previous batches appended — batch
-       rows with a candidate partner at ``jaccard_est ≥ threshold``
-       are near-dups of already-kept documents and drop;
-    2. within the remaining batch rows, in-batch LSH pairs →
+    1. the batch rows get their MinHash ``sig`` once, and that relation
+       is checkpointed;
+    2. ONE banded LSH join of the batch bands against (batch bands ∪
+       seen bands), seen = the curated corpus PLUS everything previous
+       batches appended, each row tagged with its side; pairs at
+       ``jaccard_est ≥ threshold`` are checkpointed once.  Batch rows
+       with a seen partner are near-dups of already-kept documents and
+       drop;
+    3. the in-batch pairs whose endpoints both survive step 2 →
        connected components → keep the MIN-ID representative per
        cluster (the connected-components min-label policy, transitive
        within the batch; note the batch curation pipeline ranks its
@@ -162,12 +202,23 @@ def stream_ingest_neardup(
        the honest streaming semantics).
 
     State is the durable output table itself (zero StateStore
-    footprint), exactly like the exact-ingest twin: steady-state cost
-    per batch is |batch| × band-collision rate — batch-batch work never
-    touches the corpus beyond the banding join, and the corpus banding
-    side shuffles only its band keys.  At 100 TB the corpus signatures
-    are precomputed and bucketed by band so each ingest join is
-    exchange-free on the corpus side.
+    footprint), exactly like the exact-ingest twin keeps ``fp`` there:
+    kept rows carry their ``sig``, and each batch reads the state back
+    with a declared schema, so kept text is never re-hashed.  Kept rows
+    also carry ``ingest_batch``,
+    ``"{query id}:{batch id}"`` (the query id persists across restarts
+    from one checkpoint).  A batch leaves the rows tagged with its own
+    ``ingest_batch`` out of its seen state, so a replayed batch (the
+    sink appended, the commit log did not record it) sees the state
+    its first attempt saw and computes the same kept set; rows the
+    first attempt already appended are then anti-joined away, so the
+    replay appends nothing.  Cost per batch: MinHashing is
+    O(|batch| + |corpus|) — the corpus is the caller's DataFrame and is
+    re-hashed every batch — and the band join scans
+    O(|batch| + |corpus| + |kept|) band rows, while the pairs it emits
+    scale with |batch| × band-collision rate.  Storing the corpus
+    signatures bucketed by band would take the corpus hashing and its
+    band shuffle off the per-batch path; this sink does not do that.
 
     Keeper policy note: a batch row suppressed by a corpus partner is
     dropped even if it would also have claimed in-batch followers —
@@ -182,44 +233,87 @@ def stream_ingest_neardup(
     """
     from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
         connected_components,
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_between,
+        lsh_bands,
+        minhash_signatures,
+        signature_jaccard,
+        with_minhash_signature,
     )
 
-    lsh_kwargs = dict(
-        num_hashes=num_hashes, band_size=band_size, shingle_k=shingle_k
+    corpus_sig = minhash_signatures(
+        corpus, id_col, text_col, num_hashes, shingle_k
     )
-    base = corpus.select(F.col(id_col), F.col(text_col))
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        seen = base
+        query_id = sess.sparkContext.getLocalProperty("sql.streaming.queryId")
+        tag = f"{query_id}:{batch_id}"
+        batch = with_minhash_signature(
+            batch_df, text_col, num_hashes, shingle_k
+        ).localCheckpoint()  # hashed once, consumed 3×
+        seen = corpus_sig
+        written = None  # ids a replay's first attempt already appended
         if _output_exists(sess, out_dir):
-            seen = seen.unionByName(
-                sess.read.parquet(out_dir).select(id_col, text_col)
+            state = _kept_state(sess, out_dir, batch.schema[id_col])
+            own = F.col("ingest_batch") == tag
+            seen = seen.unionByName(state.filter(~own).select(id_col, "sig"))
+            written = state.filter(own).select(id_col)
+
+        def bands(sigs: DataFrame, is_seen: bool) -> DataFrame:
+            return lsh_bands(
+                sigs.select(id_col, "sig"), num_hashes, band_size
+            ).withColumn("_seen", F.lit(is_seen))
+
+        # One join finds both candidate kinds: batch × seen pairs (any
+        # ids) and batch × batch pairs, the latter in both directions,
+        # so that every batch row a sees all its partners in its own
+        # id_a partition: _drop marks a as having a corpus/kept partner.
+        batch_bands = bands(batch, False)
+        a = batch_bands.alias("a")
+        b = batch_bands.unionByName(bands(seen, True)).alias("b")
+        matches = (
+            a.join(b.hint("shuffle_hash"), on="band")
+            .filter(
+                F.col("b._seen")
+                | (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
             )
-        batch = batch_df.localCheckpoint()  # freeze: consumed 3×
-
-        cross = minhash_lsh_pairs_between(
-            batch, seen, id_col, text_col, **lsh_kwargs
-        ).filter(F.col("jaccard_est") >= threshold)
-        survivors = batch.join(
-            cross.select(F.col("id_left").alias(id_col)).distinct(),
-            id_col,
-            "left_anti",
-        ).localCheckpoint()
-
-        pairs = minhash_lsh_pairs(
-            survivors, id_col, text_col, **lsh_kwargs
-        ).filter(F.col("jaccard_est") >= threshold)
+            .filter(
+                signature_jaccard(
+                    F.col("a.sig"), F.col("b.sig"), num_hashes
+                ) >= threshold
+            )
+            .select(
+                F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+                F.col("b._seen").alias("_seen"),
+            )
+            .withColumn("_drop", F.max("_seen").over(Window.partitionBy("id_a")))
+            .distinct()
+            .localCheckpoint()
+        )
+        dropped = matches.filter("_seen").select(F.col("id_a").alias(id_col))
+        # An in-batch edge stands when neither end is dropped, i.e. when
+        # both of its directions survive the _drop filter.
+        edges = (
+            matches.filter(~F.col("_drop"))
+            .groupBy(
+                F.least("id_a", "id_b").alias("id_a"),
+                F.greatest("id_a", "id_b").alias("id_b"),
+            )
+            .count()
+            .filter(F.col("count") == 2)
+        )
         losers = (
-            connected_components(pairs, "id_a", "id_b")
+            connected_components(edges, "id_a", "id_b")
             .filter(F.col("node") != F.col("cluster_id"))
             .select(F.col("node").alias(id_col))
         )
-        survivors.join(losers, id_col, "left_anti").write.mode(
-            "append"
-        ).parquet(out_dir)
+        excluded = dropped.unionByName(losers)
+        if written is not None:
+            excluded = excluded.unionByName(written)
+        kept = batch.join(excluded, id_col, "left_anti").withColumn(
+            "ingest_batch", F.lit(tag)
+        )
+        kept.write.mode("append").parquet(out_dir)
 
     return (
         stream.writeStream.foreachBatch(_sink)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -18,3 +19,18 @@ def spark():
     s = get_spark(app_name="engine-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
     s.stop()
+
+
+def job_ids(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` launches on this thread."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))

@@ -13,7 +13,6 @@ import datetime
 import glob
 import importlib.util
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -25,7 +24,7 @@ from rick_and_morty_data_pipeline_project_spark.sources.corpus import (
     declared_schema,
     load_table,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, job_ids
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -51,21 +50,6 @@ def generated_corpus(tmp_path_factory) -> str:
     return gen.ensure_corpus(str(tmp_path_factory.mktemp("gen")), "0.001")
 
 
-def _job_ids(spark, fn) -> list[int]:
-    """Ids of the Spark jobs ``fn()`` launches on this thread."""
-    sc = spark.sparkContext
-    group = f"load-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job starts reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("corpus", _corpora_on_disk() + ["generated"])
 def test_declared_schemas_equal_inferred(spark, request, corpus):
     sf_dir = request.getfixturevalue("generated_corpus") if corpus == "generated" else corpus
@@ -76,9 +60,9 @@ def test_declared_schemas_equal_inferred(spark, request, corpus):
 
 def test_load_table_launches_no_spark_job(spark):
     # control: schema inference does launch a job the probe sees
-    assert _job_ids(spark, lambda: spark.read.parquet(f"{SF_SMALL}/region.parquet"))
+    assert job_ids(spark, lambda: spark.read.parquet(f"{SF_SMALL}/region.parquet"))
     for name in TABLES:
-        assert _job_ids(spark, lambda: load_table(spark, SF_SMALL, name)) == [], name
+        assert job_ids(spark, lambda: load_table(spark, SF_SMALL, name)) == [], name
 
 
 def _events_pair(tmp_path) -> dict[str, str]:
@@ -110,7 +94,7 @@ def test_load_table_events_nanos_branch(spark, tmp_path, prior):
     dirs = _events_pair(tmp_path)
     spark.conf.set(NANOS_CONF, prior)
     try:
-        assert _job_ids(spark, lambda: load_table(spark, dirs["ns"], "events")) == []
+        assert job_ids(spark, lambda: load_table(spark, dirs["ns"], "events")) == []
         nanos = load_table(spark, dirs["ns"], "events")
         assert spark.conf.get(NANOS_CONF) == prior
         micros = load_table(spark, dirs["us"], "events")

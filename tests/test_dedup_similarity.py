@@ -235,22 +235,26 @@ def test_connected_components_long_chain_converges(spark):
 
 def test_connected_components_matches_union_find_property(spark):
     """Property test: on random graphs, the distributed min-label
-    propagation equals a driver-side union-find ground truth."""
+    propagation equals a driver-side union-find ground truth — plus the
+    edge cases an ingest micro-batch hands it: no edges at all (round 1
+    is empty) and a single edge (converged after round 1)."""
     import random as _random
 
     from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
         connected_components,
     )
 
+    graphs = [(2, []), (9, [(3, 8)])]
     for seed in range(5):
         rng = _random.Random(seed)
         n_nodes = rng.randrange(5, 40)
-        edges = sorted(
+        graphs.append((n_nodes, sorted(
             {
                 tuple(sorted(rng.sample(range(n_nodes), 2)))
                 for _ in range(rng.randrange(1, 60))
             }
-        )
+        )))
+    for n_nodes, edges in graphs:
         parent = list(range(n_nodes))
 
         def find(x):
@@ -271,7 +275,29 @@ def test_connected_components_matches_union_find_property(spark):
                 spark.createDataFrame(edges, "id_a long, id_b long")
             ).collect()
         }
-        assert got == want, (seed, edges)
+        assert got == want, edges
+
+
+def test_connected_components_runs_no_count(spark, monkeypatch):
+    """Convergence rides each round's checkpoint job (an ``observe``
+    metric): the operator never spends a separate ``count()`` action."""
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        connected_components,
+    )
+
+    # the concrete class: Spark 4's pyspark.sql.classic DataFrame
+    # overrides count, so patching the pyspark.sql.DataFrame base misses it
+    df_cls = type(spark.range(1))
+
+    def no_count(self):
+        raise AssertionError("connected_components called count()")
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)] + [(10, 11)], "id_a long, id_b long"
+    )
+    monkeypatch.setattr(df_cls, "count", no_count)
+    got = {r["node"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    assert got == {**{i: 0 for i in range(7)}, 10: 10, 11: 10}
 
 
 def test_knn_quantized_recall_vs_exact(spark):

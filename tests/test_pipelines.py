@@ -67,36 +67,26 @@ def test_curate_corpus_end_to_end(spark, tmp_path):
 
 
 def test_curate_corpus_single_pass_accounting(spark, tmp_path, monkeypatch):
-    """Funnel accounting must be free: outside connected_components'
-    convergence checks, the pipeline may run exactly ONE count action
-    (the persist-materializing exact-dedup count, which also completes
-    the raw/quality observations) — the near-dedup count rides the
-    write.  Round 2 ran four lineage-replaying count() actions; this
-    pins the single-pass design."""
+    """Funnel accounting must be free: the pipeline may run exactly ONE
+    count action (the persist-materializing exact-dedup count, which
+    also completes the raw/quality observations) — the near-dedup count
+    rides the write, and connected_components detects convergence with
+    an observe metric on each round's checkpoint.  Round 2 ran four
+    lineage-replaying count() actions; this pins the single-pass
+    design."""
     import rick_and_morty_data_pipeline_project_spark.pipelines as P
 
     # patch the CONCRETE class (Spark 4: pyspark.sql.classic.dataframe
     # overrides count) — patching the pyspark.sql.DataFrame base misses it
     df_cls = type(spark.range(1))
     counts = {"n": 0}
-    in_cc = {"v": False}
     orig_count = df_cls.count
-    orig_cc = P.connected_components
 
     def counting(self):
-        if not in_cc["v"]:
-            counts["n"] += 1
+        counts["n"] += 1
         return orig_count(self)
 
-    def cc(*args, **kwargs):
-        in_cc["v"] = True
-        try:
-            return orig_cc(*args, **kwargs)
-        finally:
-            in_cc["v"] = False
-
     monkeypatch.setattr(df_cls, "count", counting)
-    monkeypatch.setattr(P, "connected_components", cc)
     funnel = P.curate_corpus(spark, SF_SMALL, str(tmp_path / "curated"))
     assert counts["n"] == 1, f"extra accounting actions: {counts['n']}"
     # the observation-sourced numbers are real counts, not defaults

@@ -18,6 +18,7 @@ from rick_and_morty_data_pipeline_project_spark.plans.explain_utils import (
     partial_group_limits_below_exchange,
     pushed_filters,
     read_schemas,
+    subtrees_below,
 )
 from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
 from tests.conftest import SF_SMALL
@@ -1573,3 +1574,49 @@ def test_collapsed_frontiers_scan_corpus_once(spark):
             QUERIES[name].fn(spark, SF_SMALL, dup_path="direct")
         )
         assert "Scan parquet" in direct, (name, "direct path lost the scan")
+
+
+def test_lsh_multiprobe_bucket_never_below_fan_out(spark):
+    """The corpus bucket of knn_lsh_multiprobe (the n_planes plane-dot
+    CASEs) is computed above the fan_out exchange only, never on the
+    single-task local scan below it, where the whole bucket pipeline
+    would run a second time, serialized.  The bucket string is
+    non-nullable, so the isnotnull(bucket) that the bucket equi-join
+    lets InferFiltersFromConstraints infer folds away today; the
+    operator's explode(array(bucket)) barrier is the second line of
+    defence.  Both are optimizer details that a Spark upgrade could
+    change, hence the pin."""
+    df = QUERIES["knn_cosine_lsh_multiprobe"].fn(spark, SF_SMALL)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the plane dot: an aggregate over zip_with(embedding, <plane>)
+    assert "aggregate(zip_with(embedding" in plan, plan
+    below = subtrees_below(df, "Exchange RoundRobinPartitioning")
+    assert len(below) == 1, plan
+    assert "embeddings.parquet" in below[0], plan
+    assert "zip_with" not in below[0] and "CASE WHEN" not in below[0], below[0]
+
+
+def test_ivf_frontier_cell_assignment_never_below_fan_out(spark, monkeypatch):
+    """knn_ivf_probe_frontier's corpus cell assignment (an 8-centroid
+    array_sort per row) stays above the fan_out exchange.  Here the
+    explode(slice(…, 1, 1)) barrier is load-bearing: with a scalar
+    element_at(…, 1) cell_id, InferFiltersFromConstraints pushes
+    isnotnull(<assignment>) onto the single-task scan below fan_out.
+    The pair relation is checkpointed inside the query, so its plan is
+    captured at the checkpoint call."""
+    df_cls = type(spark.range(1))
+    orig = df_cls.localCheckpoint
+    checkpointed = []
+
+    def capture(self, *args, **kwargs):
+        checkpointed.append(self)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", capture)
+    QUERIES["knn_ivf_probe_frontier"].fn(spark, SF_SMALL)
+    plans = [d._jdf.queryExecution().executedPlan().toString() for d in checkpointed]
+    px = [d for d, p in zip(checkpointed, plans) if "array_sort(" in p]
+    assert len(px) == 1, plans
+    below = subtrees_below(px[0], "Exchange RoundRobinPartitioning")
+    assert below and all("embeddings.parquet" in b for b in below), below
+    assert all("array_sort(" not in b for b in below), below

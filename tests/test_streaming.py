@@ -554,6 +554,175 @@ def test_stream_ingest_neardup_lsh(spark, tmp_path):
     assert kept == [11, 14, 21], kept
 
 
+def _neardup_ingest(spark, tmp_path, out_dir: str, ckpt: str):
+    """Run the near-dup ingest stream to completion over two batches
+    (near-dups of the corpus, in-batch chains, cross-batch near-dups
+    and fresh documents); return the query.  Batch b ends with a chain
+    24 ~ 25 ~ 26 whose ends are not similar (estimated Jaccard 0.25
+    < 0.5, no shared band): 24 keeps, 25 and 26 lose only through
+    the cluster."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
+        stream_ingest_neardup,
+    )
+
+    vocab = [f"w{i}" for i in range(30)]
+
+    def doc(seed: int, changed: int | None = None) -> str:
+        toks = random.Random(seed).choices(vocab, k=40)
+        if changed is not None:
+            toks[changed] = vocab[(seed + changed + 11) % len(vocab)]
+        return " ".join(toks)
+
+    def rewrite(text: str, lo: int, hi: int, tag: str) -> str:
+        toks = text.split()
+        toks[lo:hi] = [f"{tag}{i}" for i in range(lo, hi)]
+        return " ".join(toks)
+
+    chain_b = rewrite(doc(8), 0, 8, "x")
+    chain_c = rewrite(chain_b, 32, 40, "y")
+    corpus = spark.createDataFrame(
+        [(0, doc(1)), (1, doc(2))], "doc_id LONG, text STRING"
+    )
+    in_dir = tmp_path / "incoming"
+    if not in_dir.exists():
+        in_dir.mkdir()
+        batches = {
+            "a": ([10, 11, 12, 13, 14], [doc(1, 5), doc(3), doc(3, 7), doc(3, 20), doc(4)]),
+            "b": (
+                [20, 21, 22, 23, 24, 25, 26],
+                [doc(3, 33), doc(5), doc(5, 9), doc(2, 1), doc(8), chain_b, chain_c],
+            ),
+        }
+        for name, (ids, texts) in batches.items():
+            pq.write_table(
+                pa.table({"doc_id": ids, "text": texts}),
+                str(in_dir / f"{name}.parquet"),
+            )
+        _pin_file_order(in_dir / "a.parquet", in_dir / "b.parquet")
+    stream = (
+        spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(in_dir))
+    )
+    q = stream_ingest_neardup(stream, corpus, out_dir, ckpt)
+    q.awaitTermination()
+    return q
+
+
+def test_stream_ingest_neardup_replay_appends_nothing(spark, tmp_path):
+    """A micro-batch replayed after a lost commit (the sink appended,
+    the commit log did not record it) appends nothing: the kept ids are
+    unchanged and no doc_id appears twice.  The replayed batch holds
+    the chain 24 ~ 25 ~ 26: had the replay matched 25 against the
+    appended 24 and dropped it, the 25-26 edge would go and 26 would
+    be appended as a singleton."""
+    import os
+
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        minhash_signatures,
+    )
+
+    out_dir, ckpt = str(tmp_path / "kept"), str(tmp_path / "ckpt")
+    _neardup_ingest(spark, tmp_path, out_dir, ckpt)
+    before = sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect())
+    assert before == [11, 14, 21, 24], before
+    sig = {
+        r["doc_id"]: r["sig"]
+        for r in minhash_signatures(
+            spark.read.parquet(str(tmp_path / "incoming")), "doc_id", "text"
+        ).collect()
+    }
+    assert sum(x == y for x, y in zip(sig[24], sig[26])) < 4  # below 0.5
+
+    commits = os.path.join(ckpt, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for f in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    q = _neardup_ingest(spark, tmp_path, out_dir, ckpt)
+    assert q.lastProgress is not None and q.lastProgress["batchId"] == int(last)
+    after = [r["doc_id"] for r in spark.read.parquet(out_dir).collect()]
+    assert sorted(after) == before, after
+
+
+def test_stream_ingest_neardup_kept_sig_is_text_signature(spark, tmp_path):
+    """The sink's dedup state is the kept table's ``sig`` column: every
+    kept row's stored signature equals the MinHash signature of its
+    stored text (default hashing parameters of the sink)."""
+    from pyspark.sql import functions as F
+
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        minhash_signatures,
+    )
+
+    out_dir = str(tmp_path / "kept")
+    _neardup_ingest(spark, tmp_path, out_dir, str(tmp_path / "ckpt"))
+    kept = spark.read.parquet(out_dir)
+    want = minhash_signatures(kept, "doc_id", "text").withColumnRenamed(
+        "sig", "want"
+    )
+    rows = kept.join(want, "doc_id").collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert r["sig"] == r["want"], r["doc_id"]
+    assert kept.filter(F.col("sig").isNull()).collect() == []
+
+
+def test_stream_ingest_neardup_rejects_kept_table_without_sig(spark, tmp_path):
+    """A kept table written before the sink stored signatures must fail
+    the batch with a clear error — read with the declared state schema
+    it would yield null signatures, which match nothing and silently
+    admit duplicates.  The check is a driver-side footer read: it
+    launches no Spark job, and neither does reading valid state."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.sql.types import LongType, StructField
+
+    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
+        _kept_state,
+    )
+    from tests.conftest import job_ids
+
+    id_field = StructField("doc_id", LongType())
+    old = tmp_path / "old_kept"
+    old.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": [1], "text": ["an old kept row"]}),
+        str(old / "part-00000.parquet"),
+    )
+    errors = []
+
+    def read_old():
+        try:
+            _kept_state(spark, str(old), id_field)
+        except ValueError as e:
+            errors.append(str(e))
+
+    assert job_ids(spark, read_old) == []
+    assert len(errors) == 1 and "no 'sig' column" in errors[0], errors
+
+    new = str(tmp_path / "new_kept")
+    spark.createDataFrame(
+        [(1, "a kept row", ["00", "01"], "q:0")],
+        "doc_id LONG, text STRING, sig ARRAY<STRING>, ingest_batch STRING",
+    ).write.parquet(new)
+    state = []
+    assert job_ids(
+        spark, lambda: state.append(_kept_state(spark, new, id_field))
+    ) == []
+    assert [tuple(r) for r in state[0].collect()] == [(1, ["00", "01"], "q:0")]
+
+    # end to end: the streaming query fails on the old table
+    with pytest.raises(Exception, match="no 'sig' column"):
+        _neardup_ingest(spark, tmp_path, str(old), str(tmp_path / "ckpt"))
+
+
 def test_stream_stream_join_matches_batch(spark):
     """The watermarked stream-stream view→click attribution join,
     drained in one availableNow pass, produces exactly the batch

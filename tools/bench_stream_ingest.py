@@ -6,11 +6,13 @@ time tracks BAND COLLISIONS, not accumulated corpus size.
 Design: N batches of B docs each.  Every batch carries a controlled
 near-dup fraction (docs that are 1-token edits of already-kept docs →
 guaranteed LSH collisions) and fresh random docs (vocab large enough
-that cross-batch collisions are rare).  If the operator were
-corpus-rescan-shaped, per-batch time would grow linearly with batch
-index even at a constant collision rate; the LSH banding join keeps it
-flat-ish (the only growing term is the kept-table parquet re-read,
-which the tool reports separately via kept-count).
+that cross-batch collisions are rare).  Per batch the sink MinHashes
+the batch and the caller's corpus, O(batch + corpus); kept rows carry
+their stored signatures and are never re-hashed.  The term that grows
+with batch index is the band join, which scans O(corpus + kept) band
+rows every batch (the kept state is read back as (id, sig)); the tool
+reports the kept count next to each batch's time so that growth can be
+read against it.
 
 Usage: python tools/bench_stream_ingest.py [n_batches] [batch_rows]
 Prints one line per batch: batch id, wall seconds, kept rows so far —
