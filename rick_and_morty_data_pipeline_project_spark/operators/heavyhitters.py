@@ -52,9 +52,7 @@ def mg_partition_summaries(df: DataFrame, col: str, k: int) -> DataFrame:
     single Arrow-batched pass (no shuffle).
 
     NULL is not an item: null rows are excluded BEFORE counting (and N
-    in any bound check must be the non-null row count).  The streaming
-    twin (``streaming/heavyhitters_stream.py``) filters nulls the same
-    way, so the two forms agree on any input."""
+    in any bound check must be the non-null row count)."""
     import pandas as pd
 
     def fn(batches):

@@ -89,8 +89,8 @@ def recover_table(spark: SparkSession, target_path: str) -> bool:
     complete table sits at ``<target>.__merge_old__`` — restore it
     (never treat it as stale garbage: deleting it would silently
     reinitialize the table and lose all history).  Idempotent; callers
-    that READ the target before overwriting it (e.g. the streaming
-    sketch-table sink) must call this before their existence check.
+    that READ the target before overwriting it must call this before
+    their existence check.
     Returns True if a recovery rename was performed."""
     old_path = target_path + ".__merge_old__"
     fs, jvm = _hadoop_fs(spark, target_path)
@@ -108,23 +108,13 @@ def atomic_overwrite(
     spark: SparkSession,
     df: DataFrame,
     target_path: str,
-    marker: "tuple[str, str] | None" = None,
 ) -> None:
     """Write ``df`` as the new content of ``target_path`` via the
     temp-write + rename-swap protocol (safe even when ``df`` READS from
     ``target_path``: the plan materializes into the temp dir before any
     rename touches the source).  Old table is renamed aside — not
     deleted — before the new one lands, so every failure point leaves a
-    complete table on disk.
-
-    ``marker=(name, content)`` writes one small sidecar file INTO the
-    temp directory before the swap, so it becomes visible atomically
-    WITH the data it describes (never a marker for data that didn't
-    land, never data without its marker).  ``name`` must start with
-    ``_`` or ``.`` so parquet readers treat it as hidden; ``content``
-    must be a single line (``read_marker`` reads exactly one line —
-    the write side enforces the contract instead of letting a newline
-    silently truncate on read)."""
+    complete table on disk."""
     tmp_path = target_path + ".__merge_tmp__"
     old_path = target_path + ".__merge_old__"
     fs, jvm = _hadoop_fs(spark, target_path)
@@ -135,25 +125,6 @@ def atomic_overwrite(
     # COMPLETED swap and safe to clear
     fs.delete(hpath(old_path), True)
     df.write.mode("overwrite").parquet(tmp_path)
-    if marker is not None:
-        name, content = marker
-        # durability-critical contracts: raise, never assert (asserts
-        # vanish under ``python -O`` and a multi-line marker would be
-        # silently truncated by read_marker)
-        if not name.startswith(("_", ".")):
-            raise ValueError(
-                f"marker name must start with '_' or '.': {name!r}"
-            )
-        if "\n" in content or "\r" in content:
-            raise ValueError(
-                "marker content must be a single line (read_marker "
-                "reads one line)"
-            )
-        out = fs.create(hpath(tmp_path + "/" + name), True)
-        try:
-            out.write(bytearray(content.encode("utf-8")))
-        finally:
-            out.close()
     existed = fs.exists(hpath(target_path))
     if existed and not fs.rename(hpath(target_path), hpath(old_path)):
         raise IOError(f"atomic_overwrite: cannot move aside {target_path}")
@@ -163,23 +134,3 @@ def atomic_overwrite(
             fs.rename(hpath(old_path), hpath(target_path))
         raise IOError(f"atomic_overwrite: cannot install {tmp_path}")
     fs.delete(hpath(old_path), True)
-
-
-def read_marker(
-    spark: SparkSession, target_path: str, name: str
-) -> "str | None":
-    """Read the sidecar file ``atomic_overwrite(..., marker=...)`` left
-    inside ``target_path``; None when absent (pre-marker tables keep
-    working — callers must treat None as 'unknown, proceed')."""
-    fs, jvm = _hadoop_fs(spark, target_path)
-    p = jvm.org.apache.hadoop.fs.Path(target_path + "/" + name)
-    if not fs.exists(p):
-        return None
-    inp = fs.open(p)
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(inp, "UTF-8")
-        )
-        return reader.readLine()
-    finally:
-        inp.close()

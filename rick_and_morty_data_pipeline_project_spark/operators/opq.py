@@ -97,9 +97,8 @@ def opq_encode(
 ) -> DataFrame:
     """(id, codes array<int>) — ONE Arrow pass: rotate the batch
     (a single GEMM) then the same vectorized per-subspace argmin as
-    ``pq_encode``.  Codes are a pure function of the vector, so the
-    streaming anti-join upsert (streaming/pq_ingest.py) composes
-    unchanged."""
+    ``pq_encode``.  Codes are a pure function of the vector, so an
+    encode-on-arrival upsert keyed on the id composes unchanged."""
     m = len(codebooks)
     dim = sum(len(b[0]) for b in codebooks)
     spans = _subspaces(dim, m)

@@ -6,380 +6,38 @@ fully hash-verified against DuckDB by the driver; ``sql=None`` entries
 (sequential greedy matching, LSH with engine-side constants, sketches)
 get the rows-only check and are covered by Python oracles in tests/.
 
-Ordering contract: the verification driver compares the FIRST 50
+Driver window contract: the verification driver compares the FIRST 50
 exported queries against their oracles.  ``DRIVER_WINDOW`` pins those
-50 slots explicitly.
+50 slots explicitly; every slot must carry a full DuckDB oracle, and
+``queries_dict()`` exports them first, in that order.  Every query
+outside the window stays exported (positions 51+) and is still
+cell-exact verified locally by tests/test_oracle_parity.py, which
+parametrizes the WHOLE catalog.
 
-Rotation policy (round 5, standing):
+Rotation policy (standing).  A green driver row certifies the code as
+it was when the row was earned, so the window rotates each round, built
+from ``python tools/rotation_report.py`` output in this order:
 
-1. **Never-checked first.** Every oracled query that has never held a
-   driver CORRECTNESS row is rotated in before anything else.  The
-   round-5 window contains all 26 queries that were never-checked AS OF
-   the window freeze (the list ``tools/rotation_report.py`` printed
-   then).  Queries oracled later in round 5 (bloom-sharded, jpeg
-   headers, classifier, boilerplate, split, gopher, file audit, the
-   four rows-only promotions) necessarily have no r05 row — rule 1
-   applies to them at the round-6 freeze, via the same report.
-2. **Changed-file re-check rule.** Any query whose implementing file
-   (operator module or query module) changed since the query's last
-   green driver row MUST be rotated back in, even if it was green in a
-   prior round — a standing row only certifies the code as it existed
-   when the row was earned.  Round 5 touches ``operators/dedup.py``
-   (Bloom relation-mode ceiling guard), ``operators/bpe.py``
-   (incremental driver trainer) and ``operators/pca.py`` (oracled
-   projection), so the window re-greens the dedup family exemplars and
-   the BPE/PCA queries alongside the never-checked set.
-3. **Flagship + classics.** ``flagship_greedy_match`` (EP-2 sequential
-   MUT-1 semantics vs a recursive-CTE DuckDB oracle) stays in-window
-   every round; remaining slots are filled with classic §2 exemplars
-   (TPC-H pricing/join/top-K, window functions, text scoring) and the
-   round's perf watch items (``knn_cosine_ivf`` regressed +19% in r04
-   — re-measured AND re-verified here).
+1. **Never-checked first.**  Every oracled query that has never held a
+   driver CORRECTNESS row is scheduled before anything else.  Queries
+   born after a freeze get exactly one cycle of grace, recorded in
+   ``tools/pending_births.json``.
+2. **Changed-file re-checks.**  A query whose implementation (its
+   function source, oracle SQL, or any ``operators.*``/``functions.*``
+   module it references — fingerprinted in
+   ``tools/query_fingerprints.json``) changed since its last green row
+   must re-enter the window.  Changed queries a freeze could not fit
+   are recorded in ``tools/stale_carryover.json`` and get one cycle.
+3. **Flagship every round**, then oldest-green-first refreshes.  A
+   green row older than ``MAX_GREEN_AGE`` rounds must be refreshed,
+   unless the current round's committed full-catalog sweep
+   (``SWEEP_r{N}.json``, written by ``tools/driver_sim_sweep.py
+   --artifact`` with the driver's comparator) shows it hash-green; the
+   sweep never substitutes for a never-checked or red query.
 
-Every query outside the window stays exported (positions 51+) and is
-still cell-exact verified locally by tests/test_oracle_parity.py,
-which parametrizes the WHOLE catalog.
-
-The rule-2 ledger is EXECUTABLE — ``python tools/rotation_report.py``
-diffs per-query implementation fingerprints against the manifest
-frozen at the current window (``tools/query_fingerprints.json``) and
-prints which queries' code changed after the freeze plus which oracled
-queries have no driver row yet.  Each round's window is built from
-that output (never-checked first, then fingerprint-stale re-greens,
-then oldest-green refreshes), then re-frozen with
-``--update-fingerprints``; ``--assert-no-debt`` gates the round close
-on "no oracled query born before this round lacks a green row".
-
-Round-6 window (this file's ``DRIVER_WINDOW``): the 15 r5-born
-never-checked queries + 6 r6-born entries (5 audits — HLL accuracy/
-merge-invariance, rolling-DAU envelope, JPEG pixel-decode, CMS
-one-sided band, approx-distinct/percentile rank-error — plus the
-cross-document exact-substring dedup treatment
-``dedup_remove_duplicate_spans``) + 13 late-r6-born never-checked
-entries (BM25 top-k, batched multi-query BM25, multi-phrase search,
-compaction planner, BM25 snippet extraction, hybrid RRF fusion,
-two-stage BM25→cosine rerank, PRF query expansion, per-user EWMA,
-Pareto skyline, referential-integrity audit, correlation matrix,
-snapshot diff, plus the real ISO-BMFF container audit
-multimodal_mp4_boxes — rule 1 displaces fourteen
-r01 refreshes incl. win_first_last_nth and q17 to r07) + flagship + 12
-rule-2 stale re-greens (this
-round's bpe/profile/multimodal edits plus the fingerprint expansion
-to dict/list module constants; two more stale entries —
-profile_table_files_fast and flagship_greedy_match — are already
-counted in the never-checked/flagship slots) + 12 of the 24 queries
-whose only green row dates to round 1 (TPC-H classics +
-the remaining r01 refreshes — q7, q8, q10, q11, q12, q13, q14,
-q15, q16, q18, q19, q20, q21, q22, agg_cube_flag_status,
-win_first_last_nth, win_lag_order_gap, win_moving_avg,
-win_ntile_rank_stats, win_running_total and friends — go to r07).
-15+6+14+1+12+2 = 50.  (Continuation amendment: the final two slots —
-the q4/q9 oldest-green refreshes — were re-assigned to the
-rule-2-stale tfidf pair after its dense-dispatch rewrite; rule 2
-outranks an r01 refresh whose code never changed.  q4/q9 move to the
-r07 refresh pool.)
-
-Round-6 continuation (post-freeze): 17 more oracled queries were born
-after this window froze (range-partition planner, zorder layout, MV
-refresh, profile drift, triangle census, k-core peel, k-anonymity,
-CHECK-constraint suite, chi-square, Kaplan-Meier, A/B z-test,
-key-gap + Benford audits, LSH recall audit, VARIANT functions, BPE
-encode, HHI).  The two rule-2-stale tfidf queries were amended INTO
-this window (above); the 17 births are rule-1 mandatory for the r07
-freeze — ``python tools/rotation_report.py`` lists them, and its
-``--assert-no-debt`` gate exempts exactly this class (born after the
-last freeze ⇔ absent from the fingerprint manifest) while still
-flagging anything older that is red or unscheduled.
-
-Round-7 window (this file's ``DRIVER_WINDOW``): exactly the plan the
-round-6 verdict ordered, built from ``tools/rotation_report.py``
-output.  The 17 post-r06-freeze births lead (rule 1), then the two
-r7-born audit-twin promotions (hourly-percentile and RFM-threshold
-rank audits), flagship, the two rule-2 stale re-greens (the tfidf
-pair — its candidate generation was rewritten this round: dense path
-now gated on doc count AND vocab, prefix-filtered posting join as
-the scale path), and all 28 queries whose only green row dated to
-r01 (q4/q7–q22, window functions, cube, datetime/json scalars) — the
-complete over-age list under the NEW max-age gate rule (no green
-certificate may lag the latest round by more than 4 while
-unscheduled; ``--assert-no-debt`` now enforces this and the
-one-cycle-only limit on the born-after-freeze exemption via
-``tools/pending_births.json``).  After this window the oldest green
-row anywhere in the ledger is r02.
-
-Round-8 window (this file's ``DRIVER_WINDOW``): exactly the plan the
-round-7 verdict ordered, built from ``tools/rotation_report.py``
-output.  The 7 r7-post-freeze births lead (rule 1 — all 7 recorded in
-``tools/pending_births.json``: ``join_interval_bucketized``,
-``dedup_jaccard_prefix_join``, ``text_pii_redact``,
-``sample_source_mixture``, ``sketch_heavy_hitters_audit``,
-``audit_table_checksum``, AND ``join_pit_segment_revenue`` — 7, not
-the 6 an earlier revision of this docstring said), then the 3 r8-born
-entries (``topk_salted_segment_orders``, the grouped-topk-salted
-exemplar with a two-stage plan pin; ``sketch_cms_user_counts`` and
-``text_quantile_filter_approx``, both PROMOTED from rows-only — the
-CMS entry now hash-matches its ESTIMATES via a DuckDB grid replay of
-the pinned seed-42 sketch, the quantile entry via the tie-safe GK
-rank-bound audit shape), the 3 rule-2 stale re-greens
-(``audit_row_constraints`` — drifted after its r07 green;
-``sketch_cms_accuracy_audit`` — the cms_point_estimates pin
-parameter; ``text_quantile_filter`` — docstring cross-reference to
-the rewritten approx twin), flagship, all 30 queries whose newest
-green row is r02 (age 6 > 4: the complete over-age list under the
-max-age rule), and 6 oldest-green r04 refreshes (no r03-vintage rows
-exist).  10 + 3 + 1 + 30 + 6 = 50.  After this window the oldest
-green row anywhere in the ledger is r04.
-
-Round-9 obligations (accrued during r8, all in
-``tools/pending_births.json``): 16 post-r08-freeze births
-(``events_sequence_match``, ``orders_cdc_apply``,
-``orders_skyline_price_date``, ``audit_functional_dependencies``,
-``sketch_kmv_rollup``, ``events_transition_matrix``,
-``events_user_trend_slope``, ``lineitem_weighted_percentiles``, and
-the statsq family: ``events_max_concurrency``,
-``events_cusum_changepoint``, ``text_js_divergence``,
-``stats_bootstrap_ci``, ``events_autocorrelation``,
-``customer_gini_revenue``, ``stats_welch_t``,
-``events_activity_streaks``) are rule-1 mandatory, plus the 32
-r04-vintage greens not refreshed in this window reach age 5, plus
-flagship: 16 + 32 + 1 = 49 of 50 slots already spoken for — do NOT
-add further oracled births in r8's remainder without retiring an
-obligation.
-
-Rotation policy v2 (round 9) — the catalog outgrew the window:
-
-With 237 oracled queries, a 50-slot window × 4-round shelf life can
-keep at most 200 driver certificates fresh; even with ZERO further
-births the r08-vintage block alone (50 + flagship) overflows a round
-by r13.  Two amendments, both EXECUTABLE in
-``tools/rotation_report.py`` and unit-pinned in
-tests/test_rotation_tooling.py:
-
-1. **Sweep-artifact freshness.**  Each round the full catalog is
-   re-verified by ``tools/driver_sim_sweep.py --artifact`` (the same
-   sorted-row/sorted-column hash comparator the driver uses, over the
-   same oracle SQL, judge-re-runnable) and the result committed as
-   ``SWEEP_r{N}.json``.  The max-age gate accepts a hash-green sweep
-   row as freshness evidence for an over-age driver certificate.  The
-   window still fills all 50 slots oldest-green-first, so driver rows
-   keep cycling at full rate — the sweep covers the arithmetic tail
-   the window cannot.  Never-attempted queries and red rows still
-   require REAL driver rows; the sweep never substitutes for those.
-2. **Stale-carryover ledger.**  ``--update-fingerprints`` previously
-   erased rule-2 staleness for changed queries not in the window
-   being frozen.  The freeze now records them in
-   ``tools/stale_carryover.json``; like births they get exactly one
-   cycle to re-earn a DRIVER row (sweep rows do NOT clear changed
-   code) before ``--assert-no-debt`` fails.
-
-Round-9 window (this file's ``DRIVER_WINDOW``): exactly the plan the
-round-8 verdict ordered.  The 16 post-r08-freeze births lead (rule
-1, full list above), then the 2 r9-born PQ/IVFADC certifications
-(``knn_cosine_pq``, ``knn_cosine_ivfpq`` — the r8 verdict's item 1:
-the one operator family that had no possible driver row), flagship,
-the 2 rows-only→oracled HLL promotions (``sketch_hll_rollup``,
-``events_rolling_dau_hll`` — rebuilt on the explicit-register HLL of
-``operators/hllreg.py`` so DuckDB replays the estimates bit-exactly;
-never attempted before, hence window-mandatory), the 2 r9-born
-lakehouse certifications (``orders_dense_row_ids``,
-``evolution_read_generations``), and 25 of the 31 r04-vintage greens
-(age 5 at r09; ``knn_cosine_lsh``, ``knn_cosine_int8``,
-``knn_cosine_filtered`` and ``embedding_quantize_error`` double as
-rule-2 re-greens of the r9 ``similarity.py`` consolidation; the six
-displaced r04 entries — ``events_funnel_steps``,
-``events_funnel_summary``, ``dedup_source_matrix``,
-``events_key_skew_report``, ``events_sliding_uniques``,
-``events_value_histogram`` — are sweep-covered under policy v2 and
-lead the r10 oldest-green pool), plus the 2 late-r9 births scheduled
-at the second (PQ-batching) freeze: ``sketch_kmv_set_ops``,
-``events_holt_forecast``.  16 + 2 + 2 + 2 + 2 + 1 + 25 = 50.
-
-Round-10 obligations (accrued during r9): the 13 stale-carryover
-entries from the ``similarity.py``/``sketches.py`` consolidations
-(``tools/stale_carryover.json`` — rule-1-equivalent, one-cycle grace)
-plus flagship = 14 mandatory slots; the remaining ~36 fill
-oldest-green first (the six displaced r04 entries lead, then the r05
-vintage), with SWEEP_r10.json covering whatever the window cannot
-hold.  The 13 remaining rule-2 stale entries from the
-``similarity.py``/``sketches.py`` consolidations that do not fit this
-window are recorded in ``tools/stale_carryover.json`` at the freeze
-and are rule-1-equivalent obligations for the r10 window.
-
-Round-10 window (this file's ``DRIVER_WINDOW``): exactly the plan the
-round-9 verdict ordered.  The 13 stale-carryover entries lead
-(rule-1-equivalent — changed at the r9 consolidation freezes while
-unscheduled, full list in ``tools/stale_carryover.json``), then the 6
-displaced r04 over-age entries (``dedup_source_matrix``,
-``events_funnel_steps``, ``events_funnel_summary``,
-``events_key_skew_report``, ``events_sliding_uniques``,
-``events_value_histogram`` — age 6 at this freeze), flagship, the 4
-r10 births (``coarsen_layout_audit`` and
-``evolution_generation_census`` — the r9 verdict's item 5 — plus
-``knn_cosine_opq``, the stretch-#9 OPQ certification, and
-``compact_layout_audit``, the file-granularity compaction executor
-that retires the lakehouse family's last tests-only surface; all
-scheduled at their own birth freeze so no one-cycle exemption is
-consumed), the 2 rule-2 PQ re-greens
-(``knn_cosine_pq``/``knn_cosine_ivfpq`` — the r10 advisory fix added
-a row-count guard to their shared assertion helper), and 24 of the 41
-r05-vintage greens (alphabetical; the 17 remaining r05 entries are
-SWEEP_r10-covered under policy v2 and lead the r11 oldest-green
-pool).
-13 + 6 + 1 + 4 + 2 + 24 = 50.
-
-Round-10 continuation (post-freeze): 14 more fully-oracled queries
-were born after this window froze, extending the ANN/embedding, dedup,
-LM and statistics families — ``knn_cosine_binary`` (1-bit sign-word Hamming prefilter
-+ exact rerank), ``knn_cosine_lsh_multiprobe`` (Lv VLDB'07 1-step
-probing, no dedup shuffle), ``embedding_jl_project`` (Achlioptas
-sparse JL with distortion audit), ``knn_graph_gemm`` (exact all-pairs
-kNN graph via Arrow-batched blocked GEMM, 10× the fold path),
-``text_kneser_ney_score`` (interpolated KN bigram perplexity),
-``knn_cosine_ivf_binary`` (IVF cells × in-cell binary Hamming — the
-composed 10⁹-vector recipe), ``dedup_bbit_minhash_audit`` (Li &
-König b-bit MinHash, bias-corrected estimates vs full sketch vs exact
-Jaccard), and ``knn_recall_matrix`` (the recall@5 dashboard over all
-five candidate-restricting variants, oracle composed from their
-proven SQL), ``events_mann_whitney`` (midrank rank-sum with
-tie-corrected z), ``events_theil_sen_slope`` (median of pairwise
-daily slopes — the robust OLS twin), ``events_kendall_tau``
-(τ-b monotone-trend test, y-tie corrected), ``text_turing_estimates`` (Good-Turing frequency re-estimates +
-unseen mass), ``embedding_outlier_scores`` (label-outlier audit:
-z-scored cosine to own label centroid, flag from the rounded z), and
-``events_seasonal_decompose`` (additive 7-day-trend + zero-sum
-day-of-week seasonal split).  All are recorded in
-``tools/pending_births.json``
-(one-cycle exemption) and are rule-1 mandatory for the r11 window
-alongside the 17 SWEEP_r10-covered r05 entries.
-
-Round-11 window (this file's ``DRIVER_WINDOW``): exactly the plan the
-round-10 verdict ordered, plus the rule-2 fallout of this round's own
-code motion.  The 14 rule-1 pending births lead
-(``tools/pending_births.json`` — the r10-continuation ANN/dedup/LM/
-statistics families), then 17 of the 18 rule-2 re-greens created by
-the r11 IVF-helper extraction and the binquant NaN-guard fix (both
-touch ``operators/similarity.py``/``binquant.py``, whose file bytes
-fingerprint every similarity-family certificate; the set INCLUDES the
-verdict-named ``knn_cosine_opq`` re-certification, the one entry
-whose green row had already diverged from its code), the round's one
-new birth ``knn_cosine_sq8`` (the SQ8 tier that completes the
-quantization ladder, plus bootstrap-CI columns on
-``knn_recall_matrix``) scheduled at its own birth freeze, flagship,
-and the 17 r05-vintage over-age refreshes the round-10 verdict named
-(SWEEP_r11-covered while the window was composed, driver-certified
-here).  14 + 17 + 1 + 1 + 17 = 50.  The 18th stale entry,
-``text_rerank_two_stage`` (r10-green, its rerank arithmetic untouched
-by the extraction), goes to the one-cycle stale-carryover ledger and
-is rule-2 mandatory for r12 — the window could not hold all 51
-obligations, and displacing a verdict-named entry would have been
-worse.
-
-Round-12 window (this file's ``DRIVER_WINDOW``): exactly the plan the
-round-11 verdict ordered.  The 51-item rotation debt decomposes as
-9 rule-1 pending births (``tools/pending_births.json`` — the r11
-continuation statistics/ANN-eval families: KS, Spearman-daily, chi²
-independence, CUSUM-daily, Gini concentration, Benford, JS source
-drift, hubness, nDCG), the twice-stale ``text_rerank_two_stage``
-(fingerprint changed at the r10 freeze, carryover ledger — must not
-carry a third cycle), flagship, and the 41-entry r06 over-age cohort
-that crossed the >4-round line together.  11 mandatory slots + 41
-candidates > 50, so per policy v2 the two r06 entries NOT named by
-the r11 verdict and not load-bearing in any §2 table row —
-``unpivot_emotion_scores`` and ``snapshot_diff_orders`` — stay out of
-the window and are covered by the fresh SWEEP_r12.json regenerated
-BEFORE any r12 code motion (verdict item 1a).  9 + 1 + 1 + 39 = 50.
-
-Round-12 mid-round amendment: the verdict-ordered sf0.1 full-catalog
-sweep (item 6) caught two REAL scale-dependent divergences the sf0.01
-certification could not see — ``knn_ndcg_label_eval`` (DuckDB lexes a
-17-digit DCG literal as DECIMAL(18,17) and its int64-scaled
-decimal→double conversion double-rounds 1 ULP off Python's strtod;
-fixed to CAST('…' AS DOUBLE) string parses) and
-``events_theil_sen_slope`` (even-count slope medians land exactly on
-.5 decimal boundaries — -2.0490625 — where Spark HALF_UP and DuckDB
-round() disagree; fixed by emitting the bit-identical raw median,
-unrounded).  ndcg was already in-window (rule-1 birth); theil_sen
-swaps IN for the r06 refresh ``text_emotion_scores`` (its operator
-path stays window-exercised via ``text_top2_emotions``, and it joins
-the two sweep-covered leftouts).  The round's one birth,
-``knn_frontier_recall_cost`` (verdict stretch 8 — the recall-vs-cost
-Pareto frontier, fully oracled, MATCH at all three SFs), is scheduled
-at its own freeze, displacing the r06 refresh ``events_ewma``.
-Final composition: 9 births + carryover + flagship + 37 r06 refreshes
-+ 1 rule-2 re-green + 1 r12 birth = 50; sweep-covered leftouts:
-``unpivot_emotion_scores``, ``snapshot_diff_orders``,
-``text_emotion_scores``, ``events_ewma``.
-
-Round-13 window (this file's ``DRIVER_WINDOW``): exactly the plan the
-round-12 verdict ordered, built from ``tools/rotation_report.py``
-output AFTER regenerating SWEEP_r13.json on the untouched tree
-(276/276 — policy v2 coverage for the r07 cohort that crossed the
-over-age line when CORRECTNESS_r12 landed).  The 4 rule-1 pending
-births lead (the r12 decision tables: IVF probe sweep, LSH banding
-sweep, dedup threshold sweep, quality threshold sweep — all already
-MATCH at 3 SFs), then the round's own birth ``curation_run_card``
-(verdict stretch 8 — the five decision tables composed into the
-per-stage run-card relation, scheduled at its own freeze), the rule-2
-stale re-green ``dedup_jaccard_prefix_join`` (operators/setjoin.py
-gained the prefix-filtered co-occurrence this round — verdict item 4 —
-so every query referencing the file re-certifies; the frontier itself
-ultimately landed on the exact-duplicate collapse instead after the
-prefix hypothesis was measured and rejected at the 10% threshold —
-see PERFORMANCE.md's r13 negative result), flagship, the rule-2
-re-green ``flagship_best_match_with_replacement`` (mid-round
-amendment: operators/matching.py gained the head-pointer early-exit
-the ×100 left-rows tier needed), and 42 oldest-green-first refreshes:
-all 4 remaining r06-vintage entries (events_ewma,
-snapshot_diff_orders, text_emotion_scores, unpivot_emotion_scores —
-the r12 leftouts age to the front of the queue) plus 38 of the
-48-entry r07 cohort.  4+1+1+1+1+4+38 = 50.  Sweep-covered leftouts
-(10, not §2-table-cited, their operator paths window-exercised via
-family siblings): graph_kcore_peel, graph_triangle_count,
-mv_incremental_refresh, privacy_k_anonymity, profile_drift_orders,
-supplier_market_hhi, table_range_partition_plan, table_zorder_layout,
-events_survival_km, and (amendment) agg_sorted_string.  Note on the r12 verdict's
-stretch 9 ("pre-age ~15 r08 entries, projected r14 over-age < 20"):
-scheduling r08 entries now would displace r07 refreshes one-for-one —
-the projected r14 over-age pool (r08's 44 + r09's 43 + today's
-leftouts) is CONSERVED under any window composition because the
-treadmill refreshes at most 50 certificates per round against a
-276-query catalog with a 4-round shelf life; policy v2's per-round
-sweep artifact is the standing mechanism for the remainder (the v2
-rationale in this docstring), so the window stays oldest-green-first.
-
-Round-14 window (this file's ``DRIVER_WINDOW``): exactly the plan the
-round-13 verdict ordered, built from ``tools/rotation_report.py``
-output AFTER regenerating SWEEP_r14.json on the untouched tree
-(278/278 — policy v2 coverage for the 53-entry wave, 44 r08 entries +
-10 r07/r06 leftouts, that crossed the over-age line when
-CORRECTNESS_r13 landed).  The 2 rule-1 births lead:
-``dedup_dup_factor_profile`` (the sole pending birth from
-``tools/pending_births.json``, MATCH at 3 SFs since late r13) and
-``curation_run_card_whatif`` (this round's birth — verdict stretch 9,
-the card as a decision surface).  Then the 6 rule-2 re-greens for the
-files changed this round: the profile-gated exact-duplicate collapse
-(verdict item 4) stales ``dedup_lsh_banding_frontier`` and
-``dedup_threshold_frontier``; the run-card shared inputs (verdict
-item 5) stale ``knn_frontier_recall_cost``, ``knn_ivf_probe_frontier``
-and ``curation_run_card``; the library-only adjudication of
-``ngram_prefix_cooccurrence`` (verdict item 3, option c — docstring +
-COVERAGE.md frozen set + test pin) stales ``dedup_jaccard_prefix_join``
-through operators/setjoin.py.  Then flagship, the rule-2 re-green
-``flagship_best_match_with_replacement`` (mid-round amendment: the
-×1000 left-rows tier exposed an O(n²) list-slice copy in the greedy
-replay — operators/matching.py gained an index scan, semantics pinned
-identical by tests/test_matching.py's Python oracle — so both queries
-referencing the file re-certify; displaces the r08 refresh
-sessionize_events into the sweep-covered leftouts), the 10 r07
-sweep-covered leftouts (they age to the front of the queue), and 30
-of the 43-entry r08 cohort.  2+6+1+1+10+30 = 50.  Sweep-covered
-leftouts (13, all hash-green in SWEEP_r14.json; family siblings
-window-exercise their operator paths): sessionize_events,
-set_ops_customers, sketch_heavy_hitters_audit,
-sort_limit_top_orders, subquery_scalar_exists, text_emotion_by_source,
-text_pii_redact, text_quantile_filter, text_quantile_filter_approx,
-text_rolling_fingerprint, text_token_stats, topk_salted_segment_orders,
-win_range_frame.
+``--update-fingerprints`` freezes a window; ``--assert-no-debt`` gates
+a round close on all three rules.  The reasoning behind each past
+window lives in git history.
 """
 
 from __future__ import annotations
@@ -421,8 +79,7 @@ for mod in (
         _ALL[name] = q
 
 # The 50 driver-checked slots.  All must carry a full DuckDB oracle.
-# Round-14 rotation (standing policy + policy v2 in the module
-# docstring):
+# Round-14 rotation (standing policy in the module docstring):
 # 2 rule-1 births (dedup_dup_factor_profile — the pending birth from
 #   tools/pending_births.json — and this round's curation_run_card_whatif)
 # + 6 rule-2 re-greens (textq.py's profile-gated collapse stales both
@@ -434,8 +91,7 @@ for mod in (
 #   operators/matching.py — the ×1000 tier's O(n²) slice-copy fix)
 # + 40 oldest-green-first refreshes (the 10 r07 sweep-covered leftouts
 #   age to the front, then 30 of the 43-entry r08 cohort; the 13
-#   leftouts are SWEEP_r14-covered and listed in the docstring's
-#   Round-14 paragraph).
+#   leftouts are SWEEP_r14-covered).
 # 2+6+1+1+40 = 50.
 DRIVER_WINDOW: tuple[str, ...] = (
     # ========== 2 rule-1 births =====================================
@@ -499,563 +155,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "scalar_math_functions",
     "scalar_null_conditional",
     "scalar_regex_functions",
-)
-
-# Round-13 window, retired 2026-08-16 (all 50 earned green rows in
-# CORRECTNESS_r13.json; kept for the rotation ledger).  Final
-# composition: 4 rule-1 births (r12 decision tables) + the
-# curation_run_card r13 birth + 2 rule-2 re-greens (setjoin.py,
-# matching.py) + flagship + 4 r06 + 38 r07 refreshes = 50.
-_R13_WINDOW: tuple[str, ...] = (
-    # ========== 4 rule-1 pending births (r12 decision tables) =======
-    "knn_ivf_probe_frontier",
-    "dedup_lsh_banding_frontier",
-    "dedup_threshold_frontier",
-    "text_quality_threshold_frontier",
-    # ========== r13 birth, scheduled at its own freeze ===============
-    "curation_run_card",
-    # ========== rule-2 re-green (setjoin.py changed this round) ======
-    "dedup_jaccard_prefix_join",
-    # ========== flagship (standing, every round) =====================
-    "flagship_greedy_match",
-    # ========== rule-2 re-green (mid-round amendment): the ×100
-    # left-rows tier needed a head-pointer early-exit in the greedy
-    # replay loop (operators/matching.py — semantics pinned identical
-    # by tests/test_matching.py's Python oracle), so both queries
-    # referencing the file re-certify; displaces the r07 refresh
-    # agg_sorted_string into the sweep-covered leftouts ===============
-    "flagship_best_match_with_replacement",
-    # ========== 4 r06-vintage refreshes (oldest greens anywhere) =====
-    "events_ewma",
-    "snapshot_diff_orders",
-    "text_emotion_scores",
-    "unpivot_emotion_scores",
-    # ========== 38 r07-vintage over-age refreshes ====================
-    "agg_cube_flag_status",
-    "agg_distinct_suppliers",
-    "audit_benford_prices",
-    "audit_key_gaps",
-    "customer_rfm_segments_approx_audit",
-    "dedup_lsh_recall_audit",
-    "events_ab_proportion_z",
-    "events_chi2_type_dow",
-    "events_conditional_agg",
-    "events_hourly_percentiles_approx_audit",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_priority_lines",
-    "q13_customer_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_predicates",
-    "q20_heavy_shippers",
-    "q21_lone_fault_suppliers",
-    "q22_idle_customers",
-    "scalar_datetime_functions",
-    "scalar_json_functions",
-    "scalar_variant_functions",
-    "text_bpe_encode",
-    "text_tfidf_cosine_pairs",
-    "text_tfidf_topterms",
-    "win_first_last_nth",
-    "win_lag_order_gap",
-    "win_moving_avg",
-    "win_ntile_rank_stats",
-    "win_running_total",
-)
-
-
-# Round-12 window, retired 2026-08-16 (all 50 earned green rows in
-# CORRECTNESS_r12.json; kept for the rotation ledger).  Final
-# composition — per the mid-round amendments in the module docstring:
-# 9 rule-1 births + the text_rerank_two_stage stale carryover +
-# flagship + 37 r06 refreshes + the events_theil_sen_slope rule-2
-# re-green + the knn_frontier_recall_cost r12 birth = 50.
-_R12_WINDOW: tuple[str, ...] = (
-    # ========== 9 rule-1 pending births (r11 continuation) ==========
-    "events_ks_test",
-    "events_spearman_daily",
-    "events_chi2_independence",
-    "events_cusum_daily",
-    "orders_gini_concentration",
-    "orders_benford_audit",
-    "text_js_divergence_sources",
-    "knn_hubness_audit",
-    "knn_ndcg_label_eval",
-    # ========== stale-carryover re-green (rule-2, second cycle) =====
-    "text_rerank_two_stage",
-    # ========== flagship (standing, every round) =====================
-    "flagship_greedy_match",
-    # ========== 39 r06-vintage over-age refreshes ====================
-    "agg_approx_distinct_audit",
-    "audit_referential_integrity",
-    "bpe_train_merges",
-    "customer_abc_pareto",
-    "dedup_incremental_bloom_sharded",
-    "dedup_remove_duplicate_spans",
-    "events_mad_outliers",
-    "events_rolling_dau_hll_audit",
-    "flagship_best_match_with_replacement",
-    "lineitem_corr_matrix",
-    "multimodal_decode_features",
-    "multimodal_frame_samples",
-    "multimodal_jpeg_decode_audit",
-    "multimodal_jpeg_headers",
-    "multimodal_metadata_stats",
-    "multimodal_mp4_boxes",
-    "multimodal_resize_dims",
-    "part_skyline_pareto",
-    "profile_compaction_plan",
-    "profile_table_files",
-    "profile_table_files_fast",
-    "sketch_hll_accuracy_audit",
-    "split_leakage_safe",
-    "text_bm25_multiquery",
-    "text_bm25_snippets",
-    "text_bm25_topk",
-    "text_bpe_token_stats",
-    "text_filter_topk",
-    "text_gopher_rules",
-    "text_language_confidence",
-    "text_language_id",
-    "text_phrase_search",
-    "text_prf_expansion",
-    "text_quality_classifier",
-    "text_remove_boilerplate",
-    "text_top2_emotions",
-    "text_winnowing_fingerprints",
-    # ========== rule-2 re-green (mid-round amendment): the sf0.1
-    # sweep's round-tie fix changed this query's code after its r11
-    # certification ====================================================
-    "events_theil_sen_slope",
-    # ========== r12 birth, scheduled at its own freeze (verdict
-    # stretch 8 — the recall-vs-cost Pareto frontier); displaces the
-    # r06 refresh events_ewma into the sweep-covered leftouts =========
-    "knn_frontier_recall_cost",
-)
-
-# Round-11 window, retired 2026-08-16 (all 50 earned green rows in
-# CORRECTNESS_r11.json; kept for the rotation ledger).  Composition:
-# 14 rule-1 pending births + 17 rule-2 similarity-family re-greens +
-# the knn_cosine_sq8 birth + flagship + 17 r05-vintage over-age
-# refreshes; 14+17+1+1+17 = 50.
-_R11_WINDOW: tuple[str, ...] = (
-    # ========== 14 rule-1 pending births (r10 continuation) =========
-    "knn_cosine_binary",
-    "knn_cosine_lsh_multiprobe",
-    "embedding_jl_project",
-    "knn_graph_gemm",
-    "knn_cosine_ivf_binary",
-    "knn_recall_matrix",
-    "embedding_outlier_scores",
-    "text_kneser_ney_score",
-    "text_turing_estimates",
-    "dedup_bbit_minhash_audit",
-    "events_mann_whitney",
-    "events_theil_sen_slope",
-    "events_kendall_tau",
-    "events_seasonal_decompose",
-    # ========== 17 rule-2 re-greens (r11 similarity/binquant edits;
-    # includes the knn_cosine_opq re-certification; the 18th stale
-    # entry, text_rerank_two_stage, is in stale_carryover.json) ======
-    "decontaminate_embedding_overlap",
-    "embedding_label_centroids",
-    "embedding_quantize_error",
-    "knn_cosine_bruteforce",
-    "knn_cosine_filtered",
-    "knn_cosine_int8",
-    "knn_cosine_ivf",
-    "knn_cosine_ivf_kmeans",
-    "knn_cosine_ivfpq",
-    "knn_cosine_lsh",
-    "knn_cosine_mmr",
-    "knn_cosine_opq",
-    "knn_cosine_pq",
-    "knn_hard_negatives",
-    "knn_label_agreement",
-    "knn_recall_audit",
-    "text_hybrid_rrf",
-    # ========== r11 birth, scheduled at its own freeze ===============
-    "knn_cosine_sq8",
-    # ========== flagship (standing, every round) =====================
-    "flagship_greedy_match",
-    # ========== 17 r05-vintage over-age refreshes (verdict-named) ====
-    "pipeline_filter_funnel",
-    "q6_forecast_revenue",
-    "scalar_bit_interleave",
-    "scalar_string_functions",
-    "scd2_customer_segments",
-    "text_bigram_logprob",
-    "text_char_entropy",
-    "text_feature_hashing",
-    "text_keyness_by_source",
-    "text_pack_buckets",
-    "text_quality_normalized",
-    "text_quality_scores",
-    "text_shard_index",
-    "text_zipf_fit",
-    "topk_two_stage_parts",
-    "view_click_attribution",
-    "win_rank_top_orders_per_customer",
-)
-
-# Round-10 window, retired 2026-08-16 (all 50 earned green rows in
-# CORRECTNESS_r10.json; kept for the rotation ledger).  Composition:
-# 13 stale-carryover re-greens + 6 displaced r04 over-age refreshes +
-# flagship + 4 r10 births + 2 rule-2 PQ re-greens + 24 r05-vintage
-# oldest-green refreshes; 13+6+1+4+2+24 = 50.
-_R10_WINDOW: tuple[str, ...] = (
-    # ========== 13 stale-carryover re-greens (rule-1-equivalent) =====
-    "decontaminate_embedding_overlap",
-    "embedding_label_centroids",
-    "knn_cosine_bruteforce",
-    "knn_cosine_ivf",
-    "knn_cosine_ivf_kmeans",
-    "knn_cosine_mmr",
-    "knn_hard_negatives",
-    "knn_label_agreement",
-    "knn_recall_audit",
-    "sketch_cms_accuracy_audit",
-    "sketch_cms_user_counts",
-    "text_hybrid_rrf",
-    "text_rerank_two_stage",
-    # ========== 6 displaced r04 over-age refreshes ===================
-    "dedup_source_matrix",
-    "events_funnel_steps",
-    "events_funnel_summary",
-    "events_key_skew_report",
-    "events_sliding_uniques",
-    "events_value_histogram",
-    # ========== flagship (standing, every round) =====================
-    "flagship_greedy_match",
-    # ========== 4 r10 births: driver-certified lakehouse maintenance
-    # (coarsenq + compactq) + the OPQ certification (opqq, stretch #9)
-    # (queries/coarsenq.py — the r9 verdict's item 5) =================
-    "coarsen_layout_audit",
-    "evolution_generation_census",
-    "knn_cosine_opq",
-    "compact_layout_audit",
-    # ========== 2 rule-2 re-greens: the r10 advisory fix added a
-    # row-count guard to pqq._assert_same_codes, so both PQ
-    # certifications re-earn their rows under the changed code ========
-    "knn_cosine_pq",
-    "knn_cosine_ivfpq",
-    # ========== 24 oldest-green refreshes (r05 vintage) ==============
-    "dedup_cluster_representatives",
-    "dedup_exact_stats",
-    "dedup_incremental_batch",
-    "dedup_incremental_bloom",
-    "dedup_incremental_lsh",
-    "dedup_incremental_prefilter",
-    "dedup_minhash_clusters",
-    "dedup_minhash_lsh_candidates",
-    "dedup_minhash_signatures",
-    "dedup_ngram_containment",
-    "dedup_ngram_jaccard",
-    "dedup_simhash64_pairs",
-    "dedup_simhash_pairs",
-    "dedup_span_profile",
-    "embedding_pca_project",
-    "events_gap_fill",
-    "events_sliding_rollup",
-    "events_type_bigrams",
-    "events_user_trend",
-    "join_anti_customers_without_orders",
-    "join_fuzzy_customer_names",
-    "q1_pricing_summary",
-    "q3_top_unshipped_orders",
-    "q5_nation_volume",
-)
-
-# Round-9 window, retired 2026-08-15 (all 50 earned green rows in
-# CORRECTNESS_r09.json; kept for the rotation ledger).  Composition:
-# 16 r8-post-freeze births + 2 PQ/IVFADC certifications + 2 HLL
-# rows-only→oracled promotions + 2 lakehouse certifications + 2
-# late-r9 births + flagship + 25 r04-vintage max-age refreshes;
-# 16+2+2+2+2+1+25 = 50.
-_R09_WINDOW: tuple[str, ...] = (
-    # ========== 16 never-driver-checked oracled queries (rule 1) =====
-    # the r8-post-freeze births — one-cycle exemption expired with
-    # CORRECTNESS_r08.json; full list mirrored in the docstring above
-    "events_sequence_match",
-    "orders_cdc_apply",
-    "orders_skyline_price_date",
-    "audit_functional_dependencies",
-    "sketch_kmv_rollup",
-    "events_transition_matrix",
-    "events_user_trend_slope",
-    "lineitem_weighted_percentiles",
-    "events_max_concurrency",
-    "events_cusum_changepoint",
-    "text_js_divergence",
-    "stats_bootstrap_ci",
-    "events_autocorrelation",
-    "customer_gini_revenue",
-    "stats_welch_t",
-    "events_activity_streaks",
-    # ========== 2 r9-born PQ/IVFADC certifications (r8 verdict #1) ===
-    "knn_cosine_pq",
-    "knn_cosine_ivfpq",
-    # ========== 2 r9 rows-only -> fully-oracled HLL promotions (r8
-    # verdict #3: explicit-register HLL, estimator replayed by DuckDB
-    # bit-exactly; never-attempted before, so window-mandatory) =======
-    "sketch_hll_rollup",
-    "events_rolling_dau_hll",
-    # ========== 2 r9-born lakehouse certifications (r8 verdict #5:
-    # rowid vs the row_number oracle; the evolution reader vs the
-    # expected-union oracle) ==========================================
-    "orders_dense_row_ids",
-    "evolution_read_generations",
-    # ========== 2 more r9 births, scheduled at the second freeze (the
-    # PQ-batching re-freeze fingerprinted them, ending their one-cycle
-    # exemption): KMV set ops + Holt smoothing ========================
-    "sketch_kmv_set_ops",
-    "events_holt_forecast",
-    # ========== flagship (standing, every round) =====================
-    "flagship_greedy_match",
-    # ========== 25 max-age refreshes (newest green row = r04, age 5 >
-    # 4 at this freeze; the knn_* and embedding_quantize_error entries
-    # double as rule-2 re-greens of the r9 similarity.py consolidation.
-    # events_funnel_steps/_summary, dedup_source_matrix,
-    # events_key_skew_report, events_sliding_uniques and
-    # events_value_histogram are the six r04 entries displaced by the
-    # r9 births — SWEEP_r09.json covers them under policy v2 and they
-    # lead the r10 oldest-green pool) ==================================
-    "embedding_quantize_error",
-    "events_hourly_percentiles",
-    "events_retention_cohorts",
-    "events_rolling_dau",
-    "events_zscore_outliers",
-    "graph_pagerank3",
-    "join_salted_user_events",
-    "knn_cosine_filtered",
-    "knn_cosine_int8",
-    "knn_cosine_lsh",
-    "knn_degree_stats",
-    "orders_monthly_growth",
-    "profile_orders_quality",
-    "sample_hash_deterministic",
-    "sample_mixture_weights",
-    "sample_stratified_topk",
-    "sample_weighted_topk",
-    "scalar_try_functions",
-    "text_chunk_overlap",
-    "text_pack_materialize",
-    "text_pmi_collocations",
-    "text_redact_patterns",
-    "text_repetition_signals",
-    "text_unigram_logprob",
-    "text_vocab_df",
-)
-
-# Round-7 window, retired 2026-08-15 (all 50 earned green rows in
-# CORRECTNESS_r07.json; kept for the rotation ledger).  Composition:
-# 17 never-checked r6-post-freeze births + 2 r7-born audit-twin
-# promotions + flagship + 2 rule-2 stale re-greens (the tfidf pair,
-# whose candidate generation was rewritten in r7) + 28 max-age
-# refreshes whose only green row dated to r01; 17+2+1+2+28 = 50.
-_R07_WINDOW: tuple[str, ...] = (
-    # ========== 17 never-driver-checked oracled queries =============
-    "scalar_variant_functions",
-    "supplier_market_hhi",
-    "graph_triangle_count",
-    "graph_kcore_peel",
-    "dedup_lsh_recall_audit",
-    "profile_drift_orders",
-    "privacy_k_anonymity",
-    "audit_row_constraints",
-    "events_chi2_type_dow",
-    "events_survival_km",
-    "events_ab_proportion_z",
-    "audit_key_gaps",
-    "audit_benford_prices",
-    "text_bpe_encode",
-    "table_zorder_layout",
-    "table_range_partition_plan",
-    "mv_incremental_refresh",
-    # ========== r7-born audit-twin promotions (rule 1) ===============
-    "events_hourly_percentiles_approx_audit",
-    "customer_rfm_segments_approx_audit",
-    # ========== flagship (standing, every round) =====================
-    "flagship_greedy_match",
-    # ========== rule-2 fingerprint-stale re-greens ===================
-    "text_tfidf_cosine_pairs",
-    "text_tfidf_topterms",
-    # ========== 28 max-age refreshes (newest green row = r01) ========
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_priority_lines",
-    "q13_customer_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_predicates",
-    "q20_heavy_shippers",
-    "q21_lone_fault_suppliers",
-    "q22_idle_customers",
-    "agg_cube_flag_status",
-    "agg_distinct_suppliers",
-    "agg_sorted_string",
-    "events_conditional_agg",
-    "scalar_datetime_functions",
-    "scalar_json_functions",
-    "win_first_last_nth",
-    "win_lag_order_gap",
-    "win_moving_avg",
-    "win_ntile_rank_stats",
-    "win_running_total",
-)
-
-# Round-6 window, retired 2026-08-15 (all 50 earned green rows in
-# CORRECTNESS_r06.json; kept for the rotation ledger):
-_R06_WINDOW: tuple[str, ...] = (
-    # ========== 15 never-driver-checked oracled queries (r5-born) ====
-    "text_quality_classifier",
-    "dedup_incremental_bloom_sharded",
-    "text_remove_boilerplate",
-    "split_leakage_safe",
-    "text_gopher_rules",
-    "text_winnowing_fingerprints",
-    "knn_hard_negatives",
-    "knn_cosine_mmr",
-    "knn_cosine_ivf_kmeans",
-    "events_mad_outliers",
-    "customer_abc_pareto",
-    "profile_table_files",
-    "profile_table_files_fast",
-    "multimodal_jpeg_headers",
-    "multimodal_decode_features",
-    # ========== r6-born oracled audit twins (never-checked) ==========
-    "sketch_hll_accuracy_audit",
-    "events_rolling_dau_hll_audit",
-    "multimodal_jpeg_decode_audit",
-    "sketch_cms_accuracy_audit",
-    "agg_approx_distinct_audit",
-    "dedup_remove_duplicate_spans",
-    # ========== flagship (standing, every round) =====================
-    "flagship_greedy_match",
-    # ========== rule-2 fingerprint-stale re-greens ===================
-    "bpe_train_merges",
-    "text_bpe_token_stats",
-    "flagship_best_match_with_replacement",
-    "text_emotion_scores",
-    "text_filter_topk",
-    "text_language_confidence",
-    "text_language_id",
-    "text_top2_emotions",
-    "unpivot_emotion_scores",
-    # multimodal.py changed this round (real-JPEG fixtures + decode) —
-    # re-green the whole oracled multimodal family
-    "multimodal_metadata_stats",
-    "multimodal_resize_dims",
-    "multimodal_frame_samples",
-    # ========== r6-born retrieval + table-ops (never-checked; rule 1
-    # displaces four of the r01 window-function refreshes to r07) =====
-    "text_bm25_topk",
-    "text_bm25_multiquery",
-    "text_phrase_search",
-    "profile_compaction_plan",
-    "text_bm25_snippets",
-    "text_hybrid_rrf",
-    "text_rerank_two_stage",
-    "text_prf_expansion",
-    "events_ewma",
-    "part_skyline_pareto",
-    "audit_referential_integrity",
-    "lineitem_corr_matrix",
-    "snapshot_diff_orders",
-    # ========== latest-r6-born never-checked (rule 1 displaces the
-    # q17 refresh to r07): real ISO-BMFF container audit ==============
-    "multimodal_mp4_boxes",
-    # ========== rule-2 re-greens (continuation amendment) ============
-    # The tfidf pair's implementation changed AFTER the r06 freeze
-    # (dense-dispatch rewrite of the cosine join; topterms shares the
-    # weighting helper), so their r05 green rows no longer certify the
-    # shipped code.  Rule 2 outranks the two oldest-green r01 refreshes
-    # that held these slots (q4/q9 — code untouched since r01, their
-    # rows still valid; they go to r07), so the window was amended
-    # before the r06 driver run.
-    "text_tfidf_cosine_pairs",
-    "text_tfidf_topterms",
-)
-
-# Round-5 window, retired 2026-08-14 (all 50 earned green rows in
-# CORRECTNESS_r05.json; kept for the rotation ledger):
-_R05_WINDOW: tuple[str, ...] = (
-    # ================= 26 never-driver-checked oracled queries ======
-    # -- §2.10 text analysis (new families) --------------------------
-    "text_char_entropy",
-    "text_feature_hashing",
-    "text_zipf_fit",
-    "text_keyness_by_source",
-    "text_bigram_logprob",
-    "text_tfidf_cosine_pairs",
-    "text_quality_normalized",
-    "text_pack_buckets",
-    "text_shard_index",
-    "unpivot_emotion_scores",
-    # -- §2.10 dedup (containment / span / incremental Bloom) --------
-    "dedup_ngram_containment",
-    "dedup_span_profile",
-    "dedup_incremental_bloom",
-    # -- §2.10 similarity audits -------------------------------------
-    "knn_recall_audit",
-    "knn_label_agreement",
-    # -- SCD2 / fuzzy join / analytics --------------------------------
-    "scd2_customer_segments",
-    "join_fuzzy_customer_names",
-    "events_user_trend",
-    "events_type_bigrams",
-    "events_sliding_rollup",
-    "events_gap_fill",
-    "view_click_attribution",
-    "scalar_bit_interleave",
-    # -- §2.10 BPE training -------------------------------------------
-    "bpe_train_merges",
-    "text_bpe_token_stats",
-    # ================= flagship (standing, every round) =============
-    "flagship_greedy_match",
-    # ================= changed-file re-greens (rule 2) ==============
-    # operators/dedup.py changes this round -> re-green the family
-    "dedup_incremental_batch",
-    "dedup_incremental_prefilter",
-    "dedup_incremental_lsh",
-    "dedup_exact_stats",
-    "dedup_minhash_signatures",
-    "dedup_minhash_lsh_candidates",
-    "dedup_ngram_jaccard",
-    "dedup_simhash_pairs",
-    "dedup_simhash64_pairs",
-    "dedup_minhash_clusters",
-    "dedup_cluster_representatives",
-    # ================= classics + perf watch ========================
-    "q1_pricing_summary",
-    "q3_top_unshipped_orders",
-    "q5_nation_volume",
-    "q6_forecast_revenue",
-    "topk_two_stage_parts",
-    "win_rank_top_orders_per_customer",
-    "join_anti_customers_without_orders",
-    "scalar_string_functions",
-    "text_emotion_scores",
-    "text_quality_scores",
-    "knn_cosine_ivf",
-    # promoted from rows-only this round: canonical-literal projection
-    # oracle + in-query distributed-fit assert (operators/pca.py)
-    "embedding_pca_project",
 )
 
 # Canonical-literal oracles (knn_cosine_ivf_kmeans, the PCA

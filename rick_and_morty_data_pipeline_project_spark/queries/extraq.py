@@ -837,10 +837,11 @@ def dedup_embedding_cosine(spark, sf_dir):
     # hashpartitioning(label) exchange, collapsing the quadratic dot
     # stage onto |labels| tasks (the guide's low-cardinality blocking
     # pitfall).  Enumerate the pair IDs narrow, rebalance them across
-    # all cores, then attach each side's unit vector by broadcast
-    # equi-join and evaluate the identical fold dot in parallel —
-    # row-exact vs the old plan (same dot, same round, same filter),
-    # measured 2.62x interleaved at sf0.1.
+    # all cores, then attach each side's unit vector by equi-join and
+    # evaluate the identical fold dot in parallel — row-exact vs the old
+    # plan (same dot, same round, same filter).  No broadcast hint: the
+    # vector relations grow with the corpus, so the auto-broadcast
+    # threshold and AQE pick the join strategy from their size.
     ids = e.select("vec_id", "label")
     a = ids.select(F.col("vec_id").alias("id_a"), "label")
     b = ids.select(F.col("vec_id").alias("id_b"), "label")
@@ -853,8 +854,8 @@ def dedup_embedding_cosine(spark, sf_dir):
     nvb = nv.select(F.col("vec_id").alias("id_b"), F.col("nv").alias("_nvb"))
     cos = F.round(dot_col(F.col("_nva"), F.col("_nvb")), 6)
     return (
-        pairs.join(F.broadcast(nva), "id_a")
-        .join(F.broadcast(nvb), "id_b")
+        pairs.join(nva, "id_a")
+        .join(nvb, "id_b")
         .select("label", "id_a", "id_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= 0.2)
     )

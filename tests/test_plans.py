@@ -1620,3 +1620,19 @@ def test_ivf_frontier_cell_assignment_never_below_fan_out(spark, monkeypatch):
     below = subtrees_below(px[0], "Exchange RoundRobinPartitioning")
     assert below and all("embeddings.parquet" in b for b in below), below
     assert all("array_sort(" not in b for b in below), below
+
+
+def test_embedding_cosine_vector_joins_carry_no_broadcast_hint(spark):
+    """The unit-vector relations grow with the corpus, so the planner,
+    not a hint, picks their join strategy: with auto-broadcast off, no
+    BroadcastExchange may sit over ``_nva``/``_nvb``."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = formatted_plan(QUERIES["dedup_embedding_cosine"].fn(spark, SF_SMALL))
+    finally:
+        spark.conf.set(key, old)
+    inputs = re.findall(r"\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert "_nva" in plan and "_nvb" in plan, plan
+    assert not [i for i in inputs if "_nva" in i or "_nvb" in i], plan

@@ -265,76 +265,6 @@ def test_ivfpq_residual_books_win_on_clustered_corpus(spark):
     assert r_res >= 0.25, r_res
 
 
-def test_stream_pq_codes_table_bit_identical_across_restart(spark, tmp_path):
-    """Streaming encode-on-arrival (r8 verdict stretch #8): the durable
-    codes table after (run over 3 chunks) + (checkpoint-resumed second
-    run over a 4th chunk) is BIT-IDENTICAL to one batch pq_encode over
-    all rows; a crash-style replay of an already-folded batch id
-    no-ops instead of duplicating."""
-    from rick_and_morty_data_pipeline_project_spark.streaming.pq_ingest import (
-        stream_pq_codes_table,
-    )
-
-    emb = _corpus(spark).select("vec_id", "embedding")
-    books = train_pq_codebooks(emb, m=_M, k=_K)
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    for i in range(3):
-        emb.filter(F.col("vec_id") % 4 == i).coalesce(1).write.parquet(
-            str(in_dir / f"chunk_{i}.parquet")
-        )
-
-    def start():
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir) + "/*/")
-        )
-        return stream_pq_codes_table(
-            stream, books, str(tmp_path / "codes"), str(tmp_path / "ckpt")
-        )
-
-    start().awaitTermination()
-    # restart the SAME checkpoint after more vectors arrive
-    emb.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.parquet(
-        str(in_dir / "chunk_3.parquet")
-    )
-    start().awaitTermination()
-
-    got = {
-        r["vec_id"]: list(r["codes"])
-        for r in spark.read.parquet(str(tmp_path / "codes")).collect()
-    }
-    want = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode(emb, books).collect()
-    }
-    assert got == want  # bit-identical to the one-shot batch encode
-
-    # at-least-once replay: re-applying an already-folded batch id
-    # leaves the table unchanged (the durable sink's marker guard)
-    from rick_and_morty_data_pipeline_project_spark.streaming._durable import (
-        make_durable_sink,
-    )
-    from rick_and_morty_data_pipeline_project_spark.operators.pq import (
-        pq_encode as _enc,
-    )
-
-    def _apply(batch, current):
-        codes = _enc(batch, books)
-        if current is None:
-            return codes
-        return current.join(codes, "vec_id", "left_anti").unionByName(codes)
-
-    sink = make_durable_sink(str(tmp_path / "codes"), _apply)
-    sink(emb.limit(5), 0)  # batch 0 was folded long ago -> no-op
-    again = {
-        r["vec_id"]: list(r["codes"])
-        for r in spark.read.parquet(str(tmp_path / "codes")).collect()
-    }
-    assert again == want
-
-
 def test_batched_topk_identical_to_per_query(spark):
     """pq_topk_batched / ivf_pq_topk_batched (one scan + broadcast LUT
     relation + salted two-stage top-k) return EXACTLY the per-query
@@ -382,40 +312,6 @@ def test_batched_topk_identical_to_per_query(spark):
         )
     )
     assert c == d
-
-
-def test_stream_pq_codes_table_intra_batch_duplicates(spark, tmp_path):
-    """Regression (r10 advisory): a micro-batch containing the same
-    vec_id twice must still produce ONE row per id in the durable codes
-    table (the anti-join only dedupes across batches; duplicates are
-    identical rows since codes are a pure function of the vector)."""
-    from rick_and_morty_data_pipeline_project_spark.streaming.pq_ingest import (
-        stream_pq_codes_table,
-    )
-
-    emb = _corpus(spark).select("vec_id", "embedding").limit(20)
-    books = train_pq_codebooks(emb, m=_M, k=_K)
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    # one chunk = one micro-batch, with every vector sent TWICE
-    emb.unionAll(emb).coalesce(1).write.parquet(
-        str(in_dir / "chunk_dup.parquet")
-    )
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir) + "/*/")
-    )
-    stream_pq_codes_table(
-        stream, books, str(tmp_path / "codes"), str(tmp_path / "ckpt")
-    ).awaitTermination()
-
-    rows = spark.read.parquet(str(tmp_path / "codes")).collect()
-    assert len(rows) == emb.count()  # one row per id, not two
-    got = {r["vec_id"]: list(r["codes"]) for r in rows}
-    want = {r["vec_id"]: list(r["codes"]) for r in pq_encode(emb, books).collect()}
-    assert got == want
 
 
 def test_canonical_normed_bit_equals_scalar_fold():
@@ -473,50 +369,3 @@ def test_assert_same_codes_catches_missing_and_diverged(spark):
     _assert_same_codes(a, a, ["codes"], "t")  # equal sides pass
 
 
-def test_stream_opq_codes_table_matches_batch(spark, tmp_path):
-    """The rotation parameter (r10): streaming encode-on-arrival with a
-    frozen OPQ rotation maintains a table bit-identical to one batch
-    opq_encode over the same rows, across two micro-batches."""
-    from rick_and_morty_data_pipeline_project_spark.operators.opq import (
-        opq_encode,
-        opq_fit,
-    )
-    from rick_and_morty_data_pipeline_project_spark.streaming.pq_ingest import (
-        stream_pq_codes_table,
-    )
-
-    emb = _corpus(spark).select("vec_id", "embedding").limit(40)
-    X = np.array(
-        [r["embedding"] for r in emb.orderBy("vec_id").collect()],
-        dtype=np.float64,
-    )
-    R, books = opq_fit(X, _M, _K, n_outer=2)
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    for i in range(2):
-        emb.filter(F.col("vec_id") % 2 == i).coalesce(1).write.parquet(
-            str(in_dir / f"chunk_{i}.parquet")
-        )
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir) + "/*/")
-    )
-    stream_pq_codes_table(
-        stream,
-        books,
-        str(tmp_path / "codes"),
-        str(tmp_path / "ckpt"),
-        rotation=R,
-    ).awaitTermination()
-
-    got = {
-        r["vec_id"]: list(r["codes"])
-        for r in spark.read.parquet(str(tmp_path / "codes")).collect()
-    }
-    want = {
-        r["vec_id"]: list(r["codes"])
-        for r in opq_encode(emb, R, books).collect()
-    }
-    assert got == want

@@ -1,6 +1,6 @@
 """Sink/source coverage beyond parquet scans: CSV round-trip (SNK-3/
 SRC-9), partitioned parquet writes with partition pruning (SNK-1 at
-scale), catalog introspection (SRC-8), and streaming sessionization."""
+scale), and catalog introspection (SRC-8)."""
 
 from __future__ import annotations
 
@@ -13,9 +13,6 @@ from rick_and_morty_data_pipeline_project_spark.plans.explain_utils import (
 )
 from rick_and_morty_data_pipeline_project_spark.sources.corpus import (
     register_views,
-)
-from rick_and_morty_data_pipeline_project_spark.streaming.stateful import (
-    sessionize_builtin,
 )
 from tests.conftest import SF_SMALL
 
@@ -51,40 +48,6 @@ def test_partitioned_write_prunes(spark):
         assert q.count() == want
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    """Bucketing both join sides on the key makes the join exchange-free
-    (the write paid the shuffle once) — the co-located-join layout a
-    100 TB fact-fact join needs."""
-    from rick_and_morty_data_pipeline_project_spark.operators.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
-    write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "okey"), "bkt_orders", "okey", 8
-    )
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "okey"), "bkt_lineitem", "okey", 8
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "bkt_orders", "bkt_lineitem", "okey")
-        plan = formatted_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        expected = orders.join(
-            lineitem, orders.o_orderkey == lineitem.l_orderkey
-        ).count()
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-
-
 def test_catalog_introspection(spark):
     """SRC-8 (sqlite_master listing, Scraper.py:445-449)."""
     register_views(spark, SF_SMALL)
@@ -92,27 +55,6 @@ def test_catalog_introspection(spark):
     assert {"lineitem", "orders", "documents", "embeddings"} <= names
     cols = {f.name for f in spark.catalog.listColumns("lineitem")}
     assert "l_orderkey" in cols
-
-
-def test_sessionize_builtin_batch(spark):
-    """Gap-based sessions over the events table (batch form of the
-    streaming operator): session bounds must cover their events and
-    per-user event counts must be conserved."""
-    from rick_and_morty_data_pipeline_project_spark.sources.corpus import load_table
-
-    events = load_table(spark, SF_SMALL, "events")
-    sessions = sessionize_builtin(events, gap="30 minutes")
-    rows = sessions.collect()
-    assert rows
-    total = sum(r["n_events"] for r in rows)
-    assert total == events.count()
-    by_user = events.groupBy("user_id").count().collect()
-    per_user_sessions = {}
-    for r in rows:
-        per_user_sessions.setdefault(r["user_id"], 0)
-        per_user_sessions[r["user_id"]] += r["n_events"]
-    for r in by_user:
-        assert per_user_sessions[r["user_id"]] == r["count"]
 
 
 def test_json_round_trip(spark):
@@ -270,41 +212,6 @@ def test_sql_entry_point_matches_dataframe(spark):
         sql(spark, SF_SMALL, "SELECT ts FROM events LIMIT 1").dtypes
     )["ts"]
     assert ts_type == "timestamp", ts_type
-
-
-def test_globally_sorted_export(spark, tmp_path):
-    """repartitionByRange + sortWithinPartitions yields a true global
-    order: every file internally sorted, file key-ranges disjoint and
-    ordered by part index — no single-task total sort anywhere."""
-    import glob
-    import os
-
-    from rick_and_morty_data_pipeline_project_spark.operators.sort_export import (
-        write_globally_sorted,
-    )
-
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    path = str(tmp_path / "sorted_out")
-    write_globally_sorted(orders, "o_totalprice", path, num_files=6)
-
-    files = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
-    assert len(files) >= 2
-    prev_max = None
-    total = 0
-    for f in files:
-        vals = [
-            r["o_totalprice"] for r in spark.read.parquet(f).collect()
-        ]
-        if not vals:
-            continue
-        assert vals == sorted(vals), f"file {f} not internally sorted"
-        if prev_max is not None:
-            assert vals[0] >= prev_max, "file ranges overlap out of order"
-        prev_max = vals[-1]
-        total += len(vals)
-    assert total == orders.count()
 
 
 def test_compaction_routes_unplanned_files_to_leftover_bin(

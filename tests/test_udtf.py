@@ -1,33 +1,9 @@
-"""Python UDTF surface: the imperative chunker must be byte-identical
-to the declarative (built-ins-only) text_chunk_overlap query."""
+"""Arrow-native grouped UDF surface: ``applyInArrow`` must match the
+equivalent window query."""
 
 from __future__ import annotations
 
-from rick_and_morty_data_pipeline_project_spark.functions.udtfs import (
-    register_udtfs,
-)
-from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
 from tests.conftest import SF_SMALL
-
-
-def test_chunk_udtf_matches_declarative(spark):
-    register_udtfs(spark)
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    docs.createOrReplaceTempView("_udtf_docs")
-    via_udtf = {
-        tuple(r)
-        for r in spark.sql(
-            """
-            SELECT d.doc_id, c.chunk_id, c.n_chunk_tokens, c.chunk_text
-            FROM _udtf_docs d, LATERAL chunk_docs(d.text, 32, 24) c
-            """
-        ).collect()
-    }
-    via_builtin = {
-        tuple(r)
-        for r in QUERIES["text_chunk_overlap"].fn(spark, SF_SMALL).collect()
-    }
-    assert via_udtf == via_builtin and len(via_udtf) > 0
 
 
 def test_apply_in_arrow_grouped_matches_window(spark):

@@ -279,51 +279,6 @@ def test_jl_projection_linearity(spark):
     assert r1 == r2
 
 
-def test_stream_binary_words_bit_identical_across_restart(spark, tmp_path):
-    # streaming sign-word ingest: the durable table after (run over 3
-    # chunks) + (checkpoint-resumed run over a 4th) is BIT-IDENTICAL
-    # to the one-shot batch pack over all rows
-    from rick_and_morty_data_pipeline_project_spark.streaming.bin_ingest import (
-        pack_words_df,
-        stream_binary_words_table,
-    )
-    from tests.conftest import SF_SMALL
-
-    emb = t(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    for i in range(3):
-        emb.filter(F.col("vec_id") % 4 == i).coalesce(1).write.parquet(
-            str(in_dir / f"chunk_{i}.parquet")
-        )
-
-    def start():
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir) + "/*/")
-        )
-        return stream_binary_words_table(
-            stream, str(tmp_path / "words"), str(tmp_path / "ckpt")
-        )
-
-    start().awaitTermination()
-    emb.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.parquet(
-        str(in_dir / "chunk_3.parquet")
-    )
-    start().awaitTermination()
-
-    got = {
-        r["vec_id"]: (r["w0"], r["w1"])
-        for r in spark.read.parquet(str(tmp_path / "words")).collect()
-    }
-    want = {
-        r["vec_id"]: (r["w0"], r["w1"])
-        for r in pack_words_df(emb).collect()
-    }
-    assert got == want
-
-
 def test_outlier_scores_flag_planted_outlier(spark):
     # a tight label cluster plus one anti-aligned vector: the plant
     # must be the label's minimum-z row and carry the outlier flag
@@ -506,65 +461,6 @@ def test_ndcg_literal_tables_and_bounds(spark):
             ) < 1e-12
         else:
             assert r["ndcg"] == 0.0
-
-
-def test_stream_sq8_codes_bit_identical_across_restart(spark, tmp_path):
-    # streaming SQ8 ingest against FROZEN train stats: the durable
-    # table after (run over 3 chunks) + (checkpoint-resumed run over a
-    # 4th) is BIT-IDENTICAL to the one-shot batch encode over all rows
-    from rick_and_morty_data_pipeline_project_spark.operators.sq import (
-        sq8_train_stats,
-    )
-    from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
-        _normalized,
-    )
-    from rick_and_morty_data_pipeline_project_spark.streaming.sq_ingest import (
-        sq8_codes_df,
-        stream_sq8_codes_table,
-    )
-    from tests.conftest import SF_SMALL
-
-    emb = t(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-    # freeze stats once on the full (trusted) corpus
-    nc = _normalized(emb, "vec_id", "embedding", "vec_id", "_nv")
-    stats = sq8_train_stats(nc, "_nv", 64).collect()[0]
-    mins, maxs = list(stats["_mins"]), list(stats["_maxs"])
-
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    for i in range(3):
-        emb.filter(F.col("vec_id") % 4 == i).coalesce(1).write.parquet(
-            str(in_dir / f"chunk_{i}.parquet")
-        )
-
-    def start():
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir) + "/*/")
-        )
-        return stream_sq8_codes_table(
-            stream, str(tmp_path / "codes"), str(tmp_path / "ckpt"),
-            mins, maxs,
-        )
-
-    start().awaitTermination()
-    emb.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.parquet(
-        str(in_dir / "chunk_3.parquet")
-    )
-    start().awaitTermination()
-
-    got = {
-        r["vec_id"]: tuple(r["codes"])
-        for r in spark.read.parquet(str(tmp_path / "codes")).collect()
-    }
-    want = {
-        r["vec_id"]: tuple(r["codes"])
-        for r in sq8_codes_df(emb, mins, maxs).collect()
-    }
-    assert got == want
-    # codes are genuine bytes
-    assert all(0 <= c <= 255 for v in got.values() for c in v)
 
 
 # ---------------------------------------------------------------------------
