@@ -9,9 +9,18 @@ growing with the whole corpus — the only shape that survives an
 unbounded stream (plain ``dropDuplicates`` on a stream retains every
 key forever).  At scale the state store shards by the same fingerprint
 hash the batch dedup shuffles on; no extra shuffle is introduced.
+
+The two ingest sinks keep durable state instead of StateStore state:
+:func:`stream_ingest_dedup` (exact) and :func:`stream_ingest_neardup`
+(MinHash LSH) dedup against their own output table, and the near-dup
+sink also stores the corpus band index under the query's checkpoint
+directory (``corpus_index/``).
 """
 
 from __future__ import annotations
+
+import hashlib
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -21,6 +30,16 @@ from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
     fingerprint_col,
 )
 
+# Folded into the key of every application-scoped corpus index: in local
+# mode an application id is only a start-time stamp.
+_PROCESS = uuid.uuid4().hex
+
+
+def _fs(sess, path: str):
+    """(Hadoop FileSystem, Path) of ``path``, on the driver."""
+    hpath = sess.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sess.sparkContext._jsc.hadoopConfiguration()), hpath
+
 
 def _output_exists(sess, out_dir: str) -> bool:
     """True iff the append target already holds data.  An explicit
@@ -28,9 +47,7 @@ def _output_exists(sess, out_dir: str) -> bool:
     would also swallow transient FS errors / corrupt footers on later
     batches and silently shrink the dedup state to corpus-only —
     readmitting duplicates instead of failing the batch."""
-    jvm = sess.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(out_dir)
-    fs = hpath.getFileSystem(sess.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _fs(sess, out_dir)
     return bool(fs.exists(hpath))
 
 
@@ -165,6 +182,141 @@ def _kept_state(sess, out_dir: str, id_field) -> DataFrame:
     return sess.read.schema(schema).parquet(out_dir)
 
 
+def _seq(scala_seq):
+    it = scala_seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _runs_user_code(sess, plan) -> bool:
+    """True iff an expression of ``plan`` computes what the plan's text
+    does not pin down: a user-defined function (its code can change
+    between processes), a subquery (its plan is not among the leaves) or
+    a nondeterministic expression."""
+    jvm = sess.sparkContext._jvm
+    kinds = [
+        jvm.org.apache.spark.util.Utils.classForName(
+            f"org.apache.spark.sql.catalyst.expressions.{name}", True, False
+        )
+        for name in ("UserDefinedExpression", "SubqueryExpression")
+    ]
+    nodes, exprs = [plan], []
+    while nodes:
+        node = nodes.pop()
+        nodes.extend(_seq(node.children()))
+        exprs.extend(_seq(node.expressions()))
+    while exprs:
+        e = exprs.pop()
+        if not e.deterministic() or any(k.isInstance(e) for k in kinds):
+            return True
+        exprs.extend(_seq(e.children()))
+    return False
+
+
+def _corpus_key(corpus: DataFrame, *params) -> str:
+    """The name of ``corpus``'s band index under ``params``, read off
+    its analyzed plan on the driver (no Spark job).
+
+    A purely file-backed corpus (every leaf a file relation, no UDF,
+    subquery or nondeterministic expression) is keyed by its canonical
+    plan, its schema and each input file's path, length and
+    modification time, read through the Hadoop FS: the key survives a
+    restart, and a rewritten file changes it.  Any other corpus (Python
+    rows, a local relation, a UDF) has no such content identity; its key
+    adds each leaf's own identity (RDD id, local rows), the application
+    id and a per-process nonce, so its index serves one application
+    only.  Not ``semanticHash``: that is 32 bits, and an RDD's is
+    identity-based, so it can collide with an index of another process.
+    """
+    sess = corpus.sparkSession
+    plan = corpus._jdf.queryExecution().analyzed()
+    parts = [plan.canonicalized().toString(), corpus.schema.json(), repr(params)]
+    durable = not _runs_user_code(sess, plan)
+    for leaf in _seq(plan.collectLeaves()):
+        name = leaf.nodeName()
+        if name == "LogicalRelation" and (
+            leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        ):
+            continue
+        durable = False
+        if name == "LogicalRDD":
+            parts.append(f"rdd {leaf.rdd().id()}")
+        elif name == "LocalRelation":
+            parts.append(leaf.data().toString())
+        else:
+            parts.append(leaf.toString())
+    for f in sorted(corpus.inputFiles()):
+        fs, hpath = _fs(sess, f)
+        st = fs.getFileStatus(hpath)
+        parts.append(f"{f} {st.getLen()} {st.getModificationTime()}")
+    if not durable:
+        parts += [sess.sparkContext.applicationId, _PROCESS]
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:32]
+
+
+def _corpus_index(sess, corpus_bands: DataFrame, index_dir: str) -> DataFrame:
+    """The corpus band index: ``corpus_bands`` (``(id, sig, band)``
+    rows) stored as parquet in ``index_dir`` and read with their
+    declared schema.  A directory without its ``_SUCCESS`` marker (a
+    build that died midway) is rebuilt, never read; building an index
+    deletes every other directory next to it."""
+    fs, marker = _fs(sess, f"{index_dir}/_SUCCESS")
+    if not fs.exists(marker):
+        corpus_bands.write.mode("overwrite").parquet(index_dir)
+        fs.createNewFile(marker)  # where the session writes no marker
+        index = marker.getParent()
+        for st in fs.listStatus(index.getParent()):
+            if st.getPath().getName() != index.getName():
+                fs.delete(st.getPath(), True)
+    return sess.read.schema(corpus_bands.schema).parquet(index_dir)
+
+
+def _banded_matches(
+    batch: DataFrame,
+    seen_bands: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    band_size: int,
+    threshold: float,
+) -> DataFrame:
+    """``(id_a, id_b, _seen, _drop)``: the similar pairs of one banded
+    join of the ``batch`` rows' bands against (batch bands ∪
+    ``seen_bands``).  Both candidate kinds come from it: batch × seen
+    pairs (``_seen``, any ids) and batch × batch pairs, the latter in
+    both directions, so that every batch row a sees all its partners in
+    its own ``id_a`` partition: ``_drop`` marks a as having a seen
+    partner."""
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        lsh_bands,
+        signature_jaccard,
+    )
+
+    a = lsh_bands(batch.select(id_col, "sig"), num_hashes, band_size).withColumn(
+        "_seen", F.lit(False)
+    )
+    b = a.unionByName(seen_bands.withColumn("_seen", F.lit(True)))
+    return (
+        a.alias("a")
+        .join(b.alias("b").hint("shuffle_hash"), on="band")
+        .filter(
+            F.col("b._seen")
+            | (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
+        )
+        .filter(
+            signature_jaccard(
+                F.col("a.sig"), F.col("b.sig"), num_hashes
+            ) >= threshold
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("b._seen").alias("_seen"),
+        )
+        .withColumn("_drop", F.max("_seen").over(Window.partitionBy("id_a")))
+        .distinct()
+    )
+
+
 def stream_ingest_neardup(
     stream: DataFrame,
     corpus: DataFrame,
@@ -187,11 +339,11 @@ def stream_ingest_neardup(
     1. the batch rows get their MinHash ``sig`` once, and that relation
        is checkpointed;
     2. ONE banded LSH join of the batch bands against (batch bands ∪
-       seen bands), seen = the curated corpus PLUS everything previous
-       batches appended, each row tagged with its side; pairs at
-       ``jaccard_est ≥ threshold`` are checkpointed once.  Batch rows
-       with a seen partner are near-dups of already-kept documents and
-       drop;
+       seen bands), seen = the corpus band index PLUS the bands of
+       everything previous batches appended, each row tagged with its
+       side; pairs at ``jaccard_est ≥ threshold`` are checkpointed
+       once.  Batch rows with a seen partner are near-dups of
+       already-kept documents and drop;
     3. the in-batch pairs whose endpoints both survive step 2 →
        connected components → keep the MIN-ID representative per
        cluster (the connected-components min-label policy, transitive
@@ -212,13 +364,24 @@ def stream_ingest_neardup(
     sink appended, the commit log did not record it) sees the state
     its first attempt saw and computes the same kept set; rows the
     first attempt already appended are then anti-joined away, so the
-    replay appends nothing.  Cost per batch: MinHashing is
-    O(|batch| + |corpus|) — the corpus is the caller's DataFrame and is
-    re-hashed every batch — and the band join scans
-    O(|batch| + |corpus| + |kept|) band rows, while the pairs it emits
-    scale with |batch| × band-collision rate.  Storing the corpus
-    signatures bucketed by band would take the corpus hashing and its
-    band shuffle off the per-batch path; this sink does not do that.
+    replay appends nothing.
+
+    The corpus is hashed and banded once, not per batch: the first
+    batch that finds no index writes ``lsh_bands(minhash_signatures(
+    corpus))`` as parquet under ``checkpoint_dir/corpus_index/``, and
+    every later batch, and every later query on the same checkpoint,
+    reads it with a declared schema.  The corpus is therefore frozen at
+    index-build time; the index's key, taken when the query starts,
+    decides whether an index is still that corpus.  A file-backed
+    corpus is keyed by its plan and its files' paths, lengths and
+    modification times, so a rewritten corpus is detected and rebuilds
+    the index, and an unchanged one is reused across restarts.  Any
+    other corpus (Python rows, a local relation, a UDF) is keyed to
+    the running application: it is re-indexed once per application and
+    its index is never read by another process.  Cost per batch:
+    MinHashing is O(|batch|), the band join scans
+    O(|batch| + |corpus| + |kept|) stored band rows, and the pairs it
+    emits scale with |batch| × band-collision rate.
 
     Keeper policy note: a batch row suppressed by a corpus partner is
     dropped even if it would also have claimed in-batch followers —
@@ -235,13 +398,16 @@ def stream_ingest_neardup(
         connected_components,
         lsh_bands,
         minhash_signatures,
-        signature_jaccard,
         with_minhash_signature,
     )
 
-    corpus_sig = minhash_signatures(
-        corpus, id_col, text_col, num_hashes, shingle_k
+    corpus_bands = lsh_bands(
+        minhash_signatures(corpus, id_col, text_col, num_hashes, shingle_k),
+        num_hashes,
+        band_size,
     )
+    key = _corpus_key(corpus, id_col, text_col, num_hashes, band_size, shingle_k)
+    index_dir = f"{checkpoint_dir.rstrip('/')}/corpus_index/{key}"
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -250,46 +416,23 @@ def stream_ingest_neardup(
         batch = with_minhash_signature(
             batch_df, text_col, num_hashes, shingle_k
         ).localCheckpoint()  # hashed once, consumed 3×
-        seen = corpus_sig
+        seen = _corpus_index(sess, corpus_bands, index_dir)
         written = None  # ids a replay's first attempt already appended
         if _output_exists(sess, out_dir):
             state = _kept_state(sess, out_dir, batch.schema[id_col])
             own = F.col("ingest_batch") == tag
-            seen = seen.unionByName(state.filter(~own).select(id_col, "sig"))
+            seen = seen.unionByName(
+                lsh_bands(
+                    state.filter(~own).select(id_col, "sig"),
+                    num_hashes,
+                    band_size,
+                )
+            )
             written = state.filter(own).select(id_col)
 
-        def bands(sigs: DataFrame, is_seen: bool) -> DataFrame:
-            return lsh_bands(
-                sigs.select(id_col, "sig"), num_hashes, band_size
-            ).withColumn("_seen", F.lit(is_seen))
-
-        # One join finds both candidate kinds: batch × seen pairs (any
-        # ids) and batch × batch pairs, the latter in both directions,
-        # so that every batch row a sees all its partners in its own
-        # id_a partition: _drop marks a as having a corpus/kept partner.
-        batch_bands = bands(batch, False)
-        a = batch_bands.alias("a")
-        b = batch_bands.unionByName(bands(seen, True)).alias("b")
-        matches = (
-            a.join(b.hint("shuffle_hash"), on="band")
-            .filter(
-                F.col("b._seen")
-                | (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-            )
-            .filter(
-                signature_jaccard(
-                    F.col("a.sig"), F.col("b.sig"), num_hashes
-                ) >= threshold
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.col("b._seen").alias("_seen"),
-            )
-            .withColumn("_drop", F.max("_seen").over(Window.partitionBy("id_a")))
-            .distinct()
-            .localCheckpoint()
-        )
+        matches = _banded_matches(
+            batch, seen, id_col, num_hashes, band_size, threshold
+        ).localCheckpoint()
         dropped = matches.filter("_seen").select(F.col("id_a").alias(id_col))
         # An in-batch edge stands when neither end is dropped, i.e. when
         # both of its directions survive the _drop filter.

@@ -1636,3 +1636,48 @@ def test_embedding_cosine_vector_joins_carry_no_broadcast_hint(spark):
     inputs = re.findall(r"\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
     assert "_nva" in plan and "_nvb" in plan, plan
     assert not [i for i in inputs if "_nva" in i or "_nvb" in i], plan
+
+
+def test_neardup_batch_join_reads_stored_corpus_index(spark, tmp_path):
+    """Against an existing corpus band index, a near-dup ingest batch's
+    banded join reads the corpus as parquet: no scan of the corpus's
+    Python rows (``ExistingRDD``) and no Python eval node for its UDF.
+    The same join over the corpus hashed in place has both, which shows
+    that the check can fail."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        lsh_bands,
+        minhash_signatures,
+        with_minhash_signature,
+    )
+    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
+        _banded_matches,
+        _corpus_index,
+        _corpus_key,
+    )
+
+    same = F.udf(lambda text: text, "string")
+    corpus = spark.createDataFrame(
+        [(0, "a b c d e f"), (1, "g h i j k l")], "doc_id LONG, raw STRING"
+    ).select("doc_id", same("raw").alias("text"))
+    bands = lsh_bands(minhash_signatures(corpus, "doc_id", "text"), 8, 2)
+    index_dir = str(tmp_path / "corpus_index" / _corpus_key(corpus, 8))
+    _corpus_index(spark, bands, index_dir)  # builds the index
+    index = _corpus_index(spark, bands, index_dir)
+    path = str(tmp_path / "batch.parquet")
+    pq.write_table(pa.table({"doc_id": [10], "text": ["a b c d e x"]}), path)
+    batch = with_minhash_signature(spark.read.parquet(path), "text")
+
+    def plan(seen_bands):
+        return formatted_plan(_banded_matches(batch, seen_bands, "doc_id", 8, 2, 0.5))
+
+    python = ("ExistingRDD", "LogicalRDD", "BatchEvalPython", "ArrowEvalPython")
+    indexed = plan(index)
+    assert not [n for n in python if n in indexed], indexed
+    assert index_dir in indexed, indexed
+    hashed = plan(bands)
+    assert "ExistingRDD" in hashed and "EvalPython" in hashed, hashed
+    matches = _banded_matches(batch, index, "doc_id", 8, 2, 0.5).collect()
+    assert [(r["id_a"], r["id_b"]) for r in matches] == [(10, 0)], matches

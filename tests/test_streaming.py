@@ -3,6 +3,10 @@ rollup must produce exactly the batch rollup once the stream drains."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
 from rick_and_morty_data_pipeline_project_spark.streaming.windowed import (
     run_available_now,
@@ -605,6 +609,170 @@ def test_stream_ingest_neardup_rejects_kept_table_without_sig(spark, tmp_path):
     # end to end: the streaming query fails on the old table
     with pytest.raises(Exception, match="no 'sig' column"):
         _neardup_ingest(spark, tmp_path, str(old), str(tmp_path / "ckpt"))
+
+
+def _index_doc(seed: int, changed: int | None = None) -> str:
+    import random
+
+    vocab = [f"w{i}" for i in range(30)]
+    toks = random.Random(seed).choices(vocab, k=40)
+    if changed is not None:
+        toks[changed] = vocab[(seed + changed + 11) % len(vocab)]
+    return " ".join(toks)
+
+
+def _ingest_batch(spark, tmp_path, name: str, rows, corpus) -> None:
+    """Land one batch file in ``tmp_path/incoming`` and drain it with a
+    near-dup query over ``corpus`` on the checkpoint ``tmp_path/ckpt``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
+        stream_ingest_neardup,
+    )
+
+    in_dir = tmp_path / "incoming"
+    in_dir.mkdir(exist_ok=True)
+    ids, texts = zip(*rows)
+    pq.write_table(
+        pa.table({"doc_id": list(ids), "text": list(texts)}),
+        str(in_dir / f"{name}.parquet"),
+    )
+    _pin_file_order(*sorted(in_dir.iterdir()))
+    stream = (
+        spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(in_dir))
+    )
+    stream_ingest_neardup(
+        stream, corpus, str(tmp_path / "kept"), str(tmp_path / "ckpt")
+    ).awaitTermination()
+
+
+def _kept_ids(spark, tmp_path) -> list[int]:
+    return sorted(
+        r["doc_id"] for r in spark.read.parquet(str(tmp_path / "kept")).collect()
+    )
+
+
+# Batch a: 10 is a near-dup of corpus document doc(1), 11 is fresh.
+# Batch b: 20 is a near-dup of doc(1) (not kept: 10 dropped), 21 of doc(2).
+_BATCH_A = [(10, _index_doc(1, 5)), (11, _index_doc(3))]
+_BATCH_B = [(20, _index_doc(1, 7)), (21, _index_doc(2, 9))]
+
+
+@pytest.mark.parametrize("kind", ["parquet", "rows"])
+def test_stream_ingest_neardup_changed_corpus_rebuilds_index(spark, tmp_path, kind):
+    """Two queries on one checkpoint, the corpus doc(1) in the first and
+    doc(2) in the second: the second query must not be served the
+    first one's corpus index.  A parquet corpus is rewritten in place
+    between the queries; a Python-rows corpus is a second DataFrame of
+    the same schema.  Served the stale index, 20 would drop and 21
+    land.  The rebuild prunes the stale index."""
+
+    def corpus(text: str):
+        df = spark.createDataFrame([(0, text)], "doc_id LONG, text STRING")
+        if kind == "rows":
+            return df
+        path = str(tmp_path / "corpus")
+        df.write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    _ingest_batch(spark, tmp_path, "a", _BATCH_A, corpus(_index_doc(1)))
+    assert _kept_ids(spark, tmp_path) == [11]
+    first = os.listdir(tmp_path / "ckpt" / "corpus_index")
+    _ingest_batch(spark, tmp_path, "b", _BATCH_B, corpus(_index_doc(2)))
+    assert _kept_ids(spark, tmp_path) == [11, 20]
+    second = os.listdir(tmp_path / "ckpt" / "corpus_index")
+    assert len(first) == len(second) == 1 and first != second, (first, second)
+
+
+def test_stream_ingest_neardup_partial_index_is_rebuilt(spark, tmp_path):
+    """An index directory without its ``_SUCCESS`` marker (a build that
+    died midway) is rebuilt, not read, and the rebuild prunes any other
+    directory under ``corpus_index``.  The partial index here holds the
+    bands of a stand-in corpus doc(2): read, it would drop 21 (near
+    doc(2)) and keep 20 (near the real corpus doc(1))."""
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        lsh_bands,
+        minhash_signatures,
+    )
+
+    corpus = spark.createDataFrame(
+        [(0, _index_doc(1))], "doc_id LONG, text STRING"
+    )
+    _ingest_batch(spark, tmp_path, "a", _BATCH_A, corpus)
+    root = tmp_path / "ckpt" / "corpus_index"
+    (key,) = os.listdir(root)
+    stand_in = spark.createDataFrame(
+        [(0, _index_doc(2))], "doc_id LONG, text STRING"
+    )
+    lsh_bands(minhash_signatures(stand_in, "doc_id", "text"), 8, 2).write.mode(
+        "overwrite"
+    ).parquet(str(root / key))
+    os.remove(root / key / "_SUCCESS")
+    (root / "_temporary").mkdir()
+
+    _ingest_batch(spark, tmp_path, "b", _BATCH_B, corpus)
+    assert _kept_ids(spark, tmp_path) == [11, 21]
+    assert os.listdir(root) == [key]
+    assert (root / key / "_SUCCESS").exists()
+
+
+def test_stream_ingest_neardup_reuses_index_without_evaluating_corpus(spark, tmp_path):
+    """A second query over the same corpus and checkpoint reads the
+    stored index and never evaluates the corpus: the corpus text goes
+    through a UDF that raises once a flag file exists, and the flag is
+    set between the queries."""
+    from pyspark.sql import functions as F
+
+    flag = str(tmp_path / "corpus-evaluated")
+
+    @F.udf("string")
+    def guarded(text):
+        if os.path.exists(flag):
+            raise RuntimeError("the corpus was evaluated again")
+        return text
+
+    corpus = spark.createDataFrame(
+        [(0, _index_doc(1))], "doc_id LONG, raw STRING"
+    ).select("doc_id", guarded("raw").alias("text"))
+    _ingest_batch(spark, tmp_path, "a", _BATCH_A, corpus)
+    open(flag, "w").close()
+    _ingest_batch(spark, tmp_path, "b", _BATCH_B, corpus)
+    assert _kept_ids(spark, tmp_path) == [11, 21]
+
+
+def test_corpus_index_key_scope(spark, tmp_path, monkeypatch):
+    """Only a purely file-backed corpus keeps its index key in another
+    process (modelled by swapping the per-process nonce); Python rows, a
+    local relation, a UDF or a nondeterministic filter over the same
+    files are keyed to this process.  Re-reading the files gives the
+    same key, and taking a key launches no Spark job."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from rick_and_morty_data_pipeline_project_spark.streaming import dedup
+    from tests.conftest import job_ids
+
+    path = str(tmp_path / "corpus")
+    rows = spark.createDataFrame([(0, "a b c")], "doc_id LONG, text STRING")
+    rows.write.parquet(path)
+    files = spark.read.parquet(path)
+    corpora = {
+        "files": files,
+        "rows": rows,
+        "local": spark.createDataFrame(pd.DataFrame({"doc_id": [0], "text": ["a b c"]})),
+        "udf": files.select("doc_id", F.udf(str.upper, "string")("text").alias("text")),
+        "rand": files.filter(F.rand() < 2),
+    }
+    keys = []
+    assert job_ids(spark, lambda: keys.extend(dedup._corpus_key(c, 8) for c in corpora.values())) == []
+    monkeypatch.setattr(dedup, "_PROCESS", "another process")
+    moved = [n for n, k, c in zip(corpora, keys, corpora.values()) if dedup._corpus_key(c, 8) != k]
+    assert moved == ["rows", "local", "udf", "rand"], moved
+    assert dedup._corpus_key(spark.read.parquet(path), 8) == keys[0]
+    assert dedup._corpus_key(files, 16) != keys[0]
 
 
 def test_stream_stream_join_matches_batch(spark):
