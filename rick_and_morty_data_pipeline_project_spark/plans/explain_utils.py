@@ -62,23 +62,40 @@ def partial_group_limits_below_exchange(df: DataFrame) -> list[str]:
     return out
 
 
+def _executed_lines(df: DataFrame) -> list[str]:
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :|+-"))
+
+
 def subtrees_below(df: DataFrame, node: str) -> list[str]:
     """The physical subtree under every plan node whose line contains
     ``node`` (e.g. ``"Exchange RoundRobinPartitioning"``), one string
     each: the lines after the node that are indented deeper than it.
     Reads the plan before execution, expressions inline."""
-    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
-
-    def depth(line: str) -> int:
-        return len(line) - len(line.lstrip(" :|+-"))
-
+    lines = _executed_lines(df)
     out = []
     for i, line in enumerate(lines):
         if node in line:
             below = []
             for child in lines[i + 1:]:
-                if depth(child) <= depth(line):
+                if _depth(child) <= _depth(line):
                     break
                 below.append(child)
             out.append("\n".join(below))
     return out
+
+
+def ancestors(df: DataFrame, pattern: str) -> list[str]:
+    """The plan nodes above the first node whose line matches the regex
+    ``pattern``, nearest first, one line each.  Reads the plan before
+    execution, expressions inline."""
+    lines = _executed_lines(df)
+    i = next(i for i, line in enumerate(lines) if re.search(pattern, line))
+    out = [lines[i]]
+    for line in reversed(lines[:i]):
+        if _depth(line) < _depth(out[-1]):
+            out.append(line)
+    return out[1:]

@@ -14,7 +14,9 @@ The two ingest sinks keep durable state instead of StateStore state:
 :func:`stream_ingest_dedup` (exact) and :func:`stream_ingest_neardup`
 (MinHash LSH) dedup against their own output table, and the near-dup
 sink also stores the corpus band index under the query's checkpoint
-directory (``corpus_index/``).
+directory (``corpus_index/``), frozen when first built.  Each near-dup
+micro-batch scans those stored bands once, without shuffling them, and
+brings the driver one row per batch row that has a near-dup partner.
 """
 
 from __future__ import annotations
@@ -42,13 +44,17 @@ def _fs(sess, path: str):
 
 
 def _output_exists(sess, out_dir: str) -> bool:
-    """True iff the append target already holds data.  An explicit
-    existence probe, NOT a try/except around the read: a bare except
-    would also swallow transient FS errors / corrupt footers on later
-    batches and silently shrink the dedup state to corpus-only —
-    readmitting duplicates instead of failing the batch."""
+    """True iff the append target holds a data file (a name not
+    starting with ``_`` or ``.``; an aborted first append can leave
+    none), listed on the driver.  An explicit probe, NOT a try/except
+    around the read: a bare except would also swallow transient FS
+    errors / corrupt footers and silently shrink the dedup state to
+    corpus-only — readmitting duplicates instead of failing the batch."""
     fs, hpath = _fs(sess, out_dir)
-    return bool(fs.exists(hpath))
+    return fs.exists(hpath) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(hpath)
+    )
 
 
 def stream_dedup_exact(
@@ -145,6 +151,15 @@ def stream_ingest_dedup(
     )
 
 
+def _sink_schema(id_field, last: str):
+    """``(id, sig, <last>)``: the declared schema of the near-dup sink's
+    stored rows, kept (``ingest_batch``) and indexed (``band``)."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    sig = StructField("sig", ArrayType(StringType()))
+    return StructType([id_field, sig, StructField(last, StringType())])
+
+
 def _kept_state(sess, out_dir: str, id_field) -> DataFrame:
     """The near-dup sink's state, ``(id, sig, ingest_batch)`` of every
     kept row, read with a declared schema (no inference job).  A kept
@@ -153,8 +168,6 @@ def _kept_state(sess, out_dir: str, id_field) -> DataFrame:
     silently let duplicates in.  The check reads the parquet footer on
     the driver (no Spark job); where pyarrow cannot open the path it
     falls back to Spark's schema inference."""
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
     from rick_and_morty_data_pipeline_project_spark.sources.corpus import (
         parquet_footer,
     )
@@ -172,14 +185,7 @@ def _kept_state(sess, out_dir: str, id_field) -> DataFrame:
                 "sink stored its state lack it); re-ingest it into a new "
                 "output directory"
             )
-    schema = StructType(
-        [
-            id_field,
-            StructField("sig", ArrayType(StringType())),
-            StructField("ingest_batch", StringType()),
-        ]
-    )
-    return sess.read.schema(schema).parquet(out_dir)
+    return sess.read.schema(_sink_schema(id_field, "ingest_batch")).parquet(out_dir)
 
 
 def _seq(scala_seq):
@@ -254,67 +260,83 @@ def _corpus_key(corpus: DataFrame, *params) -> str:
     return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:32]
 
 
-def _corpus_index(sess, corpus_bands: DataFrame, index_dir: str) -> DataFrame:
-    """The corpus band index: ``corpus_bands`` (``(id, sig, band)``
-    rows) stored as parquet in ``index_dir`` and read with their
-    declared schema.  A directory without its ``_SUCCESS`` marker (a
-    build that died midway) is rebuilt, never read; building an index
-    deletes every other directory next to it."""
+def _corpus_index(
+    sess, corpus: DataFrame, index_dir: str, id_col: str, text_col: str,
+    num_hashes: int, band_size: int, shingle_k: int,
+) -> DataFrame:
+    """The corpus band index: ``(id, sig, band)`` rows of
+    ``lsh_bands(minhash_signatures(corpus))`` stored as parquet in
+    ``index_dir`` and read with a declared schema.  The band plan is
+    built only when ``index_dir`` lacks its ``_SUCCESS`` marker; such a
+    directory (a build that died midway) is rebuilt, never read, and
+    building an index deletes every other directory next to it."""
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        lsh_bands,
+        minhash_signatures,
+    )
+
     fs, marker = _fs(sess, f"{index_dir}/_SUCCESS")
     if not fs.exists(marker):
-        corpus_bands.write.mode("overwrite").parquet(index_dir)
+        sigs = minhash_signatures(corpus, id_col, text_col, num_hashes, shingle_k)
+        bands = lsh_bands(sigs, num_hashes, band_size)
+        bands.write.mode("overwrite").parquet(index_dir)
         fs.createNewFile(marker)  # where the session writes no marker
         index = marker.getParent()
         for st in fs.listStatus(index.getParent()):
             if st.getPath().getName() != index.getName():
                 fs.delete(st.getPath(), True)
-    return sess.read.schema(corpus_bands.schema).parquet(index_dir)
+    schema = _sink_schema(corpus.schema[id_col], "band")
+    return sess.read.schema(schema).parquet(index_dir)
 
 
-def _banded_matches(
-    batch: DataFrame,
-    seen_bands: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    band_size: int,
-    threshold: float,
+def _partners(
+    batch: DataFrame, seen_bands: DataFrame, id_col: str,
+    num_hashes: int, band_size: int, threshold: float,
 ) -> DataFrame:
-    """``(id_a, id_b, _seen, _drop)``: the similar pairs of one banded
-    join of the ``batch`` rows' bands against (batch bands ∪
-    ``seen_bands``).  Both candidate kinds come from it: batch × seen
-    pairs (``_seen``, any ids) and batch × batch pairs, the latter in
-    both directions, so that every batch row a sees all its partners in
-    its own ``id_a`` partition: ``_drop`` marks a as having a seen
-    partner."""
+    """``(id, _drop, nbrs)``, one row per ``batch`` row with a similar
+    partner, from one banded join of the batch rows' bands against
+    (batch bands ∪ ``seen_bands``) grouped by the batch id: ``_drop``
+    marks a row with a seen partner, ``nbrs`` holds its similar
+    in-batch partners.  In-batch similarity is symmetric, so every
+    in-batch pair shows up in both of its rows' ``nbrs``."""
     from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
         lsh_bands,
         signature_jaccard,
     )
 
-    a = lsh_bands(batch.select(id_col, "sig"), num_hashes, band_size).withColumn(
-        "_seen", F.lit(False)
-    )
-    b = a.unionByName(seen_bands.withColumn("_seen", F.lit(True)))
+    a = lsh_bands(batch.select(id_col, "sig"), num_hashes, band_size)
+    b = a.withColumn("_seen", F.lit(False))
+    b = b.unionByName(seen_bands.withColumn("_seen", F.lit(True)))
+    seen, a_sig = F.col("b._seen"), F.col("a.sig")
     return (
         a.alias("a")
-        .join(b.alias("b").hint("shuffle_hash"), on="band")
-        .filter(
-            F.col("b._seen")
-            | (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
+        .join(b.alias("b"), on="band")
+        .filter(seen | (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")))
+        .filter(signature_jaccard(a_sig, F.col("b.sig"), num_hashes) >= threshold)
+        .groupBy(F.col(f"a.{id_col}").alias(id_col))
+        .agg(
+            F.max(seen).alias("_drop"),
+            F.collect_set(F.when(~seen, F.col(f"b.{id_col}"))).alias("nbrs"),
         )
-        .filter(
-            signature_jaccard(
-                F.col("a.sig"), F.col("b.sig"), num_hashes
-            ) >= threshold
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("b._seen").alias("_seen"),
-        )
-        .withColumn("_drop", F.max("_seen").over(Window.partitionBy("id_a")))
-        .distinct()
     )
+
+
+def _min_id_roots(edges) -> dict:
+    """Component label of every node of the undirected ``edges`` (node
+    pairs): its component's least node, the label
+    ``operators/dedup.connected_components`` gives.  Union-find on the
+    driver with path halving, every root the least node of its set."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
 
 
 def stream_ingest_neardup(
@@ -336,77 +358,71 @@ def stream_ingest_neardup(
 
     Per micro-batch:
 
-    1. the batch rows get their MinHash ``sig`` once, and that relation
-       is checkpointed;
+    1. the batch rows get their MinHash ``sig`` once (checkpointed);
     2. ONE banded LSH join of the batch bands against (batch bands ∪
        seen bands), seen = the corpus band index PLUS the bands of
-       everything previous batches appended, each row tagged with its
-       side; pairs at ``jaccard_est ≥ threshold`` are checkpointed
-       once.  Batch rows with a seen partner are near-dups of
-       already-kept documents and drop;
-    3. the in-batch pairs whose endpoints both survive step 2 →
-       connected components → keep the MIN-ID representative per
-       cluster (the connected-components min-label policy, transitive
-       within the batch; note the batch curation pipeline ranks its
-       cluster representatives by quality score instead — an
-       incremental stream cannot re-rank against documents it has
-       already durably kept, so the simpler first/lowest-id policy is
-       the honest streaming semantics).
+       everything previous batches appended, keeps the pairs at
+       ``jaccard_est ≥ threshold`` and aggregates them per batch row
+       into ``(id, _drop, nbrs)`` (:func:`_partners`), which is
+       collected.  A row with a seen partner drops;
+    3. on the driver, union-find over the in-batch edges with neither
+       end dropped keeps the MIN-ID row of each component (transitive
+       within the batch; the batch curation pipeline ranks cluster
+       representatives by quality score instead — a stream cannot
+       re-rank against documents it has already durably kept);
+    4. the batch, anti-joined against a local relation of the dropped
+       and losing ids, is appended.
+
+    Driver bound: step 2 brings one row per batch row that has a
+    near-dup partner, carrying that row's in-batch partner ids.  That
+    grows with the micro-batch (bounded by ``maxFilesPerTrigger`` /
+    ``maxBytesPerTrigger``), never with the corpus or the kept table.
+
+    Cost per batch: MinHashing is O(|batch|); the band join scans the
+    O(|corpus| + |kept|) stored band rows once and does not shuffle
+    them (the planner broadcasts the batch bands); its pairs scale
+    with |batch| × band-collision rate.
 
     State is the durable output table itself (zero StateStore
-    footprint), exactly like the exact-ingest twin keeps ``fp`` there:
-    kept rows carry their ``sig``, and each batch reads the state back
-    with a declared schema, so kept text is never re-hashed.  Kept rows
-    also carry ``ingest_batch``,
-    ``"{query id}:{batch id}"`` (the query id persists across restarts
-    from one checkpoint).  A batch leaves the rows tagged with its own
-    ``ingest_batch`` out of its seen state, so a replayed batch (the
-    sink appended, the commit log did not record it) sees the state
-    its first attempt saw and computes the same kept set; rows the
-    first attempt already appended are then anti-joined away, so the
-    replay appends nothing.
+    footprint): kept rows carry their ``sig``, read back with a declared
+    schema, so kept text is never re-hashed; a kept directory without a
+    data file (an aborted first append) is no state.  Kept rows also
+    carry ``ingest_batch``, ``"{query id}:{batch id}"`` (the query id
+    persists across restarts from one checkpoint).  A batch leaves the
+    rows tagged with its own ``ingest_batch`` out of its seen state, so
+    a replayed batch (the sink appended, the commit log did not record
+    it) computes the kept set its first attempt did, and anti-joins
+    away the rows that attempt appended.
 
-    The corpus is hashed and banded once, not per batch: the first
-    batch that finds no index writes ``lsh_bands(minhash_signatures(
-    corpus))`` as parquet under ``checkpoint_dir/corpus_index/``, and
-    every later batch, and every later query on the same checkpoint,
-    reads it with a declared schema.  The corpus is therefore frozen at
-    index-build time; the index's key, taken when the query starts,
-    decides whether an index is still that corpus.  A file-backed
-    corpus is keyed by its plan and its files' paths, lengths and
-    modification times, so a rewritten corpus is detected and rebuilds
-    the index, and an unchanged one is reused across restarts.  Any
-    other corpus (Python rows, a local relation, a UDF) is keyed to
-    the running application: it is re-indexed once per application and
-    its index is never read by another process.  Cost per batch:
-    MinHashing is O(|batch|), the band join scans
-    O(|batch| + |corpus| + |kept|) stored band rows, and the pairs it
-    emits scale with |batch| × band-collision rate.
+    Snapshot semantics: the first batch that finds no corpus band index
+    writes one under ``checkpoint_dir/corpus_index/``
+    (:func:`_corpus_index`), and later batches and queries on the
+    checkpoint read it, so the corpus is frozen at index-build time.
+    The key taken when the query starts (:func:`_corpus_key`) rebuilds
+    it for a rewritten file-backed corpus and once per application for
+    any other corpus (Python rows, a local relation, a UDF).
 
     Keeper policy note: a batch row suppressed by a corpus partner is
     dropped even if it would also have claimed in-batch followers —
-    those followers are then compared transitively via their own
-    corpus/batch candidates, matching the batch pipeline's
-    components-then-representative semantics batch-locally (cross-batch
-    transitivity through a DROPPED row is not tracked; that is the
-    incremental recall trade, same as exact ingest's watermark trade).
+    those are compared through their own candidates; cross-batch
+    transitivity through a DROPPED row is not tracked (the incremental
+    recall trade, like exact ingest's watermark trade).
 
     Returns the started StreamingQuery (availableNow trigger); caller
     awaits termination.
     """
+    from pyspark.sql.types import StructType
+
     from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
-        connected_components,
         lsh_bands,
-        minhash_signatures,
         with_minhash_signature,
     )
-
-    corpus_bands = lsh_bands(
-        minhash_signatures(corpus, id_col, text_col, num_hashes, shingle_k),
-        num_hashes,
-        band_size,
+    from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
+        local_relation,
     )
-    key = _corpus_key(corpus, id_col, text_col, num_hashes, band_size, shingle_k)
+
+    params = (id_col, text_col, num_hashes, band_size, shingle_k)
+    key = _corpus_key(corpus, *params)
     index_dir = f"{checkpoint_dir.rstrip('/')}/corpus_index/{key}"
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -415,47 +431,30 @@ def stream_ingest_neardup(
         tag = f"{query_id}:{batch_id}"
         batch = with_minhash_signature(
             batch_df, text_col, num_hashes, shingle_k
-        ).localCheckpoint()  # hashed once, consumed 3×
-        seen = _corpus_index(sess, corpus_bands, index_dir)
-        written = None  # ids a replay's first attempt already appended
+        ).localCheckpoint()  # hashed once, consumed twice
+        seen = _corpus_index(sess, corpus, index_dir, *params)
+        id_field = batch.schema[id_col]
+        ids = StructType([id_field])
+        written = local_relation(sess, [], ids)  # ids a replay already appended
         if _output_exists(sess, out_dir):
-            state = _kept_state(sess, out_dir, batch.schema[id_col])
+            state = _kept_state(sess, out_dir, id_field)
             own = F.col("ingest_batch") == tag
-            seen = seen.unionByName(
-                lsh_bands(
-                    state.filter(~own).select(id_col, "sig"),
-                    num_hashes,
-                    band_size,
-                )
-            )
+            seen = seen.unionByName(lsh_bands(
+                state.filter(~own).select(id_col, "sig"), num_hashes, band_size
+            ))
             written = state.filter(own).select(id_col)
 
-        matches = _banded_matches(
-            batch, seen, id_col, num_hashes, band_size, threshold
-        ).localCheckpoint()
-        dropped = matches.filter("_seen").select(F.col("id_a").alias(id_col))
-        # An in-batch edge stands when neither end is dropped, i.e. when
-        # both of its directions survive the _drop filter.
-        edges = (
-            matches.filter(~F.col("_drop"))
-            .groupBy(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-            )
-            .count()
-            .filter(F.col("count") == 2)
+        partners = _partners(batch, seen, id_col, num_hashes, band_size, threshold)
+        rows = partners.collect()
+        dropped = {r[0] for r in rows if r["_drop"]}
+        roots = _min_id_roots(
+            (r[0], n) for r in rows if not r["_drop"]
+            for n in r["nbrs"] if n not in dropped
         )
-        losers = (
-            connected_components(edges, "id_a", "id_b")
-            .filter(F.col("node") != F.col("cluster_id"))
-            .select(F.col("node").alias(id_col))
-        )
-        excluded = dropped.unionByName(losers)
-        if written is not None:
-            excluded = excluded.unionByName(written)
-        kept = batch.join(excluded, id_col, "left_anti").withColumn(
-            "ingest_batch", F.lit(tag)
-        )
+        losers = [n for n, root in roots.items() if n != root]
+        excluded = local_relation(sess, [(i,) for i in [*dropped, *losers]], ids)
+        kept = batch.join(excluded.unionByName(written), id_col, "left_anti")
+        kept = kept.withColumn("ingest_batch", F.lit(tag))
         kept.write.mode("append").parquet(out_dir)
 
     return (

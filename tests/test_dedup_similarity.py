@@ -278,6 +278,51 @@ def test_connected_components_matches_union_find_property(spark):
         assert got == want, edges
 
 
+def _shaped_edges(seed: int) -> list[tuple[int, int]]:
+    """A seeded edge list made of a chain, a star, a cycle, isolated
+    nodes (self loops) and a few random edges joining them, each edge
+    in a random direction and the list in random order."""
+    rng = random.Random(seed)
+    base = rng.randrange(0, 50)
+    chain = list(range(base, base + rng.randrange(2, 9)))
+    star = list(range(100, 100 + rng.randrange(2, 7)))
+    cycle = list(range(200, 200 + rng.randrange(3, 8)))
+    lone = rng.sample(range(300, 320), rng.randrange(1, 4))
+    edges = list(zip(chain, chain[1:]))
+    edges += [(star[0], s) for s in star[1:]]
+    edges += list(zip(cycle, cycle[1:] + cycle[:1]))
+    edges += [(v, v) for v in lone]
+    nodes = chain + star + cycle + lone
+    edges += [tuple(rng.sample(nodes, 2)) for _ in range(rng.randrange(0, 3))]
+    edges = [e if rng.random() < 0.5 else e[::-1] for e in edges]
+    rng.shuffle(edges)
+    return edges
+
+
+def test_min_id_roots_matches_connected_components(spark):
+    """The near-dup sink's driver union-find labels every node exactly
+    as the distributed ``connected_components`` does (least node of
+    its component), on seeded chains, stars, cycles, isolated nodes and
+    an empty edge list."""
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        connected_components,
+    )
+    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
+        _min_id_roots,
+    )
+
+    graphs = [[], [(7, 3)], [(5, 4), (4, 3), (3, 2), (2, 1)]]
+    graphs += [_shaped_edges(seed) for seed in range(4)]
+    for edges in graphs:
+        want = {
+            r["node"]: r["cluster_id"]
+            for r in connected_components(
+                spark.createDataFrame(edges, "id_a long, id_b long")
+            ).collect()
+        }
+        assert _min_id_roots(edges) == want, edges
+
+
 def test_connected_components_runs_no_count(spark, monkeypatch):
     """Convergence rides each round's checkpoint job (an ``observe``
     metric): the operator never spends a separate ``count()`` action."""

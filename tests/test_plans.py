@@ -1643,7 +1643,9 @@ def test_neardup_batch_join_reads_stored_corpus_index(spark, tmp_path):
     banded join reads the corpus as parquet: no scan of the corpus's
     Python rows (``ExistingRDD``) and no Python eval node for its UDF.
     The same join over the corpus hashed in place has both, which shows
-    that the check can fail."""
+    that the check can fail.  The stored bands feed the join with no
+    ``Exchange`` between their scan and the join (the planner
+    broadcasts the batch bands), and the join carries no hint."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1652,10 +1654,13 @@ def test_neardup_batch_join_reads_stored_corpus_index(spark, tmp_path):
         minhash_signatures,
         with_minhash_signature,
     )
+    from rick_and_morty_data_pipeline_project_spark.plans.explain_utils import (
+        ancestors,
+    )
     from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
-        _banded_matches,
         _corpus_index,
         _corpus_key,
+        _partners,
     )
 
     same = F.udf(lambda text: text, "string")
@@ -1664,14 +1669,15 @@ def test_neardup_batch_join_reads_stored_corpus_index(spark, tmp_path):
     ).select("doc_id", same("raw").alias("text"))
     bands = lsh_bands(minhash_signatures(corpus, "doc_id", "text"), 8, 2)
     index_dir = str(tmp_path / "corpus_index" / _corpus_key(corpus, 8))
-    _corpus_index(spark, bands, index_dir)  # builds the index
-    index = _corpus_index(spark, bands, index_dir)
+    params = ("doc_id", "text", 8, 2, 3)
+    _corpus_index(spark, corpus, index_dir, *params)  # builds the index
+    index = _corpus_index(spark, corpus, index_dir, *params)
     path = str(tmp_path / "batch.parquet")
     pq.write_table(pa.table({"doc_id": [10], "text": ["a b c d e x"]}), path)
     batch = with_minhash_signature(spark.read.parquet(path), "text")
 
     def plan(seen_bands):
-        return formatted_plan(_banded_matches(batch, seen_bands, "doc_id", 8, 2, 0.5))
+        return formatted_plan(_partners(batch, seen_bands, "doc_id", 8, 2, 0.5))
 
     python = ("ExistingRDD", "LogicalRDD", "BatchEvalPython", "ArrowEvalPython")
     indexed = plan(index)
@@ -1679,5 +1685,11 @@ def test_neardup_batch_join_reads_stored_corpus_index(spark, tmp_path):
     assert index_dir in indexed, indexed
     hashed = plan(bands)
     assert "ExistingRDD" in hashed and "EvalPython" in hashed, hashed
-    matches = _banded_matches(batch, index, "doc_id", 8, 2, 0.5).collect()
-    assert [(r["id_a"], r["id_b"]) for r in matches] == [(10, 0)], matches
+    partners = _partners(batch, index, "doc_id", 8, 2, 0.5)
+    up = ancestors(partners, r"FileScan parquet \[[^\]]*\bband#")
+    below_join = up[:next(i for i, node in enumerate(up) if "Join" in node)]
+    assert not [n for n in below_join if "Exchange" in n], up
+    analyzed = partners._jdf.queryExecution().analyzed().toString()
+    assert "Hint" not in analyzed, analyzed
+    rows = [(r["doc_id"], r["_drop"], r["nbrs"]) for r in partners.collect()]
+    assert rows == [(10, True, [])], rows

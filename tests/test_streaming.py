@@ -623,7 +623,8 @@ def _index_doc(seed: int, changed: int | None = None) -> str:
 
 def _ingest_batch(spark, tmp_path, name: str, rows, corpus) -> None:
     """Land one batch file in ``tmp_path/incoming`` and drain it with a
-    near-dup query over ``corpus`` on the checkpoint ``tmp_path/ckpt``."""
+    near-dup query over ``corpus`` on the checkpoint ``tmp_path/ckpt``;
+    return the query."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -644,9 +645,11 @@ def _ingest_batch(spark, tmp_path, name: str, rows, corpus) -> None:
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir))
     )
-    stream_ingest_neardup(
+    q = stream_ingest_neardup(
         stream, corpus, str(tmp_path / "kept"), str(tmp_path / "ckpt")
-    ).awaitTermination()
+    )
+    q.awaitTermination()
+    return q
 
 
 def _kept_ids(spark, tmp_path) -> list[int]:
@@ -773,6 +776,119 @@ def test_corpus_index_key_scope(spark, tmp_path, monkeypatch):
     assert moved == ["rows", "local", "udf", "rand"], moved
     assert dedup._corpus_key(spark.read.parquet(path), 8) == keys[0]
     assert dedup._corpus_key(files, 16) != keys[0]
+
+
+@pytest.mark.parametrize("leftover", [[], ["_SUCCESS"]], ids=["empty", "success"])
+def test_stream_ingest_neardup_empty_kept_dir_is_no_state(spark, tmp_path, leftover):
+    """A kept directory holding no data file (an aborted first append
+    leaves one behind, empty or with only ``_SUCCESS``) is no state:
+    the stream ingests to the kept ids of a fresh directory, pinned by
+    ``test_stream_ingest_neardup_replay_appends_nothing``, and the
+    check is a driver-side listing that launches no Spark job."""
+    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
+        _output_exists,
+    )
+    from tests.conftest import job_ids
+
+    kept = tmp_path / "kept"
+    kept.mkdir()
+    for name in leftover:
+        (kept / name).touch()
+    exists = []
+    assert job_ids(spark, lambda: exists.append(_output_exists(spark, str(kept)))) == []
+    assert exists == [False]
+    _neardup_ingest(spark, tmp_path, str(kept), str(tmp_path / "ckpt"))
+    assert _kept_ids(spark, tmp_path) == [11, 14, 21, 24]
+    assert _output_exists(spark, str(kept))
+
+
+def test_stream_ingest_neardup_driver_rows_bounded_by_batch(spark, tmp_path, monkeypatch):
+    """What a batch brings to the driver is one row per batch row that
+    has a near-dup partner, carrying its in-batch partners: brute force
+    over the signatures gives the same rows, and a corpus 10× larger
+    with no new partners changes none of them."""
+    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
+        minhash_signatures,
+    )
+    from rick_and_morty_data_pipeline_project_spark.streaming import dedup
+
+    collected, partners = [], dedup._partners
+
+    class Spy:  # records what the sink collects from ``_partners``
+        def __init__(self, df):
+            self.df = df
+
+        def collect(self):
+            collected.append(self.df.collect())
+            return collected[-1]
+
+    monkeypatch.setattr(dedup, "_partners", lambda *a: Spy(partners(*a)))
+    batch = [
+        (10, _index_doc(1, 5)),  # near the corpus document doc(1)
+        (11, _index_doc(3)), (12, _index_doc(3, 7)), (13, _index_doc(3, 20)),
+        (14, _index_doc(4)), (15, _index_doc(5)),
+    ]
+    small = [(0, _index_doc(1)), (1, _index_doc(2))]
+    fresh = [  # 9× the small corpus, sharing no token with any document
+        (i, " ".join(f"z{i}_{j}" for j in range(40)))
+        for i in range(100, 100 + 9 * len(small))
+    ]
+    schema = "doc_id LONG, text STRING"
+    sig = {
+        r["doc_id"]: r["sig"]
+        for r in minhash_signatures(
+            spark.createDataFrame(batch + small + fresh, schema), "doc_id", "text"
+        ).collect()
+    }
+
+    def similar(a, b):  # a shared band and estimated Jaccard >= 0.5
+        agree = [x == y for x, y in zip(sig[a], sig[b])]
+        banded = any(agree[i] and agree[i + 1] for i in range(0, 8, 2))
+        return banded and sum(agree) >= 4
+
+    batch_ids = [i for i, _ in batch]
+    runs = []
+    for name, corpus in (("small", small), ("large", small + fresh)):
+        root = tmp_path / name
+        root.mkdir()
+        _ingest_batch(spark, root, "a", batch, spark.createDataFrame(corpus, schema))
+        assert len(collected) == len(runs) + 1  # one collect per batch
+        rows = collected[-1]
+        runs.append(sorted((r[0], r["_drop"], sorted(r["nbrs"])) for r in rows))
+        want = []
+        for a in batch_ids:
+            nbrs = sorted(b for b in batch_ids if b != a and similar(a, b))
+            drop = any(similar(a, c) for c, _ in corpus)
+            if nbrs or drop:
+                want.append((a, drop, nbrs))
+        assert runs[-1] == want, name
+    assert runs[0] == runs[1] and len(runs[0]) == 4, runs
+
+
+def test_stream_ingest_neardup_jobs_per_batch(spark, tmp_path):
+    """Each near-dup micro-batch runs a fixed, small number of Spark
+    jobs: the signature checkpoint, the one partner aggregate and the
+    append.  Three batches, one query each: an in-batch chain, a corpus
+    near-dup, a near-dup of a kept row.  The first batch also builds the
+    corpus band index (one more job).  Counted per query through the
+    job group streaming runs each batch under (the query's run id)."""
+    corpus = spark.createDataFrame(
+        [(0, _index_doc(1)), (1, _index_doc(2))], "doc_id LONG, text STRING"
+    )
+    batches = [
+        [(10, _index_doc(3)), (11, _index_doc(3, 7)), (12, _index_doc(3, 20)),
+         (13, _index_doc(4))],
+        [(20, _index_doc(1, 5)), (21, _index_doc(5))],
+        [(30, _index_doc(4, 9)), (31, _index_doc(6))],
+    ]
+    sc = spark.sparkContext
+    jobs = []
+    for name, rows in zip("abc", batches):
+        q = _ingest_batch(spark, tmp_path, name, rows, corpus)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(str(q.runId))))
+    assert _kept_ids(spark, tmp_path) == [10, 13, 21, 31]
+    assert jobs == [7, 6, 6], jobs
 
 
 def test_stream_stream_join_matches_batch(spark):
