@@ -20,15 +20,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
 from rick_and_morty_data_pipeline_project_spark.session import get_spark
 
-# A pre-run 1-minute load above this means timings will be contended
-# and round-over-round comparison is unreliable (r6/r7 adjudications:
-# same code measured 12.0-12.2 s quiet vs 14.9-15.7 s at load 5.9-7.0).
-QUIET_LOAD_MAX = 3.0
-
-# Best quiet-host total of this battery (min-of-3, pre-run 1-min load
-# 0.0), reported with every run for like-for-like comparison.
-QUIET_REFERENCE = {"value": 12.870, "recorded": "2026-08-18"}
-
 HEADLINE = [
     "q1_pricing_summary",
     "q3_top_unshipped_orders",
@@ -56,23 +47,12 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Pre-run load, captured BEFORE the JVM starts: the post-run
     # 1-minute average is inflated by the bench itself, so only the
-    # pre-run number tells a reviewer whether the host was already
-    # contended when timing began (r6 adjudication: 14.9 s at load
-    # 5.95 vs 12.2 s at load 1.57 — same code).
+    # pre-run number tells whether the host was already contended when
+    # timing began.
     try:
         pre_load_1m = round(os.getloadavg()[0], 2)
     except OSError:
         pre_load_1m = None
-    if "--require-quiet" in sys.argv and (
-        pre_load_1m is None or pre_load_1m > QUIET_LOAD_MAX
-    ):
-        print(
-            f"bench: refusing to time on a contended host "
-            f"(1-min load {pre_load_1m} > {QUIET_LOAD_MAX}); "
-            f"re-run when quiet or drop --require-quiet",
-            file=sys.stderr,
-        )
-        raise SystemExit(2)
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -121,14 +101,6 @@ def main() -> None:
                 "protocol": "min_of_3",
                 "host_load_1m_pre": pre_load_1m,
                 "host_load_1m": load_1m,
-                # self-describing contention flag + the best quiet-host
-                # number for like-for-like comparison when this
-                # recording ran contended
-                "quiet_host": (
-                    pre_load_1m is not None
-                    and pre_load_1m <= QUIET_LOAD_MAX
-                ),
-                "quiet_reference": QUIET_REFERENCE,
             }
         )
     )

@@ -14,8 +14,8 @@ Layout:
                     dedup, similarity search, multimodal plumbing)
     queries/      — the named query catalog exported via __spark_entry__.py
     plans/        — plan-inspection utilities (pushdown/broadcast assertions)
-    streaming/    — Structured Streaming rollup, stream-stream join and
-                    ingest dedup sinks
+    streaming/    — Structured Streaming stream-stream join and near-dup
+                    ingest sink
 """
 
 from rick_and_morty_data_pipeline_project_spark.session import get_spark

@@ -18,9 +18,6 @@ the corpus vocabulary and hard-coded below) so that:
   full value-hash correctness check rather than a rows-only check;
 * integer/integer division is performed identically (both engines produce
   a float64 quotient of exact integers) → bitwise-equal scores.
-
-A pandas-UDF variant is provided to exercise the engine's vectorized-UDF
-surface (SURVEY.md §2.9), but the expression form is the hot path.
 """
 
 from __future__ import annotations
@@ -59,11 +56,6 @@ def emotion_score_cols(text_col: str | Column) -> dict[str, Column]:
     return out
 
 
-def with_emotion_scores(df, text_col: str = "text"):
-    scores = emotion_score_cols(text_col)
-    return df.select("*", *[c.alias(emo) for emo, c in scores.items()])
-
-
 def emotion_score_sqls(text_expr: str) -> dict[str, str]:
     """DuckDB SQL expression per emotion, exactly mirroring
     :func:`emotion_score_cols` (list lambda filter / integer counts /
@@ -78,32 +70,3 @@ def emotion_score_sqls(text_expr: str) -> dict[str, str]:
         )
     return out
 
-
-def emotion_scores_pandas_udf():
-    """Vectorized (Arrow-batched) variant returning map<string,double>.
-
-    Demonstrates the engine's pandas-UDF surface; semantics identical to
-    the expression form. Prefer :func:`emotion_score_cols` in hot paths.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    word2emo = {w: e for e, ws in LEXICON.items() for w in ws}
-
-    @pandas_udf("map<string,double>")
-    def score(texts: pd.Series) -> pd.Series:
-        def one(t: str | None):
-            if t is None:
-                return None
-            toks = t.split(" ")
-            n = len(toks)
-            counts = dict.fromkeys(EMOTIONS, 0)
-            for tok in toks:
-                e = word2emo.get(tok)
-                if e is not None:
-                    counts[e] += 1
-            return {e: counts[e] / n for e in EMOTIONS}
-
-        return texts.map(one)
-
-    return score

@@ -3,12 +3,11 @@
 Building an n-element array literal as ``F.array(*[F.lit(x) …])`` pays
 n py4j round-trips at query-construction time and hands Catalyst an
 n-node expression tree to analyze on EVERY query build — measured at
-~0.5 s per build for the 8×64 IVF centroid literal and worse for PQ's
-per-query 8×256 ADC LUTs.  A single string literal decoded by
-``from_json`` is ONE py4j call and ONE tree node; the optimizer
-constant-folds the foldable ``from_json`` into the identical array
-literal before execution, so the executed plan and every value bit are
-unchanged (json round-trips shortest-repr doubles exactly; ints are
+~0.5 s per build for the 8×64 IVF centroid literal.  A single string
+literal decoded by ``from_json`` is ONE py4j call and ONE tree node; the
+optimizer constant-folds the foldable ``from_json`` into the identical
+array literal before execution, so the executed plan and every value bit
+are unchanged (json round-trips shortest-repr doubles exactly; ints are
 exact by definition).
 
 Non-finite doubles (nan/inf) cannot round-trip through JSON, so those
@@ -39,14 +38,3 @@ def array_lit(values, element_type: str = "double") -> Column:
         )
     return F.array(*[F.lit(v) for v in vals])
 
-
-def array2d_lit(rows, element_type: str = "double") -> Column:
-    """2-D array literal: ``array<array<element_type>>``."""
-    mat = [list(r) for r in rows]
-    if all(_all_finite(r) for r in mat):
-        return F.from_json(
-            F.lit(json.dumps(mat)), f"array<array<{element_type}>>"
-        )
-    return F.array(
-        *[F.array(*[F.lit(v) for v in r]) for r in mat]
-    )

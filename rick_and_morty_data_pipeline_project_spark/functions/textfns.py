@@ -47,10 +47,6 @@ def capitalize_col(c: Column) -> Column:
     )
 
 
-def token_count_col(text: Column) -> Column:
-    return F.size(F.split(text, "\\s+"))
-
-
 def stopword_ratio_col(text: Column, stopwords: list[str] = ("the", "a")) -> Column:
     toks = F.split(text, " ")
     sw = list(stopwords)
@@ -97,14 +93,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     )).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Token k-gram shingles (array<string>); empty-safe for short docs.
-
-    NOTE: prefer ``tokens_col`` + ``shingles_from_tokens`` across a
-    projection boundary in hot paths — see ``tokens_col``."""
-    return shingles_from_tokens(tokens_col(text), k)
-
-
 def shingle_hashes_col(shingles: Column, num_hashes: int = 8) -> Column:
     """Per-shingle hash material: ceil(num_hashes/4) md5 digests per
     shingle, concatenated (each 128-bit digest yields four 32-bit /
@@ -134,8 +122,3 @@ def minhash_components(hashes: Column, num_hashes: int = 8) -> list[Column]:
 
     return [slice_min(8 * i + 1) for i in range(num_hashes)]
 
-
-def minhash_signature_col(text: Column, num_hashes: int = 8, k: int = 3) -> Column:
-    """array<string> MinHash signature of token-k-gram shingles."""
-    h = shingle_hashes_col(shingles_col(text, k), num_hashes)
-    return F.array(*minhash_components(h, num_hashes))

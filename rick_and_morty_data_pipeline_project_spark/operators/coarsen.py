@@ -27,18 +27,15 @@ Safety:
 * rows are verified via an ``observe`` metric on the write itself (no
   second scan of the output): a count mismatch raises and the
   original table is never touched;
-* the rewrite is IN-PLACE (temp-write + double-rename, same suffix
-  convention as ``operators/merge`` so ``recover_table`` heals a
-  half-finished swap), so a file appended by concurrent ingest after
-  the snapshot read would be swept aside with the old directory —
-  the pre-swap RE-LISTING guard detects any such late file and aborts
-  loudly instead (for concurrent-ingest tables use
+* the rewrite is IN-PLACE (temp-write + double-rename; the old table
+  is renamed aside, never deleted, before the new one lands, and
+  :func:`recover_table` heals a swap that died between its renames),
+  so a file appended by concurrent ingest after the snapshot read
+  would be swept aside with the old directory — the pre-swap
+  RE-LISTING guard detects any such late file and aborts loudly
+  instead (for concurrent-ingest tables use
   ``operators/compaction.compact``, whose out-of-place leftover-bin
-  protocol tolerates the race).  The swap choreography is
-  deliberately inlined rather than threaded through
-  ``merge.atomic_overwrite`` — that helper writes unpartitioned and
-  has no pre-swap verification hook, and its module is
-  fingerprint-frozen this round.
+  protocol tolerates the race).
 
 Scale: the plan is one row per partition VALUE (kilobytes at 100 TB;
 its single-partition ordered window runs over that tiny relation
@@ -55,10 +52,32 @@ from pyspark.sql.window import Window
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
-from rick_and_morty_data_pipeline_project_spark.operators.merge import (
-    _hadoop_fs,
-    recover_table,
-)
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jvm
+
+
+def recover_table(spark: SparkSession, target_path: str) -> bool:
+    """Crash recovery for the swap protocol: if a previous rewrite died
+    between its two renames, the only complete table sits at
+    ``<target>.__merge_old__`` — restore it (never treat it as stale
+    garbage: deleting it would silently reinitialize the table and lose
+    all history).  Idempotent; a rewrite that READS the target must
+    call this before reading it.
+    Returns True if a recovery rename was performed."""
+    old_path = target_path + ".__merge_old__"
+    fs, jvm = _hadoop_fs(spark, target_path)
+    hpath = jvm.org.apache.hadoop.fs.Path
+    if not fs.exists(hpath(target_path)) and fs.exists(hpath(old_path)):
+        if not fs.rename(hpath(old_path), hpath(target_path)):
+            raise IOError(
+                f"recover_table: cannot restore {old_path} -> {target_path}"
+            )
+        return True
+    return False
 
 
 def plan_partition_coarsen(
@@ -167,14 +186,3 @@ def coarsen_partitions(
     fs.delete(hpath(old_path), True)
     return {"n_rows": n_written, "n_groups": n_groups}
 
-
-def data_file_stats(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Per-data-file row counts for a parquet table — the before/after
-    evidence a compaction run is judged by (one narrow scan; the
-    aggregate is one row per file)."""
-    return (
-        spark.read.parquet(table_dir)
-        .select(F.input_file_name().alias("file"))
-        .groupBy("file")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )

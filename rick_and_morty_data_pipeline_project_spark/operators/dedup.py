@@ -20,15 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
     fingerprint_col,
-    minhash_signature_col,
 )
-
-
-from rick_and_morty_data_pipeline_project_spark.operators.parallelism import fan_out  # noqa: F401  (re-export; canonical home)
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    fan_out,
+)
 
 
 def exact_dedup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -40,18 +38,6 @@ def exact_dedup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.min(id_col).alias("keeper_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
-    )
-
-
-def exact_dedup_keep_first(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Drop duplicate texts, keeping the lowest id per fingerprint."""
-    w = Window.partitionBy(fingerprint_col(F.col(text_col))).orderBy(
-        F.asc(id_col)
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 

@@ -236,15 +236,6 @@ class _BitReader:
         self._bitpos += n
 
 
-def _extend(v: int, size: int) -> int:
-    """Map the ``size`` raw magnitude bits back to the signed value."""
-    if size == 0:
-        return 0
-    if v < (1 << (size - 1)):
-        return v - (1 << size) + 1
-    return v
-
-
 # --------------------------------------------------------------------------
 # Encoder
 # --------------------------------------------------------------------------

@@ -15,7 +15,7 @@ ADC path over rotated queries — no new scoring operator is needed:
 
     R, books = opq_fit(X, m, k)          # driver-side, bounded sample
     codes    = opq_encode(df, R, books)  # one Arrow pass (rotate+argmin)
-    topk     = pq_topk([(qid, (q @ R)), ...], codes, books)
+    topk     = pq_topk_batched([(qid, (q @ R)), ...], codes, books)
 
 Training alternates the two sub-problems exactly as the paper does:
 fix R → fit the m codebooks on X·R (the shared deterministic
@@ -122,77 +122,3 @@ def opq_encode(
             )
 
     return df.select(id_col, vec_col).mapInPandas(encode, out_schema)
-
-
-def quantization_mse(
-    X: np.ndarray, R: np.ndarray, books: List[List[List[float]]]
-) -> float:
-    """Mean ‖X·R − X̂‖² — the objective both PQ (R = I) and OPQ
-    minimize; the comparison metric for the OPQ ≥ PQ claim."""
-    Xr = np.asarray(X, dtype=np.float64) @ np.asarray(R, dtype=np.float64)
-    err = Xr - _reconstruct(Xr, books)
-    return float((err**2).sum(axis=1).mean())
-
-
-def opq_ivf_fit(
-    X: np.ndarray,
-    n_cells: int,
-    m: int,
-    k: int,
-    n_outer: int = 8,
-    n_iters: int = 10,
-    seed: int = 42,
-):
-    """(R, coarse_centroids, residual_books): OPQ preprocessing in
-    front of the joint IVFADC trainer — learn the rotation on the raw
-    sample (the OPQ alternation), then fit the coarse cells AND the
-    residual books in the ROTATED space (``pq.ivf_pq_fit`` on X·R).
-    This is the faiss "OPQ..,IVF..,PQ.." index-factory composition:
-    because R is orthogonal the coarse assignment, residuals and ADC
-    all live in an isometric space, so search is the unchanged
-    ``ivf_pq_topk`` path over rotated queries (q @ R)."""
-    from rick_and_morty_data_pipeline_project_spark.operators.pq import (
-        ivf_pq_fit,
-    )
-
-    R, _ = opq_fit(X, m, k, n_outer=n_outer, n_iters=n_iters, seed=seed)
-    X = np.asarray(X, dtype=np.float64)
-    cents, books = ivf_pq_fit(X @ R, n_cells, m, k, n_iters, seed)
-    return R, cents, books
-
-
-def opq_ivf_index(
-    df: DataFrame,
-    R: np.ndarray,
-    coarse_centroids,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cell_id, codes) in the rotated space — delegates to
-    ``pq.ivf_pq_index`` after a rotate projection.  The rotation is a
-    second narrow Arrow stage fused into the same scan (no shuffle
-    anywhere), so the index build remains one pass over the corpus."""
-    from rick_and_morty_data_pipeline_project_spark.operators.pq import (
-        ivf_pq_index,
-    )
-
-    Rm = np.asarray(R, dtype=np.float64)
-    rotated_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def rotate(batches):
-        import pandas as pd
-
-        for b in batches:
-            V = np.array(list(b[vec_col]), dtype=np.float64) @ Rm
-            yield pd.DataFrame(
-                {id_col: b[id_col], vec_col: list(map(list, V))}
-            )
-
-    rotated = df.select(id_col, vec_col).mapInPandas(rotate, rotated_schema)
-    return ivf_pq_index(rotated, coarse_centroids, codebooks, id_col, vec_col)

@@ -18,14 +18,14 @@ Engine mapping, Spark-first:
   over the (batch × k) distance matrix per subspace — the only Python
   in the pipeline, batched and column-oriented.
 * **Search (ADC — asymmetric distance computation)** stays entirely
-  JVM-side: the per-query look-up table (m × k squared-L2 distances
+  JVM-side: each query's look-up table (m × k squared-L2 distances
   from the query's subvectors to every centroid, built driver-side —
-  kilobytes) is inlined as a nested array literal, and the approximate
-  distance is ``F.aggregate(F.zip_with(codes, lut, (c, row) →
-  row[c+1]), sum)`` — whole-stage-codegen arithmetic over the code
-  bytes, never a Python call per row, followed by a heap top-k
-  (TakeOrderedAndProject).  Scan cost per query: m array look-ups per
-  row over an m-byte column, no float vectors touched.
+  kilobytes) rides a broadcast relation, and the approximate distance
+  is ``F.aggregate(F.zip_with(codes, lut, (c, row) → row[c+1]), sum)``
+  — whole-stage-codegen arithmetic over the code bytes, never a Python
+  call per row, followed by a per-query exact top-k.  Scan cost: m
+  array look-ups per (row, query) over an m-byte column, no float
+  vectors touched.
 
 Recall characteristics are data-dependent (quantization error); the
 test pins recall@10 against exact L2 search on this corpus and the
@@ -42,9 +42,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rick_and_morty_data_pipeline_project_spark.functions.litjson import (
-    array2d_lit,
-)
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
@@ -182,63 +179,9 @@ def adc_lut(
 
 def probe_cells(C: "np.ndarray", q: "np.ndarray", n_probe: int) -> List[int]:
     """The n_probe nearest coarse cells for a query — stable argsort,
-    shared by :func:`ivf_pq_topk` and the oracle builder."""
+    shared by :func:`ivf_pq_topk_batched` and the oracle builder."""
     cell_d2 = ((C - q[None, :]) ** 2).sum(axis=1)
     return np.argsort(cell_d2, kind="stable")[:n_probe].tolist()
-
-
-def pq_topk(
-    queries: Sequence[tuple],
-    codes_df: DataFrame,
-    codebooks: Sequence[Sequence[Sequence[float]]],
-    top_k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ADC top-k for each (query_id, vector): the m×k LUT of exact
-    squared-L2 distances from the query's subvectors to every centroid
-    is built driver-side (kilobytes) and inlined; the scan computes
-    ``Σ_j lut[j][code_j]`` with zip_with/aggregate — pure codegen over
-    the code bytes — and TakeOrderedAndProject keeps the heap top-k.
-    Output: (query_id, vec_id, adc_dist), ``top_k`` rows per query."""
-    if not queries:
-        raise ValueError("pq_topk: queries must be non-empty")
-    m = len(codebooks)
-    dim = sum(len(b[0]) for b in codebooks) // m * m
-    spans = _subspaces(dim, m)
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    if len(queries) > 1:
-        # every query branch scans codes_df; materialize the (tiny,
-        # m ints per row) code relation once instead of re-running the
-        # upstream encode per query (the repo's localCheckpoint
-        # multi-consumer pattern)
-        codes_df = codes_df.localCheckpoint()
-    parts = []
-    for qid, qvec in queries:
-        q = np.asarray(qvec, dtype=np.float64)
-        lut = adc_lut(books, spans, q)
-        # single from_json literal (functions/litjson): the nested-lit
-        # form cost m×k_star (2048) py4j calls + tree nodes PER QUERY
-        lut_col = array2d_lit(lut)
-        scored = codes_df.select(
-            F.lit(qid).alias("query_id"),
-            id_col,
-            F.aggregate(
-                F.zip_with(
-                    "codes",
-                    lut_col,
-                    lambda c, row: F.element_at(row, c + F.lit(1)),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("adc_dist"),
-        )
-        parts.append(
-            scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(top_k)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 # ---------------------------------------------------------------------
@@ -345,74 +288,6 @@ def ivf_pq_index(
     return df.select(id_col, vec_col).mapInPandas(encode, out_schema)
 
 
-def ivf_pq_topk(
-    queries: Sequence[tuple],
-    index_df: DataFrame,
-    coarse_centroids: Sequence[Sequence[float]],
-    codebooks: Sequence[Sequence[Sequence[float]]],
-    n_probe: int = 2,
-    top_k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ADC over probed cells only.  Per query, the n_probe nearest
-    cells are picked driver-side (|cells| is tiny by construction) and
-    a PER-CELL LUT of residual distances is inlined; the scan filters
-    to the probed cells (pushed predicate over the int cell_id) and
-    scores with a CASE-selected LUT — n_probe·m·k literal doubles,
-    kilobytes.  Output: (query_id, vec_id, adc_dist), top_k per
-    query."""
-    if not queries:
-        raise ValueError("ivf_pq_topk: queries must be non-empty")
-    m = len(codebooks)
-    dim = sum(len(b[0]) for b in codebooks) // m * m
-    spans = _subspaces(dim, m)
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    C = np.array(coarse_centroids, dtype=np.float64)
-    if len(queries) > 1:
-        index_df = index_df.localCheckpoint()
-    parts = []
-    for qid, qvec in queries:
-        q = np.asarray(qvec, dtype=np.float64)
-        probed = probe_cells(C, q, n_probe)
-        luts = {cell: adc_lut(books, spans, q - C[cell]) for cell in probed}
-
-        def lut_col(cell):
-            # single from_json literal per probed cell (see pq_topk)
-            return array2d_lit(luts[cell])
-
-        expr = None
-        for cell in probed:
-            cond = F.col("cell_id") == cell
-            expr = (
-                F.when(cond, lut_col(cell))
-                if expr is None
-                else expr.when(cond, lut_col(cell))
-            )
-        scored = (
-            index_df.filter(F.col("cell_id").isin(probed))
-            .select(
-                F.lit(qid).alias("query_id"),
-                id_col,
-                F.aggregate(
-                    F.zip_with(
-                        "codes",
-                        expr,
-                        lambda c, row: F.element_at(row, c + F.lit(1)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("adc_dist"),
-            )
-        )
-        parts.append(
-            scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(top_k)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def pq_topk_batched(
     queries: Sequence[tuple],
     codes_df: DataFrame,
@@ -420,17 +295,15 @@ def pq_topk_batched(
     top_k: int = 10,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """All queries' ADC top-k in ONE scan of the codes relation — the
-    batch-serving shape of :func:`pq_topk`: instead of |queries| plan
-    branches (each its own scan + heap, analysis cost linear in the
-    batch), the per-query LUTs ride a broadcast relation, scoring is
-    the same ``aggregate(zip_with(codes, lut))`` fold after a
-    broadcast cross join, and the per-query top-k is the salted
-    two-stage exact top-k (query_id is low-cardinality by construction
-    — the precise shape a bare per-query rank window would serialize).
-    Identical results to :func:`pq_topk` (same LUT values via
-    :func:`adc_lut`, same distance fold, same (dist, id) ordering) —
-    pinned in tests/test_pq.py."""
+    """All queries' ADC top-k in ONE scan of the codes relation: the
+    per-query LUTs (:func:`adc_lut`) ride a broadcast relation, scoring
+    is the ``aggregate(zip_with(codes, lut))`` fold after a broadcast
+    cross join, and the per-query top-k is the salted two-stage exact
+    top-k (query_id is low-cardinality by construction — the precise
+    shape a bare per-query rank window would serialize), ordered by
+    (dist, id).  Output: (query_id, vec_id, adc_dist), ``top_k`` rows
+    per query; equal to a numpy ADC reference, pinned in
+    tests/test_pq.py."""
     from rick_and_morty_data_pipeline_project_spark.operators.topk import (
         grouped_topk_salted,
     )
@@ -479,9 +352,9 @@ def ivf_pq_topk_batched(
     """Batched IVFADC: the (query_id, cell_id, residual-LUT) relation
     broadcasts and the equi-join ON cell_id IS the probe — only rows
     in some query's probed cells are scored, in ONE scan of the index,
-    then the salted two-stage per-query top-k.  Identical results to
-    :func:`ivf_pq_topk` (same probe_cells, same adc_lut residuals,
-    same fold and ordering)."""
+    then the salted two-stage per-query top-k over the residual-LUT
+    fold (:func:`probe_cells`, :func:`adc_lut` of ``q − centroid``),
+    ordered by (dist, id)."""
     from rick_and_morty_data_pipeline_project_spark.operators.topk import (
         grouped_topk_salted,
     )

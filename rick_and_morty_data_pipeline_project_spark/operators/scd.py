@@ -1,7 +1,6 @@
 """SCD Type-2 (history-keeping) dimension maintenance.
 
-The warehouse staple the MERGE triad (operators/merge.py) doesn't
-cover: instead of overwriting a changed attribute, close the current
+Instead of overwriting a changed attribute in place, close the current
 version row (``valid_to`` = effective date, ``is_current`` = 0) and
 open a new one — so every fact join can be replayed *as of* any date.
 

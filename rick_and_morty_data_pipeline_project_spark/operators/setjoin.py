@@ -122,143 +122,3 @@ def jaccard_prefix_pairs(
         F.col("jaccard") >= t_lit
     )
 
-
-def ngram_prefix_cooccurrence(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 3,
-    threshold_pct: int = 10,
-) -> DataFrame:
-    """(id_a, id_b, _c=|A∩B|, _na=|A|, _nb=|B|) for every unordered
-    pair with Jaccard ≥ ``threshold_pct``/100 — the exact output
-    contract of ``dedup._ngram_cooccurrence`` post-filtered to the
-    threshold, but with CANDIDATES from the PPJoin prefix filter
-    (Xiao et al. WWW'08, public method) instead of the full posting
-    co-occurrence join.
-
-    STATUS (r14): LIBRARY-ONLY, formally adjudicated — no catalog
-    query consumes this operator, by measurement (COVERAGE.md
-    §"Library-only operators — FROZEN at 1"; pinned in
-    tests/test_dedup_similarity.py).  Born as the r12 verdict-item-4
-    hypothesis for the threshold sweep; measured and REJECTED twice:
-
-    * r13, threshold 10% (the sweep's weakest): the prefix keeps ~90%
-      of every document's shingles, candidates exploded to ~25M pairs
-      at ×5 docs, ×20 killed at 16 min (PERFORMANCE.md "negative
-      result"); the exact-duplicate collapse won instead.
-    * r14, the HIGH-threshold region this docstring used to claim as
-      the win path: at sf0.1, k=3/70% ran 6.61 s vs 2.54 s for the
-      aggregate-once co-occurrence join + filter, and k=5/60%
-      (a genuinely sparse vocabulary: 238k distinct shingles, max
-      df = 4) ran 4.13 s vs 2.88 s.  When the vocabulary is sparse the
-      full join's collision mass is already tiny, and when it is dense
-      the operator's fixed stages (posting checkpoint, df window, two
-      verify joins) dominate — on every corpus/threshold reachable
-      from this testdata the simple join wins.
-
-    The win region that keeps the operator in the library: a
-    Zipf-headed shingle distribution at a corpus scale where
-    Σ_s df(s)² dwarfs the qualifying-pair count AND the threshold is
-    high enough to exclude the head shingles from every prefix — the
-    published PPJoin setting (Xiao WWW'08 §6 wins on DBLP/TREC at
-    t ≥ 0.8).  That shape is real at web scale but not constructible
-    from the bounded-vocabulary synthetic corpus here, so the operator
-    stays exact-contract-tested (equality vs the full join) and
-    unconsumed rather than wired to a query it would slow down.
-
-    Mechanism: prefix filtering removes each document's ⌈t·n⌉−1
-    most-frequent shingles from the INDEX side (rarest-first global
-    order), so the head shingles whose df² dominates the collision
-    mass generate no candidates, and only surviving candidate pairs
-    are exactly verified.
-
-    Exactness: any pair with J ≥ t shares ≥ ⌈t·max(|A|,|B|)⌉ ≥ 1
-    shingles beyond either document's excluded head (pigeonhole on the
-    prefix bound |X| − ⌈t·|X|⌉ + 1, one-sided: index the prefix, probe
-    with the FULL list), so candidates ⊇ qualifying pairs; the verify
-    join recomputes the true intersection count, and the final
-    predicate is the same pure-integer 100·c ≥ pct·(|A|+|B|−c) the
-    sweep consumers apply — no float edge can flip a pair between
-    engines.  Tokenization (``tokens_col`` + distinct
-    ``shingles_from_tokens``) is shared with ``_ngram_cooccurrence``,
-    so the DuckDB oracles' shingle model is unchanged.
-
-    100 TB cost: candidates ∝ Σ_s prefix_df(s)·df(s) (never the full
-    Σ df²); verify ∝ |candidates|·avg set size.  The posting relation
-    is linear in the corpus and localCheckpointed once for its six
-    readers (df-count, prefix window, probe side, both verify sides).
-    """
-    from pyspark.sql.window import Window
-
-    from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
-        shingles_from_tokens,
-        tokens_col,
-    )
-
-    pct = int(threshold_pct)
-    toked = fan_out(df).select(
-        F.col(id_col).alias("_id"),
-        tokens_col(F.col(text_col)).alias("_tk"),
-    )
-    sh = toked.select(
-        "_id",
-        F.array_distinct(
-            shingles_from_tokens(F.col("_tk"), shingle_k)
-        ).alias("_sh"),
-    ).withColumn("_n", F.size("_sh"))
-    posting = sh.select(
-        "_id", "_n", F.explode("_sh").alias("_s")
-    ).localCheckpoint()
-
-    sdf = posting.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("_id").orderBy(F.asc("_df"), F.asc("_s"))
-    # ⌈pct·n/100⌉ in exact arithmetic: pct·n + 99 is a small integer,
-    # the /100.0 double division and floor are both exact below 2^53.
-    ceil_tn = F.floor(
-        (F.lit(pct) * F.col("_n") + F.lit(99)) / F.lit(100.0)
-    )
-    prefix_len = F.col("_n") - ceil_tn + F.lit(1)
-    prefix = (
-        posting.join(sdf, "_s")
-        .withColumn("_pos", F.row_number().over(w))
-        .filter(F.col("_pos") <= prefix_len)
-        .select(F.col("_id").alias("_idp"), F.col("_n").alias("_np"), "_s")
-    )
-    full = posting.select(
-        F.col("_id").alias("_idf"), F.col("_n").alias("_nf"), "_s"
-    )
-    swap = F.col("_idp") < F.col("_idf")
-    # length filter in the same integer form as the final predicate:
-    # J ≥ pct/100 ⟹ 100·min(|A|,|B|) ≥ pct·max(|A|,|B|)
-    cand = (
-        prefix.join(full.hint("shuffle_hash"), "_s")
-        .filter(
-            (F.col("_idp") != F.col("_idf"))
-            & (F.lit(100) * F.col("_nf") >= F.lit(pct) * F.col("_np"))
-            & (F.lit(100) * F.col("_np") >= F.lit(pct) * F.col("_nf"))
-        )
-        .select(
-            F.least("_idp", "_idf").alias("id_a"),
-            F.greatest("_idp", "_idf").alias("id_b"),
-            F.when(swap, F.col("_np")).otherwise(F.col("_nf")).alias("_na"),
-            F.when(swap, F.col("_nf")).otherwise(F.col("_np")).alias("_nb"),
-        )
-        .distinct()
-    )
-    pa = posting.select(F.col("_id").alias("id_a"), "_s")
-    pb = posting.select(F.col("_id").alias("id_b"), "_s")
-    inter = (
-        cand.join(pa, "id_a")
-        .join(pb, ["id_b", "_s"])
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("_c"),
-            F.first("_na").alias("_na"),
-            F.first("_nb").alias("_nb"),
-        )
-    )
-    return inter.filter(
-        F.lit(100) * F.col("_c")
-        >= F.lit(pct) * (F.col("_na") + F.col("_nb") - F.col("_c"))
-    )

@@ -1,63 +1,20 @@
-"""Packed binary shard export — the trainer-facing end of the curation
+"""Packed binary shard index — the trainer-facing end of the curation
 pipeline.
 
 Training loaders don't want a million small parquet rows; they want a
 few large sequential blobs plus an offset index (the tar/WebDataset/
-recordio layout).  ``write_packed_shards`` turns a sharded document
-table into exactly that, Spark-side:
+recordio layout).  :func:`shard_index` computes that index, Spark-side:
+(doc_id, shard, offset, n_bytes) of every document inside its shard's
+blob, the shard's documents concatenated UTF-8 in doc_id order —
+random access into the blobs without parsing them.
 
-* one BINARY BLOB row per shard — the shard's documents concatenated in
-  a deterministic (doc_id) order, built inside ``applyInPandas`` so a
-  shard's bytes never pass through the driver;
-* an INDEX table (doc_id, shard, offset, n_bytes) written as parquet —
-  random access into the blobs without parsing them.
-
-Scale shape: one shuffle keyed on the shard id (the same partitioning
-the curation write already uses), then each shard's concat is local to
-its group.  Shard size is the operator's unit of parallelism — pick
-n_shards so a shard's bytes fit comfortably in an executor's memory
-(the standard recordio sizing rule, e.g. 256 MB–1 GB at scale)."""
+Scale shape: one shuffle keyed on the shard id, then a running sum
+local to each shard."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-INDEX_SCHEMA = "doc_id long, shard int, offset long, n_bytes long"
-BLOB_SCHEMA = "shard int, n_docs long, n_bytes long, blob binary"
-
-
-def shard_blobs(
-    df: DataFrame, shard_col: str = "shard", text_col: str = "text"
-) -> DataFrame:
-    """(shard, n_docs, n_bytes, blob): each shard's documents UTF-8
-    encoded and concatenated in ascending doc_id order."""
-
-    def build(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        # NULL text ⇒ zero bytes, matching shard_index's coalesce —
-        # astype(str) would encode the 4-byte literal 'None' and shift
-        # every later document's offset in the shard
-        payload = b"".join(
-            t.encode("utf-8")
-            for t in pdf[text_col].fillna("").astype(str)
-        )
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf[shard_col].iloc[0])],
-                "n_docs": [len(pdf)],
-                "n_bytes": [len(payload)],
-                "blob": [payload],
-            }
-        )
-
-    return (
-        df.select("doc_id", shard_col, text_col)
-        .groupBy(shard_col)
-        .applyInPandas(build, schema=BLOB_SCHEMA)
-    )
 
 
 def shard_index(
@@ -66,10 +23,10 @@ def shard_index(
     """(doc_id, shard, offset, n_bytes): byte offsets of each document
     inside its shard blob — pure window arithmetic, no Python.  The
     offset is the running sum of UTF-8 byte lengths over the same
-    (shard, doc_id) order the blob builder uses."""
+    (shard, doc_id) order the blob is concatenated in."""
     from pyspark.sql.window import Window
 
-    # coalesce NULL text to '' so blob bytes and index offsets agree
+    # NULL text is zero bytes in the blob
     nb = F.octet_length(
         F.encode(F.coalesce(F.col(text_col), F.lit("")), "UTF-8")
     ).cast("long")
@@ -85,25 +42,3 @@ def shard_index(
         nb.alias("n_bytes"),
     )
 
-
-def write_packed_shards(
-    df: DataFrame,
-    out_dir: str,
-    shard_col: str = "shard",
-    text_col: str = "text",
-) -> None:
-    """Materialize blobs under ``{out_dir}/blobs`` (partitioned by
-    shard — one blob row per directory) and the offset index under
-    ``{out_dir}/index``.  The input is persisted across the two writes
-    so an expensive upstream (the curation pipeline's filtered corpus)
-    executes once, not once per write."""
-    df = df.persist()
-    try:
-        shard_blobs(df, shard_col, text_col).write.mode(
-            "overwrite"
-        ).partitionBy("shard").parquet(f"{out_dir}/blobs")
-        shard_index(df, shard_col, text_col).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/index")
-    finally:
-        df.unpersist()

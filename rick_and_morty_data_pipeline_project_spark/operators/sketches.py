@@ -70,24 +70,6 @@ class CmsSketch:
         return vals.min(axis=0)
 
 
-def cms_merge(a: CmsSketch, b: CmsSketch) -> CmsSketch:
-    """Merge two Count-Min states built with the same (eps, confidence,
-    seed): grids add elementwise (CMS is a commutative monoid, like the
-    HLL union — the property that lets per-shard/per-day sketch tables
-    answer coarser rollups without raw re-scans).  Exactness of this
-    merge vs a single JVM sketch over the union is asserted in
-    tests/test_sketches.py."""
-    if a.depth != b.depth or a.width != b.width or (a.hash_a != b.hash_a).any():
-        raise ValueError("cms_merge: incompatible sketch parameters")
-    return CmsSketch(
-        total_count=a.total_count + b.total_count,
-        depth=a.depth,
-        width=a.width,
-        hash_a=a.hash_a,
-        table=a.table + b.table,
-    )
-
-
 def cms_decode(raw: bytes) -> CmsSketch:
     """Parse the big-endian CountMinSketchImpl serialization (version 1)."""
     version, = struct.unpack_from(">i", raw, 0)

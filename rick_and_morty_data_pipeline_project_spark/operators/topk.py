@@ -20,8 +20,8 @@ score-descending with name-ascending tiebreak, all JVM-side.
 
 The flagship matchers' per-emotion prefixes (``per_emotion_topk_prefixes``)
 are JVM-side too: one corpus pass, then a rank window whose map-side
-partial limit bounds the shuffle.  No operator here but the
-``applyInPandas`` pattern demo starts a Python worker.
+partial limit bounds the shuffle.  No operator here starts a Python
+worker.
 """
 
 from __future__ import annotations
@@ -51,29 +51,6 @@ def two_stage_topk(
     order1 = [F.desc(first)] + ([F.asc(tiebreak)] if tiebreak else [])
     order2 = [F.desc(second)] + ([F.asc(tiebreak)] if tiebreak else [])
     return df.orderBy(*order1).limit(k1).orderBy(*order2).limit(k2)
-
-
-def grouped_topk_applyinpandas(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    tiebreak_col: str,
-    k: int,
-) -> DataFrame:
-    """Per-group top-k via Arrow-batched ``applyInPandas`` — the
-    grouped-UDF escape hatch (SURVEY.md §2.9) for per-group procedures
-    built-ins can't express.  For plain top-k the JVM window
-    ``row_number`` path is preferred (and tested equivalent to this);
-    this operator documents the pattern with real plumbing.
-    """
-    schema = df.schema
-
-    def fn(pdf):
-        return pdf.sort_values(
-            [order_col, tiebreak_col], ascending=[False, True]
-        ).head(k)
-
-    return df.groupBy(group_col).applyInPandas(fn, schema=schema)
 
 
 def per_emotion_topk_prefixes(

@@ -2,23 +2,21 @@
 
 Sorting a table by ONE column gives perfect file-level min/max pruning
 on that column and none on any other; interleaving the bits of two key
-columns (the Morton curve) gives useful pruning on BOTH: each written
-file covers a small rectangle of the (a, b) key space, so a predicate
-box intersects few files.  This is the layout trick behind
-Delta/Iceberg `OPTIMIZE ZORDER BY` — here expressed with plain integer
-arithmetic (shift/mask/multiply), so it runs identically in the DuckDB
-oracle and needs nothing beyond the DataFrame API.
+columns (the Morton curve) gives useful pruning on BOTH: each file of a
+table range-partitioned on the Morton key covers a small rectangle of
+the (a, b) key space, so a predicate box intersects few files.  This is
+the layout trick behind Delta/Iceberg `OPTIMIZE ZORDER BY` — here
+expressed with plain integer arithmetic (shift/mask/multiply), so it
+runs identically in the DuckDB oracle and needs nothing beyond the
+DataFrame API.  The catalog's ``table_zorder_layout`` audits a table's
+layout with it.
 
-Scale: the interleave is a narrow per-row expression; the clustered
-write is one range-repartition by the morton key (sampling-based range
-exchange — the same shuffle a plain global sort pays) + per-partition
-sort.  Pruning effectiveness is then a property of the FILES, read
-back by any engine with min/max statistics.
+Scale: the interleave is a narrow per-row expression.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -46,58 +44,3 @@ def morton_sql(a: str, b: str, bits: int = 16) -> str:
         terms.append(f"(({b} >> {i}) & 1) * {1 << (2 * i + 1)}")
     return " + ".join(terms)
 
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 16,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` clustered on the Morton curve of (col_a, col_b):
-    range-repartition into ``n_files`` morton ranges, sort within each,
-    drop the helper column.  Files then carry tight min/max rectangles
-    over BOTH key columns for any stats-aware reader.
-
-    Keys must fit in ``bits`` bits — values beyond 2^bits would alias
-    onto low-key rows and silently destroy the clustering (every file's
-    min/max would span the whole domain), so the range is CHECKED with
-    one column-pruned pre-aggregation (cheap next to the range exchange
-    + sort the clustered write itself pays) and violations raise."""
-    lo_a, hi_a, lo_b, hi_b, n_null = df.agg(
-        F.min(col_a),
-        F.max(col_a),
-        F.min(col_b),
-        F.max(col_b),
-        F.count(F.lit(1))
-        - F.count(F.when(F.col(col_a).isNotNull() & F.col(col_b).isNotNull(), 1)),
-    ).first()
-    limit = 1 << bits
-    # min/max skip NULLs, so NULL-keyed rows would silently bypass the
-    # range check AND interleave to a NULL _z (arbitrary placement,
-    # stats rectangles spanning the domain) — reject them explicitly,
-    # and guard each bound for the all-NULL-column case independently.
-    if n_null:
-        raise ValueError(
-            f"zorder_write: {n_null} rows have NULL in {col_a}/{col_b};"
-            " Z-order keys must be non-null (fill or filter first)"
-        )
-    if lo_a is None and lo_b is None:
-        pass  # empty input: nothing to check, write proceeds
-    elif any(
-        v is None or v < 0 for v in (lo_a, lo_b)
-    ) or any(v >= limit for v in (hi_a, hi_b)):
-        raise ValueError(
-            f"zorder_write: key range [({lo_a},{lo_b}) .. ({hi_a},{hi_b})]"
-            f" outside [0, 2^{bits}); raise `bits` (max 31 for two keys"
-            f" in a signed long) or pre-scale the keys"
-        )
-    z = df.withColumn("_z", morton_col(F.col(col_a), F.col(col_b), bits))
-    (
-        z.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -38,10 +38,6 @@ def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in formatted_plan(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")
-
-
 def partial_group_limits_below_exchange(df: DataFrame) -> list[str]:
     """Arguments of every ``WindowGroupLimit … Partial`` node that sits
     directly below an ``Exchange``: the map-side rank limit that bounds

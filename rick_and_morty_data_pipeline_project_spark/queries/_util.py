@@ -70,7 +70,3 @@ def approx_pctl(c: Column, q: float) -> Column:
     """The ``percentile_approx`` injection used by the ``*_approx``
     100 TB twins (fixed-size KLL-style sketch state per group)."""
     return F.percentile_approx(c, F.lit(q), F.lit(APPROX_PCTL_ACCURACY))
-
-
-def iso_ts(c: Column) -> Column:
-    return F.date_format(c, "yyyy-MM-dd HH:mm:ss")

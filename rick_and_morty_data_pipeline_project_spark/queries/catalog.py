@@ -79,41 +79,17 @@ for mod in (
         _ALL[name] = q
 
 # The 50 driver-checked slots.  All must carry a full DuckDB oracle.
-# Round-14 rotation (standing policy in the module docstring):
-# 2 rule-1 births (dedup_dup_factor_profile — the pending birth from
-#   tools/pending_births.json — and this round's curation_run_card_whatif)
-# + 6 rule-2 re-greens (textq.py's profile-gated collapse stales both
-#   dedup frontiers; vecxq.py's shared-input params stale both vector
-#   frontiers; runcardq.py's _norm_union refactor stales the card;
-#   setjoin.py's adjudication docstring stales the prefix join)
-# + flagship
-# + flagship_best_match_with_replacement (rule-2, mid-round amendment:
-#   operators/matching.py — the ×1000 tier's O(n²) slice-copy fix)
-# + 40 oldest-green-first refreshes (the 10 r07 sweep-covered leftouts
-#   age to the front, then 30 of the 43-entry r08 cohort; the 13
-#   leftouts are SWEEP_r14-covered).
-# 2+6+1+1+40 = 50.
 DRIVER_WINDOW: tuple[str, ...] = (
-    # ========== 2 rule-1 births =====================================
     "dedup_dup_factor_profile",
     "curation_run_card_whatif",
-    # ========== 6 rule-2 re-greens (files changed this round) =======
     "curation_run_card",
     "dedup_jaccard_prefix_join",
     "dedup_lsh_banding_frontier",
     "dedup_threshold_frontier",
     "knn_frontier_recall_cost",
     "knn_ivf_probe_frontier",
-    # ========== flagship (standing, every round) =====================
     "flagship_greedy_match",
-    # ========== rule-2 re-green (mid-round amendment): the ×1000
-    # left-rows tier exposed an O(n²) list-slice copy in the greedy
-    # replay (operators/matching.py — semantics pinned identical by
-    # tests/test_matching.py's Python oracle), so both queries
-    # referencing the file re-certify; displaces the r08 refresh
-    # sessionize_events into the sweep-covered leftouts ===============
     "flagship_best_match_with_replacement",
-    # ========== 10 r07-vintage refreshes (oldest greens anywhere) ===
     "agg_sorted_string",
     "events_survival_km",
     "graph_kcore_peel",
@@ -124,7 +100,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "supplier_market_hhi",
     "table_range_partition_plan",
     "table_zorder_layout",
-    # ========== 30 r08-vintage over-age refreshes ===================
     "agg_exact_distinct",
     "agg_grouping_sets",
     "agg_macro_avg_rounded",

@@ -5,8 +5,8 @@ runs BETWEEN ingest and training).
 Two families:
 
 * **Z-order layout audit** — `table_zorder_layout` bins rows by the
-  prefix of their Morton key (operators/zorder.py — the same interleave
-  `zorder_write` clusters files on) and reports each bin's min/max
+  prefix of their Morton key (operators/zorder.py — the interleave a
+  Z-ordered write clusters files on) and reports each bin's min/max
   rectangle over both key columns.  Tight rectangles = effective
   file-level data skipping; rectangles spanning the domain = the
   clustering is broken.  This is the audit you run after an

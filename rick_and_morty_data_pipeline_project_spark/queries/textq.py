@@ -29,7 +29,6 @@ from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
 )
 from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
     exact_dedup_stats,
-    fan_out,
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -39,6 +38,9 @@ from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
 )
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
+)
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    fan_out,
 )
 from rick_and_morty_data_pipeline_project_spark.operators.topk import (
     top2_emotions_cols,
@@ -2952,9 +2954,7 @@ def text_shard_index(spark, sf_dir):
     (operators/shards.py): (doc_id, shard, offset, n_bytes) where the
     offset is the running UTF-8 byte length over (shard, doc_id) order —
     exactly where each document's bytes start inside its shard blob.
-    Pure window arithmetic (no Python); one shuffle on the shard key.
-    The blob side is byte-round-trip tested in
-    tests/test_sinks_catalog.py::test_packed_shards_round_trip."""
+    Pure window arithmetic (no Python); one shuffle on the shard key."""
     from rick_and_morty_data_pipeline_project_spark.operators.shards import (
         shard_index,
     )
@@ -3357,8 +3357,8 @@ def text_quantile_filter(spark, sf_dir):
 def _quantile_filter(spark, sf_dir, pctl):
     d = t(spark, sf_dir, "documents")
     # single-space split (family convention; string_split(' ') in the
-    # oracle) — NOT token_count_col's \s+ regex, which diverges from
-    # the oracle on any doubled/tab/newline whitespace
+    # oracle) — NOT a \s+ regex split, which diverges from the oracle
+    # on any doubled/tab/newline whitespace
     scored = d.select(
         "doc_id",
         "lang",

@@ -57,8 +57,8 @@ _INT, _LONG, _DOUBLE, _STR = IntegerType(), LongType(), DoubleType(), StringType
 _NTZ = TimestampNTZType()
 
 # The schema Spark infers from each corpus table's files.  ``events.ts``
-# is declared as naive micros here; ``declared_schema`` swaps in bigint
-# when the footer says TIMESTAMP(NANOS).
+# is declared as naive micros here; ``_declared`` swaps in bigint when
+# the footer says TIMESTAMP(NANOS).
 SCHEMAS: dict[str, StructType] = {
     "region": _schema(("r_regionkey", _INT), ("r_name", _STR)),
     "nation": _schema(
@@ -138,7 +138,7 @@ BROADCAST_DIMS = {"region", "nation"}
 # (vectorized decode + JVM aggregation of 600k rows is fast single-core;
 # the balancing shuffle only added cost: q3 0.58→1.31 s, q5 0.66→1.46 s
 # warm).  Fan-out pays off only where per-row compute is heavy — the
-# text-dedup pipelines do it themselves via operators/dedup.fan_out.
+# text-dedup pipelines do it themselves via operators/parallelism.fan_out.
 
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -172,6 +172,12 @@ def _nanos_ts(footer) -> bool:
 
 
 def _declared(name: str, footer) -> StructType | None:
+    """The ``StructType`` ``load_table`` reads table ``name`` with, from
+    its arrow ``footer``: ``SCHEMAS[name]`` when the footer has exactly
+    those columns and types, with a TIMESTAMP(NANOS) ``events.ts``
+    declared bigint (Spark's reader rejects nanos as a timestamp).  None
+    for files of any other shape, such as hand-built test tables; Spark
+    then infers their schema, which launches a job."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     if footer is None:
@@ -195,16 +201,6 @@ def _declared(name: str, footer) -> StructType | None:
             for f in SCHEMAS["events"]
         ]
     )
-
-
-def declared_schema(sf_dir: str, name: str) -> StructType | None:
-    """The ``StructType`` ``load_table`` reads ``{name}.parquet`` with:
-    ``SCHEMAS[name]`` when the file footer has exactly those columns and
-    types, with a TIMESTAMP(NANOS) ``events.ts`` declared bigint (Spark's
-    reader rejects nanos as a timestamp).  None for files of any other
-    shape, such as hand-built test tables; Spark then infers their
-    schema, which launches a job."""
-    return _declared(name, parquet_footer(f"{sf_dir}/{name}.parquet"))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -22,8 +22,7 @@ ones.  This module solves all three without rewriting history:
    ``unionByName``-ed.
 
 The result behaves as if every file had been written under the newest
-schema — the read-side half of schema evolution, complementing the
-write-side ``operators/merge.atomic_overwrite`` full-rewrite path.
+schema — the read-side half of schema evolution.
 
 Scale: step 1 shuffles only (path, signature) strings; step 2's reads
 are ordinary parquet scans with pushdown intact (each generation's

@@ -1,5 +1,2 @@
-from rick_and_morty_data_pipeline_project_spark.streaming.windowed import (
-    stream_events_hourly,
-)
-
-__all__ = ["stream_events_hourly"]
+"""Structured Streaming: the near-dup ingest sink (``dedup``) and the
+stream-stream attribution join (``joins``)."""

@@ -1,22 +1,12 @@
-"""Streaming deduplication — the §2.10 exact-dedup operator as an
-incremental (§2.8) pipeline stage.
+"""Streaming near-duplicate ingest — the §2.10 MinHash-LSH dedup
+operator as an incremental (§2.8) pipeline stage.
 
-A training-data ingest stream dedups as it lands, not in a nightly
-batch.  ``dropDuplicatesWithinWatermark`` keys the StateStore on the
-content fingerprint and evicts an entry once the watermark passes it,
-so state is bounded by (dup-arrival window × ingest rate) instead of
-growing with the whole corpus — the only shape that survives an
-unbounded stream (plain ``dropDuplicates`` on a stream retains every
-key forever).  At scale the state store shards by the same fingerprint
-hash the batch dedup shuffles on; no extra shuffle is introduced.
-
-The two ingest sinks keep durable state instead of StateStore state:
-:func:`stream_ingest_dedup` (exact) and :func:`stream_ingest_neardup`
-(MinHash LSH) dedup against their own output table, and the near-dup
-sink also stores the corpus band index under the query's checkpoint
-directory (``corpus_index/``), frozen when first built.  Each near-dup
-micro-batch scans those stored bands once, without shuffling them, and
-brings the driver one row per batch row that has a near-dup partner.
+:func:`stream_ingest_neardup` keeps durable state instead of StateStore
+state: it dedups against its own output table, and stores the corpus
+band index under the query's checkpoint directory (``corpus_index/``),
+frozen when first built.  Each micro-batch scans those stored bands
+once, without shuffling them, and brings the driver one row per batch
+row that has a near-dup partner.
 """
 
 from __future__ import annotations
@@ -26,11 +16,6 @@ import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
-    fingerprint_col,
-)
 
 # Folded into the key of every application-scoped corpus index: in local
 # mode an application id is only a start-time stamp.
@@ -54,100 +39,6 @@ def _output_exists(sess, out_dir: str) -> bool:
     return fs.exists(hpath) and any(
         not st.getPath().getName().startswith(("_", "."))
         for st in fs.listStatus(hpath)
-    )
-
-
-def stream_dedup_exact(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Keep the first-seen document per content fingerprint.
-
-    Input is a streaming DataFrame carrying ``text_col`` and an
-    event-time ``ts_col``; output carries the original columns plus
-    ``fingerprint``.  Duplicates arriving within ``watermark`` of the
-    keeper are dropped; a duplicate arriving later than the watermark
-    bound may pass (that is the documented state/recall trade —
-    lengthen the watermark to widen the dedup window at the cost of
-    state).
-    """
-    fp = stream.withColumn("fingerprint", fingerprint_col(F.col(text_col)))
-    return fp.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["fingerprint"]
-    )
-
-
-def stream_ingest_dedup(
-    stream: DataFrame,
-    corpus: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bloom_m_log2: int | None = None,
-):
-    """Streaming corpus INGEST with full-history dedup: every
-    micro-batch of arriving documents is deduped in-batch (lowest id per
-    fingerprint wins), anti-joined against the already-curated corpus
-    AND against everything previous batches appended, then appended to
-    ``out_dir``.  Unlike ``stream_dedup_exact`` (state bounded by a
-    watermark, may re-admit late dups), this gives exact corpus-lifetime
-    dedup by using the output table itself as the dedup state —
-    the durable-storage shape of production ingest, with zero StateStore
-    footprint.
-
-    ``foreachBatch`` bodies run sequentially per micro-batch, so the
-    read-output/append cycle has no write race.  Scale: the anti-join
-    shuffles fingerprints only (the corpus side projects to one column);
-    at 100 TB the output is a table bucketed by fingerprint so each
-    ingest join is exchange-free on the corpus side.  Pass
-    ``bloom_m_log2`` to route each batch through the k-hash Bloom
-    pre-filter (operators/dedup.incremental_dedup_bloom, auto layout:
-    literal / broadcast-relation / sharded word-join by m) so
-    definitely-new rows skip the exact join entirely — provably the
-    same survivors (the operator's anti-join-equivalence contract,
-    re-asserted streaming-vs-plain in tests/test_streaming.py).
-
-    Returns the started StreamingQuery (availableNow trigger); caller
-    awaits termination.
-    """
-    corpus_fp = corpus.select(
-        fingerprint_col(F.col(text_col)).alias("fp")
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
-            incremental_dedup_bloom,
-        )
-
-        sess = batch_df.sparkSession
-        fp = batch_df.withColumn("fp", fingerprint_col(F.col(text_col)))
-        w = Window.partitionBy("fp").orderBy(F.asc(id_col))
-        first = (
-            fp.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        seen = corpus_fp
-        if _output_exists(sess, out_dir):
-            seen = seen.unionByName(
-                sess.read.schema("fp STRING").parquet(out_dir)
-            )
-        if bloom_m_log2 is not None:
-            new_rows = incremental_dedup_bloom(
-                first, seen, "fp", m_log2=bloom_m_log2
-            )
-        else:
-            new_rows = first.join(seen, "fp", "left_anti")
-        new_rows.write.mode("append").parquet(out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -353,8 +244,7 @@ def stream_ingest_neardup(
 ):
     """Streaming corpus ingest with NEAR-duplicate suppression — the
     §2.10 MinHash-LSH near-dedup operator as an incremental (§2.8)
-    pipeline stage, completing the exact/near pair that
-    :func:`stream_ingest_dedup` starts.
+    pipeline stage.
 
     Per micro-batch:
 
@@ -406,7 +296,7 @@ def stream_ingest_neardup(
     dropped even if it would also have claimed in-batch followers —
     those are compared through their own candidates; cross-batch
     transitivity through a DROPPED row is not tracked (the incremental
-    recall trade, like exact ingest's watermark trade).
+    recall trade).
 
     Returns the started StreamingQuery (availableNow trigger); caller
     awaits termination.

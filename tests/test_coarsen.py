@@ -9,13 +9,24 @@ import pytest
 
 from rick_and_morty_data_pipeline_project_spark.operators.coarsen import (
     coarsen_partitions,
-    data_file_stats,
     plan_partition_coarsen,
+    recover_table,
 )
 from rick_and_morty_data_pipeline_project_spark.sources.corpus import load_table
 from tests.conftest import SF_SMALL
 
 _TARGET = 250
+
+
+def data_file_stats(spark, table_dir: str):
+    """Per-data-file row counts for a parquet table — the before/after
+    evidence a coarsening run is judged by."""
+    return (
+        spark.read.parquet(table_dir)
+        .select(F.input_file_name().alias("file"))
+        .groupBy("file")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+    )
 
 
 def _mk_tiny_table(spark, tmp_path):
@@ -85,6 +96,27 @@ def test_coarsen_preserves_content_and_hits_plan(spark, tmp_path):
     )
     n_days_total = df.select("day").distinct().count()
     assert sum(r["n_days"] for r in spans) == n_days_total  # no overlap
+
+
+def test_coarsen_recovers_mid_swap_crash(spark, tmp_path):
+    """A crash between the two swap renames leaves the table at
+    .__merge_old__; recover_table (and coarsen_partitions, which reads
+    the table it rewrites) must RESTORE it, never delete it as stale —
+    and the rewrite must see the recovered content."""
+    import shutil
+
+    table_dir, df = _mk_tiny_table(spark, tmp_path)
+    n = df.count()
+    # simulate the crash window: table moved aside, new one not yet in
+    shutil.move(table_dir, table_dir + ".__merge_old__")
+    assert recover_table(spark, table_dir) is True
+    assert recover_table(spark, table_dir) is False  # idempotent
+    assert spark.read.parquet(table_dir).count() == n
+
+    # same crash again, but now recovery rides the rewrite itself
+    shutil.move(table_dir, table_dir + ".__merge_old__")
+    stats = coarsen_partitions(spark, table_dir, "day", _TARGET)
+    assert stats["n_rows"] == n == spark.read.parquet(table_dir).count()
 
 
 def test_plan_partition_coarsen_matches_first_fit_reference(spark):

@@ -21,13 +21,20 @@ from pyspark.sql import functions as F
 
 from rick_and_morty_data_pipeline_project_spark.sources.corpus import (
     TABLES,
-    declared_schema,
+    _declared,
     load_table,
+    parquet_footer,
 )
 from tests.conftest import SF_SMALL, job_ids
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def declared_schema(sf_dir: str, name: str):
+    """The schema ``load_table`` reads ``{name}.parquet`` with, or None
+    where it lets Spark infer one."""
+    return _declared(name, parquet_footer(f"{sf_dir}/{name}.parquet"))
 
 
 def _corpora_on_disk() -> list[str]:

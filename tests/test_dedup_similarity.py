@@ -9,7 +9,6 @@ import random
 from pyspark.sql import functions as F
 
 from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
-    exact_dedup_keep_first,
     exact_dedup_stats,
     minhash_lsh_pairs,
     simhash16,
@@ -50,10 +49,6 @@ def test_exact_dedup(spark):
     }
     # whitespace-collapse + lowercase ⇒ docs 1,2,3 are one group
     assert stats == {1: 3, 4: 1}
-    kept = sorted(
-        r["doc_id"] for r in exact_dedup_keep_first(df, "doc_id", "text").collect()
-    )
-    assert kept == [1, 4]
 
 
 def test_minhash_lsh_recall(spark):
@@ -875,115 +870,6 @@ def test_threshold_frontier_monotone(spark):
             r["retention"]
             - round(1.0 - r["n_docs_removed"] / r["n_docs"], 6)
         ) < 1e-12
-
-
-def test_library_only_setjoin_operator_frozen():
-    """Pin of the LIBRARY-ONLY adjudication (COVERAGE.md §"Library-only
-    operators — FROZEN at 1", r14): ngram_prefix_cooccurrence is fully
-    implemented and exact-contract-tested (test below) but consumed by
-    NO catalog query, because measurement rejected every reachable
-    consumer twice — r13 at the 10% sweep threshold (candidate
-    explosion) and r14 at the high-threshold region (fixed-stage
-    overhead; numbers in the operator docstring and PERFORMANCE.md).
-    Promoting it to a consumer — or adding more unconsumed operators —
-    must update BOTH the COVERAGE.md table and this frozen set in the
-    same change, so dead code can never accrete silently."""
-    import glob
-    import os
-    import re
-
-    import rick_and_morty_data_pipeline_project_spark.operators.setjoin as sj
-
-    frozen = {"ngram_prefix_cooccurrence"}
-    assert hasattr(sj, "ngram_prefix_cooccurrence")
-
-    def consumes(src: str, name: str) -> bool:
-        # a CALL or an IMPORT is consumption; a prose/docstring mention
-        # (e.g. the catalog's rotation history) is not
-        return bool(
-            re.search(rf"\b{name}\s*\(", src)
-            or re.search(rf"import\s+{name}\b", src)
-            or re.search(rf"^\s*{name},\s*$", src, re.M)
-        )
-
-    qdir = os.path.join(os.path.dirname(sj.__file__), "..", "queries")
-    qsrcs = [
-        open(p, encoding="utf-8").read()
-        for p in glob.glob(os.path.join(qdir, "*.py"))
-    ]
-    consumers = {
-        name for name in frozen if any(consumes(s, name) for s in qsrcs)
-    }
-    assert consumers == set(), (
-        f"frozen library-only operator gained a catalog consumer: "
-        f"{consumers} — update COVERAGE.md and this pin together"
-    )
-    # every OTHER public setjoin operator must have a catalog consumer
-    # (the invariant the adjudication protects)
-    public = {
-        n
-        for n in dir(sj)
-        if not n.startswith("_")
-        and callable(getattr(sj, n))
-        and getattr(getattr(sj, n), "__module__", "") == sj.__name__
-    }
-    for name in sorted(public - frozen):
-        assert any(consumes(s, name) for s in qsrcs), (
-            f"{name} has no catalog consumer and is not frozen"
-        )
-
-
-def test_prefix_cooccurrence_equals_full_join(spark):
-    """ngram_prefix_cooccurrence must return EXACTLY the pairs (with
-    exact counts) that the full posting co-occurrence join yields after
-    the same integer Jaccard predicate — the prefix filter is a pure
-    candidate-space optimization, never a semantics change (r12 verdict
-    item 4).  Exercised at the frontier's own operating point (k=3,
-    pct=10) and at a tight threshold on a corpus WITH near-dups, plus a
-    no-dup corpus where the result must be empty-but-equal."""
-    from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
-        _ngram_cooccurrence,
-    )
-    from rick_and_morty_data_pipeline_project_spark.operators.setjoin import (
-        ngram_prefix_cooccurrence,
-    )
-
-    def full_join_reference(df, pct, k):
-        co = _ngram_cooccurrence(
-            df.withColumn("_blk", F.lit(1)), "doc_id", "text", "_blk", k
-        )
-        return co.filter(
-            F.lit(100) * F.col("_c")
-            >= F.lit(pct) * (F.col("_na") + F.col("_nb") - F.col("_c"))
-        )
-
-    corpus = _near_dup_corpus(spark)
-    for pct, k in ((10, 3), (70, 3), (50, 2)):
-        got = sorted(
-            ngram_prefix_cooccurrence(
-                corpus, "doc_id", "text", shingle_k=k, threshold_pct=pct
-            ).collect()
-        )
-        want = sorted(full_join_reference(corpus, pct, k).collect())
-        assert got == want, f"pct={pct} k={k}: {len(got)} vs {len(want)}"
-        if pct == 10:
-            assert len(got) >= 20  # the near-dup corpus must qualify
-
-    # degenerate: single-token docs (shingle fallback path) and exact
-    # twins — prefix length is 1, twins must still collide
-    tiny = spark.createDataFrame(
-        [(1, "solo"), (2, "solo"), (3, "other words here")],
-        "doc_id long, text string",
-    )
-    got = sorted(
-        ngram_prefix_cooccurrence(
-            tiny, "doc_id", "text", shingle_k=3, threshold_pct=10
-        ).collect()
-    )
-    want = sorted(full_join_reference(tiny, 10, 3).collect())
-    assert got == want and any(
-        (r.id_a, r.id_b) == (1, 2) for r in got
-    )
 
 
 def test_dup_collapse_gate_dispatch(spark):

@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 
 from rick_and_morty_data_pipeline_project_spark.operators.pq import (
     pq_encode,
-    pq_topk,
+    pq_topk_batched,
     train_pq_codebooks,
 )
 from rick_and_morty_data_pipeline_project_spark.sources.corpus import load_table
@@ -40,7 +40,7 @@ def test_pq_adc_matches_numpy_reference_and_recalls(spark):
     ids = sorted(V)
 
     queries = [(int(i), V[i].tolist()) for i in ids[:5]]
-    got = pq_topk(queries, codes, books, top_k=10).collect()
+    got = pq_topk_batched(queries, codes, books, top_k=10).collect()
     assert len(got) == 50
 
     # numpy ADC reference for query 0: identical ranking, ~equal dists
@@ -57,6 +57,7 @@ def test_pq_adc_matches_numpy_reference_and_recalls(spark):
     }
     ref_top = sorted(ids, key=lambda v: (ref[v], v))[:10]
     got_q0 = [r for r in got if r["query_id"] == queries[0][0]]
+    got_q0.sort(key=lambda r: (r["adc_dist"], r["vec_id"]))
     assert [r["vec_id"] for r in got_q0] == ref_top
     for r in got_q0:
         assert abs(r["adc_dist"] - ref[r["vec_id"]]) < 1e-9
@@ -86,8 +87,6 @@ def test_pq_adc_matches_numpy_reference_and_recalls(spark):
 
 
 def test_pq_compression_and_plan(spark):
-    import re
-
     emb = _corpus(spark)
     books = train_pq_codebooks(emb, m=_M, k=_K)
     codes = pq_encode(emb, books)
@@ -98,15 +97,11 @@ def test_pq_compression_and_plan(spark):
         for r in codes.collect()
     )
     # the ADC scan is pure codegen over the codes column: no Python
-    # UDF, no join, no window in the scoring plan
-    one = pq_topk([(0, [0.0] * 64)], codes, books, top_k=5)
+    # UDF in the scoring plan, and the LUT relation is broadcast
+    one = pq_topk_batched([(0, [0.0] * 64)], codes, books, top_k=5)
     plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    # plain substring checks: Spark node names embed these words
-    # without word boundaries (BroadcastHashJoin, WindowExec), so a
-    # \b-anchored regex would never fire
-    for bad in ("EvalPython", "Window", "Join"):
-        assert bad not in plan, (bad, plan)
+    assert "BroadcastExchange" in plan, plan
+    assert "EvalPython" not in plan, plan
 
 
 def test_ivf_pq_residual_index_and_probed_search(spark):
@@ -115,7 +110,7 @@ def test_ivf_pq_residual_index_and_probed_search(spark):
     every cell recovers plain-PQ-or-better quality."""
     from rick_and_morty_data_pipeline_project_spark.operators.pq import (
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_topk_batched,
         train_ivf_pq,
     )
 
@@ -131,7 +126,7 @@ def test_ivf_pq_residual_index_and_probed_search(spark):
     ids = sorted(V)
     queries = [(int(i), V[i].tolist()) for i in ids[:5]]
 
-    got = ivf_pq_topk(queries, idx, coarse, books, n_probe=3, top_k=10)
+    got = ivf_pq_topk_batched(queries, idx, coarse, books, n_probe=3, top_k=10)
     rows_got = got.collect()
     assert len(rows_got) == 50
     hits = 0
@@ -146,7 +141,7 @@ def test_ivf_pq_residual_index_and_probed_search(spark):
     assert hits / 50 >= 0.2, hits / 50  # ≥ 10x chance on 3/8 of the corpus
 
     # search really is restricted to the probed cells
-    one = ivf_pq_topk(queries[:1], idx, coarse, books, n_probe=1, top_k=500)
+    one = ivf_pq_topk_batched(queries[:1], idx, coarse, books, n_probe=1, top_k=500)
     qa = np.array(queries[0][1])
     own_cell = int(
         np.argmin(((np.array(coarse) - qa[None, :]) ** 2).sum(axis=1))
@@ -164,7 +159,7 @@ def test_ivf_pq_full_probe_matches_residual_quality(spark):
     0.32 vs 0.36) while the probed variant buys its scan reduction."""
     from rick_and_morty_data_pipeline_project_spark.operators.pq import (
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_topk_batched,
         train_ivf_pq,
     )
 
@@ -192,9 +187,11 @@ def test_ivf_pq_full_probe_matches_residual_quality(spark):
         return hits / 50
 
     r_ivf = recall(
-        ivf_pq_topk(queries, idx, coarse, books, n_probe=8, top_k=10).collect()
+        ivf_pq_topk_batched(queries, idx, coarse, books, n_probe=8, top_k=10).collect()
     )
-    r_pq = recall(pq_topk(queries, codes, plain_books, top_k=10).collect())
+    r_pq = recall(
+        pq_topk_batched(queries, codes, plain_books, top_k=10).collect()
+    )
     assert r_ivf >= r_pq - 0.1 and r_ivf >= 0.2, (r_ivf, r_pq)
 
 
@@ -212,7 +209,7 @@ def test_ivfpq_residual_books_win_on_clustered_corpus(spark):
     from rick_and_morty_data_pipeline_project_spark.operators.pq import (
         ivf_pq_fit,
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_topk_batched,
         pq_fit_books,
     )
 
@@ -247,12 +244,12 @@ def test_ivfpq_residual_books_win_on_clustered_corpus(spark):
         return hits / (10 * len(queries))
 
     r_res = recall(
-        ivf_pq_topk(
+        ivf_pq_topk_batched(
             queries, idx_res, coarse, res_books, n_probe=8, top_k=10
         ).collect()
     )
     r_raw = recall(
-        ivf_pq_topk(
+        ivf_pq_topk_batched(
             queries, idx_raw, coarse, raw_books, n_probe=8, top_k=10
         ).collect()
     )
@@ -265,16 +262,18 @@ def test_ivfpq_residual_books_win_on_clustered_corpus(spark):
     assert r_res >= 0.25, r_res
 
 
-def test_batched_topk_identical_to_per_query(spark):
-    """pq_topk_batched / ivf_pq_topk_batched (one scan + broadcast LUT
-    relation + salted two-stage top-k) return EXACTLY the per-query
-    heap variants' rows — same LUT values (shared adc_lut), same fold,
-    same (dist, id) ordering."""
+def test_ivf_pq_batched_matches_numpy_reference(spark):
+    """ivf_pq_topk_batched (one scan + broadcast per-cell LUT relation
+    + salted two-stage top-k) returns exactly the numpy IVFADC answer:
+    per query, the probe_cells nearest cells, the adc_lut of the
+    residual q − centroid summed over each probed row's codes, and the
+    first top_k by (dist, id)."""
     from rick_and_morty_data_pipeline_project_spark.operators.pq import (
+        _subspaces,
+        adc_lut,
         ivf_pq_index,
-        ivf_pq_topk,
         ivf_pq_topk_batched,
-        pq_topk_batched,
+        probe_cells,
         train_ivf_pq,
     )
 
@@ -285,33 +284,32 @@ def test_batched_topk_identical_to_per_query(spark):
         key=lambda p: p[0],
     )[:5]
 
-    books = train_pq_codebooks(emb, m=_M, k=_K)
-    codes = pq_encode(emb, books).localCheckpoint()
-    a = sorted(map(tuple, pq_topk(queries, codes, books, top_k=7).collect()))
-    b = sorted(
-        map(tuple, pq_topk_batched(queries, codes, books, top_k=7).collect())
-    )
-    assert a == b
-
     coarse, rbooks = train_ivf_pq(emb, n_cells=8, m=_M, k=_K)
     idx = ivf_pq_index(emb, coarse, rbooks).localCheckpoint()
-    c = sorted(
-        map(
-            tuple,
-            ivf_pq_topk(
-                queries, idx, coarse, rbooks, n_probe=3, top_k=7
-            ).collect(),
+    got = ivf_pq_topk_batched(
+        queries, idx, coarse, rbooks, n_probe=3, top_k=7
+    ).collect()
+
+    C = np.array(coarse)
+    spans = _subspaces(64, _M)
+    cell_codes = [(r["vec_id"], r["cell_id"], r["codes"]) for r in idx.collect()]
+    for qid, qv in queries:
+        q = np.asarray(qv, dtype=np.float64)
+        luts = {
+            cell: adc_lut(rbooks, spans, q - C[cell])
+            for cell in probe_cells(C, q, 3)
+        }
+        ref = sorted(
+            (float(sum(luts[cell][j][c] for j, c in enumerate(codes))), vid)
+            for vid, cell, codes in cell_codes
+            if cell in luts
+        )[:7]
+        mine = sorted(
+            (r["adc_dist"], r["vec_id"]) for r in got if r["query_id"] == qid
         )
-    )
-    d = sorted(
-        map(
-            tuple,
-            ivf_pq_topk_batched(
-                queries, idx, coarse, rbooks, n_probe=3, top_k=7
-            ).collect(),
-        )
-    )
-    assert c == d
+        assert [v for _, v in mine] == [v for _, v in ref], qid
+        for (d1, _), (d2, _) in zip(mine, ref):
+            assert abs(d1 - d2) < 1e-9
 
 
 def test_canonical_normed_bit_equals_scalar_fold():

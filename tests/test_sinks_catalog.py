@@ -110,52 +110,6 @@ def test_orc_round_trip(spark):
         assert a == b
 
 
-def test_merge_upsert_update_insert_delete(spark, tmp_path):
-    """Full MERGE triad over parquet: matched keys replaced, new keys
-    inserted, delete-flagged keys removed; untouched rows survive."""
-    from pyspark.sql import functions as F
-
-    from rick_and_morty_data_pipeline_project_spark.operators.merge import (
-        merge_upsert,
-    )
-
-    path = str(tmp_path / "merge_target")
-    spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0)],
-        ["id", "name", "score"],
-    ).write.parquet(path)
-
-    updates = spark.createDataFrame(
-        [
-            (2, "b2", 21.0, False),   # update
-            (5, "e", 50.0, False),    # insert
-            (3, None, 0.0, True),     # delete
-            (4, "d2", 41.0, None),    # NULL flag (left-join artifact) = update
-        ],
-        ["id", "name", "score", "_delete"],
-    )
-    n = merge_upsert(spark, path, updates, ["id"], delete_col="_delete")
-    got = {
-        (r["id"], r["name"], r["score"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert n == 4
-    assert got == {
-        (1, "a", 10.0),
-        (2, "b2", 21.0),
-        (4, "d2", 41.0),
-        (5, "e", 50.0),
-    }
-    # idempotent re-merge of the same updates changes nothing
-    n2 = merge_upsert(spark, path, updates, ["id"], delete_col="_delete")
-    assert n2 == 4
-    got2 = {
-        (r["id"], r["name"], r["score"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got2 == got
-
-
 def test_parquet_schema_evolution_merge(spark, tmp_path):
     """Schema evolution on read: two parquet batches with different
     column sets union under mergeSchema=true (missing columns null),
@@ -173,45 +127,6 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert set(df.columns) == {"id", "name", "score"}
     rows = {(r["id"], r["name"], r["score"]) for r in df.collect()}
     assert rows == {(1, "a", None), (2, "b", 9.5)}
-
-
-def test_sql_entry_point_matches_dataframe(spark):
-    """Raw-SQL interface ≡ the DataFrame catalog: the same statement a
-    SQLite-first reference user would write runs through spark.sql over
-    the registered views and matches the DataFrame twin exactly."""
-    from rick_and_morty_data_pipeline_project_spark.sql import sql
-
-    got = {
-        tuple(r)
-        for r in sql(
-            spark,
-            SF_SMALL,
-            """
-            SELECT o_orderpriority, count(*) AS n
-            FROM orders
-            WHERE o_orderstatus = 'F'
-            GROUP BY o_orderpriority
-            """,
-        ).collect()
-    }
-    from rick_and_morty_data_pipeline_project_spark.sources.corpus import load_table
-
-    want = {
-        tuple(r)
-        for r in load_table(spark, SF_SMALL, "orders")
-        .filter(F.col("o_orderstatus") == "F")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-    # the SQL path must also see the normalized events.ts (TIMESTAMP,
-    # not raw NTZ/bigint) — the loader feeds the views
-    ts_type = dict(
-        sql(spark, SF_SMALL, "SELECT ts FROM events LIMIT 1").dtypes
-    )["ts"]
-    assert ts_type == "timestamp", ts_type
 
 
 def test_compaction_routes_unplanned_files_to_leftover_bin(
@@ -302,187 +217,6 @@ def test_compaction_plan_and_execute(spark, tmp_path):
         assert len(files) == 1, d
         n_dst_files += len(files)
     assert n_dst_files < n_src_files
-
-
-def test_zorder_write_prunes_both_dimensions(spark, tmp_path):
-    """Z-order clustering: after a morton-clustered write, a box
-    predicate over BOTH key columns intersects (by file-level min/max
-    stats) a small fraction of files; a single-column-sorted layout
-    prunes only its own column."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from rick_and_morty_data_pipeline_project_spark.operators.zorder import (
-        zorder_write,
-    )
-
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").select(
-        "o_orderkey",
-        "o_custkey",
-        (F.col("o_totalprice") / 1000).cast("int").alias("price_k"),
-    )
-    lo_c, hi_c = 100, 200        # custkey box
-    lo_p, hi_p = 50, 100         # price_k box
-
-    def files_hit(path: str) -> tuple[int, int]:
-        hit, total = 0, 0
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            md = pq.read_metadata(f)
-            mins: dict = {}
-            maxs: dict = {}
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    name = col.path_in_schema
-                    st = col.statistics
-                    if st is None:
-                        continue
-                    mins[name] = min(mins.get(name, st.min), st.min)
-                    maxs[name] = max(maxs.get(name, st.max), st.max)
-            total += 1
-            if (
-                mins["o_custkey"] <= hi_c
-                and maxs["o_custkey"] >= lo_c
-                and mins["price_k"] <= hi_p
-                and maxs["price_k"] >= lo_p
-            ):
-                hit += 1
-        return hit, total
-
-    zpath = str(tmp_path / "zorders")
-    zorder_write(orders, zpath, "o_custkey", "price_k", n_files=16)
-    # baseline: hash-partitioned (unclustered) layout, same file count
-    upath = str(tmp_path / "unordered")
-    orders.repartition(16).write.parquet(upath)
-
-    z_hit, z_total = files_hit(zpath)
-    u_hit, u_total = files_hit(upath)
-    assert z_total == u_total == 16
-    # every unclustered file spans the whole key space → all hit;
-    # the z-ordered layout must prune a solid majority
-    assert u_hit == 16, u_hit
-    assert z_hit <= 6, (z_hit, z_total)
-
-    # correctness: clustering is a pure relayout
-    back = spark.read.parquet(zpath)
-    assert back.count() == orders.count()
-    assert (
-        back.agg(F.sum("o_orderkey")).first()[0]
-        == orders.agg(F.sum("o_orderkey")).first()[0]
-    )
-
-
-def test_packed_shards_round_trip(spark, tmp_path):
-    """Packed-shard export: every document's bytes must be recoverable
-    from (blob, offset, n_bytes) — including multi-byte UTF-8 — and the
-    index offsets must tile each blob exactly."""
-    from rick_and_morty_data_pipeline_project_spark.operators.shards import (
-        write_packed_shards,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
-        "doc_id",
-        # exercise multi-byte UTF-8 in the offset arithmetic
-        F.concat(F.col("text"), F.lit(" é→")).alias("text"),
-        (F.col("doc_id") % 4).cast("int").alias("shard"),
-    )
-    out = str(tmp_path / "packed")
-    write_packed_shards(docs, out)
-
-    blobs = {
-        r["shard"]: r for r in spark.read.parquet(f"{out}/blobs").collect()
-    }
-    index = spark.read.parquet(f"{out}/index").collect()
-    originals = {r["doc_id"]: r["text"] for r in docs.collect()}
-
-    assert set(blobs) == {0, 1, 2, 3}
-    seen = 0
-    per_shard_bytes: dict = {}
-    for r in index:
-        blob = bytes(blobs[r["shard"]]["blob"])
-        piece = blob[r["offset"] : r["offset"] + r["n_bytes"]]
-        assert piece.decode("utf-8") == originals[r["doc_id"]], r["doc_id"]
-        per_shard_bytes[r["shard"]] = per_shard_bytes.get(r["shard"], 0) + r["n_bytes"]
-        seen += 1
-    assert seen == len(originals)
-    # offsets tile the blob exactly: sum of lengths == blob size
-    for s, r in blobs.items():
-        assert per_shard_bytes[s] == r["n_bytes"] == len(bytes(r["blob"]))
-        assert r["n_docs"] == sum(1 for i in index if i["shard"] == s)
-
-
-def test_packed_shards_null_text_alignment(spark, tmp_path):
-    """A NULL text row contributes ZERO bytes in BOTH the blob and the
-    index, so later documents' offsets stay aligned (a stringified
-    'None' would silently shift every following slice)."""
-    from rick_and_morty_data_pipeline_project_spark.operators.shards import (
-        write_packed_shards,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha", 0), (2, None, 0), (3, "omega", 0)],
-        "doc_id long, text string, shard int",
-    )
-    out = str(tmp_path / "nullpacked")
-    write_packed_shards(docs, out)
-    (blob_row,) = spark.read.parquet(f"{out}/blobs").collect()
-    blob = bytes(blob_row["blob"])
-    assert blob == b"alphaomega"
-    idx = {r["doc_id"]: r for r in spark.read.parquet(f"{out}/index").collect()}
-    assert (idx[2]["offset"], idx[2]["n_bytes"]) == (5, 0)
-    assert blob[idx[3]["offset"] : idx[3]["offset"] + idx[3]["n_bytes"]] == b"omega"
-
-
-def test_atomic_overwrite_recovers_mid_swap_crash(spark, tmp_path):
-    """Crash between the two swap renames leaves the table at
-    .__merge_old__; the next overwrite (and any read-modify-write sink)
-    must RESTORE it, never delete it as stale — and the subsequent
-    merge must see the recovered content."""
-    from rick_and_morty_data_pipeline_project_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-
-    target = str(tmp_path / "table")
-    spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").write.parquet(
-        target
-    )
-    # simulate the crash window: target moved aside, new table not yet in
-    import shutil
-
-    shutil.move(target, target + ".__merge_old__")
-    assert recover_table(spark, target) is True
-    assert {r["k"] for r in spark.read.parquet(target).collect()} == {1, 2}
-
-    # same crash again, but now recovery rides atomic_overwrite itself:
-    # the overwrite READS the recovered table, so content must survive
-    shutil.move(target, target + ".__merge_old__")
-    recover_table(spark, target)
-    merged = spark.read.parquet(target).unionByName(
-        spark.createDataFrame([(3, "c")], "k long, v string")
-    )
-    atomic_overwrite(spark, merged, target)
-    assert {r["k"] for r in spark.read.parquet(target).collect()} == {1, 2, 3}
-
-
-def test_zorder_write_rejects_null_keys(spark, tmp_path):
-    from rick_and_morty_data_pipeline_project_spark.operators.zorder import (
-        zorder_write,
-    )
-    import pytest
-
-    df = spark.createDataFrame(
-        [(1, 2), (3, None), (5, 6)], "a long, b long"
-    )
-    with pytest.raises(ValueError, match="NULL"):
-        zorder_write(df, str(tmp_path / "z1"), "a", "b")
-    # all-NULL column: clean ValueError, not a TypeError crash
-    df2 = spark.createDataFrame(
-        [(1, None), (2, None)], "a long, b long"
-    )
-    with pytest.raises(ValueError, match="NULL"):
-        zorder_write(df2, str(tmp_path / "z2"), "a", "b")
 
 
 def test_profile_table_files_multi_file(spark, tmp_path):

@@ -132,35 +132,6 @@ def test_cms_decoder_reads_jvm_layout(spark):
         assert est == min(vals)
 
 
-def test_cms_merge_equals_single_sketch(spark):
-    """CMS mergeability: grids of two half-sketches ADD to exactly the
-    whole-input sketch's grid (same eps/conf/seed → same hashA), so a
-    per-shard CMS table rolls up without raw re-scans."""
-    from rick_and_morty_data_pipeline_project_spark.operators.sketches import (
-        cms_merge,
-    )
-
-    e = spark.read.parquet(f"{SF_ORACLE}/events.parquet")
-    args = (F.lit(0.002), F.lit(0.95), F.lit(11))
-
-    def sk_of(df):
-        return cms_decode(
-            bytes(
-                df.agg(
-                    F.count_min_sketch("user_id", *args).alias("s")
-                ).collect()[0]["s"]
-            )
-        )
-
-    a = sk_of(e.filter(F.col("event_id") % 2 == 0))
-    b = sk_of(e.filter(F.col("event_id") % 2 == 1))
-    whole = sk_of(e)
-    merged = cms_merge(a, b)
-    assert merged.total_count == whole.total_count
-    assert (merged.table == whole.table).all()
-    assert (merged.hash_a == whole.hash_a).all()
-
-
 def test_rolling_dau_hll_tracks_exact_twin(spark):
     """The sketch-based trailing-7d uniques must stay inside the HLL
     error envelope of the exact twin on every window day (same day

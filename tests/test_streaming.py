@@ -1,5 +1,6 @@
-"""Streaming ≡ batch equivalence: the watermarked streaming hourly
-rollup must produce exactly the batch rollup once the stream drains."""
+"""Streaming ≡ batch equivalence: the near-dup ingest sink, the
+stream-stream attribution join and a streamed quality score each match
+their batch twin once the stream drains."""
 
 from __future__ import annotations
 
@@ -8,10 +9,6 @@ import os
 import pytest
 
 from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
-from rick_and_morty_data_pipeline_project_spark.streaming.windowed import (
-    run_available_now,
-    stream_events_hourly,
-)
 from tests.conftest import SF_SMALL
 
 
@@ -31,340 +28,6 @@ def _pin_file_order(*paths) -> None:
     for i, p in enumerate(paths):
         t = now - step * (len(paths) - i)
         os.utime(p, (t, t))
-
-
-def test_grouped_topk_applyinpandas_matches_window(spark):
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from rick_and_morty_data_pipeline_project_spark.operators.topk import (
-        grouped_topk_applyinpandas,
-    )
-
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").select(
-        "o_custkey", "o_orderkey", "o_totalprice"
-    )
-    via_pandas = {
-        tuple(r)
-        for r in grouped_topk_applyinpandas(
-            orders, "o_custkey", "o_totalprice", "o_orderkey", 3
-        ).collect()
-    }
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    via_window = {
-        tuple(r)
-        for r in orders.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 3)
-        .drop("_rn")
-        .collect()
-    }
-    assert via_pandas == via_window
-
-
-def test_stream_dedup_exact_matches_batch(spark, tmp_path):
-    """Streaming exact dedup ≡ batch distinct-by-fingerprint: a stream
-    carrying injected duplicate texts keeps exactly one row per
-    fingerprint once drained (single-watermark-window input)."""
-    from pyspark.sql import functions as F
-
-    from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
-        fingerprint_col,
-    )
-    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
-        stream_dedup_exact,
-    )
-
-    docs = (
-        spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-        .limit(50)
-        .select(
-            "doc_id",
-            "text",
-            # base epoch well away from 0: a row AT the initial
-            # watermark boundary (epoch 0) is dropped as late
-            F.timestamp_micros(
-                F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-            ).alias("ts"),
-        )
-    )
-    dup = docs.limit(20).withColumn("doc_id", F.col("doc_id") + 10_000)
-    src = str(tmp_path / "docs_stream")
-    docs.unionByName(dup).write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "doc_id bigint, text string, ts timestamp"
-    ).parquet(src)
-    deduped = stream_dedup_exact(stream, "text", "ts", "1 hour")
-    assert deduped.isStreaming
-    run_available_now(deduped, "dedup_test", output_mode="append")
-    got = spark.sql("SELECT fingerprint FROM dedup_test").collect()
-    fps = [r["fingerprint"] for r in got]
-    assert len(fps) == len(set(fps)), "stream emitted duplicate fingerprints"
-    # recompute the expectation from the files actually written (an
-    # unordered limit() is not stable across re-executions)
-    want = {
-        r["fp"]
-        for r in spark.read.parquet(src)
-        .select(fingerprint_col(F.col("text")).alias("fp"))
-        .distinct()
-        .collect()
-    }
-    assert set(fps) == want
-
-
-def test_stream_matches_batch(spark):
-    stream_df = stream_events_hourly(spark, SF_SMALL)
-    assert stream_df.isStreaming
-    run_available_now(stream_df, "hourly_test")
-    got = {
-        (r["hour"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM hourly_test").collect()
-    }
-    batch = QUERIES["events_hourly_rollup"].fn(spark, SF_SMALL)
-    want = {
-        (r["hour"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-def test_stream_enriched_hourly_matches_batch(spark):
-    """Stream-static enrichment join + windowed rollup ≡ the same plan
-    run in batch once the stream drains."""
-    from pyspark.sql import functions as F
-
-    from rick_and_morty_data_pipeline_project_spark.sources.corpus import load_table
-    from rick_and_morty_data_pipeline_project_spark.streaming.windowed import (
-        stream_enriched_hourly,
-    )
-
-    stream_df = stream_enriched_hourly(spark, SF_SMALL)
-    assert stream_df.isStreaming
-    run_available_now(stream_df, "enriched_test")
-    got = {
-        (r["hour"], r["c_mktsegment"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM enriched_test").collect()
-    }
-    events = load_table(spark, SF_SMALL, "events")
-    customers = load_table(spark, SF_SMALL, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    batch = (
-        events.join(customers, "user_id")
-        .groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "c_mktsegment",
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    want = {
-        (r["hour"], r["c_mktsegment"]): r["n_events"] for r in batch.collect()
-    }
-    assert got == want
-
-
-def test_stream_ingest_dedup_exact_lifetime(spark, tmp_path):
-    """foreachBatch ingest: in-batch, vs-corpus, and cross-batch dups
-    are all dropped; output holds exactly one row per distinct new
-    fingerprint."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
-    from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
-        fingerprint_col,
-    )
-    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
-        stream_ingest_dedup,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, "corpus text zero"), (1, "corpus text one")],
-        ["doc_id", "text"],
-    )
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    # batch A: dup-of-corpus, fresh FA, in-batch dup of FA
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [10, 11, 12],
-                "text": ["corpus text zero", "fresh alpha", "fresh alpha"],
-            }
-        ),
-        str(in_dir / "a.parquet"),
-    )
-    # batch B: cross-batch dup of FA, fresh FB, dup-of-corpus
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [20, 21, 22],
-                "text": ["fresh alpha", "fresh beta", "corpus text one"],
-            }
-        ),
-        str(in_dir / "b.parquet"),
-    )
-    _pin_file_order(in_dir / "a.parquet", in_dir / "b.parquet")
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-    )
-    out_dir = str(tmp_path / "curated")
-    q = stream_ingest_dedup(
-        stream, corpus, out_dir, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-
-    got = spark.read.parquet(out_dir)
-    rows = {r["doc_id"]: r["fp"] for r in got.collect()}
-    # exactly one keeper per fresh fingerprint, nothing from the corpus
-    assert len(rows) == 2
-    assert set(rows) <= {11, 12, 20, 21}  # alpha keeper + beta keeper
-    assert 21 in rows
-    want_fps = {
-        r["fp"]
-        for r in spark.createDataFrame(
-            [("fresh alpha",), ("fresh beta",)], ["text"]
-        )
-        .select(fingerprint_col(F.col("text")).alias("fp"))
-        .collect()
-    }
-    assert set(rows.values()) == want_fps
-
-
-def test_stream_ingest_dedup_bloom_prefilter_twin(spark, tmp_path):
-    """The Bloom-prefiltered ingest sink (bloom_m_log2 set; auto layout)
-    appends exactly the same curated rows as the plain anti-join sink —
-    the operator's anti-join-equivalence contract holding inside
-    foreachBatch, across in-batch, vs-corpus, and cross-batch dups."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
-        stream_ingest_dedup,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, "corpus text zero"), (1, "corpus text one")],
-        ["doc_id", "text"],
-    )
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [10, 11, 12],
-                "text": ["corpus text zero", "fresh alpha", "fresh alpha"],
-            }
-        ),
-        str(in_dir / "a.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [20, 21, 22],
-                "text": ["fresh alpha", "fresh beta", "corpus text one"],
-            }
-        ),
-        str(in_dir / "b.parquet"),
-    )
-    _pin_file_order(in_dir / "a.parquet", in_dir / "b.parquet")
-
-    outputs = {}
-    for label, kw in (
-        ("plain", {}),
-        ("bloom", {"bloom_m_log2": 16}),
-        ("bloom_tiny", {"bloom_m_log2": 8}),  # FP-heavy: exact join must resolve
-    ):
-        stream = (
-            spark.readStream.schema("doc_id LONG, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir))
-        )
-        out_dir = str(tmp_path / f"curated_{label}")
-        q = stream_ingest_dedup(
-            stream, corpus, out_dir, str(tmp_path / f"ckpt_{label}"), **kw
-        )
-        q.awaitTermination()
-        outputs[label] = {
-            (r["doc_id"], r["fp"])
-            for r in spark.read.parquet(out_dir).collect()
-        }
-    assert outputs["bloom"] == outputs["plain"]
-    assert outputs["bloom_tiny"] == outputs["plain"]
-
-
-def test_stream_dedup_state_survives_restart(spark, tmp_path):
-    """Checkpointed streaming dedup: a SECOND run of the same query
-    (same checkpoint dir) restores the fingerprint state store, so a
-    duplicate of a batch-1 document arriving in batch 2 is still
-    dropped — recovery semantics, not just single-run dedup."""
-    from rick_and_morty_data_pipeline_project_spark.streaming.dedup import (
-        stream_dedup_exact,
-    )
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-    base_us = 1_700_000_000_000_000
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "doc_id bigint, text string, ts timestamp"
-        ).parquet(str(src))
-        deduped = stream_dedup_exact(stream, "text", "ts", "1 hour")
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def write_batch(rows, name):
-        # flat single files: the file-stream source does not recurse
-        # into per-batch subdirectories
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "text": pa.array([r[1] for r in rows], pa.string()),
-                    "ts": pa.array(
-                        [r[2] for r in rows], pa.timestamp("us")
-                    ),
-                }
-            ),
-            str(src / name),
-        )
-
-    write_batch(
-        [(1, "alpha text", base_us), (2, "beta text", base_us + 1_000_000)],
-        "b1.parquet",
-    )
-    run_once()
-    # batch 2: dup of doc 1 (must be dropped via RESTORED state) + fresh
-    write_batch(
-        [(3, "alpha text", base_us + 2_000_000),
-         (4, "gamma text", base_us + 3_000_000)],
-        "b2.parquet",
-    )
-    run_once()
-
-    got = spark.read.parquet(out_dir)
-    texts = sorted(r["text"] for r in got.collect())
-    assert texts == ["alpha text", "beta text", "gamma text"], texts
-    ids = {r["doc_id"] for r in got.collect()}
-    assert 3 not in ids, "restored state failed to drop the cross-run dup"
 
 
 def test_stream_ingest_neardup_lsh(spark, tmp_path):
@@ -895,15 +558,29 @@ def test_stream_stream_join_matches_batch(spark):
     """The watermarked stream-stream view→click attribution join,
     drained in one availableNow pass, produces exactly the batch
     range-join's pairs."""
+    from pyspark.sql import functions as F
+
     from rick_and_morty_data_pipeline_project_spark.streaming.joins import (
         view_click_attribution_stream,
     )
-    from rick_and_morty_data_pipeline_project_spark.streaming.windowed import (
-        events_stream,
-    )
 
-    out = view_click_attribution_stream(events_stream(spark, SF_SMALL))
-    run_available_now(out, "vc_attr", output_mode="append")
+    # the file stream source needs a directory: glob the events table
+    # out of the corpus dir, ts read as load_table reads it
+    events = (
+        spark.readStream.schema(spark.read.parquet(f"{SF_SMALL}/events.parquet").schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(SF_SMALL)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+    q = (
+        view_click_attribution_stream(events)
+        .writeStream.format("memory")
+        .queryName("vc_attr")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     got = {
         (r["view_id"], r["click_id"]): r["latency_s"]
         for r in spark.sql("SELECT * FROM vc_attr").collect()
