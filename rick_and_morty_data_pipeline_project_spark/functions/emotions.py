@@ -11,9 +11,9 @@ SRC-6) with a pure, local, *SQL-expressible* lexicon scorer:
 The lexicon is FROZEN (word → emotion assigned once via md5(word) % 6 over
 the corpus vocabulary and hard-coded below) so that:
 
-* the Spark side is pure built-in higher-order functions
-  (``split``/``filter``/``size``) — whole-stage-codegen'd JVM execution,
-  no Python UDF in the hot path;
+* the Spark side is lambda-free built-in SQL (``split``/``array_remove``/
+  ``array_size``): every expression is whole-stage-codegen'd, with no
+  interpreted higher-order function and no Python UDF in the hot path;
 * the DuckDB oracle can reproduce it exactly (list lambdas), giving a
   full value-hash correctness check rather than a rows-only check;
 * integer/integer division is performed identically (both engines produce
@@ -39,27 +39,37 @@ LEXICON: dict[str, list[str]] = {
 }
 
 
-def tokens_col(text_col: str | Column) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.split(c, " ")
+def emotion_score_cols(text_expr: str) -> dict[str, Column]:
+    """One Column per emotion over the Spark SQL expression ``text_expr``
+    (usually a column name); attach with
+    ``df.select("*", *[v.alias(k) ...])``.
 
-
-def emotion_score_cols(text_col: str | Column) -> dict[str, Column]:
-    """One Column per emotion; attach with ``df.select("*", *[v.alias(k)...])``."""
-    toks = tokens_col(text_col)
-    n = F.size(toks)
+    Walking ``EMOTIONS`` in order, ``rest_k`` is ``rest_{k-1}`` with
+    emotion k's words removed (``rest_0`` is the token array), and
+    emotion k's hit count is ``size(rest_{k-1}) - size(rest_k)``.  That
+    counts exactly the tokens in emotion k's lexicon only because the
+    lexicons are pairwise disjoint.  Codegen subexpression elimination
+    shares the chain across the six columns, so each ``array_remove``
+    runs once per row.  ``array_size`` keeps a NULL text NULL whatever
+    ``spark.sql.legacy.sizeOfNull`` says."""
+    toks = f"split({text_expr}, ' ')"
     out: dict[str, Column] = {}
+    rest = toks
     for emo in EMOTIONS:
-        words = LEXICON[emo]
-        hits = F.size(F.filter(toks, lambda t: t.isin(words)))  # noqa: B023
-        out[emo] = hits / n
+        prev = rest
+        for w in LEXICON[emo]:
+            rest = f"array_remove({rest}, '{w}')"
+        out[emo] = F.expr(
+            f"(array_size({prev}) - array_size({rest})) / array_size({toks})"
+        )
     return out
 
 
 def emotion_score_sqls(text_expr: str) -> dict[str, str]:
-    """DuckDB SQL expression per emotion, exactly mirroring
-    :func:`emotion_score_cols` (list lambda filter / integer counts /
-    float division)."""
+    """DuckDB SQL expression per emotion: the scores of
+    :func:`emotion_score_cols`, formulated independently (list lambda
+    filter / integer counts / float division) so oracle parity checks
+    the remove chain rather than repeating it."""
     out: dict[str, str] = {}
     toks = f"string_split({text_expr}, ' ')"
     for emo in EMOTIONS:

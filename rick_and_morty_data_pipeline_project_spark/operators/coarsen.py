@@ -52,12 +52,7 @@ from pyspark.sql.window import Window
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jvm
+from rick_and_morty_data_pipeline_project_spark.session import hadoop_fs
 
 
 def recover_table(spark: SparkSession, target_path: str) -> bool:
@@ -68,14 +63,11 @@ def recover_table(spark: SparkSession, target_path: str) -> bool:
     all history).  Idempotent; a rewrite that READS the target must
     call this before reading it.
     Returns True if a recovery rename was performed."""
-    old_path = target_path + ".__merge_old__"
-    fs, jvm = _hadoop_fs(spark, target_path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(hpath(target_path)) and fs.exists(hpath(old_path)):
-        if not fs.rename(hpath(old_path), hpath(target_path)):
-            raise IOError(
-                f"recover_table: cannot restore {old_path} -> {target_path}"
-            )
+    fs, target = hadoop_fs(spark, target_path)
+    old = target.suffix(".__merge_old__")
+    if not fs.exists(target) and fs.exists(old):
+        if not fs.rename(old, target):
+            raise IOError(f"recover_table: cannot restore {old} -> {target}")
         return True
     return False
 
@@ -105,12 +97,12 @@ def plan_partition_coarsen(
     )
 
 
-def _list_data_files(fs, jvm, table_dir: str) -> set:
-    """Recursive listing of non-hidden data files under ``table_dir``
-    (driver-side; bounded by file count, the planning scale)."""
-    hpath = jvm.org.apache.hadoop.fs.Path
+def _list_data_files(fs, root) -> set:
+    """Recursive listing of non-hidden data files under the Hadoop
+    ``Path`` ``root`` (driver-side; bounded by file count, the planning
+    scale)."""
     out = set()
-    it = fs.listFiles(hpath(table_dir), True)
+    it = fs.listFiles(root, True)
     while it.hasNext():
         p = it.next().getPath()
         name = p.getName()
@@ -131,9 +123,8 @@ def coarsen_partitions(
     Crash-safe (double-rename + ``recover_table``); aborts loudly if
     concurrent ingest appended files after the snapshot read."""
     recover_table(spark, table_dir)
-    fs, jvm = _hadoop_fs(spark, table_dir)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    snapshot = _list_data_files(fs, jvm, table_dir)
+    fs, root = hadoop_fs(spark, table_dir)
+    snapshot = _list_data_files(fs, root)
 
     table = spark.read.parquet(table_dir)
     n_before = table.count()  # independent anchor for the verification
@@ -159,30 +150,29 @@ def coarsen_partitions(
         .observe(obs, F.count(F.lit(1)).alias("n"))
     )
 
-    tmp_path = table_dir + ".__merge_tmp__"
-    old_path = table_dir + ".__merge_old__"
-    fs.delete(hpath(tmp_path), True)
-    fs.delete(hpath(old_path), True)
-    compacted.write.mode("overwrite").partitionBy("grp").parquet(tmp_path)
+    tmp, old = root.suffix(".__merge_tmp__"), root.suffix(".__merge_old__")
+    fs.delete(tmp, True)
+    fs.delete(old, True)
+    compacted.write.mode("overwrite").partitionBy("grp").parquet(tmp.toString())
     n_written = int(obs.get["n"])
     if n_written != n_before:
-        fs.delete(hpath(tmp_path), True)
+        fs.delete(tmp, True)
         raise IOError(
             f"coarsen_partitions: wrote {n_written} rows, expected "
             f"{n_before} — original table left untouched"
         )
-    if _list_data_files(fs, jvm, table_dir) != snapshot:
-        fs.delete(hpath(tmp_path), True)
+    if _list_data_files(fs, root) != snapshot:
+        fs.delete(tmp, True)
         raise IOError(
             "coarsen_partitions: table changed during the rewrite "
             "(concurrent ingest?) — aborted; use compaction.compact "
             "for tables with live appends"
         )
-    if not fs.rename(hpath(table_dir), hpath(old_path)):
+    if not fs.rename(root, old):
         raise IOError(f"coarsen_partitions: cannot move aside {table_dir}")
-    if not fs.rename(hpath(tmp_path), hpath(table_dir)):
-        fs.rename(hpath(old_path), hpath(table_dir))
-        raise IOError(f"coarsen_partitions: cannot install {tmp_path}")
-    fs.delete(hpath(old_path), True)
+    if not fs.rename(tmp, root):
+        fs.rename(old, root)
+        raise IOError(f"coarsen_partitions: cannot install {tmp}")
+    fs.delete(old, True)
     return {"n_rows": n_written, "n_groups": n_groups}
 

@@ -32,8 +32,6 @@ Neither flagship starts a Python worker: every stage is a JVM operator.
 
 from __future__ import annotations
 
-from itertools import chain
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -80,12 +78,16 @@ def greedy_match_without_replacement(
     emotions = emotions or EMOTIONS
     left_cols = [left_id] + ([left_name] if left_name else []) + emotions
     # heap top-k collect bounded at max_left_rows+1: the sentinel row
-    # detects overflow without ever shipping an unbounded relation
+    # detects overflow without ever shipping an unbounded relation.
+    # Both collects come back over Arrow as plain dicts: the replay
+    # touches candidate fields ~n·k1 times, and a pyspark Row walks its
+    # field list per string-key lookup.
     left_rows = (
         left.select(*left_cols)
         .orderBy(F.asc(left_id))
         .limit(max_left_rows + 1)
-        .collect()
+        .toArrow()
+        .to_pylist()
     )
     if len(left_rows) > max_left_rows:
         raise ValueError(
@@ -119,14 +121,10 @@ def greedy_match_without_replacement(
         with partial_group_limit(spark, depth):
             prefix_rows = per_emotion_topk_prefixes(
                 right.select(*cand_cols), needed, right_id, depth
-            ).collect()
-    # Row → dict ONCE: pyspark Row string-key access walks the field
-    # list per lookup, and the replay below touches candidate fields
-    # ~n·k1 times — the O(total rows) conversion here keeps the hot
-    # loop on plain dict gets (measured r14: part of the ×1000 fix).
+            ).toArrow().to_pylist()
     cand_lists: dict[str, list] = {emo: [] for emo in needed}
     for r in prefix_rows:
-        cand_lists[r["_prefix_emotion"]].append(r.asDict())
+        cand_lists[r["_prefix_emotion"]].append(r)
     for emo in needed:
         cand_lists[emo].sort(key=lambda r: (-r[emo], r[right_id]))
 
@@ -231,9 +229,7 @@ def best_match_with_replacement(
     # only that prefix.
     prefix = per_emotion_topk_prefixes(right, emotions, right_id, k1)
 
-    emo_map = F.create_map(
-        *chain.from_iterable((F.lit(e), F.col(e)) for e in emotions)
-    )
+    emo_map = "map({})".format(", ".join(f"'{e}', `{e}`" for e in emotions))
     cand = (
         prefix.join(
             F.broadcast(pairs),
@@ -241,7 +237,7 @@ def best_match_with_replacement(
             "inner",
         )
         .drop("_prefix_emotion")
-        .withColumn("_score_second", emo_map[F.col("second_emotion")])
+        .withColumn("_score_second", F.expr(f"{emo_map}[second_emotion]"))
     )
 
     # Stage 2 ranks ≤ k1 rows per pair (≤ 30·k1 rows total) — the
@@ -254,11 +250,10 @@ def best_match_with_replacement(
         ),
     ).filter(F.col("_rn2") == 1)
 
-    winners = stage2.select(
+    winners = stage2.selectExpr(
         "top_emotion",
         "second_emotion",
-        F.col(right_id).alias(f"matched_{right_id}"),
-        *[F.col(e).alias(f"matched_{e}") for e in emotions],
+        *[f"`{c}` AS `matched_{c}`" for c in [right_id, *emotions]],
     )
     return left.join(
         F.broadcast(winners), ["top_emotion", "second_emotion"], "left"

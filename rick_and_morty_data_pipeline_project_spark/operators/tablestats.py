@@ -36,15 +36,13 @@ from pyspark.sql import DataFrame, SparkSession
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
+from rick_and_morty_data_pipeline_project_spark.session import hadoop_fs
 
 
 def _list_parquet_files(spark: SparkSession, table_dir: str) -> list[str]:
     """Recursive listing of *.parquet under ``table_dir`` (or the file
     itself), via the Hadoop FS API so any configured scheme works."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(table_dir)
-    fs = root.getFileSystem(conf)
+    fs, root = hadoop_fs(spark, table_dir)
     out: list[str] = []
     stack = [root]
     while stack:

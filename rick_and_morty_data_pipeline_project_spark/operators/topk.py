@@ -82,20 +82,11 @@ def per_emotion_topk_prefixes(
     partitions.  A caller with a larger k runs its action inside
     :func:`partial_group_limit`.
     """
-    tagged = df.select(
-        "*",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(e).alias("_prefix_emotion"),
-                        F.col(e).alias("_prefix_score"),
-                    )
-                    for e in emotions
-                ]
-            )
-        ),
+    tags = ", ".join(
+        f"struct('{e}' AS _prefix_emotion, `{e}` AS _prefix_score)"
+        for e in emotions
     )
+    tagged = df.select("*", F.expr(f"inline(array({tags}))"))
     w = Window.partitionBy("_prefix_emotion").orderBy(
         F.desc("_prefix_score"), F.asc(id_col)
     )
@@ -132,17 +123,12 @@ def top2_emotions_cols(
     """(top_emotion, second_emotion) columns from 6 per-emotion score
     columns named ``{prefix}{emotion}``; ties broken by emotion name asc."""
     emotions = emotions or EMOTIONS
-    arr = F.sort_array(
-        F.array(
-            *[
-                F.struct(
-                    (-F.col(f"{prefix}{e}")).alias("neg"), F.lit(e).alias("emo")
-                )
-                for e in emotions
-            ]
-        )
+    # SQL text, not Column calls: each pyspark Column call costs several
+    # py4j round trips, and this array has 6 structs of 2 fields
+    arr = "sort_array(array({}))".format(
+        ", ".join(f"struct(-`{prefix}{e}` AS neg, '{e}' AS emo)" for e in emotions)
     )
-    return arr[0]["emo"], arr[1]["emo"]
+    return F.expr(f"{arr}[0].emo"), F.expr(f"{arr}[1].emo")
 
 
 def grouped_topk_salted(

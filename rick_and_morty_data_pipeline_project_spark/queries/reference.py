@@ -28,9 +28,6 @@ from rick_and_morty_data_pipeline_project_spark.operators.matching import (
     best_match_with_replacement,
     greedy_match_without_replacement,
 )
-from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
-    fan_out,
-)
 from rick_and_morty_data_pipeline_project_spark.operators.topk import (
     top2_emotions_cols,
 )
@@ -40,18 +37,21 @@ _EMO_SQLS = emotion_score_sqls("text")
 _EMO_SELECT = ",\n         ".join(f"{_EMO_SQLS[e]} AS {e}" for e in EMOTIONS)
 
 EPISODE_SOURCES = ("src0", "src1")
+# SQL text: a Column-built predicate costs dozens of py4j round trips
+_IS_EPISODE = "source IN ({})".format(", ".join(f"'{s}'" for s in EPISODE_SOURCES))
 
 
 def _scored_sides(spark, sf_dir):
-    # fan_out before scoring: the md5-lexicon scorer is the expensive
-    # stage and a single-file local scan would otherwise run it 1-way
-    d = fan_out(t(spark, sf_dir, "documents"))
+    # no fan_out: the codegen'd lexicon scorer is cheap enough per row
+    # that a balancing shuffle of the documents costs more CPU than it
+    # spreads (PERFORMANCE.md "Lambda-free emotion scorer")
+    d = t(spark, sf_dir, "documents")
     scores = emotion_score_cols("text")
     scored = d.select(
         "doc_id", "source", *[scores[e].alias(e) for e in EMOTIONS]
     )
-    episodes = scored.filter(F.col("source").isin(*EPISODE_SOURCES))
-    strains = scored.filter(~F.col("source").isin(*EPISODE_SOURCES))
+    episodes = scored.filter(_IS_EPISODE)
+    strains = scored.filter(f"NOT {_IS_EPISODE}")
     return episodes, strains
 
 

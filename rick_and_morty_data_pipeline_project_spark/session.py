@@ -79,3 +79,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     )
     return spark
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` on the driver, resolved with the
+    session's Hadoop configuration, so any configured scheme works."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath

@@ -17,15 +17,11 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.session import hadoop_fs
+
 # Folded into the key of every application-scoped corpus index: in local
 # mode an application id is only a start-time stamp.
 _PROCESS = uuid.uuid4().hex
-
-
-def _fs(sess, path: str):
-    """(Hadoop FileSystem, Path) of ``path``, on the driver."""
-    hpath = sess.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(sess.sparkContext._jsc.hadoopConfiguration()), hpath
 
 
 def _output_exists(sess, out_dir: str) -> bool:
@@ -35,7 +31,7 @@ def _output_exists(sess, out_dir: str) -> bool:
     around the read: a bare except would also swallow transient FS
     errors / corrupt footers and silently shrink the dedup state to
     corpus-only — readmitting duplicates instead of failing the batch."""
-    fs, hpath = _fs(sess, out_dir)
+    fs, hpath = hadoop_fs(sess, out_dir)
     return fs.exists(hpath) and any(
         not st.getPath().getName().startswith(("_", "."))
         for st in fs.listStatus(hpath)
@@ -143,7 +139,7 @@ def _corpus_key(corpus: DataFrame, *params) -> str:
         else:
             parts.append(leaf.toString())
     for f in sorted(corpus.inputFiles()):
-        fs, hpath = _fs(sess, f)
+        fs, hpath = hadoop_fs(sess, f)
         st = fs.getFileStatus(hpath)
         parts.append(f"{f} {st.getLen()} {st.getModificationTime()}")
     if not durable:
@@ -166,7 +162,7 @@ def _corpus_index(
         minhash_signatures,
     )
 
-    fs, marker = _fs(sess, f"{index_dir}/_SUCCESS")
+    fs, marker = hadoop_fs(sess, f"{index_dir}/_SUCCESS")
     if not fs.exists(marker):
         sigs = minhash_signatures(corpus, id_col, text_col, num_hashes, shingle_k)
         bands = lsh_bands(sigs, num_hashes, band_size)

@@ -96,13 +96,63 @@ def test_point_filter_prunes_everything(spark):
     assert "l_shipdate" not in schemas[0]
 
 
+def _scorer_nodes(plan: str) -> list[str]:
+    """Header line of every plan node that evaluates the emotion scorer
+    (its details hold the ``array_remove`` chain).  Of an executed
+    adaptive plan only the final plan's nodes count."""
+    tree = plan.split("\n\n")[0].split("== Initial Plan ==")[0]
+    final = set(re.findall(r"\((\d+)\)$", tree, re.M))
+    return [
+        sec.splitlines()[0]
+        for sec in plan.split("\n\n")[1:]
+        if "array_remove(" in sec
+        and re.match(r"\((\d+)\)", sec).group(1) in final
+    ]
+
+
+def _assert_scorer_codegen(plan: str) -> None:
+    assert "lambdafunction" not in plan, plan
+    nodes = _scorer_nodes(plan)
+    assert nodes, plan
+    assert all("[codegen id : " in n for n in nodes), nodes
+
+
 def test_text_scorer_stays_jvm_side(spark):
-    """The emotion scorer must not appear as a Python UDF node — it is
-    built-in higher-order functions, codegen-eligible."""
+    """The emotion scorer must not appear as a Python UDF node, nor as
+    an interpreted higher-order function: it is lambda-free built-in
+    SQL, and the Project that computes it runs inside whole-stage
+    codegen."""
     df = QUERIES["text_emotion_scores"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+    _assert_scorer_codegen(plan)
+
+
+def test_flagship_scoring_codegen_without_balancing_shuffle(spark, monkeypatch):
+    """Both flagships score the documents in whole-stage codegen with no
+    lambda, straight off the scan: no round-robin exchange spreads the
+    rows first.  The greedy's plan is the prefix relation it collects
+    while it is built; the plans are read after they ran, so an
+    adaptive plan shows its codegen stages."""
+    from rick_and_morty_data_pipeline_project_spark.operators import matching
+
+    prefixes = []
+    per_emotion = matching.per_emotion_topk_prefixes
+
+    def spy(df, emotions, id_col, k):
+        prefixes.append(per_emotion(df, emotions, id_col, k))
+        return prefixes[-1]
+
+    monkeypatch.setattr(matching, "per_emotion_topk_prefixes", spy)
+    QUERIES["flagship_greedy_match"].fn(spark, SF_SMALL)
+    [greedy] = prefixes
+    ep3 = QUERIES["flagship_best_match_with_replacement"].fn(spark, SF_SMALL)
+    ep3.collect()
+    for df in (greedy, ep3):
+        plan = formatted_plan(df)
+        _assert_scorer_codegen(plan)
+        assert "RoundRobinPartitioning" not in plan, plan
 
 
 def test_exists_decorrelates_to_semi_and_anti(spark):
