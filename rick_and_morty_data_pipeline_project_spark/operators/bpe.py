@@ -69,6 +69,9 @@ from pyspark.sql import functions as F
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 
 DELIM = "\x1f"
 _DD = DELIM + DELIM
@@ -301,9 +304,9 @@ def train_bpe(
     # without this cut each pair-count job would replay the corpus-
     # sized token count (the repeated-action anti-pattern).  After the
     # cut the per-layer lineage is vocab-sized replace layers only.
-    cur = words.select(
-        "word", "cnt", wrap_word_col(F.col("word")).alias("w")
-    ).localCheckpoint(eager=True)
+    cur = materialize(
+        words.select("word", "cnt", wrap_word_col(F.col("word")).alias("w"))
+    )
     merges_out: list[BpeMerge] = []
     created: set[str] = set()
     layers = 0
@@ -346,11 +349,11 @@ def train_bpe(
                 F.lit(f"{DELIM}{l}{r}{DELIM}"),
             )
         cur = cur.withColumn("w", w)
-        # Bound lineage growth across layers: each localCheckpoint
+        # Bound lineage growth across layers: each materialization
         # cuts the replace-chain plan so layer i never re-runs layers
         # 1..i−1 (vocab-sized relation — cheap to persist).
         if layers % 4 == 0:
-            cur = cur.localCheckpoint(eager=True)
+            cur = materialize(cur)
     if stats is not None:
         stats.update(path="distributed", pair_scan_jobs=layers)
     return merges_out, cur

@@ -26,6 +26,7 @@ from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
 )
 from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
     fan_out,
+    materialize,
 )
 
 
@@ -472,7 +473,7 @@ def connected_components(
     one map-combinable min aggregation, into which a self row carries
     each node's old label — the standard large-graph CC loop,
     converging in O(graph diameter) rounds (near-dup clusters are
-    shallow: a handful of rounds).  ``localCheckpoint`` truncates the
+    shallow: a handful of rounds).  ``materialize`` truncates the
     growing lineage each round so round N's plan does not replay rounds
     1..N−1; the same checkpoint job counts the changed labels through
     an ``observe`` metric, so convergence costs no extra action.
@@ -486,18 +487,16 @@ def connected_components(
     ).unionByName(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
-    edges = edges.distinct().localCheckpoint()
+    edges = materialize(edges.distinct())
 
     def checkpoint(rnd: DataFrame) -> tuple[DataFrame, int]:
         """(node, label) of a round plus its count of changed labels,
         from ``rnd``'s (node, label, _old) rows in one job."""
         obs = Observation()
-        labels = (
+        labels = materialize(
             rnd.observe(
                 obs, F.count_if(F.col("label") < F.col("_old")).alias("n")
-            )
-            .select("node", "label")
-            .localCheckpoint()
+            ).select("node", "label")
         )
         return labels, obs.get["n"]
 

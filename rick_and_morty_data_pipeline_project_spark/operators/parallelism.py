@@ -1,8 +1,35 @@
-"""Compute-layout helpers for CPU-heavy map pipelines."""
+"""Compute-layout helpers: the one place a relation is materialized,
+the one way driver work runs concurrently, and the fan-out guard for
+CPU-heavy map pipelines."""
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Run ``df`` once and return a relation that reads the stored
+    result: for a relation several plan branches consume, for lineage
+    that would otherwise grow per iteration, or for output that must
+    outlive its source files.  Every materialization in the package
+    goes through here, so how relations are stored is chosen once."""
+    return df.localCheckpoint()
+
+
+def concurrently(*fns):
+    """Call each zero-argument function in its own thread; return the
+    results in argument order.  Each blocking driver action (a
+    ``materialize`` job, a collect) then overlaps the others' on the
+    Spark scheduler.  If any call raises, the first failure in
+    argument order is raised after every call has returned.  Nested
+    calls are safe: every call has its own thread, so none waits for a
+    free worker.  Express dependent steps as a chain inside one
+    function and independent chains as sibling arguments."""
+    with ThreadPoolExecutor(max_workers=max(len(fns), 1)) as pool:
+        futures = [pool.submit(fn) for fn in fns]
+    return [f.result() for f in futures]
 
 
 def fan_out(df: DataFrame) -> DataFrame:

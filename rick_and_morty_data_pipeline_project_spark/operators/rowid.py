@@ -17,7 +17,7 @@ single-task stage, the zipWithIndex idea re-expressed on DataFrames:
    key range, so ``id = offset[pid] + local``;
 4. offsets broadcast-join back on the partition id.
 
-The intermediate is ``localCheckpoint``-ed so the counts pass and the
+The intermediate is materialized so the counts pass and the
 numbering pass read ONE materialization of the range shuffle instead
 of recomputing the scan (the multi-branch pattern used by the
 sweep-line and JSD queries).
@@ -45,6 +45,9 @@ from pyspark.sql import types as T
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 
 
 def dense_row_ids(
@@ -65,10 +68,11 @@ def dense_row_ids(
         if num_partitions
         else df.repartitionByRange(*order_cols)
     )
-    ranged = (
-        ranged.sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    ).localCheckpoint()  # one materialization feeds both passes below
+    ranged = materialize(  # one materialization feeds both passes below
+        ranged.sortWithinPartitions(*order_cols).withColumn(
+            "_pid", F.spark_partition_id()
+        )
+    )
 
     out_schema = T.StructType(
         ranged.schema.fields + [T.StructField("_local", T.LongType())]

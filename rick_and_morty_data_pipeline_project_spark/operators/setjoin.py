@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
     fan_out,
+    materialize,
 )
 
 
@@ -53,7 +54,7 @@ def jaccard_prefix_pairs(
 
     Cost: candidates ∝ Σ_s prefix_df(s)·df(s) (prefix collisions) —
     never |docs|², never the full Σ df² of an unfiltered posting join.
-    The posting relation is localCheckpointed: built once, read by the
+    The posting relation is materialized: built once, read by the
     df-count, the prefix window, the probe side and both verify sides.
     """
     from rick_and_morty_data_pipeline_project_spark.functions.textfns import (
@@ -73,9 +74,7 @@ def jaccard_prefix_pairs(
             shingles_from_tokens(F.col("_tk"), shingle_k)
         ).alias("_sh"),
     ).withColumn("_n", F.size("_sh"))
-    posting = sh.select(
-        "_id", "_n", F.explode("_sh").alias("_s")
-    ).localCheckpoint()
+    posting = materialize(sh.select("_id", "_n", F.explode("_sh").alias("_s")))
 
     sdf = posting.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
     w = Window.partitionBy("_id").orderBy(F.asc("_df"), F.asc("_s"))

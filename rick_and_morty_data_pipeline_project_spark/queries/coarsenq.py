@@ -47,6 +47,9 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q, t
 
 # groups per table for the coarsen exemplar: the target bin size is
@@ -86,7 +89,7 @@ def coarsen_layout_audit(spark, sf_dir):
         ).parquet(tmp)
         coarsen_partitions(spark, tmp, "o_month", target)
         post = spark.read.parquet(tmp)
-        return (
+        return materialize(  # before the staging dir dies
             post.withColumn("_f", F.input_file_name())
             .groupBy(F.col("grp").cast("int").alias("grp"))
             .agg(
@@ -96,7 +99,6 @@ def coarsen_layout_audit(spark, sf_dir):
                 F.min("o_month").alias("min_month"),
                 F.max("o_month").alias("max_month"),
             )
-            .localCheckpoint()  # materialize before the staging dir dies
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -173,7 +175,7 @@ def evolution_generation_census(spark, sf_dir):
             .partitionBy("pk")
             .parquet(tmp)
         )
-        return generation_census(spark, tmp).localCheckpoint()
+        return materialize(generation_census(spark, tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

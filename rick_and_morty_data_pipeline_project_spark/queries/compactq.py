@@ -46,6 +46,9 @@ from bisect import bisect_left, insort
 
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q, t
 
 _N_BINS = 15  # same total//15 target rule as coarsen_layout_audit
@@ -110,10 +113,10 @@ def compact_layout_audit(spark, sf_dir):
             .join(F.broadcast(src_files), "_bin")
         )
         total = post.groupBy().agg(F.count(F.lit(1)).alias("total_rows"))
-        return (
-            per_bin.crossJoin(F.broadcast(total))
-            .select("bin_rows", "src_files", "out_files", "total_rows")
-            .localCheckpoint()  # materialize before the staging dirs die
+        return materialize(  # before the staging dirs die
+            per_bin.crossJoin(F.broadcast(total)).select(
+                "bin_rows", "src_files", "out_files", "total_rows"
+            )
         )
     finally:
         shutil.rmtree(src, ignore_errors=True)

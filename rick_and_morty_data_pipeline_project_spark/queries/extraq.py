@@ -2071,7 +2071,7 @@ def graph_pagerank3(spark, sf_dir):
     high-cardinality node key plus a map-side-combinable sum — the
     textbook distributed PageRank step.  Unrolling keeps the whole
     3-step computation a single Catalyst plan; an open-ended variant
-    would loop with localCheckpoint lineage truncation like
+    would loop with ``materialize`` lineage truncation like
     dedup_minhash_clusters.  Ranks are rounded to 6 only at the output
     (group-sum order differs between engines at ~1e-15 relative).
     """

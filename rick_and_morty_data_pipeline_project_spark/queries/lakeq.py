@@ -43,6 +43,9 @@ from rick_and_morty_data_pipeline_project_spark.operators.zorder import (
     morton_col,
     morton_sql,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q, dec, t
 
 _ZBITS = 16  # quantized key width
@@ -465,10 +468,9 @@ def evolution_read_generations(spark, sf_dir):
                 T.StructField("population", T.LongType()),
             ]
         )
-        out = read_evolved(
-            spark, tmp, target, renames={"name": "region_name"}
-        ).localCheckpoint()  # materialize before the staging dir dies
-        return out
+        return materialize(  # before the staging dir dies
+            read_evolved(spark, tmp, target, renames={"name": "region_name"})
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

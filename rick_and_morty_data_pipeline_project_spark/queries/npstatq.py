@@ -32,6 +32,9 @@ import math
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q, dec, t
 
 _BASELINE = "view"
@@ -979,11 +982,13 @@ def orders_benford_audit(spark, sf_dir):
         .cast("int")
         .alias("digit")
     )
-    # localCheckpoint: the 9-row digit relation feeds the output rows,
+    # materialize: the 9-row digit relation feeds the output rows,
     # the chi2 aggregate AND the n total — one orders scan, not three
-    obs = dig.groupBy("digit").agg(
-        F.count(F.lit(1)).cast("long").alias("observed")
-    ).localCheckpoint()
+    obs = materialize(
+        dig.groupBy("digit").agg(
+            F.count(F.lit(1)).cast("long").alias("observed")
+        )
+    )
     n = obs.agg(F.sum("observed").cast("long").alias("n"))
     full = obs.crossJoin(F.broadcast(n))
     nd = F.col("n").cast("double")

@@ -51,6 +51,7 @@ from rick_and_morty_data_pipeline_project_spark.operators.opq import (
 )
 from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
     fan_out,
+    materialize,
 )
 from rick_and_morty_data_pipeline_project_spark.operators.pq import (
     _subspaces,
@@ -119,9 +120,9 @@ def knn_cosine_opq(spark, sf_dir):
     docstring).  Output shape matches the PQ family: per-query top-k
     by ADC distance with (dist, id) tie order."""
     e = t(spark, sf_dir, "embeddings")
-    normed = _normalized(
-        fan_out(e), "vec_id", "embedding", "vec_id", "nv"
-    ).localCheckpoint()
+    normed = materialize(
+        _normalized(fan_out(e), "vec_id", "embedding", "vec_id", "nv")
+    )
     X_dist = sample_vectors_deterministic(normed, "vec_id", "nv", _SAMPLE)
     R, books = opq_fit(X_dist, _M, _K, n_outer=_OUTER)
     canon = _canonical_normed(sf_dir)
@@ -134,9 +135,9 @@ def knn_cosine_opq(spark, sf_dir):
                 "diverged from the canonical replay of the same sample"
             )
     dim = len(R)
-    codes = opq_encode(normed, R, books, vec_col="nv").localCheckpoint()
+    codes = materialize(opq_encode(normed, R, books, vec_col="nv"))
     if canon is not None:
-        rotated = _jvm_rotated(normed, R).localCheckpoint()
+        rotated = materialize(_jvm_rotated(normed, R))
         _assert_same_codes(
             codes,
             _jvm_pq_codes(rotated, books, dim),

@@ -83,6 +83,7 @@ from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
 )
 from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
     fan_out,
+    materialize,
 )
 from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
     _normalized,
@@ -338,13 +339,12 @@ def knn_cosine_pq(spark, sf_dir):
     serialize (and |queries| separate heap branches would re-scan)."""
     e = t(spark, sf_dir, "embeddings")
     # normed feeds training, the fold replay, the query collect AND the
-    # encode — materialize the tiny (id, unit-vector) relation once
-    # (the repo's localCheckpoint multi-consumer pattern); fan_out
-    # first so the m·k fold-replay assertion doesn't serialize on the
-    # unsplittable single-file local scan
-    normed = _normalized(
-        fan_out(e), "vec_id", "embedding", "vec_id", "nv"
-    ).localCheckpoint()
+    # encode — ``materialize`` the tiny (id, unit-vector) relation
+    # once; fan_out first so the m·k fold-replay assertion doesn't
+    # serialize on the unsplittable single-file local scan
+    normed = materialize(
+        _normalized(fan_out(e), "vec_id", "embedding", "vec_id", "nv")
+    )
     books = train_pq_codebooks(normed, vec_col="nv", m=_M, k=_K)
     canon = _canonical_normed(sf_dir)
     if canon is not None:
@@ -355,7 +355,7 @@ def knn_cosine_pq(spark, sf_dir):
                 "from the canonical replay of the same sample"
             )
     dim = len(books) * len(books[0][0])
-    codes = pq_encode(normed, books, vec_col="nv").localCheckpoint()
+    codes = materialize(pq_encode(normed, books, vec_col="nv"))
     if canon is not None:
         _assert_same_codes(
             codes,
@@ -385,9 +385,9 @@ def knn_cosine_ivfpq(spark, sf_dir):
     scored, in one scan of the index — then the salted two-stage
     per-query top-k."""
     e = t(spark, sf_dir, "embeddings")
-    normed = _normalized(
-        fan_out(e), "vec_id", "embedding", "vec_id", "nv"
-    ).localCheckpoint()
+    normed = materialize(
+        _normalized(fan_out(e), "vec_id", "embedding", "vec_id", "nv")
+    )
     cents, books = train_ivf_pq(normed, vec_col="nv", n_cells=_NCELLS, m=_M, k=_K)
     canon = _canonical_normed(sf_dir)
     if canon is not None:
@@ -398,7 +398,7 @@ def knn_cosine_ivfpq(spark, sf_dir):
                 "diverged from the canonical replay of the same sample"
             )
     dim = len(cents[0])
-    idx = ivf_pq_index(normed, cents, books, vec_col="nv").localCheckpoint()
+    idx = materialize(ivf_pq_index(normed, cents, books, vec_col="nv"))
     if canon is not None:
         _assert_same_codes(
             idx,

@@ -45,6 +45,9 @@ from pyspark.sql.window import Window
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    concurrently,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q
 
 # Operating targets (module constants so the oracle SQL and the Spark
@@ -73,13 +76,12 @@ def _norm_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost_value) relation underlying BOTH the run card and its what-if
     twin — every row of every decision table, mapped onto one schema.
 
-    r14 (r13 verdict item 5): this used to cost the plain SUM of the
-    five audited arms because each arm re-derived its inputs from
-    scratch.  The two dedup arms now share ONE collapse-gated
-    (doc_id, text, _g) relation and ONE weakest-threshold
-    co-occurrence materialization (the banding truth set is its
-    J ≥ 0.7 subset), and the two vector arms share the exact
-    brute-force top-k and the coarse-quantizer centroid collect.
+    It costs less than the plain SUM of the five audited arms because
+    the arms share their inputs: the two dedup arms share ONE
+    collapse-gated (doc_id, text, _g) relation and ONE
+    weakest-threshold co-occurrence materialization (the banding truth
+    set is its J ≥ 0.7 subset), and the two vector arms share the
+    exact brute-force top-k and the coarse-quantizer centroid collect.
     Each arm's plan below the share points is unchanged — the
     decision tables stay bit-identical to the standalone,
     driver-certified queries (pinned in tests/test_runcard.py)."""
@@ -95,16 +97,14 @@ def _norm_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         shared_knn_relations,
     )
 
-    # CONCURRENT arm construction (r14): every localCheckpoint inside
-    # an arm is a BLOCKING driver action, so building the arms
-    # sequentially serializes their materialization jobs (measured:
-    # the card's 24 s wall was ≈ the sum of the checkpoint jobs).
-    # Submitting the constructions from threads lets the Spark
-    # scheduler overlap them — a documented multi-job pattern; the
-    # checkpointed contents are order-independent, so the relation is
-    # bit-identical (tests/test_runcard.py pins arm-by-arm equality).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # Every materialization inside an arm is a BLOCKING driver action,
+    # so building the arms sequentially serializes their jobs (the
+    # card's wall was ≈ the sum of them).  The quality arm, the dedup
+    # chain and the vector chain (shared relations, then their two
+    # arms) are built concurrently so the Spark scheduler overlaps
+    # them; materialized contents are order-independent, so the
+    # relation is bit-identical (tests/test_runcard.py pins arm-by-arm
+    # equality).
     def norm(df, stage, config, quality, cost):
         return df.select(
             F.lit(stage).alias("stage"),
@@ -166,19 +166,21 @@ def _norm_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(100) - F.col("threshold_pct"),
         )
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_dshared = pool.submit(shared_dedup_relations, spark, sf_dir)
-        f_vshared = pool.submit(shared_knn_relations, spark, sf_dir)
-        f_qual = pool.submit(build_quality)
-        dshared = f_dshared.result()
-        vshared = f_vshared.result()
-        f_ann = pool.submit(build_ann, vshared)
-        f_probe = pool.submit(build_probe, vshared)
-        f_band = pool.submit(build_band, dshared)
-        f_thresh = pool.submit(build_thresh, dshared)
-        ann, probe = f_ann.result(), f_probe.result()
-        band, thresh = f_band.result(), f_thresh.result()
-        qual = f_qual.result()
+    def dedup_arms():
+        dshared = shared_dedup_relations(spark, sf_dir)
+        return concurrently(
+            lambda: build_band(dshared), lambda: build_thresh(dshared)
+        )
+
+    def vector_arms():
+        vshared = shared_knn_relations(spark, sf_dir)
+        return concurrently(
+            lambda: build_ann(vshared), lambda: build_probe(vshared)
+        )
+
+    qual, (band, thresh), (ann, probe) = concurrently(
+        build_quality, dedup_arms, vector_arms
+    )
 
     return ann.unionByName(probe).unionByName(band).unionByName(
         thresh
@@ -239,14 +241,14 @@ def curation_run_card_whatif(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     union = (
         _norm_union(spark, sf_dir)
-        # No localCheckpoint here (r14 optimization round): the 3-point
-        # fan-out is a BROADCAST join, and a broadcast join streams its
-        # probe side exactly once — the five component pipelines execute
-        # once inside the final job with or without a materialization
-        # barrier (the union relation has a single consumer; _pick's
-        # window sits above the join).  Dropping the checkpoint removes
-        # a blocking driver job and measured 20.9 -> 19.3 s at sf0.1
-        # (min-of-2, contended interleave), with row-exact parity.
+        # No materialization here: the 3-point fan-out is a BROADCAST
+        # join, and a broadcast join streams its probe side exactly
+        # once — the five component pipelines execute once inside the
+        # final job with or without a materialization barrier (the
+        # union relation has a single consumer; _pick's window sits
+        # above the join).  Materializing would add a blocking driver
+        # job (measured 19.3 s without vs 20.9 s with at sf0.1,
+        # min-of-2, contended interleave), with row-exact parity.
         .join(F.broadcast(pts), "stage")
         .withColumn(
             "meets_target",

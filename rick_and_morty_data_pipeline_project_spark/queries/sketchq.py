@@ -40,6 +40,9 @@ from rick_and_morty_data_pipeline_project_spark.operators.sketches import (
     CMS_CANON,
     cms_point_estimates,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q, t
 
 
@@ -61,9 +64,9 @@ def sketch_hll_rollup(spark, sf_dir):
     events again.
     """
     e = t(spark, sf_dir, "events")
-    regs = hll_register_table(
-        e, F.date_format("ts", "yyyy-MM-dd"), "user_id"
-    ).localCheckpoint()  # per-day + TOTAL both read it — one build
+    regs = materialize(  # per-day + TOTAL both read it — one build
+        hll_register_table(e, F.date_format("ts", "yyyy-MM-dd"), "user_id")
+    )
     per_day = hll_estimate(regs, "est_users")
     merged = (
         regs.groupBy("register")
@@ -776,20 +779,20 @@ def sketch_kmv_set_ops(spark, sf_dir):
     hashed = pairs.select(
         "event_type", "user_id", _kmv_u(F.col("user_id")).alias("u")
     )
-    sk = grouped_topk_salted(
-        hashed, ["event_type"], "u", _KMV_K, tiebreak="user_id"
-    ).localCheckpoint()  # both pair arms read the tiny sketch relation
+    sk = materialize(  # both pair arms read the tiny sketch relation
+        grouped_topk_salted(
+            hashed, ["event_type"], "u", _KMV_K, tiebreak="user_id"
+        )
+    )
     types = sk.select("event_type").distinct()
     # the inequality pair enumeration is the ONE non-equi join here —
     # over the |types|-row relation only (never row data); materialize
     # its |types|² rows once for the four consuming branches
-    tpairs = (
-        types.select(F.col("event_type").alias("type_a"))
-        .join(
+    tpairs = materialize(
+        types.select(F.col("event_type").alias("type_a")).join(
             types.select(F.col("event_type").alias("type_b")),
             F.col("type_a") < F.col("type_b"),
         )
-        .localCheckpoint()
     )
 
     def _flags(rel):

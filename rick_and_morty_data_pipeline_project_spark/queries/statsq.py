@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 from rick_and_morty_data_pipeline_project_spark.queries._util import (
     Q,
     dec,
@@ -62,7 +65,7 @@ def events_max_concurrency(spark, sf_dir):
     broadcast back.  No global window ever sees the data; the netted
     relation itself is bounded by 2·sessions ≪ events, computed from
     ONE scan (both boundaries explode from the same session row) and
-    localCheckpoint-ed once for its two consumers.  The oracle uses
+    materialized once for its two consumers.  The oracle uses
     the naive one-window formulation — independent plan, same answer.
     """
     from pyspark.sql.window import Window
@@ -89,7 +92,7 @@ def events_max_concurrency(spark, sf_dir):
             )
         ).alias("b"),
     ).select("day", F.col("b.i").alias("i"), F.col("b.d").alias("d"))
-    net = (
+    net = materialize(  # tiny (≤ 2·sessions); consumed 2×
         bounds.groupBy("day", "i")
         .agg(F.sum("d").alias("delta"))
         .withColumn(
@@ -102,7 +105,6 @@ def events_max_concurrency(spark, sf_dir):
                 / 3600
             ).cast("int"),
         )
-        .localCheckpoint()  # tiny (≤ 2·sessions); consumed 2×
     )
     within = (
         Window.partitionBy("day", "blk")
@@ -272,7 +274,7 @@ def text_js_divergence(spark, sf_dir):
     vocabularies.
 
     Scale: the (source, token) count relation is Σ|vocab_s|,
-    localCheckpoint-ed once so the expensive tokenize/explode pass
+    materialized once so the expensive tokenize/explode pass
     over documents runs exactly once for its three consumers (totals
     dim + both join sides); the token-keyed self-join emits
     Σ_t |sources_t|² pairs (co-occurrence shape — never |S|²·|V|);
@@ -281,11 +283,10 @@ def text_js_divergence(spark, sf_dir):
     summed then rounded to 6.
     """
     d = t(spark, sf_dir, "documents")
-    cnt = (
+    cnt = materialize(  # tokenize once; consumed 3×
         d.select("source", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()  # tokenize once; consumed 3×
     )
     tot = cnt.groupBy("source").agg(F.sum("c").alias("tot"))
     probs = cnt.join(F.broadcast(tot), "source").select(

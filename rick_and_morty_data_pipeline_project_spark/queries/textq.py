@@ -40,7 +40,9 @@ from rick_and_morty_data_pipeline_project_spark.operators.localrel import (
     local_relation,
 )
 from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    concurrently,
     fan_out,
+    materialize,
 )
 from rick_and_morty_data_pipeline_project_spark.operators.topk import (
     top2_emotions_cols,
@@ -429,7 +431,7 @@ def graph_triangle_count(spark, sf_dir):
     so the keeper policy needs pairwise verification, not blind CC.
 
     Plan shape: the edge list (same banding constants as
-    ``dedup_minhash_lsh_candidates``) is ``localCheckpoint``-ed once so
+    ``dedup_minhash_lsh_candidates``) is materialized once so
     the degree pass and the two wedge/closure joins reuse the
     materialized pairs instead of recomputing the LSH pipeline three
     times (the ``dedup_minhash_clusters`` lineage trick).  Triangles
@@ -445,12 +447,10 @@ def graph_triangle_count(spark, sf_dir):
     both engines round the identical double to 6.
     """
     d = t(spark, sf_dir, "documents")
-    e = (
+    e = materialize(
         minhash_lsh_pairs(
             d, "doc_id", "text", num_hashes=8, band_size=4, shingle_k=3
-        )
-        .select("id_a", "id_b")
-        .localCheckpoint()
+        ).select("id_a", "id_b")
     )
     deg = (
         e.select(F.col("id_a").alias("node"))
@@ -667,27 +667,27 @@ def _dup_collapse_gate(d, force=None):
             False,
         )
     return (
-        d.groupBy("text")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.count(F.lit(1)).alias("_g"),
-        )
-        .localCheckpoint(),
+        materialize(
+            d.groupBy("text").agg(
+                F.min("doc_id").alias("doc_id"),
+                F.count(F.lit(1)).alias("_g"),
+            )
+        ),
         True,
     )
 
 
 def shared_dedup_relations(spark, sf_dir, dup_path=None):
     """(groups, collapsed, co) built ONCE for multi-arm consumers —
-    the run-card composition runs BOTH dedup frontiers, and before r14
-    each independently re-scanned and re-shingled the same corpus.
+    the run-card composition runs BOTH dedup frontiers, which would
+    otherwise each re-scan and re-shingle the same corpus.
     ``co`` is the weakest-threshold QUALIFYING co-occurrence relation
     (id_a, id_b, _c, _na, _nb), i.e. pairs with J ≥ the weakest swept
     threshold: the threshold sweep consumes it directly and the
     banding frontier's exact-truth set is its J ≥ 0.7 subset (a pair
     with J ≥ 0.7 has size ratio ≥ 0.7, so the 0.1 length-filter
     pruning loses nothing).  The J-filter is applied BEFORE the
-    localCheckpoint — the raw co-occurrence relation (every pair
+    materialization — the raw co-occurrence relation (every pair
     sharing ≥ 1 shingle) is orders of magnitude larger than the
     qualifying set and must never be materialized (measured: 5× the
     whole card's wall when it was)."""
@@ -698,7 +698,7 @@ def shared_dedup_relations(spark, sf_dir, dup_path=None):
     d = t(spark, sf_dir, "documents")
     groups, collapsed = _dup_collapse_gate(d, force=dup_path)
     weakest = min(_DEDUP_SWEEP_PCTS)
-    co = (
+    co = materialize(
         _ngram_cooccurrence(
             groups.withColumn("_blk", F.lit(1)),
             "doc_id",
@@ -706,12 +706,10 @@ def shared_dedup_relations(spark, sf_dir, dup_path=None):
             "_blk",
             3,
             size_ratio_min=weakest / 100.0,
-        )
-        .filter(
+        ).filter(
             F.lit(100) * F.col("_c")
             >= F.lit(weakest) * (F.col("_na") + F.col("_nb") - F.col("_c"))
         )
-        .localCheckpoint()
     )
     return groups, collapsed, co
 
@@ -849,12 +847,9 @@ def dedup_lsh_banding_frontier(spark, sf_dir, dup_path=None, _shared=None):
             shingle_k=3,
             threshold=0.7,
         ).select("id_a", "id_b")
-    truth = (
-        _weighted(tpairs, "_t")
-        # feeds the cross with all four configs — materialize the
-        # posting join once (the multi-consumer pattern)
-        .localCheckpoint()
-    )
+    # feeds the cross with all four configs — ``materialize`` the
+    # posting join once
+    truth = materialize(_weighted(tpairs, "_t"))
     cfgs = local_relation(
         spark, [(s,) for s in _BANDING_SIZES], "band_size int"
     )
@@ -1342,7 +1337,7 @@ def graph_kcore_peel(spark, sf_dir):
 
     Plan shape: the candidate edge list (same banding constants as
     ``dedup_minhash_lsh_candidates``, materialized in both directions)
-    is ``localCheckpoint``-ed once — the three rounds' degree
+    is materialized once — the three rounds' degree
     aggregates and LEFT SEMI induced-subgraph joins all read the
     checkpointed pairs, never recomputing the LSH pipeline (the
     ``graph_triangle_count`` trick).  Each round is one node-keyed
@@ -1354,12 +1349,11 @@ def graph_kcore_peel(spark, sf_dir):
     und = minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=8, band_size=4, shingle_k=3
     ).select("id_a", "id_b")
-    e = (
+    e = materialize(
         und.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             und.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
-        .localCheckpoint()
     )
     out = None
     for i in (1, 2, 3):
@@ -3541,7 +3535,10 @@ def _tfidf_weight_relation(spark, sf_dir):
     decimal-exact verify phase.  Near-stopwords (df > 80% of docs) are
     pruned here, on both engines (oracle does the same in SQL)."""
     tf, df_, n_docs = _tfidf_weighted(spark, sf_dir)
-    w = (
+    # referenced by norms, the prefix index and both verify sides:
+    # materialize once instead of recomputing the tokenize pipeline
+    # per reference
+    w = materialize(
         tf.join(df_, "term")
         .crossJoin(F.broadcast(n_docs))
         .filter(F.col("df") <= F.col("_n_docs") * 0.8)
@@ -3553,10 +3550,6 @@ def _tfidf_weight_relation(spark, sf_dir):
             .cast("decimal(18,6)")
             .alias("w"),
         )
-        # referenced by norms, the prefix index and both verify sides:
-        # materialize once instead of recomputing the tokenize pipeline
-        # per reference
-        .localCheckpoint()
     )
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w")).cast("double")).alias("norm")
@@ -3715,38 +3708,29 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
     nb = norms.select(F.col("doc_id").alias("id_b"), F.col("norm").alias("_nb"))
 
     # Bounded shape probes (limit caps the result set; one pass each
-    # over the already-checkpointed weight relation, nothing touches
-    # the raw corpus again).
-    # the two gate probes are independent reads of the checkpointed
-    # weight relation — submit them concurrently (guide §2.6) instead
-    # of serializing two driver actions
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_terms = pool.submit(
-            lambda: [
-                r["term"]
-                for r in w.select("term")
-                .distinct()
-                .orderBy("term")
-                .limit(_TFIDF_DENSE_VOCAB_CAP + 1)
-                .collect()
-            ]
-        )
-        f_ndocs = pool.submit(
-            lambda: w.select("doc_id")
+    # over the already-materialized weight relation, nothing touches
+    # the raw corpus again), run concurrently instead of as two
+    # serial driver actions.
+    terms, n_docs_capped = concurrently(
+        lambda: [
+            r["term"]
+            for r in w.select("term")
             .distinct()
-            .limit(_TFIDF_DENSE_DOC_CAP + 1)
-            .count()
-        )
-        terms = f_terms.result()
-        n_docs_capped = f_ndocs.result()
+            .orderBy("term")
+            .limit(_TFIDF_DENSE_VOCAB_CAP + 1)
+            .collect()
+        ],
+        lambda: w.select("doc_id")
+        .distinct()
+        .limit(_TFIDF_DENSE_DOC_CAP + 1)
+        .count(),
+    )
     dense_ok = (
         len(terms) <= _TFIDF_DENSE_VOCAB_CAP
         and n_docs_capped <= _TFIDF_DENSE_DOC_CAP
     )
     if dense_ok:
-        # r15: on the dense path the exact verify runs as an unrolled
+        # On the dense path the exact verify runs as an unrolled
         # int64-micros dot over the dense vectors (no posting join, no
         # shuffle); an overflow guard falls back to the posting verify.
         # Only this path reads max(w), so only it runs the probe.
@@ -3791,8 +3775,8 @@ def _tfidf_posting_verify(w, na, nb, cand):
 
 
 def _tfidf_dense_exact_verify(w, na, nb, terms, maxw):
-    """Dense-path exact verify WITHOUT the posting join (r15, guide
-    §2.4 — remove the shuffle outright): the weights are DECIMAL(18,6),
+    """Dense-path exact verify WITHOUT the posting join (the shuffle
+    is removed outright): the weights are DECIMAL(18,6),
     so each is an exact int64 count of micro-units (w·10⁶); the pair
     dot Σ wa·wb is then an exact int64 sum of products whose value,
     rescaled by the exact decimal literal 10⁻¹², is the IDENTICAL
@@ -3801,7 +3785,7 @@ def _tfidf_dense_exact_verify(w, na, nb, terms, maxw):
     over all 445k sf0.1 survivors and pinned in tests/test_textq.py).
 
     Shape: the narrow double-prefilter BNLJ runs exactly as before and
-    is localCheckpointed (the barrier also keeps the huge prefilter
+    is materialized (the barrier also keeps the huge prefilter
     expression and the dot tail in separate codegen stages — fusing
     them measured 5x slower than the two-stage form); survivors then
     broadcast-join the per-doc dense micros vectors and evaluate one
@@ -3860,7 +3844,7 @@ def _tfidf_dense_exact_verify(w, na, nb, terms, maxw):
         dot_long.cast("decimal(20,0)")
         * F.lit("0.000000000001").cast("decimal(13,12)")
     ).cast("double")
-    cand = _tfidf_dense_candidates(w, na, nb, terms).localCheckpoint()
+    cand = materialize(_tfidf_dense_candidates(w, na, nb, terms))
     return (
         cand.join(F.broadcast(da), "id_a")
         .join(F.broadcast(db), "id_b")

@@ -755,15 +755,8 @@ def decontaminate_embedding_overlap(spark, sf_dir):
         e.filter(F.col("vec_id") % 10 == 0), "vec_id", "embedding",
         "eval_id", "ev",
     )
-    # fan_out (r15, guide §2.6): |train|×|eval| interpreted fold dots
-    # ran on the unsplittable 1-task local scan; the balancing exchange
-    # parallelizes the narrow pass (groupBy max is order-independent)
-    from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
-        fan_out,
-    )
-
     tr = _normalized(
-        fan_out(e.filter(F.col("vec_id") % 10 != 0)), "vec_id", "embedding",
+        e.filter(F.col("vec_id") % 10 != 0), "vec_id", "embedding",
         "train_id", "tv",
     )
     cos = dot_col(F.col("tv"), F.col("ev"))

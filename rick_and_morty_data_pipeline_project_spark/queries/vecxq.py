@@ -12,6 +12,7 @@ already proves bit-equal (queries/vecq.py).
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -26,7 +27,9 @@ from rick_and_morty_data_pipeline_project_spark.operators.binquant import (
     knn_lsh_multiprobe,
 )
 from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    concurrently,
     fan_out,
+    materialize,
 )
 from rick_and_morty_data_pipeline_project_spark.operators.randproj import (
     jl_matrix,
@@ -477,6 +480,63 @@ _RM_N = 10
 _RM_T_HEX = [format((k * (1 << 32)) // _RM_N, "08x") for k in range(1, _RM_N)]
 
 
+def _variant_builders(queries, e):
+    """name -> zero-argument builder of each candidate-restricting ANN
+    variant's top-k, with its own catalog query's parameters.  The
+    operators are imported per call, so a patched operator module
+    takes effect."""
+    from rick_and_morty_data_pipeline_project_spark.operators.binquant import (
+        knn_ivf_binary,
+    )
+    from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
+        knn_ivf,
+        knn_lsh,
+    )
+    from rick_and_morty_data_pipeline_project_spark.operators.sq import knn_sq8
+
+    return {
+        "lsh": lambda: knn_lsh(queries, e, k=_K, dim=_DIM, n_planes=6),
+        "lsh_multiprobe": lambda: knn_lsh_multiprobe(queries, e, _MP_TABLE, k=_K),
+        "ivf": lambda: knn_ivf(queries, e, k=_K, n_cells=8, n_probe=2),
+        "binary": lambda: knn_binary(
+            queries, e, dim=_DIM, k=_K, shortlist=_SHORTLIST
+        ),
+        "ivf_binary": lambda: knn_ivf_binary(
+            queries, e, dim=_DIM, k=_K, n_cells=8, n_probe=2,
+            shortlist=_IVFB_SHORTLIST,
+        ),
+        "sq8": lambda: knn_sq8(
+            queries, e, dim=_DIM, k=_K, shortlist=_SQ_SHORTLIST
+        ),
+    }
+
+
+def _exact_topk(queries, e):
+    """The materialized exact (query_id, neighbor_id) top-k every
+    recall arm is measured against."""
+    from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
+        knn_bruteforce,
+    )
+
+    return materialize(
+        knn_bruteforce(queries, e, k=_K).select("query_id", "neighbor_id")
+    )
+
+
+def _head_cents_lit(e, n_cells=8):
+    """The head-id coarse quantizer's centroid literal (one driver
+    collect)."""
+    from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
+        centroids_literal,
+        head_centroid_pairs,
+    )
+
+    cent_pairs = head_centroid_pairs(e, "vec_id", "embedding", n_cells)
+    return centroids_literal(
+        cent_pairs, e.schema["vec_id"].dataType.simpleString()
+    )
+
+
 def knn_recall_matrix(spark, sf_dir):
     """(variant, query_id, n_hits, recall, mean_recall, boot_lo,
     boot_hi) for the six candidate-restricting ANN variants: LSH,
@@ -487,88 +547,43 @@ def knn_recall_matrix(spark, sf_dir):
     deterministic 95% bootstrap interval (B=64 md5-addressed
     resamples), making cross-variant comparisons defensible rather
     than point estimates."""
-    from rick_and_morty_data_pipeline_project_spark.operators.binquant import (
-        knn_binary,
-        knn_ivf_binary,
-        knn_lsh_multiprobe,
-    )
-    from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
-        knn_bruteforce,
-        knn_ivf,
-        knn_lsh,
-    )
-    from rick_and_morty_data_pipeline_project_spark.operators.sq import knn_sq8
-
     e = t(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
+    builders = _variant_builders(queries, e)
 
-    # CONCURRENT arm construction + materialization (r15, guide §2.6 —
-    # the run-card pattern; see knn_frontier_recall_cost): the exact
-    # arm is checkpointed ONCE (it used to be re-inlined — and
-    # re-executed — inside all six variant arms of the single union
-    # job), every variant is built in a thread (py4j + eager analysis
-    # overlap), and each 10-row arm aggregate materializes as its own
-    # concurrent job.  Checkpointed contents are order-independent, so
-    # the matrix is bit-identical.
-    from concurrent.futures import ThreadPoolExecutor
+    # The exact arm is materialized ONCE (inlined, all six variant arms
+    # would re-execute it), every variant is built concurrently with it
+    # (py4j + eager analysis overlap), and each 10-row arm aggregate
+    # materializes as its own concurrent job.  Materialized contents
+    # are order-independent, so the matrix is bit-identical.
+    exact, *variants = concurrently(
+        lambda: _exact_topk(queries, e), *builders.values()
+    )
 
-    # max_workers invariant: the 7 prerequisite tasks (exact + 6
-    # variant builds) are all submitted BEFORE any dependent arm task,
-    # so with 8 workers no dependent can starve its prerequisite.
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        f_exact = pool.submit(
-            lambda: knn_bruteforce(queries, e, k=_K)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint()
+    def arm(name, v):
+        v = v.select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
+        return materialize(
+            exact.join(v, ["query_id", "neighbor_id"], "left")
+            .groupBy("query_id")
+            .agg(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"))
+            .select(
+                F.lit(name).alias("variant"),
+                "query_id",
+                F.col("n_hits").cast("long").alias("n_hits"),
+                (F.col("n_hits") / F.lit(float(_K))).alias("recall"),
+            )
         )
-        variant_builders = {
-            "lsh": lambda: knn_lsh(queries, e, k=_K, dim=_DIM, n_planes=6),
-            "lsh_multiprobe": lambda: knn_lsh_multiprobe(
-                queries, e, _MP_TABLE, k=_K
-            ),
-            "ivf": lambda: knn_ivf(queries, e, k=_K, n_cells=8, n_probe=2),
-            "binary": lambda: knn_binary(
-                queries, e, dim=_DIM, k=_K, shortlist=_SHORTLIST
-            ),
-            "ivf_binary": lambda: knn_ivf_binary(
-                queries, e, dim=_DIM, k=_K, n_cells=8, n_probe=2,
-                shortlist=_IVFB_SHORTLIST,
-            ),
-            "sq8": lambda: knn_sq8(
-                queries, e, dim=_DIM, k=_K, shortlist=_SQ_SHORTLIST
-            ),
-        }
-        variant_futs = {
-            name: pool.submit(b) for name, b in variant_builders.items()
-        }
 
-        def build_arm(name):
-            v = variant_futs[name].result().select(
-                "query_id", "neighbor_id", F.lit(1).alias("_hit")
-            )
-            return (
-                f_exact.result()
-                .join(v, ["query_id", "neighbor_id"], "left")
-                .groupBy("query_id")
-                .agg(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"))
-                .select(
-                    F.lit(name).alias("variant"),
-                    "query_id",
-                    F.col("n_hits").cast("long").alias("n_hits"),
-                    (F.col("n_hits") / F.lit(float(_K))).alias("recall"),
-                )
-                .localCheckpoint()
-            )
-
-        arm_futs = [pool.submit(build_arm, name) for name in variant_builders]
-        arms = [f.result() for f in arm_futs]
+    arms = concurrently(
+        *[partial(arm, name, v) for name, v in zip(builders, variants)]
+    )
     out = arms[0]
-    for arm in arms[1:]:
-        out = out.unionByName(arm)
+    for a in arms[1:]:
+        out = out.unionByName(a)
     # the 60-row matrix feeds the output rows AND the means AND the CI
     # replicate join — the arms above are already materialized, so the
-    # three consumers re-read checkpoints instead of re-running the six
-    # ANN pipelines (r11 review; the repo's multi-consumer pattern)
+    # three consumers re-read them instead of re-running the six ANN
+    # pipelines
 
     # ---- deterministic bootstrap CI over the per-query recalls ----
     # Replicate sums use integer n_hits (exact), divided once by
@@ -772,14 +787,13 @@ def knn_hubness_audit(spark, sf_dir):
     cnt = graph.groupBy(
         F.col("neighbor_id").alias("vec_id")
     ).agg(F.count(F.lit(1)).alias("_c"))
-    # localCheckpoint: occ feeds BOTH the moments aggregate and the
-    # histogram — without it each branch re-runs the GEMM graph
-    # (r11 review); the checkpointed relation is |corpus| integers
-    occ = (
+    # materialize: occ feeds BOTH the moments aggregate and the
+    # histogram — without it each branch re-runs the GEMM graph; the
+    # materialized relation is |corpus| integers
+    occ = materialize(
         e.select("vec_id")
         .join(cnt, "vec_id", "left")
         .select(F.coalesce(F.col("_c"), F.lit(0)).cast("long").alias("c"))
-        .localCheckpoint()
     )
     sums = occ.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1169,29 +1183,14 @@ _FRONT_SHORT = 50  # binary / sq8 shortlist
 def shared_knn_relations(spark, sf_dir):
     """(exact, cents_lit) built ONCE for multi-arm consumers — the
     run-card composition runs BOTH vector decision tables
-    (knn_frontier_recall_cost and knn_ivf_probe_frontier), and before
-    r14 each independently recomputed the brute-force exact top-k AND
-    collected the head-id coarse-quantizer centroids.  ``exact`` is
-    localCheckpointed (it anchors recall in both tables); ``cents_lit``
+    (knn_frontier_recall_cost and knn_ivf_probe_frontier), which would
+    otherwise each recompute the brute-force exact top-k AND collect
+    the head-id coarse-quantizer centroids.  ``exact`` is
+    materialized (it anchors recall in both tables); ``cents_lit``
     is the centroid literal — one driver collect instead of two."""
-    from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
-        centroids_literal,
-        head_centroid_pairs,
-        knn_bruteforce,
-    )
-
     e = t(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
-    exact = (
-        knn_bruteforce(queries, e, k=_K)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-    )
-    cent_pairs = head_centroid_pairs(e, "vec_id", "embedding", 8)
-    cents_lit = centroids_literal(
-        cent_pairs, e.schema["vec_id"].dataType.simpleString()
-    )
-    return exact, cents_lit
+    return _exact_topk(queries, e), _head_cents_lit(e)
 
 
 def knn_frontier_recall_cost(spark, sf_dir, _shared=None):
@@ -1209,86 +1208,49 @@ def knn_frontier_recall_cost(spark, sf_dir, _shared=None):
         dot_col,
     )
     from rick_and_morty_data_pipeline_project_spark.operators.binquant import (
-        knn_ivf_binary,
         probe_bucket_cols,
     )
     from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
         _normalized,
         cell_sim_cmp,
-        centroids_literal,
-        head_centroid_pairs,
-        knn_bruteforce,
-        knn_ivf,
-        knn_lsh,
         lsh_bucket_col,
     )
-    from rick_and_morty_data_pipeline_project_spark.operators.sq import knn_sq8
 
     e = t(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 10)
 
-    # CONCURRENT arm construction + materialization (r15, guide §2.6 —
-    # the run-card pattern): this builder's wall time was dominated by
-    # SERIAL driver work — six variant pipelines built one after
-    # another (py4j + eager analysis per DataFrame op), then one giant
-    # union materialized in a single job whose AQE stage waves
-    # serialize the arm tails.  Building every variant in a thread and
-    # eagerly checkpointing each ONE-ROW hit/count aggregate
-    # concurrently lets the scheduler overlap all of it; checkpointed
-    # contents are order-independent, so the relation is bit-identical.
-    from concurrent.futures import ThreadPoolExecutor
+    # Six variant pipelines built one after another (py4j + eager
+    # analysis per DataFrame op) and one giant union job whose AQE
+    # stage waves serialize the arm tails would make this builder's
+    # wall time SERIAL driver work.  Instead the hit arms and the
+    # candidate counts are two independent chains: every variant is
+    # built in its own thread and each ONE-ROW hit/count aggregate
+    # materializes as its own concurrent job.  Materialized contents
+    # are order-independent, so the relation is bit-identical.
 
-    # max_workers invariant: the 7 prerequisite tasks (exact + 6
-    # variant builds) are all submitted BEFORE any dependent hit-arm
-    # task, so with 8 workers every prerequisite is running before a
-    # dependent can block on it — no thread-starvation deadlock.
-    with ThreadPoolExecutor(max_workers=8) as pool:
-
+    def hit_arms():
         # ---- recall arms (the matrix's variants, means only) ----
-        if _shared is not None:
-            f_exact = pool.submit(lambda: _shared[0])
-        else:
-            f_exact = pool.submit(
-                lambda: knn_bruteforce(queries, e, k=_K)
-                .select("query_id", "neighbor_id")
-                .localCheckpoint()
-            )
-        variant_builders = {
-            "lsh": lambda: knn_lsh(queries, e, k=_K, dim=_DIM, n_planes=6),
-            "lsh_multiprobe": lambda: knn_lsh_multiprobe(
-                queries, e, _MP_TABLE, k=_K
-            ),
-            "ivf": lambda: knn_ivf(queries, e, k=_K, n_cells=8, n_probe=2),
-            "binary": lambda: knn_binary(
-                queries, e, dim=_DIM, k=_K, shortlist=_SHORTLIST
-            ),
-            "ivf_binary": lambda: knn_ivf_binary(
-                queries, e, dim=_DIM, k=_K, n_cells=8, n_probe=2,
-                shortlist=_IVFB_SHORTLIST,
-            ),
-            "sq8": lambda: knn_sq8(
-                queries, e, dim=_DIM, k=_K, shortlist=_SQ_SHORTLIST
-            ),
-        }
-        variant_futs = {
-            name: pool.submit(b) for name, b in variant_builders.items()
-        }
+        builders = _variant_builders(queries, e)
+        exact, *variants = concurrently(
+            lambda: _shared[0] if _shared is not None else _exact_topk(queries, e),
+            *builders.values(),
+        )
 
-        def hit_arm(name):
-            df = variant_futs[name].result()
-            return (
-                f_exact.result()
-                .join(
-                    df.select("query_id", "neighbor_id"),
+        def arm(name, v):
+            return materialize(
+                exact.join(
+                    v.select("query_id", "neighbor_id"),
                     ["query_id", "neighbor_id"],
                 )
                 .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
                 .select(F.lit(name).alias("variant"), "n_hits")
-                .localCheckpoint()
             )
 
-        hit_futs = [pool.submit(hit_arm, name) for name in variant_builders]
+        return concurrently(
+            *[partial(arm, name, v) for name, v in zip(builders, variants)]
+        )
 
+    def counts():
         # ---- candidate-stage counts ----
         # corpus size (full-scan tiers touch every non-self vector)
         ncorp = e.agg(F.count(F.lit(1)).cast("long").alias("_n"))
@@ -1312,7 +1274,7 @@ def knn_frontier_recall_cost(spark, sf_dir, _shared=None):
                 F.col("vec_id").alias(out_id), F.explode(keys).alias("bucket")
             )
 
-        # fan_out (r15, guide §2.6): the corpus-side bucket/assignment
+        # fan_out: the corpus-side bucket/assignment
         # expressions below are interpreted higher-order vector folds; on
         # the unsplittable single-file local scan they ran on ONE task
         # while 31 cores idled.  Count semantics are aggregates over
@@ -1359,13 +1321,7 @@ def knn_frontier_recall_cost(spark, sf_dir, _shared=None):
         # ivf / ivf_binary: probed-cell memberships under the shared
         # head-id coarse quantizer (identical pair count for both tiers);
         # per-query counts also bound ivf_binary's exact rerank
-        if _shared is not None:
-            cents_lit = _shared[1]
-        else:
-            cent_pairs = head_centroid_pairs(e, "vec_id", "embedding", 8)
-            cents_lit = centroids_literal(
-                cent_pairs, e.schema["vec_id"].dataType.simpleString()
-            )
+        cents_lit = _shared[1] if _shared is not None else _head_cents_lit(e)
         nc = _normalized(fan_out(e), "vec_id", "embedding", "_id", "_nv")
         nq = _normalized(queries, "vec_id", "embedding", "_id", "_nv")
 
@@ -1396,19 +1352,15 @@ def knn_frontier_recall_cost(spark, sf_dir, _shared=None):
             .alias("_rer"),
         )
 
-        # materialize the one-row count relations concurrently with the
-        # hit arms (each is an independent job; contents order-free)
-        f_lsh_tot = pool.submit(lsh_tot.localCheckpoint)
-        f_mp_tot = pool.submit(mp_tot.localCheckpoint)
-        f_ivf_tot = pool.submit(ivf_tot.localCheckpoint)
-        f_ncorp = pool.submit(ncorp.localCheckpoint)
+        # each one-row count relation is an independent job
+        return concurrently(
+            *[partial(materialize, df) for df in (lsh_tot, mp_tot, ivf_tot, ncorp)]
+        )
 
-        hit_arms = [f.result() for f in hit_futs]
-        hits = hit_arms[0]
-        for arm in hit_arms[1:]:
-            hits = hits.unionByName(arm)
-        lsh_tot, mp_tot = f_lsh_tot.result(), f_mp_tot.result()
-        ivf_tot, ncorp = f_ivf_tot.result(), f_ncorp.result()
+    arms, (lsh_tot, mp_tot, ivf_tot, ncorp) = concurrently(hit_arms, counts)
+    hits = arms[0]
+    for a in arms[1:]:
+        hits = hits.unionByName(a)
 
     # ---- per-variant cost rows ----
     def _lits(b, r):
@@ -1458,9 +1410,10 @@ def knn_frontier_recall_cost(spark, sf_dir, _shared=None):
     for row in cost_rows[1:]:
         costs = costs.unionByName(row)
 
-    m = (
-        hits.join(costs, "variant")
-        .select(
+    # 6-row relation feeds the output AND the dominance self-join —
+    # unmaterialized, every ANN arm would re-execute per branch
+    m = materialize(
+        hits.join(costs, "variant").select(
             "variant",
             F.round(
                 F.col("n_hits").cast("double") / F.lit(float(_RM_N * _K)), 6
@@ -1475,10 +1428,6 @@ def knn_frontier_recall_cost(spark, sf_dir, _shared=None):
             .cast("long")
             .alias("cost_bytes"),
         )
-        # 6-row relation feeds the output AND the dominance self-join
-        # — without the checkpoint every ANN arm re-executes per branch
-        # (the knn_recall_matrix lesson)
-        .localCheckpoint()
     )
     other = m.select(
         F.col("mean_recall").alias("_or"), F.col("cost_bytes").alias("_oc")
@@ -1643,8 +1592,6 @@ def knn_ivf_probe_frontier(spark, sf_dir, _shared=None):
     from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
         _normalized,
         cell_sim_cmp,
-        centroids_literal,
-        head_centroid_pairs,
         knn_bruteforce,
     )
 
@@ -1652,14 +1599,8 @@ def knn_ivf_probe_frontier(spark, sf_dir, _shared=None):
     queries = e.filter(F.col("vec_id") < 10)
     n_cells = 8
 
-    if _shared is not None:
-        cents_lit = _shared[1]
-    else:
-        cent_pairs = head_centroid_pairs(e, "vec_id", "embedding", n_cells)
-        cents_lit = centroids_literal(
-            cent_pairs, e.schema["vec_id"].dataType.simpleString()
-        )
-    # fan_out (r15, guide §2.6): the corpus cell assignment below is an
+    cents_lit = _shared[1] if _shared is not None else _head_cents_lit(e, n_cells)
+    # fan_out: the corpus cell assignment below is an
     # interpreted 8-centroid fold + comparator sort per row — on the
     # 1-task local scan it serialized the whole px materialization onto
     # one core (measured 8.2 s of this query's 9.1 s construct).
@@ -1686,7 +1627,7 @@ def knn_ivf_probe_frontier(spark, sf_dir, _shared=None):
     # below the fan_out exchange onto the 1-task scan (measured: 8.6 s
     # of this query's construct was that single-task double
     # evaluation; the operator knn_ivf was immune for exactly this
-    # reason — its assignment explodes).  Guide §2.4/§7.2.
+    # reason — its assignment explodes).
     cells = nc.select(
         F.col("_id").alias("neighbor_id"),
         F.col("_nv").alias("_cv"),
@@ -1713,16 +1654,18 @@ def knn_ivf_probe_frontier(spark, sf_dir, _shared=None):
             F.round(dot_col(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
         )
     )
-    px = pairs.select(
-        "query_id",
-        "neighbor_id",
-        "cosine",
-        F.explode(F.sequence(F.col("pr"), F.lit(n_cells))).alias("n_probe"),
-    # localCheckpoint: px feeds BOTH the hits branch (window + exact
-    # join) and the cand count — without it the assignment + pair
-    # scoring pipeline executes once per branch (the knn_recall_matrix
-    # multi-consumer lesson); the relation is |queries|·N·avg-fan rows
-    ).localCheckpoint()
+    # materialize: px feeds BOTH the hits branch (window + exact join)
+    # and the cand count — without it the assignment + pair scoring
+    # pipeline executes once per branch; the relation is
+    # |queries|·N·avg-fan rows
+    px = materialize(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            "cosine",
+            F.explode(F.sequence(F.col("pr"), F.lit(n_cells))).alias("n_probe"),
+        )
+    )
     exact = (
         _shared[0]
         if _shared is not None

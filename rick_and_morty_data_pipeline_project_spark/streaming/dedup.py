@@ -17,6 +17,9 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    materialize,
+)
 from rick_and_morty_data_pipeline_project_spark.session import hadoop_fs
 
 # Folded into the key of every application-scoped corpus index: in local
@@ -315,9 +318,9 @@ def stream_ingest_neardup(
         sess = batch_df.sparkSession
         query_id = sess.sparkContext.getLocalProperty("sql.streaming.queryId")
         tag = f"{query_id}:{batch_id}"
-        batch = with_minhash_signature(
-            batch_df, text_col, num_hashes, shingle_k
-        ).localCheckpoint()  # hashed once, consumed twice
+        batch = materialize(  # hashed once, consumed twice
+            with_minhash_signature(batch_df, text_col, num_hashes, shingle_k)
+        )
         seen = _corpus_index(sess, corpus, index_dir, *params)
         id_field = batch.schema[id_col]
         ids = StructType([id_field])

@@ -536,15 +536,27 @@ class _ArmFailed(RuntimeError):
     pass
 
 
-@pytest.mark.parametrize("builder", ["knn_recall_matrix", "knn_frontier_recall_cost"])
+_ARM_BUILDERS = {
+    "knn_recall_matrix": "vecxq",
+    "knn_frontier_recall_cost": "vecxq",
+    "curation_run_card": "runcardq",
+}
+
+
+@pytest.mark.parametrize("builder", list(_ARM_BUILDERS))
 def test_failing_arm_surfaces_and_shuts_pool_down(spark, monkeypatch, builder):
-    # one variant builder raises inside the concurrent arm pool: the
-    # caller must see that exception, and every pool worker thread
-    # must be gone once it does
+    # one variant builder raises inside the concurrent arm threads (for
+    # the run card, two ``concurrently`` levels down): the caller must
+    # see that exception, and every worker thread must be gone once it
+    # does
+    import importlib
     import threading
 
     from rick_and_morty_data_pipeline_project_spark.operators import sq
-    from rick_and_morty_data_pipeline_project_spark.queries import vecxq
+
+    queries = importlib.import_module(
+        f"rick_and_morty_data_pipeline_project_spark.queries.{_ARM_BUILDERS[builder]}"
+    )
 
     def boom(*args, **kwargs):
         raise _ArmFailed("sq8 arm")
@@ -552,7 +564,7 @@ def test_failing_arm_surfaces_and_shuts_pool_down(spark, monkeypatch, builder):
     monkeypatch.setattr(sq, "knn_sq8", boom)
     before = set(threading.enumerate())
     with pytest.raises(_ArmFailed, match="sq8 arm"):
-        getattr(vecxq, builder)(spark, SF_SMALL)
+        getattr(queries, builder)(spark, SF_SMALL)
     left = [
         th.name
         for th in threading.enumerate()
