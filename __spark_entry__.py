@@ -42,7 +42,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query.  Omitted only for the
     FROZEN rows-only core of 4 genuinely non-SQL-expressible entries
-    (pinned in ``tests/test_rotation_tooling.py``; adjudications in
+    (pinned in ``tests/test_oracle_parity.py``; adjudications in
     COVERAGE.md §rows-only): ``agg_approx_distinct`` (certifies Spark's
     own HLL++ ``approx_count_distinct`` — engine-internal by
     definition), ``events_hourly_percentiles_approx`` and

@@ -17,7 +17,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
 from rick_and_morty_data_pipeline_project_spark.session import get_spark
 
 HEADLINE = [
@@ -42,17 +41,25 @@ HEADLINE = [
 ]
 
 
+def min_wall_s(spark, fn, sf_dir, reps) -> float:
+    """Least wall-clock seconds, rounded to ms, of ``reps`` runs of the
+    catalog query ``fn`` at ``sf_dir``, each forced to full
+    materialization through the noop sink."""
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    return round(best, 3)
+
+
 def main() -> None:
+    # The catalog is imported only here: tools that import this module
+    # set SPARK_GRAFT_ORACLE_SF_DIR before they import the catalog.
+    from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Pre-run load, captured BEFORE the JVM starts: the post-run
-    # 1-minute average is inflated by the bench itself, so only the
-    # pre-run number tells whether the host was already contended when
-    # timing began.
-    try:
-        pre_load_1m = round(os.getloadavg()[0], 2)
-    except OSError:
-        pre_load_1m = None
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -71,25 +78,10 @@ def main() -> None:
     # shared host see multi-x scheduling jitter (measured: the same
     # query 2.0s-6.8s across back-to-back runs); the min reflects
     # execution, which is what a long-lived session sees.
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = QUERIES[name].fn
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-
+    timings = {
+        name: min_wall_s(spark, QUERIES[name].fn, sf_dir, 3) for name in HEADLINE
+    }
     total = round(sum(timings.values()), 3)
-    # Host-load annotation: this shared host shows multi-x scheduling
-    # jitter (PERFORMANCE.md quotes 2.0-6.8 s for one query back to
-    # back); the 1-minute load average lets a reviewer separate
-    # contention from plan regressions when comparing rounds.
-    try:
-        load_1m = round(os.getloadavg()[0], 2)
-    except OSError:
-        load_1m = None
     print(
         json.dumps(
             {
@@ -99,8 +91,6 @@ def main() -> None:
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "protocol": "min_of_3",
-                "host_load_1m_pre": pre_load_1m,
-                "host_load_1m": load_1m,
             }
         )
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 
@@ -22,13 +23,15 @@ def concurrently(*fns):
     """Call each zero-argument function in its own thread; return the
     results in argument order.  Each blocking driver action (a
     ``materialize`` job, a collect) then overlaps the others' on the
-    Spark scheduler.  If any call raises, the first failure in
-    argument order is raised after every call has returned.  Nested
-    calls are safe: every call has its own thread, so none waits for a
-    free worker.  Express dependent steps as a chain inside one
-    function and independent chains as sibling arguments."""
+    Spark scheduler.  Every call runs with the caller's Spark local
+    properties (job group, description, scheduler pool), so its jobs
+    are attributed like the caller's own.  If any call raises, the
+    first failure in argument order is raised after every call has
+    returned.  Nested calls are safe: every call has its own thread, so
+    none waits for a free worker.  Express dependent steps as a chain
+    inside one function and independent chains as sibling arguments."""
     with ThreadPoolExecutor(max_workers=max(len(fns), 1)) as pool:
-        futures = [pool.submit(fn) for fn in fns]
+        futures = [pool.submit(inheritable_thread_target(fn)) for fn in fns]
     return [f.result() for f in futures]
 
 

@@ -7,37 +7,13 @@ fully hash-verified against DuckDB by the driver; ``sql=None`` entries
 get the rows-only check and are covered by Python oracles in tests/.
 
 Driver window contract: the verification driver compares the FIRST 50
-exported queries against their oracles.  ``DRIVER_WINDOW`` pins those
-50 slots explicitly; every slot must carry a full DuckDB oracle, and
-``queries_dict()`` exports them first, in that order.  Every query
-outside the window stays exported (positions 51+) and is still
-cell-exact verified locally by tests/test_oracle_parity.py, which
-parametrizes the WHOLE catalog.
-
-Rotation policy (standing).  A green driver row certifies the code as
-it was when the row was earned, so the window rotates each round, built
-from ``python tools/rotation_report.py`` output in this order:
-
-1. **Never-checked first.**  Every oracled query that has never held a
-   driver CORRECTNESS row is scheduled before anything else.  Queries
-   born after a freeze get exactly one cycle of grace, recorded in
-   ``tools/pending_births.json``.
-2. **Changed-file re-checks.**  A query whose implementation (its
-   function source, oracle SQL, or any ``operators.*``/``functions.*``
-   module it references — fingerprinted in
-   ``tools/query_fingerprints.json``) changed since its last green row
-   must re-enter the window.  Changed queries a freeze could not fit
-   are recorded in ``tools/stale_carryover.json`` and get one cycle.
-3. **Flagship every round**, then oldest-green-first refreshes.  A
-   green row older than ``MAX_GREEN_AGE`` rounds must be refreshed,
-   unless the current round's committed full-catalog sweep
-   (``SWEEP_r{N}.json``, written by ``tools/driver_sim_sweep.py
-   --artifact`` with the driver's comparator) shows it hash-green; the
-   sweep never substitutes for a never-checked or red query.
-
-``--update-fingerprints`` freezes a window; ``--assert-no-debt`` gates
-a round close on all three rules.  The reasoning behind each past
-window lives in git history.
+exported queries against their oracles.  ``DRIVER_WINDOW`` is that
+fixed list: 50 distinct catalog entries, each carrying a full DuckDB
+oracle, and ``queries_dict()`` exports them first, in this order.  The
+import-time asserts below check all of it, so a window entry that loses
+its oracle fails loudly at import.  Every query outside the window stays
+exported (positions 51+) and is still cell-exact verified locally by
+tests/test_oracle_parity.py, which parametrizes the WHOLE catalog.
 """
 
 from __future__ import annotations
@@ -130,38 +106,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "scalar_math_functions",
     "scalar_null_conditional",
     "scalar_regex_functions",
-)
-
-# Canonical-literal oracles (knn_cosine_ivf_kmeans, the PCA
-# projection, ...) are fit from the sf0.01 testdata at import; on a
-# machine without the testdata tree those entries degrade to rows-only.
-# Keep the window all-oracled by swapping any degraded entry for an
-# ever-green spare that still carries its oracle.
-_SPARES = [
-    "q1_pricing_summary",
-    "q3_top_unshipped_orders",
-    "q5_nation_volume",
-    "q6_forecast_revenue",
-    "knn_cosine_bruteforce",
-    "text_quality_scores",
-    "knn_cosine_ivf",
-    "topk_two_stage_parts",
-]
-_spares = [
-    s
-    for s in _SPARES
-    if s not in DRIVER_WINDOW and _ALL[s].sql is not None
-]
-_degraded = [n for n in DRIVER_WINDOW if _ALL[n].sql is None]
-if len(_degraded) > len(_spares):
-    raise RuntimeError(
-        f"{len(_degraded)} window entries degraded to rows-only "
-        f"(missing testdata for canonical-literal oracles: {_degraded}) "
-        f"but only {len(_spares)} oracled spares are available — "
-        "cannot keep the driver window all-oracled"
-    )
-DRIVER_WINDOW = tuple(
-    n if _ALL[n].sql is not None else _spares.pop(0) for n in DRIVER_WINDOW
 )
 
 assert len(DRIVER_WINDOW) == 50, len(DRIVER_WINDOW)

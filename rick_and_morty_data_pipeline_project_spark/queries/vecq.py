@@ -857,7 +857,7 @@ def _pca_oracle_sql():
     """Projection oracle with the canonical sf0.01 components inlined
     as literals (driver correctness runs are pinned to sf0.01).  Built
     at import; if the testdata tree is absent the entry falls back to
-    rows-only (catalog swaps the window slot)."""
+    rows-only; it sits outside the driver window."""
     import numpy as np
 
     canon = _canonical_pca_model("/root/testdata/sf0.01")

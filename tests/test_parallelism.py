@@ -22,6 +22,7 @@ from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
     concurrently,
     materialize,
 )
+from tests.conftest import job_ids
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "rick_and_morty_data_pipeline_project_spark"
@@ -100,6 +101,19 @@ def test_concurrently_nests_without_waiting_for_a_worker():
         return concurrently(barrier.wait, barrier.wait)
 
     assert sorted(sum(concurrently(pair, pair), [])) == [0, 1, 2, 3]
+
+
+def test_concurrently_jobs_carry_the_callers_job_group(spark):
+    def first():
+        spark.range(10).count()
+
+    def second():
+        spark.range(20).count()
+
+    on_caller = job_ids(spark, lambda: (first(), second()))
+    assert len(on_caller) >= 2
+    in_threads = job_ids(spark, lambda: concurrently(first, second))
+    assert len(in_threads) == len(on_caller)
 
 
 class _Failed(RuntimeError):

@@ -9,11 +9,6 @@ two runs with plain jq/diff.
 
 Usage:
   python tools/catalog_bench.py [sf_dir] [--reps N] [--out PATH]
-
-Timing caveat (PERFORMANCE.md noise policy): single runs on this host
-swing 2-3x under load; min-of-reps with a warm JVM is the only number
-worth recording, and even that only on a quiet host (load_1m printed
-into the artifact for honesty).
 """
 
 from __future__ import annotations
@@ -44,6 +39,7 @@ def main() -> None:
             i += 1
 
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
+    from bench import min_wall_s
     from rick_and_morty_data_pipeline_project_spark.session import get_spark
 
     spark = get_spark(app_name="catalog-bench", cpus=32)
@@ -56,16 +52,8 @@ def main() -> None:
     errors: dict[str, str] = {}
     t_start = time.time()
     for name, fn in qs.items():
-        best = None
         try:
-            for _ in range(reps):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            times[name] = round(best, 3)
+            times[name] = min_wall_s(spark, fn, sf_dir, reps)
         except Exception as ex:  # keep sweeping; record the failure
             errors[name] = f"{type(ex).__name__}: {ex}"[:200]
         print(f"{name}: {times.get(name, 'ERR')}", flush=True)
@@ -73,7 +61,6 @@ def main() -> None:
     artifact = {
         "sf_dir": sf_dir,
         "reps": reps,
-        "host_load_1m": os.getloadavg()[0],
         "total_sweep_s": round(time.time() - t_start, 1),
         "n_queries": len(times),
         "errors": errors,

@@ -6,25 +6,17 @@ tests/oracle_harness.compare because dtype differences (e.g. DuckDB
 HUGEINT → float64) change the repr and fail here.
 
 Usage: python tools/driver_sim_sweep.py [sf_dir] [--window-only]
-           [--artifact] [--round=N]
-
-``--artifact`` writes the committed per-round certificate
-``SWEEP_r{N}.json`` consumed by tools/rotation_report.py's max-age
-gate (policy v2, round 9).
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import sys
 
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -110,7 +102,6 @@ def main() -> int:
         for n in skipped:
             print(f"{n}: SKIP (canonical-literal sf0.01 oracle)", flush=True)
     bad = []
-    rows: dict[str, dict] = {}
     for name in names:
         if name not in osql:
             bad.append((name, "WINDOW ENTRY WITHOUT ORACLE"))
@@ -120,23 +111,11 @@ def main() -> int:
             o = con.execute(osql[name]).df()
         except Exception as exc:  # noqa: BLE001
             bad.append((name, f"ERROR {type(exc).__name__}: {exc}"))
-            rows[name] = {
-                "rows_match": False,
-                "hash_match": False,
-                "err": f"{type(exc).__name__}: {exc}"[:500],
-            }
             print(f"{name}: ERROR {exc}", flush=True)
             continue
-        rows[name] = {
-            "rows_match": len(s) == len(o),
-            "hash_match": norm_hash(s) == norm_hash(o),
-            "err": None,
-            "spark_rows": len(s),
-            "oracle_rows": len(o),
-        }
         if len(s) != len(o):
             bad.append((name, f"rows {len(s)} vs {len(o)}"))
-        elif not rows[name]["hash_match"]:
+        elif norm_hash(s) != norm_hash(o):
             bad.append((name, f"hash mismatch ({len(s)} rows)"))
         else:
             print(f"{name}: OK ({len(s)} rows)", flush=True)
@@ -144,37 +123,6 @@ def main() -> int:
         print(f"FAIL {name}: {why}")
     tail = f" ({len(skipped)} canonical-literal skips)" if skipped else ""
     print(f"\n{len(names) - len(bad)}/{len(names)} OK{tail}")
-    if "--artifact" in sys.argv:
-        # SWEEP_r{N}.json: the committed full-catalog certificate for
-        # the round IN PROGRESS (N = newest CORRECTNESS round + 1, i.e.
-        # this sweep was run after that round's verdict landed and
-        # before the next driver run).  rotation_report's max-age gate
-        # accepts a hash-green sweep row as freshness evidence for
-        # over-age driver certificates — see the policy note there.
-        import glob
-        import re as _re
-
-        rounds = [
-            int(_re.search(r"_r(\d+)", os.path.basename(p)).group(1))
-            for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-        ]
-        n = max(rounds, default=0) + 1
-        for a in sys.argv:
-            if a.startswith("--round="):
-                n = int(a.split("=", 1)[1])
-        out = {
-            "_meta": {
-                "round": n,
-                "sf_dir": sf_dir,
-                "n_total": len(names),
-                "n_ok": len(names) - len(bad),
-            }
-        }
-        out.update(dict(sorted(rows.items())))
-        path = os.path.join(REPO, f"SWEEP_r{n:02d}.json")
-        with open(path, "w") as f:
-            json.dump(out, f, indent=1, sort_keys=False)
-        print(f"wrote {path} ({len(rows)} rows, round {n})")
     return 1 if bad else 0
 
 

@@ -3,7 +3,7 @@ plans/<tag>/<query>_<suffix>.txt — the optimization-round evidence
 files (before/after plan diffs).
 
 Usage:
-  python tools/dump_plans.py --tag r14 --suffix before [query ...]
+  python tools/dump_plans.py --tag TAG [--suffix before] [query ...]
 
 With no query names, dumps the bench.py HEADLINE set.  NOTE: queries
 whose fn() materializes eagerly (localCheckpoint during construction)
@@ -22,7 +22,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     argv = sys.argv[1:]
-    tag, suffix = "r14", "before"
+    tag, suffix = None, "before"
     names: list[str] = []
     i = 0
     while i < len(argv):
@@ -35,6 +35,8 @@ def main() -> None:
         else:
             names.append(argv[i])
             i += 1
+    if tag is None:
+        raise SystemExit("--tag is required (output goes to plans/<tag>/)")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES

@@ -28,7 +28,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -176,6 +175,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from bench import min_wall_s
     from rick_and_morty_data_pipeline_project_spark.queries.catalog import (
         QUERIES as CAT,
     )
@@ -220,15 +220,7 @@ def main() -> None:
             fn = CAT[name].fn
             row = {}
             for label, sf in (("base", base), (f"x{mult}", scaled)):
-                best = None
-                for _ in range(2):
-                    t0 = time.time()
-                    fn(spark, sf).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    dt = time.time() - t0
-                    best = dt if best is None else min(best, dt)
-                row[label] = round(best, 3)
+                row[label] = min_wall_s(spark, fn, sf, 2)
             row["ratio"] = round(row[f"x{mult}"] / row["base"], 2)
             results[name] = row
             print(f"{name}: {row}", flush=True)
@@ -236,7 +228,6 @@ def main() -> None:
         out = {
             "mult": mult,
             "base": base,
-            "host_load_1m": os.getloadavg()[0],
             "results": results,
         }
         if out_path:
