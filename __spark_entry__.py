@@ -52,10 +52,11 @@ def oracle_sql() -> dict[str, str]:
     md5(BLOB) — unavailable in DuckDB.  The former rows-only sketch
     entries (``sketch_hll_rollup``, ``sketch_cms_user_counts``,
     ``events_rolling_dau_hll``) were promoted to full oracles in r7-r9
-    via explicit-register relational sketches.  (Two more —
-    ``embedding_pca_project``, ``knn_cosine_ivf_kmeans`` — carry
-    canonical-literal oracles built from the sf0.01 testdata at import
-    and degrade to rows-only only when that tree is absent.)  Every
-    rows-only entry carries a Python oracle or property test in tests/
-    instead."""
-    return oracle_sql_dict()
+    via explicit-register relational sketches.  Every rows-only entry
+    carries a Python oracle or property test in tests/ instead.
+
+    The oracles are built for the sf0.01 tree the driver compares on:
+    the few that inline literals fitted from a corpus (PCA components,
+    k-means/PQ/OPQ codebooks, the compaction plan, per-file paths) are
+    fitted from that tree by this call, not at import."""
+    return oracle_sql_dict("/root/testdata/sf0.01")

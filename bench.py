@@ -54,8 +54,6 @@ def min_wall_s(spark, fn, sf_dir, reps) -> float:
 
 
 def main() -> None:
-    # The catalog is imported only here: tools that import this module
-    # set SPARK_GRAFT_ORACLE_SF_DIR before they import the catalog.
     from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

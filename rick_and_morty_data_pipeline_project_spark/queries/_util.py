@@ -19,7 +19,7 @@ values, so "close" is not enough — SURVEY.md §7 hard-part 4):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable, Optional, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,10 +27,12 @@ from pyspark.sql import functions as F
 
 @dataclass
 class Q:
-    """A catalog entry: Spark implementation + optional DuckDB oracle SQL."""
+    """A catalog entry: Spark implementation + optional DuckDB oracle,
+    as SQL text or as a builder ``sf_dir -> str | None`` of a tree-fitted
+    one (``catalog.oracle_sql_dict`` calls it)."""
 
     fn: Callable[[SparkSession, str], DataFrame]
-    sql: Optional[str]
+    sql: Union[str, Callable[[str], Optional[str]], None]
     doc: str = ""
 
 

@@ -5,11 +5,15 @@ Each entry is an operator-family exemplar from SURVEY.md §2 (plus the
 fully hash-verified against DuckDB by the driver; ``sql=None`` entries
 (sequential greedy matching, LSH with engine-side constants, sketches)
 get the rows-only check and are covered by Python oracles in tests/.
+An oracle that inlines literals fitted from a corpus tree (PCA
+components, k-means/PQ/OPQ codebooks, the compaction plan, file paths)
+is a builder that ``oracle_sql_dict(sf_dir)`` calls on the tree it is
+given; importing the catalog reads no data.
 
 Driver window contract: the verification driver compares the FIRST 50
 exported queries against their oracles.  ``DRIVER_WINDOW`` is that
-fixed list: 50 distinct catalog entries, each carrying a full DuckDB
-oracle, and ``queries_dict()`` exports them first, in this order.  The
+fixed list: 50 distinct catalog entries, each carrying its DuckDB
+oracle as SQL text, and ``queries_dict()`` exports them first, in this order.  The
 import-time asserts below check all of it, so a window entry that loses
 its oracle fails loudly at import.  Every query outside the window stays
 exported (positions 51+) and is still cell-exact verified locally by
@@ -17,6 +21,8 @@ tests/test_oracle_parity.py, which parametrizes the WHOLE catalog.
 """
 
 from __future__ import annotations
+
+import os
 
 from rick_and_morty_data_pipeline_project_spark.queries import (
     bbitq,
@@ -43,6 +49,7 @@ from rick_and_morty_data_pipeline_project_spark.queries import (
     vecxq,
 )
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q
+from rick_and_morty_data_pipeline_project_spark.sources.corpus import TABLES
 
 _ALL: dict[str, Q] = {}
 for mod in (
@@ -112,7 +119,9 @@ assert len(DRIVER_WINDOW) == 50, len(DRIVER_WINDOW)
 assert len(set(DRIVER_WINDOW)) == 50, "duplicate name in DRIVER_WINDOW"
 for _name in DRIVER_WINDOW:
     assert _name in _ALL, f"unknown query in DRIVER_WINDOW: {_name}"
-    assert _ALL[_name].sql is not None, f"window entry lacks oracle: {_name}"
+    assert isinstance(_ALL[_name].sql, str), (
+        f"window entry lacks SQL oracle: {_name}"
+    )
 
 QUERIES: dict[str, Q] = {name: _ALL[name] for name in DRIVER_WINDOW}
 for name, q in _ALL.items():
@@ -124,5 +133,18 @@ def queries_dict():
     return {name: q.fn for name, q in QUERIES.items()}
 
 
-def oracle_sql_dict():
-    return {name: q.sql for name, q in QUERIES.items() if q.sql is not None}
+def oracle_sql_dict(sf_dir: str) -> dict[str, str]:
+    """Every declared oracle, tree-fitted ones built from ``sf_dir``.
+
+    A tree without the corpus tables builds none of them, and a builder
+    past its row cap returns None; those entries get the rows-only
+    check.  Any other failure of a builder raises."""
+    has_corpus = all(os.path.exists(f"{sf_dir}/{t}.parquet") for t in TABLES)
+    out = {}
+    for name, q in QUERIES.items():
+        sql = q.sql
+        if callable(sql):
+            sql = sql(sf_dir) if has_corpus else None
+        if sql is not None:
+            out[name] = sql
+    return out

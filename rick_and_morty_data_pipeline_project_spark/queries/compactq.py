@@ -21,8 +21,8 @@ as one file per ``_bin=K/`` directory), and audits the result per bin:
 Oracle strategy — canonical-literal with a TIE-INVARIANCE argument:
 best-fit-decreasing is sequential (no window function expresses it),
 so the oracle inlines the bin (rows, files) multiset replayed in pure
-Python at import from the sf0.01 testdata (`_bfd_bins` — the same
-bisect best-fit as ``plan_compaction``).  The staged file names are
+Python from the corpus tree it checks (`_bfd_bins` — the same bisect
+best-fit as ``plan_compaction``).  The staged file names are
 Spark-generated UUIDs, so the DESC-size/ASC-name processing order is
 only fixed up to permutations of EQUAL-sized files — but BFD's state
 (the multiset of open-bin remaining capacities) depends on the SIZE
@@ -123,23 +123,18 @@ def compact_layout_audit(spark, sf_dir):
         shutil.rmtree(dst, ignore_errors=True)
 
 
-def _oracle_sql() -> str | None:
+def _oracle_sql(sf_dir) -> str:
     """Canonical-literal oracle: replay the month counts + BFD packing
-    from the sf0.01 testdata at import; ``total_rows`` stays
-    corpus-computed so a testdata regen turns the literals loudly red
-    instead of silently stale."""
+    from ``sf_dir``'s orders; ``total_rows`` stays corpus-computed so a
+    tree that differs from the one the literals came from turns the
+    oracle loudly red instead of silently stale."""
     import duckdb
 
-    con = duckdb.connect()
-    try:
+    with duckdb.connect() as con:
         counts = con.execute(
             "SELECT strftime(o_orderdate, '%Y-%m') AS m, COUNT(*) AS n "
-            "FROM '/root/testdata/sf0.01/orders.parquet' GROUP BY 1"
+            f"FROM '{sf_dir}/orders.parquet' GROUP BY 1"
         ).fetchall()
-    except duckdb.Error:  # testdata not present on this machine
-        return None
-    finally:
-        con.close()
     total = sum(n for _, n in counts)
     target = max(1, total // _N_BINS)
     bin_rows = ", ".join(
@@ -156,5 +151,5 @@ FROM bins
 
 
 QUERIES: dict[str, Q] = {
-    "compact_layout_audit": Q(compact_layout_audit, _oracle_sql()),
+    "compact_layout_audit": Q(compact_layout_audit, _oracle_sql),
 }

@@ -8,8 +8,6 @@ arithmetic where possible, round(…, 6..9) where genuinely float.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from rick_and_morty_data_pipeline_project_spark.functions.vectors import (
@@ -2151,24 +2149,16 @@ def profile_table_files(spark, sf_dir):
     )
 
 
-# The oracle must see FILENAMES, which the harness's pre-registered
-# views hide — DuckDB's read_parquet(filename=true) is the only way.
-# The path is therefore parameterized on SPARK_GRAFT_ORACLE_SF_DIR
-# (captured at import, like the other literal oracles), defaulting to
-# the driver's pinned sf0.01 tree; sweep tools running the catalog at
-# another SF export the matching dir before importing the entry point
-# (tools/driver_sim_sweep.py does).  Deliberately NOT the bench's
-# SPARK_GRAFT_SF_DIR: the bench defaults that to sf0.1, and inheriting
-# it would point the oracle at the wrong tree during a driver run.
-_ORACLE_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-)
-PROFILE_FILES_SQL = f"""
+def _profile_files_sql(sf_dir) -> str:
+    """The oracle must see FILENAMES, which the harness's pre-registered
+    views hide — DuckDB's ``read_parquet(filename=true)`` over
+    ``sf_dir``'s lineitem is the only way."""
+    return f"""
 SELECT regexp_extract(filename, '([^/]+)$', 1) AS file,
        COUNT(*) AS n_rows,
        MIN(l_orderkey) AS min_orderkey,
        MAX(l_orderkey) AS max_orderkey
-FROM read_parquet('{_ORACLE_SF_DIR}/lineitem.parquet', filename=true)
+FROM read_parquet('{sf_dir}/lineitem.parquet', filename=true)
 GROUP BY 1
 """
 
@@ -4613,8 +4603,8 @@ QUERIES: dict[str, Q] = {
     "profile_compaction_plan": Q(
         profile_compaction_plan, COMPACTION_PLAN_SQL
     ),
-    "profile_table_files": Q(profile_table_files, PROFILE_FILES_SQL),
-    "profile_table_files_fast": Q(profile_table_files_fast, PROFILE_FILES_SQL),
+    "profile_table_files": Q(profile_table_files, _profile_files_sql),
+    "profile_table_files_fast": Q(profile_table_files_fast, _profile_files_sql),
     "scalar_try_functions": Q(scalar_try_functions, SCALAR_TRY_SQL),
     "events_value_histogram": Q(events_value_histogram, HISTOGRAM_SQL),
     "events_funnel_summary": Q(events_funnel_summary, FUNNEL_SUMMARY_SQL),

@@ -70,16 +70,11 @@ from rick_and_morty_data_pipeline_project_spark.queries.pqq import (
     _SAMPLE,
     _TOPK,
     _assert_same_codes,
-    _canonical_normed,
+    _canonical_replay,
     _canonical_queries,
-    _canonical_sample,
     _jvm_pq_codes,
     _lit_list,
     _lit_list2,
-    ORACLE_CANON,
-    _pq_oracle_sql,  # noqa: F401  (fingerprint anchor: this module's
-    #   oracle tail mirrors the PQ oracle's CTE chain — tie the stale
-    #   detector to its source)
     _SELF_DOT,
     _sq_fold_sql,
 )
@@ -125,9 +120,8 @@ def knn_cosine_opq(spark, sf_dir):
     )
     X_dist = sample_vectors_deterministic(normed, "vec_id", "nv", _SAMPLE)
     R, books = opq_fit(X_dist, _M, _K, n_outer=_OUTER)
-    canon = _canonical_normed(sf_dir)
+    canon, Xc = _canonical_replay(sf_dir)
     if canon is not None:
-        Xc = _canonical_sample(canon)
         Rc, bc = opq_fit(Xc, _M, _K, n_outer=_OUTER)
         if not (np.array_equal(R, Rc) and books == bc):
             raise AssertionError(
@@ -159,7 +153,8 @@ def knn_cosine_opq(spark, sf_dir):
     )
 
 
-def _opq_oracle_sql(canon, X) -> str | None:
+def _opq_oracle_sql(sf_dir) -> str | None:
+    canon, X = _canonical_replay(sf_dir)
     if canon is None:
         return None
     R, books = opq_fit(X, _M, _K, n_outer=_OUTER)
@@ -231,10 +226,6 @@ FROM ranked WHERE rank <= {_TOPK}
 """
 
 
-# pqq already ran (or OSError-skipped) the one canonical replay at its
-# import; reuse it — and let any REAL builder bug raise at import
-# instead of silently degrading the certification to rows-only (the
-# frozen-core pin exists precisely to keep this set from growing).
 QUERIES: dict[str, Q] = {
-    "knn_cosine_opq": Q(knn_cosine_opq, _opq_oracle_sql(*ORACLE_CANON)),
+    "knn_cosine_opq": Q(knn_cosine_opq, _opq_oracle_sql),
 }

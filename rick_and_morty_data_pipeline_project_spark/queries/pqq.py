@@ -63,6 +63,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from rick_and_morty_data_pipeline_project_spark.operators.pq import (
@@ -87,21 +88,18 @@ from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
 )
 from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
     _normalized,
-    sample_vectors_deterministic,  # noqa: F401  (fingerprint anchor: the
-    #   trainers sample through this shared helper — reference it here so
-    #   the rule-2 stale detector ties these queries to its source)
-    spark_xxhash64_long,
 )
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q, t
+from rick_and_morty_data_pipeline_project_spark.queries.vecq import (
+    _canonical_embeddings,
+    _sample_replay,
+)
 
 _M, _K = 8, 16
 _NCELLS, _NPROBE = 8, 2
 _TOPK = 5
 _SAMPLE = 4096
 _N_QUERIES = 10
-#: canonical replay / in-query assertion bound — same policy as
-#: _canonical_kmeans_centroids (a full-corpus replay needs a full scan)
-_VERIFY_CAP = 1_000_000
 
 
 # ---------------------------------------------------------------------
@@ -125,49 +123,32 @@ def _fold_norm(vec) -> list:
 
 
 def _canonical_normed(sf_dir):
-    """``(ids, Xn)`` — int64 vec_id array + unit-vector float64 matrix
-    for the whole corpus, or None above the bounded-verify cap.
-    pyarrow.dataset handles both layouts the engine reads — a single
-    parquet file (the testdata) and a directory of part files (any
-    Spark-written corpus; default ignore_prefixes skips _SUCCESS/.crc
-    sidecars).
+    """``(ids, Xn)`` — the canonical corpus (``vecq._canonical_embeddings``)
+    unit-normalized, or None above its bounded-verify cap.
 
-    The replay allocates O(rows × dim) numpy, never Python object
-    graphs (r9 verdict item 6 — ``to_pylist`` dicts were multiple GB
-    at the 1M-row cap).  Bit-exactness to the JVM fold is preserved:
-    the squared norm accumulates COLUMN-BY-COLUMN in index order —
-    the sequential left fold of ``_fold_norm``, vectorized across
-    rows — because ``np.sum``'s pairwise summation would produce a
-    different float; the divide is element-wise IEEE, identical in
-    both formulations."""
-    import numpy as np
-    import pyarrow.dataset as pds
-
-    dset = pds.dataset(f"{sf_dir}/embeddings.parquet", format="parquet")
-    if dset.count_rows() > _VERIFY_CAP:
+    Bit-exactness to the JVM fold is preserved: the squared norm
+    accumulates COLUMN-BY-COLUMN in index order — the sequential left
+    fold of ``_fold_norm``, vectorized across rows — because
+    ``np.sum``'s pairwise summation would produce a different float;
+    the divide is element-wise IEEE, identical in both formulations."""
+    emb = _canonical_embeddings(sf_dir)
+    if emb is None:
         return None
-    tbl = dset.to_table(columns=["vec_id", "embedding"])
-    ids = tbl.column("vec_id").to_numpy().astype(np.int64, copy=False)
-    X = np.stack(
-        tbl.column("embedding").to_numpy(zero_copy_only=False)
-    ).astype(np.float64)  # value-exact float32 -> float64 widening
+    ids, X = emb
     acc = np.zeros(len(ids), dtype=np.float64)
     for j in range(X.shape[1]):  # left fold over dims, all rows at once
         acc = acc + X[:, j] * X[:, j]
     return ids, X / np.sqrt(acc)[:, None]
 
 
-def _canonical_sample(canon):
-    """Replay ``sample_vectors_deterministic``'s xxhash64 ordering in
-    pure Python over the canonical normalized vectors."""
-    import numpy as np
-
-    ids, Xn = canon
-    order = sorted(
-        range(len(ids)),
-        key=lambda r: (spark_xxhash64_long(int(ids[r])), int(ids[r])),
-    )
-    return Xn[np.asarray(order[:_SAMPLE], dtype=np.int64)]
+def _canonical_replay(sf_dir):
+    """``(canon, sample)`` of ``sf_dir`` for the PQ, IVFADC and OPQ
+    queries and oracle builders; ``(None, None)`` above the
+    bounded-verify cap."""
+    canon = _canonical_normed(sf_dir)
+    if canon is None:
+        return None, None
+    return canon, _sample_replay(*canon, _SAMPLE)
 
 
 def _canonical_queries(canon):
@@ -346,9 +327,8 @@ def knn_cosine_pq(spark, sf_dir):
         _normalized(fan_out(e), "vec_id", "embedding", "vec_id", "nv")
     )
     books = train_pq_codebooks(normed, vec_col="nv", m=_M, k=_K)
-    canon = _canonical_normed(sf_dir)
+    canon, X = _canonical_replay(sf_dir)
     if canon is not None:
-        X = _canonical_sample(canon)
         if books != pq_fit_books(X, _M, _K):
             raise AssertionError(
                 "knn_cosine_pq: distributed-sample training diverged "
@@ -389,9 +369,8 @@ def knn_cosine_ivfpq(spark, sf_dir):
         _normalized(fan_out(e), "vec_id", "embedding", "vec_id", "nv")
     )
     cents, books = train_ivf_pq(normed, vec_col="nv", n_cells=_NCELLS, m=_M, k=_K)
-    canon = _canonical_normed(sf_dir)
+    canon, X = _canonical_replay(sf_dir)
     if canon is not None:
-        X = _canonical_sample(canon)
         if (cents, books) != ivf_pq_fit(X, _NCELLS, _M, _K):
             raise AssertionError(
                 "knn_cosine_ivfpq: distributed-sample joint training "
@@ -424,9 +403,9 @@ def knn_cosine_ivfpq(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------
-# DuckDB oracles — canonical literals fit from the sf0.01 testdata at
-# import (driver correctness runs are pinned to sf0.01; the
-# _ivf_kmeans_oracle_sql / PCA-literal pattern)
+# DuckDB oracles — builders that inline canonical literals fit from the
+# corpus tree they are given (the _ivf_kmeans_oracle_sql / PCA-literal
+# pattern); catalog.oracle_sql_dict calls them
 # ---------------------------------------------------------------------
 
 _SELF_DOT = (
@@ -452,22 +431,8 @@ def _lit_list2(rows) -> str:
     return "[" + ", ".join(_lit_list(r) for r in rows) + "]"
 
 
-_ORACLE_SF_DIR = "/root/testdata/sf0.01"
-
-
-def _oracle_canon():
-    """ONE canonical replay shared by both oracle builders — the
-    full-corpus read + fold-normalize + xxhash sort runs once per
-    import, not once per builder."""
-    canon = _canonical_normed(_ORACLE_SF_DIR)
-    if canon is None:
-        return None, None
-    return canon, _canonical_sample(canon)
-
-
-def _pq_oracle_sql(canon, X) -> str | None:
-    import numpy as np
-
+def _pq_oracle_sql(sf_dir) -> str | None:
+    canon, X = _canonical_replay(sf_dir)
     if canon is None:
         return None
     books = pq_fit_books(X, _M, _K)
@@ -524,9 +489,8 @@ FROM ranked WHERE rank <= {_TOPK}
 """
 
 
-def _ivfpq_oracle_sql(canon, X) -> str | None:
-    import numpy as np
-
+def _ivfpq_oracle_sql(sf_dir) -> str | None:
+    canon, X = _canonical_replay(sf_dir)
     if canon is None:
         return None
     cents, books = ivf_pq_fit(X, _NCELLS, _M, _K)
@@ -607,20 +571,7 @@ FROM ranked WHERE rank <= {_TOPK}
 """
 
 
-try:
-    # shared with queries/opqq.py (one canonical replay per import for
-    # ALL three builders; numpy-backed since r10 — ~300 KB at sf0.01,
-    # so keeping it resident replaced the old free-after-use del)
-    ORACLE_CANON = _oracle_canon()
-    KNN_PQ_SQL = _pq_oracle_sql(*ORACLE_CANON)
-    KNN_IVFPQ_SQL = _ivfpq_oracle_sql(*ORACLE_CANON)
-except OSError:  # testdata not present on this machine
-    ORACLE_CANON = (None, None)
-    KNN_PQ_SQL = None
-    KNN_IVFPQ_SQL = None
-
-
 QUERIES: dict[str, Q] = {
-    "knn_cosine_pq": Q(knn_cosine_pq, KNN_PQ_SQL),
-    "knn_cosine_ivfpq": Q(knn_cosine_ivfpq, KNN_IVFPQ_SQL),
+    "knn_cosine_pq": Q(knn_cosine_pq, _pq_oracle_sql),
+    "knn_cosine_ivfpq": Q(knn_cosine_ivfpq, _ivfpq_oracle_sql),
 }

@@ -7,6 +7,7 @@ property-tested in tests/test_similarity.py).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -23,7 +24,9 @@ from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
     knn_lsh,
     knn_mmr,
     label_centroids,
+    kmeans_fit_sample,
     quantize_int8,
+    spark_xxhash64_long,
     train_kmeans_centroids,
 )
 from rick_and_morty_data_pipeline_project_spark.queries._util import Q, t
@@ -418,30 +421,46 @@ FROM top t JOIN embeddings e ON e.vec_id = t.query_id
 """
 
 
-def _canonical_kmeans_centroids(sf_dir, n_cells=8, sample_size=2048):
-    """Oracle twin of the deterministic-sample k-means training: replay
-    the ``ORDER BY xxhash64(vec_id), vec_id LIMIT sample_size`` sample
-    in pure Python (:func:`spark_xxhash64_long`) and run the SHARED
-    numpy core (:func:`kmeans_fit_sample`) — identical sample rows →
-    bitwise-identical centroids, no tolerance games."""
-    import numpy as np
-    import pyarrow.parquet as pq
+#: bounded verify: above this many rows the canonical replays (a driver
+#: re-read of the whole table) return None; the distributed fits run alone
+_VERIFY_CAP = 1_000_000
 
-    from rick_and_morty_data_pipeline_project_spark.operators.similarity import (
-        kmeans_fit_sample,
-        spark_xxhash64_long,
-    )
 
-    path = f"{sf_dir}/embeddings.parquet"
-    # Bounded verify (see _canonical_pca_model): replaying the sample
-    # ordering needs a full id scan — skip above 1M rows.
-    if pq.ParquetFile(path).metadata.num_rows > 1_000_000:
+def _canonical_embeddings(sf_dir):
+    """``(ids, X)`` — int64 vec_ids + float64 embeddings in file order,
+    or None above ``_VERIFY_CAP`` rows: the ONE reader behind every
+    canonical replay (k-means, PCA, PQ/IVFADC/OPQ).  pyarrow.dataset
+    reads a single file and a directory of part files alike."""
+    import pyarrow.dataset as pds
+
+    dset = pds.dataset(f"{sf_dir}/embeddings.parquet", format="parquet")
+    if dset.count_rows() > _VERIFY_CAP:
         return None
-    tbl = pq.read_table(path, columns=["vec_id", "embedding"]).to_pandas()
-    tbl["_h"] = tbl["vec_id"].map(lambda v: spark_xxhash64_long(int(v)))
-    tbl = tbl.sort_values(["_h", "vec_id"]).head(sample_size)
-    X = np.array([list(v) for v in tbl["embedding"]], dtype=np.float64)
-    return kmeans_fit_sample(X, n_cells)
+    tbl = dset.to_table(columns=["vec_id", "embedding"])
+    ids = tbl.column("vec_id").to_numpy().astype(np.int64, copy=False)
+    X = np.stack(tbl.column("embedding").to_numpy(zero_copy_only=False))
+    return ids, X.astype(np.float64)
+
+
+def _sample_replay(ids, X, n):
+    """The first ``n`` rows of ``X`` in ``sample_vectors_deterministic``'s
+    ``(xxhash64(id), id)`` order, replayed by :func:`spark_xxhash64_long`."""
+    order = sorted(
+        range(len(ids)),
+        key=lambda r: (spark_xxhash64_long(int(ids[r])), int(ids[r])),
+    )
+    return X[np.asarray(order[:n], dtype=np.int64)]
+
+
+def _canonical_kmeans_centroids(sf_dir, n_cells=8, sample_size=2048):
+    """Oracle twin of the deterministic-sample k-means training: the
+    shared numpy core (:func:`kmeans_fit_sample`) on the replayed
+    sample — identical sample rows → bitwise-identical centroids, no
+    tolerance games.  None above the bounded-verify cap."""
+    emb = _canonical_embeddings(sf_dir)
+    if emb is None:
+        return None
+    return kmeans_fit_sample(_sample_replay(*emb, sample_size), n_cells)
 
 
 def knn_cosine_ivf_kmeans(spark, sf_dir):
@@ -453,8 +472,6 @@ def knn_cosine_ivf_kmeans(spark, sf_dir):
     and score from the identical centroid literals, so the result
     hash-matches exactly.  Recall vs brute force stays property-tested
     in tests/test_dedup_similarity.py."""
-    import numpy as np
-
     e = t(spark, sf_dir, "embeddings")
     cents = train_kmeans_centroids(e, n_cells=8, sample_size=2048)
     canon = _canonical_kmeans_centroids(sf_dir)
@@ -469,11 +486,12 @@ def knn_cosine_ivf_kmeans(spark, sf_dir):
     return knn_ivf(queries, e, k=5, n_probe=2, centroids=cents)
 
 
-def _ivf_kmeans_oracle_sql(n_probe: int = 2, k: int = 5) -> str:
-    """DuckDB twin with the canonical sf0.01 centroids inlined (driver
-    correctness runs are pinned to sf0.01 — the PCA literal pattern)."""
-    cents = _canonical_kmeans_centroids("/root/testdata/sf0.01")
-    if cents is None:  # row cap exceeded — no literal oracle possible
+def _ivf_kmeans_oracle_sql(sf_dir, n_probe: int = 2, k: int = 5) -> str | None:
+    """DuckDB twin with the canonical centroids of ``sf_dir``'s corpus
+    inlined (the PCA literal pattern); None above the row cap, where no
+    literal oracle is possible."""
+    cents = _canonical_kmeans_centroids(sf_dir)
+    if cents is None:
         return None
     values = ", ".join(
         f"({cid}, [{', '.join(repr(float(x)) for x in cvec)}])"
@@ -505,12 +523,6 @@ ranked AS (
 )
 SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
 """
-
-
-try:
-    KNN_IVF_KMEANS_SQL = _ivf_kmeans_oracle_sql()
-except OSError:  # testdata not present on this machine
-    KNN_IVF_KMEANS_SQL = None
 
 
 def knn_cosine_int8(spark, sf_dir):
@@ -792,32 +804,21 @@ FROM scored
 
 
 def _canonical_pca_model(sf_dir, k=4):
-    """Deterministic numpy reference fit from the parquet file (rows
-    sorted by vec_id, one fixed summation order) — the shared basis of
-    the Spark projection AND the DuckDB oracle, so both engines inline
-    bitwise-identical component literals.  Test-harness device: the
-    production path is the distributed fit it certifies."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
+    """Deterministic numpy reference fit (rows sorted by vec_id, one
+    fixed summation order) — the shared basis of the Spark projection
+    AND the DuckDB oracle, so both engines inline bitwise-identical
+    component literals.  Test-harness device: the production path is
+    the distributed fit it certifies; None above the bounded-verify
+    cap."""
     from rick_and_morty_data_pipeline_project_spark.operators.pca import (
         pca_fit_canonical,
     )
 
-    path = f"{sf_dir}/embeddings.parquet"
-    # Bounded verify: the canonical re-fit is a test harness, not the
-    # production path.  Above 1M rows (footer metadata — no data read)
-    # return None and let callers run the distributed fit alone; the
-    # driver's oracle comparison only ever happens at sf0.01.
-    if pq.ParquetFile(path).metadata.num_rows > 1_000_000:
+    emb = _canonical_embeddings(sf_dir)
+    if emb is None:
         return None
-    tbl = (
-        pq.read_table(path, columns=["vec_id", "embedding"])
-        .to_pandas()
-        .sort_values("vec_id")
-    )
-    vecs = np.stack(tbl["embedding"].to_numpy()).astype(np.float64)
-    return pca_fit_canonical(vecs, k)
+    ids, X = emb
+    return pca_fit_canonical(X[np.argsort(ids, kind="stable")], k)
 
 
 def embedding_pca_project(spark, sf_dir):
@@ -853,15 +854,12 @@ def embedding_pca_project(spark, sf_dir):
     )
 
 
-def _pca_oracle_sql():
-    """Projection oracle with the canonical sf0.01 components inlined
-    as literals (driver correctness runs are pinned to sf0.01).  Built
-    at import; if the testdata tree is absent the entry falls back to
-    rows-only; it sits outside the driver window."""
-    import numpy as np
-
-    canon = _canonical_pca_model("/root/testdata/sf0.01")
-    if canon is None:  # row cap exceeded — no literal oracle possible
+def _pca_oracle_sql(sf_dir) -> str | None:
+    """Projection oracle with the canonical components of ``sf_dir``'s
+    corpus inlined as literals; None above the row cap, where no literal
+    oracle is possible."""
+    canon = _canonical_pca_model(sf_dir)
+    if canon is None:
         return None
     cols = []
     for j, w in enumerate(canon.components, start=1):
@@ -877,18 +875,9 @@ def _pca_oracle_sql():
     )
 
 
-try:
-    PCA_PROJECT_SQL = _pca_oracle_sql()
-except OSError:  # testdata not present on this machine
-    PCA_PROJECT_SQL = None
-# any OTHER exception is a real code regression in the canonical fit —
-# let it raise at import so tests fail loudly instead of silently
-# demoting the query to rows-only
-
-
 QUERIES: dict[str, Q] = {
     "embedding_norms": Q(embedding_norms, NORMS_SQL),
-    "embedding_pca_project": Q(embedding_pca_project, PCA_PROJECT_SQL),
+    "embedding_pca_project": Q(embedding_pca_project, _pca_oracle_sql),
     "knn_cosine_filtered": Q(knn_cosine_filtered, KNN_FILTERED_SQL),
     "knn_cosine_bruteforce": Q(knn_cosine_bruteforce, KNN_SQL),
     "knn_cosine_lsh": Q(knn_cosine_lsh, KNN_LSH_SQL),
@@ -897,7 +886,7 @@ QUERIES: dict[str, Q] = {
     "knn_cosine_ivf": Q(knn_cosine_ivf, KNN_IVF_SQL),
     "knn_recall_audit": Q(knn_recall_audit, KNN_RECALL_SQL),
     "knn_label_agreement": Q(knn_label_agreement, KNN_LABEL_AGREEMENT_SQL),
-    "knn_cosine_ivf_kmeans": Q(knn_cosine_ivf_kmeans, KNN_IVF_KMEANS_SQL),
+    "knn_cosine_ivf_kmeans": Q(knn_cosine_ivf_kmeans, _ivf_kmeans_oracle_sql),
     "embedding_quantize_error": Q(embedding_quantize_error, QUANT_ERR_SQL),
     "knn_cosine_int8": Q(knn_cosine_int8, KNN_INT8_SQL),
     "embedding_label_centroids": Q(embedding_label_centroids, CENTROIDS_SQL),

@@ -22,6 +22,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: runtime-settable confs both session paths apply: UTC and AQE as in
+#: the module docstring, and the InferFiltersFromGenerate exclusion.
+#: That rule re-derives `size(arr) > 0 AND isnotnull(arr)` from every
+#: inner explode and pushes it below the fan_out exchange onto the scan
+#: task.  For this engine's generators the array is always an EXPENSIVE
+#: computed expression (shingle pipelines, md5 signature transforms,
+#: centroid-distance sorts), so the inferred filter re-evaluates the
+#: whole pipeline once more per row — serialized onto the single-task
+#: local scan side — while inner explode already drops empty/null
+#: arrays, making the filter semantically redundant at any scale.
+#: Measured (r14, interleaved min-of-6 at sf0.1): dedup_ngram_jaccard
+#: 2.39 s -> 1.07 s; every other probed query neutral-to-better.  Plan
+#: diff: the duplicated shingle expression disappears from the scan
+#: Filter (plans/r14/dedup_ngram_jaccard_{before,after}.txt).
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
+}
+
+
 def get_spark(
     app_name: str = "rick-and-morty-spark-engine",
     cpus: str | int | None = None,
@@ -35,49 +58,24 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
+        .config(map=RUNTIME_CONF)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # InferFiltersFromGenerate re-derives `size(arr) > 0 AND
-        # isnotnull(arr)` from every inner explode and pushes it below
-        # the fan_out exchange onto the scan task.  For this engine's
-        # generators the array is always an EXPENSIVE computed
-        # expression (shingle pipelines, md5 signature transforms,
-        # centroid-distance sorts), so the inferred filter re-evaluates
-        # the whole pipeline once more per row — serialized onto the
-        # single-task local scan side — while inner explode already
-        # drops empty/null arrays, making the filter semantically
-        # redundant at any scale.  Measured (r14, interleaved min-of-6
-        # at sf0.1): dedup_ngram_jaccard 2.39 s -> 1.07 s; every other
-        # probed query neutral-to-better.  Plan diff: the duplicated
-        # shingle expression disappears from the scan Filter
-        # (plans/r14/dedup_ngram_jaccard_{before,after}.txt).
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
     )
     return builder.getOrCreate()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable parity/perf conf to an externally-created
-    session (the driver owns the session for `queries()` calls)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # same rationale as get_spark: the inferred explode filter
-    # re-evaluates expensive generator inputs (semantics unchanged)
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
+    """Apply ``RUNTIME_CONF`` to an externally-created session (the
+    driver owns the session for `queries()` calls)."""
+    for key, value in RUNTIME_CONF.items():
+        spark.conf.set(key, value)
     return spark
 
 

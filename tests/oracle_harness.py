@@ -14,18 +14,7 @@ import math
 import duckdb
 import pandas as pd
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from rick_and_morty_data_pipeline_project_spark.sources.corpus import TABLES
 
 
 def duckdb_run(sql: str, sf_dir: str) -> pd.DataFrame:

@@ -38,7 +38,6 @@ def main() -> None:
             sf_dir = argv[i]
             i += 1
 
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     from bench import min_wall_s
     from rick_and_morty_data_pipeline_project_spark.session import get_spark
 

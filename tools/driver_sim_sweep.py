@@ -3,7 +3,9 @@ over EVERY oracled catalog query under a PLAIN SparkSession (ANSI
 defaults, none of the package session's tuning) and compare against
 DuckDB by sorted-column/sorted-row repr-hash — stricter than
 tests/oracle_harness.compare because dtype differences (e.g. DuckDB
-HUGEINT → float64) change the repr and fail here.
+HUGEINT → float64) change the repr and fail here.  Every oracle is
+built for the swept tree (``oracle_sql_dict(sf_dir)``), the tree-fitted
+ones included, so any scale factor checks the whole oracled catalog.
 
 Usage: python tools/driver_sim_sweep.py [sf_dir] [--window-only]
 """
@@ -17,29 +19,6 @@ import sys
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-# Queries whose DuckDB oracle inlines canonical literals fit from the
-# sf0.01 testdata at import (the documented canonical-literal pattern:
-# PCA components, k-means/PQ/OPQ codebooks, the BFD compaction plan).
-# At any OTHER scale factor the literal side diverges BY DESIGN — the
-# r12 sf0.1 sweep confirmed exactly this set and nothing else (after
-# fixing the two real divergences it caught, see PERFORMANCE.md).
-# A non-sf0.01 sweep reports them as SKIP instead of FAIL so the exit
-# code stays meaningful for the entries whose oracles ARE portable.
-CANONICAL_SF001_ORACLES = {
-    "embedding_pca_project",
-    "knn_cosine_ivf_kmeans",
-    "knn_cosine_pq",
-    "knn_cosine_ivfpq",
-    "knn_cosine_opq",
-    "compact_layout_audit",
-}
-
 
 def norm_hash(df) -> str:
     df = df[sorted(df.columns)]
@@ -73,10 +52,6 @@ def norm_hash(df) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
     window_only = "--window-only" in sys.argv
-    # Path-parameterized oracles (PROFILE_FILES_SQL) capture this at
-    # entry-point import — set it BEFORE importing __spark_entry__ so
-    # the file-audit oracles read the swept SF's tree, not sf0.01.
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
     from pyspark.sql import SparkSession
 
@@ -86,6 +61,10 @@ def main() -> int:
         .getOrCreate()
     )
     import __spark_entry__ as E
+    from rick_and_morty_data_pipeline_project_spark.queries.catalog import (
+        oracle_sql_dict,
+    )
+    from rick_and_morty_data_pipeline_project_spark.sources.corpus import TABLES
 
     con = duckdb.connect()
     for t in TABLES:
@@ -93,14 +72,8 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs, osql = E.queries(), E.oracle_sql()
+    qs, osql = E.queries(), oracle_sql_dict(sf_dir)
     names = list(qs)[:50] if window_only else [n for n in qs if n in osql]
-    skipped = []
-    if os.path.realpath(sf_dir) != os.path.realpath("/root/testdata/sf0.01"):
-        skipped = [n for n in names if n in CANONICAL_SF001_ORACLES]
-        names = [n for n in names if n not in CANONICAL_SF001_ORACLES]
-        for n in skipped:
-            print(f"{n}: SKIP (canonical-literal sf0.01 oracle)", flush=True)
     bad = []
     for name in names:
         if name not in osql:
@@ -121,8 +94,7 @@ def main() -> int:
             print(f"{name}: OK ({len(s)} rows)", flush=True)
     for name, why in bad:
         print(f"FAIL {name}: {why}")
-    tail = f" ({len(skipped)} canonical-literal skips)" if skipped else ""
-    print(f"\n{len(names) - len(bad)}/{len(names)} OK{tail}")
+    print(f"\n{len(names) - len(bad)}/{len(names)} OK")
     return 1 if bad else 0
 
 
